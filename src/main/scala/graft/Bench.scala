@@ -32,15 +32,7 @@ object Bench {
             s"[bench] refusing to write $p (reps=$reps, subset=$subsetRun); writing BENCH_LAST_RUN.json"))
           "BENCH_LAST_RUN.json"
       }
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // First-touch index priming (before the timed region): write
     // whichever durable bucketed index artifacts are missing/stale, so
@@ -133,9 +125,7 @@ object Bench {
     // timing, and a floor with zero successful reps is reported as an
     // error field instead of a bogus median of failure latencies.
     // the partition count actually measured: the same sizing rule the
-    // drains use (8 parts at the suite-typical state volume), INCLUDING
-    // the GRAFT_STREAM_PARTS env override — a hardcoded 8 here recorded
-    // a count the run didn't use whenever the override was set
+    // drains use (8 parts at the suite-typical state volume)
     val floorParts = graft.streaming.Streams.sizedParts(8 * 65536L)
     val streamQs = results.count(_._1.contains("_stream_"))
     val (floor, floorFails) =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** sf1 data generator: scales the driver's sf0.1 tables 10× with the
@@ -39,13 +39,10 @@ object GenData {
     val out = if (args.length > 1) args(1) else "data/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    // the output layout is fixed at 32 shuffle partitions whatever the
+    // core count, so the generated tables do not depend on the box
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.sources.Tables
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Index-persistence A/B (dev/measurement tool): build + persist the
   * bucketed index tables for a corpus (graft.sources.IndexStore), then
   * time the index-family queries COLD in build mode vs COLD in load
@@ -29,15 +27,7 @@ object IndexAb {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = sys.env.getOrElse("GRAFT_INDEX_OUT", "INDEX_AB.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     def clear(): Unit = {
       graft.ann.CellIndexCache.clear(); graft.dedup.ClusterCache.clear()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.temporal.Temporal
@@ -17,14 +17,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val slug = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val bigPath = s"/tmp/graft_scale/$slug/events8"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("32")
     spark.sparkContext.setLogLevel("ERROR")
 
     val e1 = Tables.events(spark, sfDir)
@@ -537,7 +530,7 @@ object ScaleProbe {
 
     // x16's asymmetric containment on the SAME boilerplate corpus, at
     // its production tau = 0.6 — the prefix arm's win zone (its
-    // flat-df behavior is the X16Probe sf1 DNF: >60 GB spill in the
+    // flat-df behavior is the sf1 DNF of NOTES_r12 §4: >60 GB spill in the
     // verify fan-out). Here the boilerplate shingles carry Σdf² and
     // the probe prefix excises them, so candidates collapse to docs
     // sharing doc-SPECIFIC content and the verify join stays bounded.
@@ -804,7 +797,7 @@ object ScaleProbe {
          |  "direct_s": ${f"$cntD%.3f"}, "prefix_s": ${f"$cntP%.3f"},
          |  "direct_over_prefix": ${f"${cntD / cntP}%.2f"},
          |  "pairs": $cPairsD,
-         |  "note": "x16 prefix arm win zone; on flat-df sf1 the same arm DNF'd (>60GB verify-join spill, X16Probe) — the router's skew gate is what separates the regimes"
+         |  "note": "x16 prefix arm win zone; on flat-df sf1 the same arm DNF'd (>60GB verify-join spill, NOTES_r12 §4) — the router's skew gate is what separates the regimes"
          |},
          |"hot_bucket": {
          |  "neardup_one_cell_unsharded_vs_subblocks8":

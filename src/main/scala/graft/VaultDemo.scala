@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.temporal.TemporalVault
 
@@ -12,13 +11,7 @@ object VaultDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("vault_demo").toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

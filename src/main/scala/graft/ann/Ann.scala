@@ -934,7 +934,7 @@ object Ann {
   /** ADC shortlist width per query before the exact-cosine rerank,
     * and the residual codebook size per subspace. Jointly measured on
     * the planted-cluster corpus at the PRODUCTION operating point
-    * (IvfPqTune r12: hierarchical probe, packed ADC,
+    * (NOTES_r12 §3: hierarchical probe, packed ADC,
     * nprobe=[[ivfPqNprobe]]): (k=16, rerank=50) 0.38, (16,200) 0.70,
     * (64,50) 0.50, (64,200) **0.864** at 1.0s, (256,200) 0.90 at 2.7×
     * the latency — the (64,200) knee is the pinned operating point.
@@ -1362,9 +1362,9 @@ object Ann {
     *    worst case): a query's true top-10 are mostly unclustered
     *    random directions, so recall is bought with the probed
     *    fraction of the corpus and nothing sublinear can hold it —
-    *    corpus physics, not an implementation artifact (the AnnSweep
-    *    LSH legs document the same collapse). The rule holds the
-    *    fraction: nprobe = ⌈f·cells⌉ with f from the measured curve
+    *    corpus physics, not an implementation artifact (the LSH legs
+    *    of ANN_SWEEP_r5/r6 document the same collapse). The rule holds
+    *    the fraction: nprobe = ⌈f·cells⌉ with f from the measured curve
     *    — swept at sf0.01/sf0.1 over 25 query ids in ANN_SWEEP_r11,
     *    recall at the rule holds 0.76 / 0.74 (flat) across a 4×
     *    corpus where nprobe=2 decayed 0.48 → 0.20; the ~0.05 gap to

@@ -233,7 +233,7 @@ object Dedup {
     * candidate × n_a, and the one-sided size bound keeps every
     * (small a, larger b) candidate the two-sided Jaccard bound would
     * drop, so on a flat-df corpus the arm is not merely slower but
-    * explosive (X16Probe at sf1: >60 GB of shuffle spill, DNF — see
+    * explosive (sf1: >60 GB of shuffle spill, DNF, NOTES_r12 §4 — see
     * [[containmentDirect]]). It repays only when hot shingles
     * dominate Σdf² AND their excision collapses the candidate set,
     * which is the regime the router gates on. Exactness does not
@@ -273,7 +273,7 @@ object Dedup {
   /** The direct containment plan: full postings self-join with the
     * one-sided size bound (shared ≤ n_b, so C ≥ tau needs
     * n_b ≥ tau·n_a) — the measured-optimal arm on flat-df corpora,
-    * where the prefix arm LOSES CATASTROPHICALLY (X16Probe at sf1:
+    * where the prefix arm LOSES CATASTROPHICALLY (NOTES_r12 §4, sf1:
     * the prefix verify join fans candidates × n_a under the one-sided
     * bound and exhausted >60 GB of shuffle spill before finishing —
     * vs ~35s direct; the asymmetric bound keeps every (small a,

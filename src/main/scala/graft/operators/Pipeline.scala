@@ -301,7 +301,7 @@ object Pipeline {
     * exchanges differ and ReuseExchange never fires) — left lazy, the
     * token-level explode + aggregation runs TWICE, the dominant cost
     * of all three plans (x17 at sf1 measured 4.2s lazy vs 1.5s
-    * materialized — X17Probe). This is the classic two-pass tf-idf
+    * materialized — NOTES_r11 §7). This is the classic two-pass tf-idf
     * shape: at scale the intermediate is the same volume the exchange
     * writes anyway, and a production pipeline persists it as a table.
     * (Eager job at DataFrame-construction time: the ts4 probe
@@ -327,7 +327,7 @@ object Pipeline {
     * integer until the final rounded ratio. */
   def unigramLmProfile(docs: DataFrame, id: String, text: String): DataFrame =
     // NOT [[docWordTf]]: x11 is the one consumer measured FASTER lazy
-    // than checkpointed (1.49s vs 1.70s at sf1, X11Probe) — its single
+    // than checkpointed (1.49s vs 1.70s at sf1, NOTES_r11 §7) — its single
     // downstream aggregation doesn't amortize a PRIVATE
     // materialization (a shared warm one — ClusterCache.docWordTf —
     // is better still, and is what SparkEntry wires)

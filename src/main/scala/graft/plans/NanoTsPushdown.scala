@@ -110,8 +110,8 @@ object NanoTsPushdown extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions: register with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+/** Session extensions: every graft session registers them through
+  * [[graft.Session.local]].
   * Installs the pushdown rule and exposes the native expressions to
   * SQL as `word_shingles(text, n)` and `cosine_sim(a, b)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

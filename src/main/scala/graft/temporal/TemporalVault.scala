@@ -270,7 +270,8 @@ class TemporalVault(
   /** Roll the store back to its state at `at` (POST /rollback,
     * app/main.py:152): appends one compensation version per record
     * changed after `at` — its at-state (`_op`=R) or a tombstone
-    * (`_op`=D) for records that did not exist at `at` — stamped
+    * (`_op`=D) for records that did not exist at `at` or were deleted
+    * there (an at-state that is itself a tombstone) — stamped
     * `rollbackTs`, plus the audit entry. History between `at` and the
     * rollback stays queryable (append-only). */
   def rollback(at: String, rollbackTs: String): DataFrame =
@@ -283,7 +284,8 @@ class TemporalVault(
         lit(rollbackTs).cast("timestamp").as(ts) +:
         lit(0L).as(tie) +:
         payloadCols.map(col) :+
-        when(col("action") === "DELETE", lit("D")).otherwise(lit("R")).as(Op): _*)
+        when(col("action") === "DELETE" || col(Op) === "D", lit("D"))
+          .otherwise(lit("R")).as(Op): _*)
     writeLog(compensation)
     // exact affected count + a BOUNDED id sample (k smallest): the
     // reference serializes every id into one JSON row (app/main.py:178),

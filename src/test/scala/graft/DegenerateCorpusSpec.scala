@@ -84,6 +84,15 @@ class DegenerateCorpusSpec extends SparkSpec {
       .select("id_a", "id_b", "containment")
       .as[(Long, Long, Double)].collect().toSet
     assert(viaPrefix == got)
+    // the direct arm's df>=2 prune is lossless: this corpus has df=1
+    // shingles, and dropping them leaves the pair set unchanged
+    assert(dfc.filter(col("__df") === 1).count() > 0)
+    def direct(prune: Boolean) =
+      Dedup.containmentDirect(posts, 0.6, pruneUnique = prune, dfc = Some(dfc))
+        .select("id_a", "id_b", "containment")
+        .as[(Long, Long, Double)].collect().toSet
+    assert(direct(prune = true) == direct(prune = false))
+    assert(direct(prune = true) == got)
   }
 
   test("x15 winnowing completes; sub-window docs fingerprint nothing; twins pair") {

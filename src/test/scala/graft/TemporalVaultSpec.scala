@@ -95,6 +95,18 @@ class TemporalVaultSpec extends SparkSpec {
     assert(v.rollbackHistory.count() == 1)
   }
 
+  test("rollback to a point where the record was tombstoned keeps it deleted") {
+    val v = mkVault()
+    v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
+    // u1 did not exist yet: the compensation is a tombstone at 01-02
+    v.rollback("2023-12-31 00:00:00", "2024-01-02 00:00:00")
+    v.append(batch(("u1", "2024-01-05 00:00:00", 2, "b")))
+    // the at-state (01-03) is that tombstone, so u1 must end up absent,
+    // not restored with a null payload
+    v.rollback("2024-01-03 00:00:00", "2024-01-06 00:00:00")
+    assert(v.query("2024-01-07 00:00:00").filter(col("record_id") === "u1").count() == 0)
+  }
+
   test("rollbackHistory(limit) pages newest-first like the reference endpoint") {
     val v = mkVault()
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
