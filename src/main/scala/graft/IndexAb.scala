@@ -29,10 +29,6 @@ object IndexAb {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    def clear(): Unit = {
-      graft.ann.CellIndexCache.clear(); graft.dedup.ClusterCache.clear()
-      graft.multimodal.ChunkCache.clear()
-    }
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
@@ -46,16 +42,16 @@ object IndexAb {
     // would (a) time the wrong thing and (b) make writeAll overwrite
     // a table it is reading.
     sys.props(graft.sources.IndexStore.EnvFlag) = "0"
-    clear()
+    graft.util.SessionCache.clearAll()
     val buildCold = runAll()
     // ---- persist (artifacts are warm in the session caches now) ----
     val (names, writeSecs) = timed(graft.sources.IndexStore.writeAll(spark, sfDir))
     // ---- load mode (the r14 default), cold caches: no index build,
     // bucketed reads ----
     sys.props.remove(graft.sources.IndexStore.EnvFlag)
-    clear()
+    graft.util.SessionCache.clearAll()
     val loadCold = runAll()
-    clear()
+    graft.util.SessionCache.clearAll()
     val loadCold2 = runAll() // second pass: steadier read-path numbers
 
     def m(kv: Map[String, Double]) = kv.toSeq.sortBy(_._1)

@@ -144,10 +144,6 @@ object SparkEntry {
       ivfPqTopk(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  /** Test hygiene: forget the memoized eval legs (unpersists). */
-  private[graft] def clearEvalLegs(): Unit = {
-    bruteTruthCache.clear(); probeTopkCache.clear(); pqTopkCache.clear()
-  }
 
   /** recall@k of `approx` against `truth` (both (query_id, nn_id)
     * top-k tables) — the bounded eval aggregate a12 and a14 share. */
@@ -611,7 +607,7 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     "d4_ngram_jaccard" -> ((s, d) =>
-      graft.dedup.ClusterCache.jaccardPairs(s, d, 3, 0.12)
+      graft.dedup.ClusterCache.jaccardPairs(s, d)
         .orderBy("id_a", "id_b")),
 
     // cosine ≥ τ pairs over CORPUS-PROPORTIONAL coarse cells (k ≈ n/64
@@ -658,7 +654,7 @@ object SparkEntry {
       // CC over scaledPairs at tau=0.4 (the tau filter commutes with
       // the pair aggregation — CoarseCellSpec pins the equivalence),
       // served from the durable tau-stamped cluster assignment
-      graft.ann.CellIndexCache.semanticClusters(s, d, 0.4)
+      graft.ann.CellIndexCache.semanticClusters(s, d)
         .groupBy(col("cluster_id"))
         .agg(
           count(lit(1)).as("n_members"),
@@ -692,7 +688,7 @@ object SparkEntry {
     "d11_lsh_recall" -> ((s, d) =>
       Dedup.lshRecallBands(
         graft.dedup.ClusterCache.minhashPairs(s, d),
-        graft.dedup.ClusterCache.jaccardPairs(s, d, 3, 0.12))),
+        graft.dedup.ClusterCache.jaccardPairs(s, d))),
 
     // ---- P. composed end-to-end pipeline ---------------------------------
     // the whole-corpus curation chain (exact dedup -> near-dup
@@ -1209,14 +1205,14 @@ object SparkEntry {
     // (guarantee: any shared run of >= 6 tokens shares a fingerprint)
     "x15_winnow_pairs" -> ((s, d) =>
       // re-ordered here: the LOADED artifact returns scan order
-      graft.dedup.ClusterCache.winnowPairs(s, d, 3, 4, 2)
+      graft.dedup.ClusterCache.winnowPairs(s, d)
         .orderBy("id_a", "id_b")),
 
     // asymmetric n-gram containment (doc-in-doc detection): catches
     // snippet/quote inclusion where Jaccard stays low because the
     // host is much larger than the contained doc
     "x16_containment" -> ((s, d) =>
-      graft.dedup.ClusterCache.containmentPairs(s, d, 3, 0.6)
+      graft.dedup.ClusterCache.containmentPairs(s, d)
         .orderBy("id_a", "id_b")),
 
     // BM25 top-10 retrieval for the benchmark probe set over the SHARED
@@ -1375,7 +1371,7 @@ object SparkEntry {
     // bytes never enter the exchange)
     "m4_binary_neardup" -> ((s, d) =>
       graft.multimodal.Binary.chunkDupPairsFrom(
-        graft.multimodal.ChunkCache.chunks(s, d, 64),
+        graft.multimodal.ChunkCache.chunks(s, d),
         "doc_id", 0.5).orderBy("id_a", "id_b")),
 
     // content-addressed-store accounting: per-source storage savings
@@ -1383,7 +1379,7 @@ object SparkEntry {
     // number a media lake budgets by)
     "m6_cas_stats" -> ((s, d) =>
       graft.multimodal.Binary.casStatsFrom(
-        graft.multimodal.ChunkCache.chunks(s, d, 64),
+        graft.multimodal.ChunkCache.chunks(s, d),
         "doc_id", "source")),
 
     // WebDataset-style shard packing: blobs assigned to ~4 KiB output

@@ -2,7 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import graft.sources.{ParquetStats, Tables}
+import graft.sources.{IndexStore, ParquetStats, Tables}
 import graft.util.SessionCache
 
 /** Process-wide memo of built [[CoarseIndex]]es, keyed by (session,
@@ -15,8 +15,9 @@ import graft.util.SessionCache
   *
   * The corpus row count comes from parquet footers
   * ([[ParquetStats.rowCount]]), not a scan job. Entries from stopped
-  * sessions are rebuilt transparently; `clear()` drops everything
-  * (tests). */
+  * sessions are rebuilt transparently. The durable vector artifacts
+  * (cells, centroids, PQ tables, pairs, ...) are declared below as
+  * [[IndexStore.Artifact]]s and read through [[IndexStore.get]]. */
 object CellIndexCache {
   private case class Key(session: Int, dir: String, cellSize: Int, salt: String)
   private val cache = new SessionCache[Key, CoarseIndex](
@@ -25,13 +26,12 @@ object CellIndexCache {
 
   /** The shared index over `dir`'s embeddings table. */
   def embeddings(spark: SparkSession, dir: String,
-                 id: String = "vec_id", vec: String = "embedding",
                  targetCellSize: Int = Ann.DefaultTargetCellSize,
                  salt: String = Ann.CellSalt): CoarseIndex =
     cache.getOrBuild(Key(System.identityHashCode(spark), dir, targetCellSize, salt)) {
       val n = ParquetStats.rowCount(spark, s"$dir/embeddings.parquet")
-      val ix = Ann.buildCoarseIndex(Tables.embeddings(spark, dir), id, vec, n,
-        targetCellSize, salt)
+      val ix = Ann.buildCoarseIndex(Tables.embeddings(spark, dir), "vec_id",
+        "embedding", n, targetCellSize, salt)
       ix.copy(asg = ix.asg.persist(StorageLevel.MEMORY_AND_DISK))
     }
 
@@ -42,9 +42,7 @@ object CellIndexCache {
     * aggregation (spec-checked in CoarseCellSpec). */
   val BaseTau = 0.25
 
-  private val sq8Cache =
-    new SessionCache[(Int, String), (Array[Double], Array[Double])](
-      _ => true, _ => ())
+  private val sq8Cache = SessionCache.forValue[(Int, String), (Array[Double], Array[Double])]
 
   /** The SQ8 quantizer's per-dimension (mins, maxs) over `dir`'s
     * embeddings — ONE training scan per (session, corpus), shared by
@@ -52,37 +50,26 @@ object CellIndexCache {
     * cached value is 2·dims doubles (plain data — no session-owned
     * resources to release), keyed by session only so two live sessions
     * never share a driver-collected artifact. */
-  def sq8Stats(spark: SparkSession, dir: String,
-               id: String = "vec_id", vec: String = "embedding")
-      : (Array[Double], Array[Double]) =
+  def sq8Stats(spark: SparkSession, dir: String): (Array[Double], Array[Double]) =
     sq8Cache.getOrBuild((System.identityHashCode(spark), dir)) {
       val emb = Tables.embeddings(spark, dir)
-      val dims = emb.selectExpr(s"size($vec)").head().getInt(0)
-      Ann.sq8MinMax(emb, vec, dims)
+      val dims = emb.selectExpr("size(embedding)").head().getInt(0)
+      Ann.sq8MinMax(emb, "embedding", dims)
     }
-
-  private val pairsCache = SessionCache.forDf[(Int, String)]
 
   /** Near-dup pairs over `dir`'s embeddings at [[BaseTau]], built on
-    * the shared index and persisted — ONE pair-scoring job serves
-    * d5 (identity) and d8 (cos >= 0.4 filter + connected components),
-    * the way a real curation pipeline materializes its pair table
-    * once and derives reports and clusters from it. */
-  def scaledPairs(spark: SparkSession, dir: String,
-                  id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    pairsCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "pairs") {
-        Ann.nearDupPairsScaledIndexed(
-            Tables.embeddings(spark, dir), id, vec, BaseTau, embeddings(spark, dir))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * the shared index — ONE pair-scoring job serves d5 (identity) and
+    * d8 (cos >= 0.4 filter + connected components), the way a real
+    * curation pipeline materializes its pair table once and derives
+    * reports and clusters from it. */
+  val pairsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("pairs", Some("id_a")) { (spark, dir) =>
+      Ann.nearDupPairsScaledIndexed(Tables.embeddings(spark, dir),
+        "vec_id", "embedding", BaseTau, embeddings(spark, dir))
     }
 
-  private val sclusterCache = SessionCache.forDf[(Int, String, Int)]
-
-  /** τ-stamped artifact name for [[semanticClusters]]. */
-  def semanticClustersArtifact(tau: Double): String =
-    s"sclusters_t${math.round(tau * 10000)}"
+  def scaledPairs(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, pairsArtifact)
 
   /** The SEMANTIC dup-cluster assignment (vec_id, cluster_id) —
     * connected components over [[scaledPairs]] filtered at `tau` — as
@@ -91,63 +78,51 @@ object CellIndexCache {
     * rounds are the costliest per-session work left in the d8 path
     * and are a pure function of (corpus, τ), so they run once per
     * corpus and every later session loads the bucketed assignment.
-    * Write-through self-priming; fingerprint-invalidated. */
-  def semanticClusters(spark: SparkSession, dir: String,
-                       tau: Double): DataFrame =
-    sclusterCache.getOrBuild(
-        (System.identityHashCode(spark), dir, math.round(tau * 10000).toInt)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          semanticClustersArtifact(tau), Some("cluster_id")) {
+    * The default is d8's τ. */
+  def semanticClustersArtifact(tau: Double = 0.4): IndexStore.Artifact =
+    IndexStore.Artifact(s"sclusters_t${math.round(tau * 10000)}", Some("cluster_id")) {
+      (spark, dir) =>
         import org.apache.spark.sql.functions.col
         graft.dedup.Dedup.connectedComponents(
-            Tables.embeddings(spark, dir).select(col("vec_id")),
-            scaledPairs(spark, dir).filter(col("cos") >= tau)
-              .select(col("id_a"), col("id_b")),
-            "vec_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          Tables.embeddings(spark, dir).select(col("vec_id")),
+          scaledPairs(spark, dir).filter(col("cos") >= tau)
+            .select(col("id_a"), col("id_b")),
+          "vec_id")
     }
 
-  /** Parameter-stamped artifact name for [[kmeansCentroids]]. */
-  def kmeansCentroidsArtifact(k: Int, rounds: Int): String =
-    s"kmcents_k${k}_r$rounds"
-
-  private val kmCentCache = SessionCache.forDf[(Int, String, Int, Int)]
+  def semanticClusters(spark: SparkSession, dir: String,
+                       tau: Double = 0.4): DataFrame =
+    IndexStore.get(spark, dir, semanticClustersArtifact(tau))
 
   /** a7's trained Lloyd centroids (c_cell, c_vec) as a durable
     * parameter-stamped artifact: the training is deterministic
     * (seeded, decimal-exact means — [[Ann.kmeansCentroids]]) and
     * corpus-pure, so a warm session loads the k-row table instead of
     * re-running rounds+1 corpus scans (the costliest non-drain batch
-    * key at sf1 pre-r16). Plain table (k rows — nothing to bucket);
-    * write-through self-priming; fingerprint-invalidated. */
-  def kmeansCentroids(spark: SparkSession, dir: String, k: Int,
-                      rounds: Int): DataFrame =
-    kmCentCache.getOrBuild(
-        (System.identityHashCode(spark), dir, k, rounds)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          kmeansCentroidsArtifact(k, rounds), None) {
-        Ann.kmeansCentroids(Tables.embeddings(spark, dir),
-            "vec_id", "embedding", k, rounds)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * key at sf1 pre-r16). Plain table (k rows — nothing to bucket).
+    * The defaults are a7's parameterization. */
+  def kmeansCentroidsArtifact(k: Int = 8, rounds: Int = 2): IndexStore.Artifact =
+    IndexStore.Artifact(s"kmcents_k${k}_r$rounds", None) { (spark, dir) =>
+      Ann.kmeansCentroids(Tables.embeddings(spark, dir),
+        "vec_id", "embedding", k, rounds)
     }
 
-  private val withCellCache = SessionCache.forDf[(Int, String)]
+  def kmeansCentroids(spark: SparkSession, dir: String, k: Int = 8,
+                      rounds: Int = 2): DataFrame =
+    IndexStore.get(spark, dir, kmeansCentroidsArtifact(k, rounds))
 
   /** The embeddings table with its primary coarse-cell column
-    * attached, persisted — the (id, vector, cell) table a3/a4 probe,
-    * built once per (session, dir) instead of re-running the
-    * cellsFromIndex aggregation + join per query. */
-  def embeddingsWithCell(spark: SparkSession, dir: String,
-                         id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    withCellCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "cells") {
-        Ann.withCoarseCellIndexed(
-            Tables.embeddings(spark, dir), id, embeddings(spark, dir, id, vec))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * attached — the (id, vector, cell) table a3/a4 probe, built once
+    * per corpus instead of re-running the cellsFromIndex aggregation +
+    * join per query. */
+  val cellsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("cells", Some("cell")) { (spark, dir) =>
+      Ann.withCoarseCellIndexed(Tables.embeddings(spark, dir), "vec_id",
+        embeddings(spark, dir))
     }
+
+  def embeddingsWithCell(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, cellsArtifact)
 
   /** The shared (id, vec, cell) table when it is already session-warm
     * or loadable as a durable artifact — else None. Callers that do
@@ -159,112 +134,86 @@ object CellIndexCache {
     * this returns. */
   def embeddingsWithCellIfWarm(spark: SparkSession,
                                dir: String): Option[DataFrame] =
-    withCellCache.peek((System.identityHashCode(spark), dir))
-      .orElse {
-        if (graft.sources.IndexStore.enabled &&
-            graft.sources.IndexStore.exists(spark, dir, "cells"))
-          Some(embeddingsWithCell(spark, dir))
-        else None
-      }
-
-  private val centroidCache = SessionCache.forDf[(Int, String)]
-
-  /** Decimal-exact per-cell centroids over [[embeddingsWithCell]],
-    * persisted — the IVF coarse structure every a4-style probe
-    * shares (one corpus-wide aggregation, many queries). */
-  def centroids(spark: SparkSession, dir: String,
-                id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    centroidCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      // the persisted table carries the extra g_grp bucketing column —
-      // project it away so the loaded shape matches the built (c_cell,
-      // c_vec) contract (and only in the load arm: a projection wrapper
-      // around the built-and-persisted df would make clear()'s
-      // unpersist a no-op)
-      if (graft.sources.IndexStore.enabled &&
-          graft.sources.IndexStore.exists(spark, dir, "centroids"))
-        graft.sources.IndexStore.load(spark, dir, "centroids")
-          .select(org.apache.spark.sql.functions.col("c_cell"),
-            org.apache.spark.sql.functions.col("c_vec"))
-      else Ann.ivfCentroids(embeddingsWithCell(spark, dir, id, vec), vec, "cell")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    IndexStore.peek(spark, dir, cellsArtifact).orElse {
+      if (IndexStore.enabled && IndexStore.exists(spark, dir, cellsArtifact.name))
+        Some(embeddingsWithCell(spark, dir))
+      else None
     }
 
-  private val groupCentroidCache = SessionCache.forDf[(Int, String)]
+  /** Decimal-exact per-cell centroids over [[embeddingsWithCell]] —
+    * the IVF coarse structure every a4-style probe shares (one
+    * corpus-wide aggregation, many queries). Stored with the level-0
+    * group `g_grp` as its bucket key, so a stage-2 probe's
+    * `g_grp IN (...)` prunes buckets; [[centroids]] projects it away. */
+  val centroidsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("centroids", Some("g_grp")) { (spark, dir) =>
+      import org.apache.spark.sql.functions.{col, expr}
+      val k2 = embeddings(spark, dir).k2
+      Ann.ivfCentroids(embeddingsWithCell(spark, dir), "embedding", "cell")
+        .select(expr(s"c_cell div $k2").as("g_grp"), col("c_cell"), col("c_vec"))
+    }
+
+  /** The (c_cell, c_vec) centroid table. */
+  def centroids(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, centroidsArtifact).select("c_cell", "c_vec")
 
   /** Level-0 GROUP centroids over [[centroids]] (k1 tiny rows) — stage
     * 1 of the hierarchical coarse probe a4/a9 share. Derived from the
-    * persisted cell-centroid table (one cells-row aggregation, never a
-    * corpus scan) and persisted itself so a query batch pays neither. */
-  def groupCentroids(spark: SparkSession, dir: String,
-                     id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    groupCentroidCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "gcents") {
-        Ann.groupCentroids(centroids(spark, dir, id, vec),
-            embeddings(spark, dir, id, vec).k2)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * cell-centroid table (one cells-row aggregation, never a corpus
+    * scan). */
+  val groupCentroidsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("gcents", None) { (spark, dir) =>
+      Ann.groupCentroids(centroids(spark, dir), embeddings(spark, dir).k2)
     }
 
-  private val pqCodebookCache = SessionCache.forDf[(Int, String)]
-  private val pqCodesCache = SessionCache.forDf[(Int, String)]
+  def groupCentroids(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, groupCentroidsArtifact)
 
   /** The IVFPQ RESIDUAL codebook over `dir`'s embeddings (k·m tiny
-    * rows, broadcast at use sites), memoized per (session, dir). */
-  def pqCodebook(spark: SparkSession, dir: String,
-                 id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    pqCodebookCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "pqcodebook") {
-        Ann.ivfPqCodebook(
-            embeddingsWithCell(spark, dir, id, vec), id, vec, "cell",
-            centroids(spark, dir, id, vec))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * rows, broadcast at use sites). */
+  val pqCodebookArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("pqcodebook", None) { (spark, dir) =>
+      Ann.ivfPqCodebook(embeddingsWithCell(spark, dir), "vec_id", "embedding",
+        "cell", centroids(spark, dir))
     }
 
-  /** The IVFPQ inverted-list code table (c_cell, __vid, __m, __code)
-    * over `dir`'s embeddings — residual-encoded, cell-indexed, the
+  def pqCodebook(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, pqCodebookArtifact)
+
+  /** The IVFPQ inverted-list code table (c_cell, __vid, __codes) over
+    * `dir`'s embeddings — residual-encoded, cell-indexed, the
     * compressed index a9's ADC scoring probes by cell key. ONE
-    * corpus-scan encode per (session, dir), persisted: n·m narrow
-    * integer rows, ~m bytes per vector. */
-  def pqCodes(spark: SparkSession, dir: String,
-              id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    pqCodesCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "pqcodes") {
-        Ann.ivfPqCodes(
-            embeddingsWithCell(spark, dir, id, vec), id, vec, "cell",
-            centroids(spark, dir, id, vec),
-            pqCodebook(spark, dir, id, vec))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * corpus-scan encode per corpus: one packed row per vector. */
+  val pqCodesArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("pqcodes", Some("c_cell")) { (spark, dir) =>
+      Ann.ivfPqCodes(embeddingsWithCell(spark, dir), "vec_id", "embedding",
+        "cell", centroids(spark, dir), pqCodebook(spark, dir))
     }
 
-  private val rawPqCodebookCache = SessionCache.forDf[(Int, String)]
-  private val rawPqCodesCache = SessionCache.forDf[(Int, String)]
+  def pqCodes(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, pqCodesArtifact)
 
-  /** a8's RAW-vector PQ codebook (no coarse cells — standalone PQ),
-    * memoized per (session, dir). */
-  def rawPqCodebook(spark: SparkSession, dir: String,
-                    id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    rawPqCodebookCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "rawpqcodebook") {
-        Ann.pqCodebook(Tables.embeddings(spark, dir), id, vec)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+  /** a8's RAW-vector PQ codebook (no coarse cells — standalone PQ). */
+  val rawPqCodebookArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("rawpqcodebook", None) { (spark, dir) =>
+      Ann.pqCodebook(Tables.embeddings(spark, dir), "vec_id", "embedding")
     }
+
+  def rawPqCodebook(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, rawPqCodebookArtifact)
 
   /** a8's RAW-vector PQ code table (__vid, __m, __code) — the
-    * standalone-PQ compressed index, built ONCE per (session, dir)
-    * (index construction vs search, the FAISS split); per-query a8
-    * work is then the distance table + integer ADC join only. */
-  def rawPqCodes(spark: SparkSession, dir: String,
-                 id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    rawPqCodesCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "rawpqcodes") {
-        Ann.pqCodes(Tables.embeddings(spark, dir), id, vec,
-            rawPqCodebook(spark, dir, id, vec))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * standalone-PQ compressed index, built ONCE per corpus (index
+    * construction vs search, the FAISS split); per-query a8 work is
+    * then the distance table + integer ADC join only. */
+  val rawPqCodesArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("rawpqcodes", Some("__vid")) { (spark, dir) =>
+      Ann.pqCodes(Tables.embeddings(spark, dir), "vec_id", "embedding",
+        rawPqCodebook(spark, dir))
     }
+
+  def rawPqCodes(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, rawPqCodesArtifact)
 
   /** a4's 2-stage hierarchical IVF top-k search over this cache's
     * shared artifacts — the ONE wiring of knnIvfProbeHier to the
@@ -284,7 +233,6 @@ object CellIndexCache {
       Some(groupCentroids(spark, dir)))
   }
 
-  /** Unpersist and forget every cached index (test hygiene). */
   /** Result card of [[appendVectorDelta]] — delta size, the grown
     * occupancy profile, and the a10-style drift flag. */
   final case class AppendReport(deltaRows: Long, totalRows: Long,
@@ -334,8 +282,9 @@ object CellIndexCache {
     * cell centroid → no residual PQ code (counted in `pqSkipped`);
     * a3's cell join still finds them, and a4/a9 never probe
     * centroid-less cells by construction, so search behavior stays
-    * consistent. Session caches are cleared at the end so later
-    * queries in this session see the grown tables. */
+    * consistent. Every memo ([[SessionCache.clearAll]]) and every
+    * catalog registration of this corpus's tables are dropped at the
+    * end, so later queries in this session see the grown tables. */
   def appendVectorDelta(spark: SparkSession, dir: String,
                         id: String = "vec_id", vec: String = "embedding",
                         targetCellSize: Int = Ann.DefaultTargetCellSize,
@@ -432,27 +381,13 @@ object CellIndexCache {
         val drift = (k1g, k2g) != (k1, k2)
         AppendReport(deltaRows, total, k1, k2, mx, mean, imbalance,
           pqSkipped, drift, drift || imbalance > imbalanceThreshold)
-    } catch {
-      case e: Throwable =>
-        // undo the freshness-bypass registrations for anything not
-        // migrated — a stale table must not masquerade as fresh
-        (frozen ++ appended).foreach { a =>
-          try store.dropRegistration(spark, dir, a) catch { case _: Throwable => () }
-        }
-        throw e
     } finally {
       // later queries in this session must see the grown tables, not
-      // pre-append memos
-      clear()
+      // pre-append memos: forget every memo, and every registration of
+      // this corpus's tables, so each getter re-checks its manifest —
+      // the migrated tables load, the ones left stale rebuild
+      SessionCache.clearAll()
+      store.dropRegistrations(spark, dir)
     }
-  }
-
-  def clear(): Unit = {
-    cache.clear()
-    Seq(pairsCache, withCellCache, centroidCache, groupCentroidCache,
-        pqCodebookCache, pqCodesCache,
-        rawPqCodebookCache, rawPqCodesCache).foreach(_.clear())
-    sclusterCache.clear()
-    kmCentCache.clear()
   }
 }

@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
-import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.sources.{IndexStore, Tables}
 import graft.util.SessionCache
 
 /** One MinHash-LSH + connected-components clustering job per
@@ -15,22 +14,7 @@ import graft.util.SessionCache
   * star-contraction rounds per downstream query.
   */
 object ClusterCache {
-  private case class Key(session: Int, dir: String, n: Int, perms: Int, bands: Int)
-  private case class JKey(session: Int, dir: String, n: Int, tauBp: Int)
-  private case class WKey(session: Int, dir: String, k: Int, w: Int, m: Int)
-  private val pairCache = SessionCache.forDf[Key]
-  private val jpairCache = SessionCache.forDf[JKey]
-  private val cpairCache = SessionCache.forDf[JKey]
-  private val wpairCache = SessionCache.forDf[WKey]
-  private val dsirCache = SessionCache.forDf[(Int, String, Int, String)]
-  private val dsirDocCache = SessionCache.forDf[(Int, String, Int, String)]
-  private val cache = SessionCache.forDf[Key]
-  private val postingsCache = SessionCache.forDf[Key]
-  private val dfCache = SessionCache.forDf[Key]
-  private val statsCache = SessionCache.forValue[Key, Dedup.DfSkewStats]
-
-  private val docWordCache = SessionCache.forDf[(Int, String)]
-  private val docLenCache = SessionCache.forDf[(Int, String)]
+  private val statsCache = SessionCache.forValue[(Int, String, Int), Dedup.DfSkewStats]
 
   /** The shared (doc_id, term, tf) token aggregate over `dir`'s
     * documents — the table x11 (unigram LM), x14 (CCNet buckets) and
@@ -38,62 +22,61 @@ object ClusterCache {
     * corpus, persisted; each consumer pays only its own downstream
     * (Catalyst cannot share the differently-pruned branches between
     * consumers OR within one — see Pipeline.docWordTf). */
-  def docWordTf(spark: SparkSession, dir: String): DataFrame =
-    docWordCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "docwordtf") {
-        graft.operators.Pipeline.docWordTable(
-            Tables.documents(spark, dir), "doc_id", "text")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+  val docWordTfArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("docwordtf", Some("w")) { (spark, dir) =>
+      graft.operators.Pipeline.docWordTable(
+        Tables.documents(spark, dir), "doc_id", "text")
     }
+
+  def docWordTf(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, docWordTfArtifact)
 
   /** The shared per-doc token-length table (doc_id, dl) over
     * [[docWordTf]], plus the corpus token total under `l_total` on
     * every row — ONE doc-sized aggregate per corpus serving every
     * BM25-family consumer (x20/x21's benchScored build and a11/x22's
     * hybrid legs each need dl and L; before this table each cache
-    * re-derived both from the shared docWordTf). Doc-count-sized,
-    * persisted. */
-  def docLengths(spark: SparkSession, dir: String): DataFrame =
-    docLenCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOr(spark, dir, "doclengths") {
-        import org.apache.spark.sql.functions._
-        val dw = docWordTf(spark, dir)
-        val dl = dw.groupBy(col("doc_id"))
-          .agg(sum(col("tf")).cast("long").as("dl"))
-        val lTot = dl.agg(sum(col("dl")).cast("long").as("l_total"))
-        dl.crossJoin(broadcast(lTot)).persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * re-derived both from the shared docWordTf). Doc-count-sized. */
+  val docLengthsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("doclengths", Some("doc_id")) { (spark, dir) =>
+      import org.apache.spark.sql.functions._
+      val dl = docWordTf(spark, dir).groupBy(col("doc_id"))
+        .agg(sum(col("tf")).cast("long").as("dl"))
+      val lTot = dl.agg(sum(col("dl")).cast("long").as("l_total"))
+      dl.crossJoin(broadcast(lTot))
     }
+
+  def docLengths(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.get(spark, dir, docLengthsArtifact)
 
   /** The shared (doc_id, n_sh, shingle-hash) postings table over
     * `dir`'s documents — the input both exact-similarity measures
     * (d4 Jaccard, x16 containment) join on. One shingle + md5 build
-    * per corpus, persisted; each consumer pays only its own join. */
-  def postings(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
-    postingsCache.getOrBuild(Key(System.identityHashCode(spark), dir, n, 0, 0)) {
-      graft.sources.IndexStore.loadOr(spark, dir, s"postings_n$n") {
-        Dedup.shinglePostings(Tables.documents(spark, dir), "doc_id", "text", n)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * per corpus; each consumer pays only its own join. */
+  def postingsArtifact(n: Int = 3): IndexStore.Artifact =
+    IndexStore.Artifact(s"postings_n$n", Some("shingle")) { (spark, dir) =>
+      Dedup.shinglePostings(Tables.documents(spark, dir), "doc_id", "text", n)
     }
+
+  def postings(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
+    IndexStore.get(spark, dir, postingsArtifact(n))
 
   /** The shared per-shingle document-frequency table (shingle, __df)
     * over [[postings]] — vocabulary-sized (tiny next to the postings
-    * themselves), persisted. One postings-wide aggregation serves
-    * every df consumer per corpus: both adaptive routers' skew
-    * statistics (d4 Jaccard, x16 containment), the prefix arms'
-    * global (df, shingle) rank order, and the df>=2 unique-shingle
-    * prune — without it each of those recomputes the same groupBy
-    * from the postings (three full-width aggregations inside one x16
-    * call; measured +1.3s on a 0.3s sf0.1 query). */
-  def shingleDf(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
-    dfCache.getOrBuild(Key(System.identityHashCode(spark), dir, n, 0, 0)) {
-      graft.sources.IndexStore.loadOr(spark, dir, s"shingledf_n$n") {
-        Dedup.shingleDf(postings(spark, dir, n))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    * themselves). One postings-wide aggregation serves every df
+    * consumer per corpus: both adaptive routers' skew statistics (d4
+    * Jaccard, x16 containment), the prefix arms' global (df, shingle)
+    * rank order, and the df>=2 unique-shingle prune — without it each
+    * of those recomputes the same groupBy from the postings (three
+    * full-width aggregations inside one x16 call; measured +1.3s on a
+    * 0.3s sf0.1 query). */
+  def shingleDfArtifact(n: Int = 3): IndexStore.Artifact =
+    IndexStore.Artifact(s"shingledf_n$n", Some("shingle")) { (spark, dir) =>
+      Dedup.shingleDf(postings(spark, dir, n))
     }
+
+  def shingleDf(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
+    IndexStore.get(spark, dir, shingleDfArtifact(n))
 
   /** The df-distribution routing statistics over [[shingleDf]] —
     * tau-independent, so ONE two-action computation per corpus serves
@@ -104,95 +87,74 @@ object ClusterCache {
     * DataFrame. */
   def dfSkewStats(spark: SparkSession, dir: String,
                   n: Int = 3): Dedup.DfSkewStats =
-    statsCache.getOrBuild(Key(System.identityHashCode(spark), dir, n, 0, 0))(
+    statsCache.getOrBuild((System.identityHashCode(spark), dir, n))(
       Dedup.dfSkewStats(shingleDf(spark, dir, n)))
-
-  /** τ-stamped artifact name for [[jaccardPairs]] — τ in basis points
-    * (0.12 → t1200), d4's parameter-stamping rule: a different τ is a
-    * different table, never a silently-reused one. */
-  def jaccardPairsArtifact(n: Int, tau: Double): String =
-    s"jpairs_n${n}_t${math.round(tau * 10000)}"
 
   /** The shared EXACT n-gram Jaccard verified-pair table
     * (id_a, id_b, shared, jaccard ≥ τ) over [[postings]] — durable and
-    * τ-stamped, so the adaptive postings join (the costliest dedup
-    * computation after the LSH build: 8.4s at sf1 for the τ=0.12
-    * table) runs once per (corpus, τ) and every consumer — d4's pair
-    * report, d11's recall truth leg — is a pure reader of the bucketed
-    * table. Every τ self-primes via [[graft.sources.IndexStore
-    * .loadOrWrite]]'s write-through (the RetrievalCache
-    * parameter-stamped-candidate pattern): first touch builds and
-    * writes, later sessions load; a corpus-content change invalidates
-    * the fingerprinted manifest and forces a rebuild. */
-  def jaccardPairs(spark: SparkSession, dir: String, n: Int = 3,
-                   tau: Double = 0.12): DataFrame =
-    jpairCache.getOrBuild(
-        JKey(System.identityHashCode(spark), dir, n,
-          math.round(tau * 10000).toInt)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          jaccardPairsArtifact(n, tau), Some("id_a")) {
+    * τ-stamped (τ in basis points: 0.12 → t1200; a different τ is a
+    * different table, never a silently-reused one), so the adaptive
+    * postings join (the costliest dedup computation after the LSH
+    * build: 8.4s at sf1 for the τ=0.12 table) runs once per
+    * (corpus, τ) and every consumer — d4's pair report, d11's recall
+    * truth leg — is a pure reader of the bucketed table. The defaults
+    * are d4/d11's parameterization. */
+  def jaccardPairsArtifact(n: Int = 3, tau: Double = 0.12): IndexStore.Artifact =
+    IndexStore.Artifact(s"jpairs_n${n}_t${math.round(tau * 10000)}", Some("id_a")) {
+      (spark, dir) =>
         Dedup.ngramJaccardPairsFrom(postings(spark, dir, n), tau,
-            dfcPre = Some(shingleDf(spark, dir, n)),
-            statsPre = Some(dfSkewStats(spark, dir, n)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          dfcPre = Some(shingleDf(spark, dir, n)),
+          statsPre = Some(dfSkewStats(spark, dir, n)))
     }
 
-  /** τ-stamped artifact name for [[containmentPairs]] — same rule as
-    * [[jaccardPairsArtifact]], distinct prefix (the measures differ). */
-  def containmentPairsArtifact(n: Int, tau: Double): String =
-    s"cpairs_n${n}_t${math.round(tau * 10000)}"
+  def jaccardPairs(spark: SparkSession, dir: String, n: Int = 3,
+                   tau: Double = 0.12): DataFrame =
+    IndexStore.get(spark, dir, jaccardPairsArtifact(n, tau))
 
   /** The shared EXACT n-gram CONTAINMENT verified-pair table over
     * [[postings]] — x16's adaptive postings join is the suite's single
     * most expensive computation at sf1 (its documented 21–48s band),
     * and like [[jaccardPairs]] it is a pure function of (corpus, n, τ):
-    * durable, τ-stamped, write-through self-priming. x16 becomes a
-    * reader of the bucketed table after first touch; build mode and
-    * the INDEX_AB artifacts keep measuring the build itself. */
-  def containmentPairs(spark: SparkSession, dir: String, n: Int = 3,
-                       tau: Double = 0.6): DataFrame =
-    cpairCache.getOrBuild(
-        JKey(System.identityHashCode(spark), dir, n,
-          math.round(tau * 10000).toInt)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          containmentPairsArtifact(n, tau), Some("id_a")) {
+    * durable, τ-stamped (distinct prefix — the measures differ). x16
+    * becomes a reader of the bucketed table after first touch; build
+    * mode and the INDEX_AB artifacts keep measuring the build itself.
+    * The defaults are x16's parameterization. */
+  def containmentPairsArtifact(n: Int = 3, tau: Double = 0.6): IndexStore.Artifact =
+    IndexStore.Artifact(s"cpairs_n${n}_t${math.round(tau * 10000)}", Some("id_a")) {
+      (spark, dir) =>
         Dedup.containmentPairsFrom(postings(spark, dir, n), tau,
-            dfcPre = Some(shingleDf(spark, dir, n)),
-            statsPre = Some(dfSkewStats(spark, dir, n)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          dfcPre = Some(shingleDf(spark, dir, n)),
+          statsPre = Some(dfSkewStats(spark, dir, n)))
     }
 
-  /** Parameter-stamped artifact name for [[winnowPairs]]. */
-  def winnowPairsArtifact(k: Int, w: Int, minShared: Int): String =
-    s"wpairs_k${k}_w${w}_m$minShared"
+  def containmentPairs(spark: SparkSession, dir: String, n: Int = 3,
+                       tau: Double = 0.6): DataFrame =
+    IndexStore.get(spark, dir, containmentPairsArtifact(n, tau))
 
   /** The shared winnowing-fingerprint pair table over `dir`'s
     * documents — x15's postings equi-join, a pure function of
-    * (corpus, k, w, minShared): durable, parameter-stamped,
-    * write-through self-priming like [[jaccardPairs]]. */
-  def winnowPairs(spark: SparkSession, dir: String, k: Int, w: Int,
-                  minShared: Int): DataFrame =
-    wpairCache.getOrBuild(
-        WKey(System.identityHashCode(spark), dir, k, w, minShared)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          winnowPairsArtifact(k, w, minShared), Some("id_a")) {
+    * (corpus, k, w, minShared): durable and parameter-stamped like
+    * [[jaccardPairs]]. The defaults are x15's parameterization. */
+  def winnowPairsArtifact(k: Int = 3, w: Int = 4,
+                          minShared: Int = 2): IndexStore.Artifact =
+    IndexStore.Artifact(s"wpairs_k${k}_w${w}_m$minShared", Some("id_a")) {
+      (spark, dir) =>
         Dedup.winnowPairs(Tables.documents(spark, dir), "doc_id", "text",
-            k, w, minShared)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          k, w, minShared)
     }
 
-  /** Parameter-stamped artifact name for [[dsirFeats]] — the predicate
-    * stamp is DERIVED from the predicate's normalized column string
-    * (md5 prefix of Column.toString, e.g. "=(lang, 'en')"), never
-    * caller-supplied: a caller reusing a label with a different
-    * predicate can't silently load the wrong feature table (the
-    * fingerprint only invalidates on corpus change, so the name must
-    * bind the predicate). NOT the bridge Expression's `.sql` — the
-    * lazy ColumnNode wrapper renders every predicate as the same
-    * generic "columnnodeexpression()".
+  def winnowPairs(spark: SparkSession, dir: String, k: Int = 3, w: Int = 4,
+                  minShared: Int = 2): DataFrame =
+    IndexStore.get(spark, dir, winnowPairsArtifact(k, w, minShared))
+
+  /** Predicate stamp for the DSIR artifacts — DERIVED from the
+    * predicate's normalized column string (md5 prefix of
+    * Column.toString, e.g. "=(lang, 'en')"), never caller-supplied: a
+    * caller reusing a label with a different predicate can't silently
+    * load the wrong feature table (the fingerprint only invalidates on
+    * corpus change, so the name must bind the predicate). NOT the
+    * bridge Expression's `.sql` — the lazy ColumnNode wrapper renders
+    * every predicate as the same generic "columnnodeexpression()".
     *
     * Column.toString is not a stable public contract across Spark
     * versions: an upgrade that changes the rendering silently RENAMES
@@ -204,39 +166,33 @@ object ClusterCache {
     * failure mode would be silently loading the wrong table. Orphans
     * are bounded: delete spark-warehouse/graft_idx_*__dsir* after an
     * upgrade. */
-  def dsirFeatsArtifact(buckets: Int,
-                        pred: org.apache.spark.sql.Column): String = {
-    val norm = pred.toString
+  private def dsirStamp(buckets: Int, pred: Column): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(norm.getBytes("UTF-8")).take(4)
+      .digest(pred.toString.getBytes("UTF-8")).take(4)
       .map(b => f"${b & 0xff}%02x").mkString
-    s"dsirfeats_b${buckets}_p$h"
+    s"b${buckets}_p$h"
   }
+
+  /** x25's target predicate: English documents. */
+  private def English: Column = org.apache.spark.sql.functions.col("lang") === "en"
 
   /** The shared DSIR hashed-feature aggregate (id, source, target
     * flag, bucket, tf) over `dir`'s documents — x25's dominant cost
     * (the uni+bigram explode + aggregation), durable and stamped by
-    * (buckets, predicate-SQL hash). Write-through self-priming. */
-  def dsirFeats(spark: SparkSession, dir: String, buckets: Int,
-                targetPred: org.apache.spark.sql.Column): DataFrame = {
-    val stamp = dsirFeatsArtifact(buckets, targetPred)
-    dsirCache.getOrBuild(
-        (System.identityHashCode(spark), dir, buckets, stamp)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir,
-          stamp, Some("b")) {
+    * (buckets, predicate hash). The defaults are x25's
+    * parameterization. */
+  def dsirFeatsArtifact(buckets: Int = 4096,
+                        pred: Column = English): IndexStore.Artifact =
+    IndexStore.Artifact("dsirfeats_" + dsirStamp(buckets, pred), Some("b")) {
+      (spark, dir) =>
         graft.operators.Pipeline.dsirFeatTable(
-            Tables.documents(spark, dir), "doc_id", "text", "source",
-            targetPred, buckets)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          Tables.documents(spark, dir), "doc_id", "text", "source",
+          pred, buckets)
     }
-  }
 
-  /** Parameter-stamped artifact name for [[dsirDocStats]] — same
-    * derived predicate stamp as [[dsirFeatsArtifact]]. */
-  def dsirDocStatsArtifact(buckets: Int,
-                           pred: org.apache.spark.sql.Column): String =
-    "dsirdoc_" + dsirFeatsArtifact(buckets, pred).stripPrefix("dsirfeats_")
+  def dsirFeats(spark: SparkSession, dir: String, buckets: Int,
+                targetPred: Column): DataFrame =
+    IndexStore.get(spark, dir, dsirFeatsArtifact(buckets, targetPred))
 
   /** The per-doc DSIR importance statistics (doc, source, feature
     * mass, target/raw LM bits) as a durable DOC-SIZED artifact — the
@@ -244,55 +200,49 @@ object ClusterCache {
     * join+aggregate are pure integer functions of (corpus, buckets,
     * predicate), so a warm session reads 1 row per doc and only the
     * source-sized report runs per query. Builds from the (loaded or
-    * built) [[dsirFeats]] table; write-through self-priming. */
-  def dsirDocStats(spark: SparkSession, dir: String, buckets: Int,
-                   targetPred: org.apache.spark.sql.Column): DataFrame = {
-    val stamp = dsirDocStatsArtifact(buckets, targetPred)
-    dsirDocCache.getOrBuild(
-        (System.identityHashCode(spark), dir, buckets, stamp)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir, stamp,
-          Some("source")) {
+    * built) [[dsirFeats]] table; same stamp. */
+  def dsirDocStatsArtifact(buckets: Int = 4096,
+                           pred: Column = English): IndexStore.Artifact =
+    IndexStore.Artifact("dsirdoc_" + dsirStamp(buckets, pred), Some("source")) {
+      (spark, dir) =>
         graft.operators.Pipeline.dsirDocStats(
-            dsirFeats(spark, dir, buckets, targetPred), "doc_id", "source")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          dsirFeats(spark, dir, buckets, pred), "doc_id", "source")
     }
-  }
+
+  def dsirDocStats(spark: SparkSession, dir: String, buckets: Int,
+                   targetPred: Column): DataFrame =
+    IndexStore.get(spark, dir, dsirDocStatsArtifact(buckets, targetPred))
 
   /** The shared MinHash-LSH candidate pair table (id_a, id_b) over
-    * `dir`'s documents, persisted — d2 reports it (plus its orderBy),
-    * the cluster build consumes it as the CC edge set. One signature +
-    * band-join job, every consumer. */
+    * `dir`'s documents — d2 reports it (plus its orderBy), the cluster
+    * build consumes it as the CC edge set. One signature + band-join
+    * job, every consumer. */
+  def minhashArtifact(n: Int = 3, perms: Int = 16,
+                      bands: Int = 4): IndexStore.Artifact =
+    IndexStore.Artifact(s"minhash_n${n}_p${perms}_b$bands", Some("id_a")) {
+      (spark, dir) =>
+        Dedup.minhashLshPairs(Tables.documents(spark, dir), "doc_id", "text",
+          n, perms, bands, ordered = false)
+    }
+
   def minhashPairs(spark: SparkSession, dir: String,
                    n: Int = 3, perms: Int = 16, bands: Int = 4): DataFrame =
-    pairCache.getOrBuild(Key(System.identityHashCode(spark), dir, n, perms, bands)) {
-      graft.sources.IndexStore.loadOr(spark, dir, s"minhash_n${n}_p${perms}_b$bands") {
-        Dedup.minhashLshPairs(Tables.documents(spark, dir), "doc_id", "text",
-            n, perms, bands, ordered = false)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-    }
+    IndexStore.get(spark, dir, minhashArtifact(n, perms, bands))
 
   /** The shared dup-cluster table over `dir`'s documents table
-    * (doc_id, cluster_id), persisted MEMORY_AND_DISK — connected
-    * components over [[minhashPairs]]' edge set, so the LSH job is
-    * shared with d2 and the CC rounds with d7. */
-  def documents(spark: SparkSession, dir: String,
-                n: Int = 3, perms: Int = 16, bands: Int = 4): DataFrame =
-    cache.getOrBuild(Key(System.identityHashCode(spark), dir, n, perms, bands)) {
-      graft.sources.IndexStore.loadOr(spark, dir, s"clusters_n${n}_p${perms}_b$bands") {
+    * (doc_id, cluster_id) — connected components over
+    * [[minhashPairs]]' edge set, so the LSH job is shared with d2 and
+    * the CC rounds with d7. */
+  def clustersArtifact(n: Int = 3, perms: Int = 16,
+                       bands: Int = 4): IndexStore.Artifact =
+    IndexStore.Artifact(s"clusters_n${n}_p${perms}_b$bands", Some("doc_id")) {
+      (spark, dir) =>
         Dedup.connectedComponents(
-            Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
-            minhashPairs(spark, dir, n, perms, bands), "doc_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+          Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
+          minhashPairs(spark, dir, n, perms, bands), "doc_id")
     }
 
-  /** Unpersist and forget every cached cluster table (test hygiene). */
-  def clear(): Unit = {
-    Seq(cache, pairCache, jpairCache, cpairCache, wpairCache, dsirCache,
-        dsirDocCache, postingsCache, dfCache, docWordCache, docLenCache)
-      .foreach(_.clear())
-    statsCache.clear()
-  }
+  def documents(spark: SparkSession, dir: String,
+                n: Int = 3, perms: Int = 16, bands: Int = 4): DataFrame =
+    IndexStore.get(spark, dir, clustersArtifact(n, perms, bands))
 }

@@ -21,9 +21,12 @@ object Binary {
   val ShardPackHashShards = 8
 
   /** Attach a binary payload column (here: utf-8 bytes of the text —
-    * the stand-in for image/audio bytes loaded via `binaryFile` source). */
-  def withPayload(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.select(col(id), col(text).cast("binary").as("payload"))
+    * the stand-in for image/audio bytes loaded via `binaryFile` source),
+    * keeping `carry` columns after it. */
+  def withPayload(docs: DataFrame, id: String, text: String,
+                  carry: Seq[String] = Nil): DataFrame =
+    docs.select(col(id) +: col(text).cast("binary").as("payload") +:
+      carry.map(col): _*)
 
   /** Pure-SQL metadata + stub-decoded dimensions: everything here is a
     * codegen'd expression (no UDF) and oracle-reproducible. The
@@ -44,8 +47,10 @@ object Binary {
     * shard-to-GPU batches). Pure codegen'd expressions — `substr` on
     * the binary column inside a `transform(sequence(...))`, then
     * posexplode; the payload column itself is projected away before
-    * any exchange, so only chunk-sized slices move. */
-  def chunked(withPayload: DataFrame, id: String, chunkSize: Int): DataFrame = {
+    * any exchange, so only chunk-sized slices move. `carry` columns
+    * (per-payload metadata) ride along after the chunk columns. */
+  def chunked(withPayload: DataFrame, id: String, chunkSize: Int,
+              carry: Seq[String] = Nil): DataFrame = {
     val nChunks = ceil(octet_length(col("payload")).cast("double") / chunkSize)
       .cast("int")
     // nChunks=0 must yield NO rows — an unguarded sequence(0, -1) would
@@ -53,10 +58,11 @@ object Binary {
     val idxs = when(nChunks <= 0, array().cast("array<int>"))
       .otherwise(sequence(lit(0), nChunks - 1))
     withPayload
-      .select(col(id), posexplode(transform(idxs,
-        i => substring(col("payload"), (i * chunkSize) + 1, lit(chunkSize)))))
-      .select(col(id), col("pos").as("chunk_idx"),
-        octet_length(col("col")).as("chunk_len"), md5(col("col")).as("chunk_md5"))
+      .select(col(id) +: carry.map(col) :+ posexplode(transform(idxs,
+        i => substring(col("payload"), (i * chunkSize) + 1, lit(chunkSize)))): _*)
+      .select(Seq(col(id), col("pos").as("chunk_idx"),
+        octet_length(col("col")).as("chunk_len"), md5(col("col")).as("chunk_md5")) ++
+        carry.map(col): _*)
   }
 
   /** Chunk-level near-dup pairs over binary payloads — the STORAGE

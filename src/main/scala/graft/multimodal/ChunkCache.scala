@@ -1,10 +1,8 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
-import graft.sources.Tables
-import graft.util.SessionCache
+import graft.sources.{IndexStore, Tables}
 
 /** The shared fixed-size chunk table (doc_id, chunk_idx, chunk_len,
   * chunk_md5) over `dir`'s documents' binary payloads — the input both
@@ -18,29 +16,21 @@ import graft.util.SessionCache
   * (build mode re-derives everything; the BUILD gate stays green).
   */
 object ChunkCache {
-  private val cache = SessionCache.forDf[(Int, String, Int)]
-
-  /** Size-stamped artifact name (chunkSize is part of the identity —
-    * a different chunking is a different table). */
-  def chunksArtifact(chunkSize: Int): String = s"chunks_c$chunkSize"
-
-  def chunks(spark: SparkSession, dir: String, chunkSize: Int): DataFrame =
-    cache.getOrBuild((System.identityHashCode(spark), dir, chunkSize)) {
-      graft.sources.IndexStore.loadOr(spark, dir, chunksArtifact(chunkSize)) {
-        import org.apache.spark.sql.functions.col
-        // the tenant column rides the artifact (attached ONCE at build
-        // time, doc-keyed 1:1): m6's per-source accounting would
-        // otherwise re-join a documents projection per consuming leg;
-        // m4 prunes it at the bucketed scan
-        Binary.chunked(
-            Binary.withPayload(Tables.documents(spark, dir), "doc_id", "text"),
-            "doc_id", chunkSize)
-          .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")),
-            Seq("doc_id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+  /** Size-stamped (chunkSize is part of the identity — a different
+    * chunking is a different table). The tenant column rides the
+    * artifact (doc-keyed 1:1): m6's per-source accounting would
+    * otherwise re-join a documents projection per consuming leg; m4
+    * prunes it at the bucketed scan. `source` is carried through the
+    * one documents projection, so the build scans documents once. The
+    * default is m4/m6's chunk size. */
+  def chunksArtifact(chunkSize: Int = 64): IndexStore.Artifact =
+    IndexStore.Artifact(s"chunks_c$chunkSize", Some("doc_id")) { (spark, dir) =>
+      val carry = Seq("source")
+      Binary.chunked(
+        Binary.withPayload(Tables.documents(spark, dir), "doc_id", "text", carry),
+        "doc_id", chunkSize, carry)
     }
 
-  /** Unpersist and forget every cached chunk table (test hygiene). */
-  def clear(): Unit = cache.clear()
+  def chunks(spark: SparkSession, dir: String, chunkSize: Int = 64): DataFrame =
+    IndexStore.get(spark, dir, chunksArtifact(chunkSize))
 }

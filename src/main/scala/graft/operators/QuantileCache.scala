@@ -122,7 +122,4 @@ object QuantileCache {
     TimeSeries.madReportFromMedian(projection(spark, dir), "event_type",
       StringType, sel.cuts, med, sel.n, k)
   }
-
-  /** Test hygiene: drop memoized selections and unpersist projections. */
-  def clear(): Unit = { projCache.clear(); selCache.clear() }
 }

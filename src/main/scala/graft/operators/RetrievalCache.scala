@@ -2,9 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.sources.Tables
-import graft.util.SessionCache
+import graft.sources.{IndexStore, Tables}
 
 /** One lexical (BM25 top-20) + one vector (exact-cosine top-20)
   * candidate run per (session, corpus) for the canonical query docs,
@@ -26,70 +24,61 @@ object RetrievalCache {
   val QueryDocs: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L)
   private val K = 20
 
-  /** Parameter stamp for the durable candidate tables (IndexStore
-    * write-through): query-doc set + k ride in the NAME, so a changed
-    * configuration is a different table, never silently wrong data —
-    * the same rule as the index artifacts. */
+  /** Parameter stamp for the durable candidate tables: query-doc set
+    * + k ride in the NAME, so a changed configuration is a different
+    * table, never silently wrong data — the same rule as the index
+    * artifacts. */
   private val qk = s"q${QueryDocs.mkString("_")}_k$K"
-
-  private val legsCache = SessionCache.forDfPair[(Int, String)]
-  private val scoredCache =
-    SessionCache.forDf[(Int, String, Seq[(Long, String)])]
 
   /** The (query_id, doc_id, score_q6) BM25 score table for a fixed
     * probe set, built once per (session, corpus, probe set) — x20
-    * ranks it, x21 thresholds it. The probe SEQUENCE is part of the
-    * cache key (a DataFrame argument would be probes-blind: a second
-    * caller with different probes would silently get the first
-    * caller's scores); the table is bounded by matching docs ×
-    * queries. */
+    * ranks it, x21 thresholds it. The probe SEQUENCE is the table's
+    * identity (md5-stamped into the name: a DataFrame argument would
+    * be probes-blind, and a second caller with different probes would
+    * silently get the first caller's scores); the table is bounded by
+    * matching docs × queries. */
   def benchScored(spark: SparkSession, dir: String,
-                  probes: Seq[(Long, String)]): DataFrame =
-    scoredCache.getOrBuild((System.identityHashCode(spark), dir, probes)) {
-      // probe-set stamp: the probes ARE the table's identity
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(probes.map { case (q, t) => s"$q:$t" }.mkString("|")
-          .getBytes("UTF-8"))
-        .take(5).map(b => f"$b%02x").mkString
-      graft.sources.IndexStore.loadOrWrite(spark, dir, s"bscored_$h", None) {
-        import spark.implicits._
-        Retrieval.bm25Scored(
-            graft.dedup.ClusterCache.docWordTf(spark, dir),
-            Tables.documents(spark, dir), "doc_id",
-            probes.toDF("query_id", "term"),
-            Some(graft.dedup.ClusterCache.docLengths(spark, dir)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-    }
+                  probes: Seq[(Long, String)]): DataFrame = {
+    val h = java.security.MessageDigest.getInstance("MD5")
+      .digest(probes.map { case (q, t) => s"$q:$t" }.mkString("|")
+        .getBytes("UTF-8"))
+      .take(5).map(b => f"$b%02x").mkString
+    IndexStore.get(spark, dir, IndexStore.Artifact(s"bscored_$h", None) { (spark, dir) =>
+      import spark.implicits._
+      Retrieval.bm25Scored(
+        graft.dedup.ClusterCache.docWordTf(spark, dir),
+        Tables.documents(spark, dir), "doc_id",
+        probes.toDF("query_id", "term"),
+        Some(graft.dedup.ClusterCache.docLengths(spark, dir)))
+    })
+  }
+
+  private val lexLeg = IndexStore.Artifact(s"hlex_$qk", None) { (spark, dir) =>
+    val dw = graft.dedup.ClusterCache.docWordTf(spark, dir)
+    val queries = dw.filter(col("doc_id").isin(QueryDocs: _*))
+      .select(col("doc_id").as("query_id"), col("w").as("term"))
+    Retrieval.bm25TopK(
+      Retrieval.bm25Scored(dw, Tables.documents(spark, dir), "doc_id",
+          queries, Some(graft.dedup.ClusterCache.docLengths(spark, dir)))
+        .filter(col("doc_id") =!= col("query_id")),
+      "doc_id", K)
+  }
+
+  private val vecLeg = IndexStore.Artifact(s"hvec_$qk", None) { (spark, dir) =>
+    graft.ann.Ann.knnBrute(
+        Tables.embeddings(spark, dir), "vec_id", "embedding", QueryDocs, K)
+      .select(col("query_id"), col("nn_id").as("doc_id"), col("rank"))
+  }
 
   /** (lexical, vector) top-K candidate tables, both
     * (query_id, doc_id, rank [, score_q6]). */
   def hybridLegs(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    legsCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      val lex = graft.sources.IndexStore.loadOrWrite(
-          spark, dir, s"hlex_$qk", None) {
-        val dw = graft.dedup.ClusterCache.docWordTf(spark, dir)
-        val queries = dw.filter(col("doc_id").isin(QueryDocs: _*))
-          .select(col("doc_id").as("query_id"), col("w").as("term"))
-        Retrieval.bm25TopK(
-            Retrieval.bm25Scored(dw, Tables.documents(spark, dir), "doc_id",
-                queries,
-                Some(graft.dedup.ClusterCache.docLengths(spark, dir)))
-              .filter(col("doc_id") =!= col("query_id")),
-            "doc_id", K)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      val vec = graft.sources.IndexStore.loadOrWrite(
-          spark, dir, s"hvec_$qk", None) {
-        graft.ann.Ann.knnBrute(
-            Tables.embeddings(spark, dir), "vec_id", "embedding", QueryDocs, K)
-          .select(col("query_id"), col("nn_id").as("doc_id"), col("rank"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      (lex, vec)
-    }
+    (IndexStore.get(spark, dir, lexLeg), IndexStore.get(spark, dir, vecLeg))
 
-  private val ivfLegCache = SessionCache.forDf[(Int, String)]
+  private val ivfLegArtifact = IndexStore.Artifact(s"hivf_$qk", None) { (spark, dir) =>
+    graft.ann.CellIndexCache.probeTopk(spark, dir, QueryDocs, K)
+      .select(col("query_id"), col("nn_id").as("doc_id"), col("rank"))
+  }
 
   /** The IVF-probed dense candidate leg (query_id, doc_id, rank) for
     * the canonical query docs, top-20 via the a4 hierarchical probe
@@ -97,18 +86,5 @@ object RetrievalCache {
     * once per (session, corpus) like the brute legs above — a13 fuses
     * it against the shared lexical leg. Bounded at queries × 20 rows. */
   def ivfLeg(spark: SparkSession, dir: String): DataFrame =
-    ivfLegCache.getOrBuild((System.identityHashCode(spark), dir)) {
-      graft.sources.IndexStore.loadOrWrite(spark, dir, s"hivf_$qk", None) {
-        graft.ann.CellIndexCache.probeTopk(spark, dir, QueryDocs, K)
-          .select(col("query_id"), col("nn_id").as("doc_id"), col("rank"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-    }
-
-  /** Unpersist and forget every cached candidate table (test hygiene). */
-  def clear(): Unit = {
-    legsCache.clear()
-    scoredCache.clear()
-    ivfLegCache.clear()
-  }
+    IndexStore.get(spark, dir, ivfLegArtifact)
 }

@@ -2,26 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Durable, BUCKETED storage for the corpus-level index artifacts the
-  * session caches ([[graft.ann.CellIndexCache]],
-  * [[graft.dedup.ClusterCache]]) otherwise rebuild per process — the
-  * "index construction vs search" split FAISS ships as write_index /
-  * read_index, realized as Spark bucketed tables:
-  *
-  *  - `cells`      (id, vec, cell)            bucketed by `cell`
-  *  - `centroids`  (g_grp, c_cell, c_vec)     bucketed by `g_grp`
-  *  - `gcents`     (g_grp, g_vec)             k1 tiny rows, plain
-  *  - `pqcodebook` (__m, __cid, __csub)       k·m tiny rows, plain
-  *  - `pqcodes`    (c_cell, __vid, __codes)   bucketed by `c_cell`
-  *  - `rawpqcodebook` / `rawpqcodes`          a8's standalone-PQ index
-  *  - `pairs`      (id_a, id_b, cos)          bucketed by `id_a`
-  *  - `postings`   (doc_id, n_sh, shingle)    bucketed by `shingle`
-  *  - `shingledf`  (shingle, __df, __first)   bucketed by `shingle`
-  *  - `minhash`    (id_a, id_b)               bucketed by `id_a`
-  *  - `clusters`   (doc_id, cluster_id)       bucketed by `doc_id`
-  *  - `docwordtf`  (doc_id, w, tf)            bucketed by `w`
-  *  - `jpairs`/`cpairs`/`wpairs`               τ/param-stamped verified-pair
-  *    tables (d4/d11, x16, x15)                bucketed by `id_a`
+/** Durable, BUCKETED storage for the corpus-level index artifacts —
+  * the "index construction vs search" split FAISS ships as write_index
+  * / read_index, realized as Spark bucketed tables. Each artifact is
+  * declared ONCE, next to its builder, as an [[IndexStore.Artifact]]
+  * (name with every parameter stamped in, bucket key, builder); the
+  * standard set a corpus is primed with is [[IndexStore.standard]].
+  * Every artifact is read through [[IndexStore.get]].
   *
   * The bucket keys are each artifact's probe/join key, so a search
   * session gets the two properties the at-scale claims assume
@@ -30,17 +17,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * BUCKETS at the scan ("SelectedBucketsCount: k out of n" in the
   * plan — spec-checked), and (b) joins/aggregations on the bucket key
   * read pre-partitioned data with no Exchange. And no new session
-  * ever pays the index build again — the cache getters load these
-  * tables when [[enabled]].
+  * ever pays the index build again — [[get]] loads these tables when
+  * [[enabled]].
   *
-  * Activation: ON BY DEFAULT since r14 — the cache getters auto-load
-  * any artifact whose manifest exists and whose corpus fingerprint
-  * still matches (GRAFT_INDEX_TABLES=0/off forces build mode; "1"
-  * stays accepted and means the same as unset). Bench/Verify prime a
-  * corpus on first touch via [[primeIfMissing]] (write ONLY the
-  * missing artifacts), so the first session pays the build+write once
+  * Activation: ON BY DEFAULT — [[get]] loads any artifact whose
+  * manifest exists and whose corpus fingerprint still matches
+  * (GRAFT_INDEX_TABLES=0/off forces build mode; "1" stays accepted and
+  * means the same as unset), and on a miss builds it and writes it
+  * through. Bench/Verify prime a corpus on first touch via
+  * [[primeIfMissing]], so the first session pays the build+write once
   * and every later session loads. Staleness is two-axis: PARAMETER
-  * changes (shingle n, minhash perms/bands; coarse-cell k1/k2
+  * changes (shingle n, minhash perms/bands, τ, ...; coarse-cell k1/k2
   * re-derive deterministically from the parquet footer row count)
   * ride in the table NAME, and corpus CONTENT changes invalidate the
   * manifest's source fingerprint — either way a stale table is
@@ -68,13 +55,10 @@ object IndexStore {
     * the WRITING session's shuffle-partition width (which Bench/Verify
     * set to SPARK_GRAFT_CPUS — so the count tracks the box, 32 here,
     * 3 at the CPUS3 gate, hundreds on a cluster: the same sizing rule
-    * as shuffle partitions). GRAFT_INDEX_BUCKETS overrides when the
-    * write box and the read fleet differ. Already-written tables keep
-    * their recorded bucket spec until re-primed. */
+    * as shuffle partitions). Already-written tables keep their
+    * recorded bucket spec until re-primed. */
   def buckets(spark: SparkSession): Int =
-    sys.props.get("GRAFT_INDEX_BUCKETS").orElse(sys.env.get("GRAFT_INDEX_BUCKETS"))
-      .map(_.toInt)
-      .getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** Deterministic per-(corpus dir, artifact) table name: dir basename
     * for readability + full-path hash for uniqueness. */
@@ -189,63 +173,64 @@ object IndexStore {
     spark.table(name)
   }
 
-  /** The cache getters' hook: loaded table when [[enabled]] and
-    * present, else `build`.
-    *
-    * The LOADED branch is persisted MEMORY_AND_DISK, mirroring every
-    * getter's built branch. r13/r14 first shipped it UNPERSISTED on
-    * the theory that the bucketed files are the cache and caching
-    * would hide their partitioning from the planner — true, but the
-    * measured trade flips hard at scale: warm multi-scan consumers
-    * (x16's adaptive router, d4's pair join, d11's two pair legs)
-    * re-read bucketed parquet on every scan, and the sf1 bench read
-    * 202s/150 in load mode vs ~89s/131 warm-RAM build mode (x16
-    * alone 65s vs its 21-30s RAM band; sf0.1's +0.4s "tax" was the
-    * small-scale edge of a 2-3x-per-consumer cost). The in-RAM copy
-    * re-pays the r13 warm behavior; the join shuffles it re-adds are
-    * the ones build mode always had. Cold first touch reads the
-    * parquet once either way — INDEX_AB's cold-load win stands.
-    * Direct `load`/`spark.table` reads (IndexStoreSpec's bucket
-    * pruning) stay unpersisted and keep the bucketed scan. */
-  /** Staleness and re-priming (ADVICE r16): when the manifest is
-    * width-stale (or fingerprint-stale), this path REBUILDS in-session
-    * but does not re-write — the artifact name set is enumerated by
-    * [[primeIfMissing]], which Verify/Bench run at session start and
-    * which sees a stale artifact as missing (exists() is false) and
-    * re-primes it at the current width. That hook is the deliberate
-    * single re-prime point for the standard set; a session that skips
-    * priming (tests, direct API use) re-pays the build per session
-    * until one that primes runs. Parameter-stamped names outside the
-    * standard set use [[loadOrWrite]], which self-primes. */
-  def loadOr(spark: SparkSession, dir: String, artifact: String)
-            (build: => DataFrame): DataFrame =
-    if (enabled && exists(spark, dir, artifact))
-      load(spark, dir, artifact)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else build
+  /** One durable index artifact: its table `name` (every build
+    * parameter stamped in — a different parameterization is a
+    * different table, never a silently reused one), the bucket key its
+    * table is written with (None: small plain table), and the builder
+    * that derives it from a corpus dir. Equality is the first parameter
+    * list only. */
+  final case class Artifact(name: String, bucketKey: Option[String])(
+      val build: (SparkSession, String) => DataFrame)
 
-  /** [[loadOr]] plus WRITE-THROUGH on a miss — the self-priming hook
-    * for the parameter-stamped candidate tables (RetrievalCache) that
-    * [[primeIfMissing]] can't enumerate (their names carry the probe
-    * set). Safe against read-from-self by construction: the write only
-    * happens when the artifact was MISSING, so the just-built df can't
-    * be backed by the table it writes. A failed write degrades to
-    * session-cached (stderr note), never fails the query. */
-  def loadOrWrite(spark: SparkSession, dir: String, artifact: String,
-                  bucketKey: Option[String])(build: => DataFrame): DataFrame =
-    if (enabled && exists(spark, dir, artifact))
-      load(spark, dir, artifact)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else {
-      val df = build
-      if (enabled) {
-        try { write(df, dir, artifact, bucketKey); () }
-        catch { case e: Throwable => System.err.println(
-          s"[indexstore] write-through of $artifact failed (session-cached only): ${e.getMessage}")
+  private val memo = graft.util.SessionCache.forDf[(Int, String, String)]
+
+  private def key(spark: SparkSession, dir: String, a: Artifact) =
+    (System.identityHashCode(spark), dir, a.name)
+
+  /** The ONE getter for every artifact, memoized per (session, dir,
+    * name). When [[enabled]], a missing or stale table is first built
+    * and written through (a failed write degrades to session-only with
+    * a stderr note, never fails the query), and the stored table is
+    * then loaded. In build mode the artifact is built and never
+    * written. The write takes the UNPERSISTED build, so the write's
+    * tasks follow the build's own (AQE-coalesced) partitioning: a
+    * persisted frame keeps the full shuffle width and writes one file
+    * per task per bucket (measured at sf0.01 on 4 shuffle partitions:
+    * 16 files instead of 4 for each small pair table). The write only
+    * happens on a MISS, so the build can't be backed by the table it
+    * writes.
+    *
+    * The frame served is persisted MEMORY_AND_DISK. The loaded arm
+    * first shipped UNPERSISTED on the theory that the bucketed files
+    * are the cache and caching would hide their partitioning from the
+    * planner — true, but the measured trade flips hard at scale: warm
+    * multi-scan consumers (x16's adaptive router, d4's pair join, d11's
+    * two pair legs) re-read bucketed parquet on every scan, and the sf1
+    * bench read 202s/150 in load mode vs ~89s/131 warm-RAM build mode.
+    * Cold first touch reads the parquet once either way — INDEX_AB's
+    * cold-load win stands. Direct [[load]] reads (IndexStoreSpec's
+    * bucket pruning) stay unpersisted and keep the bucketed scan.
+    *
+    * A width- or fingerprint-stale manifest reads as a miss, so the
+    * getter rebuilds and re-primes it at the current width. */
+  def get(spark: SparkSession, dir: String, a: Artifact): DataFrame =
+    memo.getOrBuild(key(spark, dir, a)) {
+      if (enabled && !exists(spark, dir, a.name)) {
+        try write(a.build(spark, dir), dir, a.name, a.bucketKey)
+        catch { case scala.util.control.NonFatal(e) => System.err.println(
+          s"[indexstore] write-through of ${a.name} failed (session-cached only): ${e.getMessage}")
         }
       }
-      df
+      val df =
+        if (enabled && exists(spark, dir, a.name)) load(spark, dir, a.name)
+        else a.build(spark, dir)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
+
+  /** The memoized frame iff this session already holds it — never
+    * loads or builds. */
+  def peek(spark: SparkSession, dir: String, a: Artifact): Option[DataFrame] =
+    memo.peek(key(spark, dir, a))
 
   private[graft] def write(df: DataFrame, dir: String, artifact: String,
                            bucketKey: Option[String]): String = {
@@ -294,7 +279,7 @@ object IndexStore {
     * freshness check for the rest of the session, so the caller must
     * either complete the migration ([[refreshManifest]] /
     * [[appendRows]]) or undo the registration
-    * ([[dropRegistration]]) before returning. */
+    * ([[dropRegistrations]]) before returning. */
   private[graft] def loadStale(spark: SparkSession, dir: String,
                                artifact: String): Option[DataFrame] = {
     val name = tableName(dir, artifact)
@@ -303,13 +288,15 @@ object IndexStore {
     else None
   }
 
-  /** Drop the catalog registration of `artifact` (EXTERNAL table: the
-    * files and manifest stay) — the failure-path undo for
-    * [[loadStale]]'s freshness-bypass registration. */
-  private[graft] def dropRegistration(spark: SparkSession, dir: String,
-                                      artifact: String): Unit = {
-    val name = tableName(dir, artifact)
-    if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE `$name`")
+  /** Drop the catalog registration of every artifact table of `dir`
+    * (EXTERNAL tables: the files and manifests stay), so the next
+    * [[exists]] re-registers each one through the manifest's freshness
+    * check — how the append path hands back both the tables it
+    * migrated and the ones it left fingerprint-stale on purpose. */
+  private[graft] def dropRegistrations(spark: SparkSession, dir: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase, tableName(dir, "") + "*")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.table}`"))
   }
 
   /** Append `rows` into an existing artifact table (columns are
@@ -346,118 +333,53 @@ object IndexStore {
     finally out.close()
   }
 
-  /** The standard artifact set for `dir`'s corpus: (name, builder,
-    * bucket key). Builders go through the session caches — anything
-    * queries already built is shared — and are DEPENDENCY-ORDERED:
-    * later builders consume earlier artifacts through the getters
-    * (doclengths reads docwordtf, pqcodes reads centroids, ...). */
-  private def artifactSet(spark: SparkSession, dir: String,
-                          n: Int, perms: Int, bands: Int)
-      : Seq[(String, () => DataFrame, Option[String])] = {
-    import graft.ann.CellIndexCache
-    import graft.dedup.{ClusterCache, Dedup}
-    import org.apache.spark.sql.functions.{col, expr}
-    Seq(
-      ("cells", () => CellIndexCache.embeddingsWithCell(spark, dir),
-        Some("cell")),
-      ("centroids", () => {
-        val k2 = CellIndexCache.embeddings(spark, dir).k2
-        CellIndexCache.centroids(spark, dir)
-          .select(expr(s"c_cell div $k2").as("g_grp"), col("c_cell"), col("c_vec"))
-      }, Some("g_grp")),
-      ("gcents", () => CellIndexCache.groupCentroids(spark, dir), None),
-      ("pqcodebook", () => CellIndexCache.pqCodebook(spark, dir), None),
-      ("pqcodes", () => CellIndexCache.pqCodes(spark, dir), Some("c_cell")),
-      ("rawpqcodebook", () => CellIndexCache.rawPqCodebook(spark, dir), None),
-      ("rawpqcodes", () => CellIndexCache.rawPqCodes(spark, dir), Some("__vid")),
-      ("pairs", () => CellIndexCache.scaledPairs(spark, dir), Some("id_a")),
-      (s"postings_n$n", () => ClusterCache.postings(spark, dir, n),
-        Some("shingle")),
-      (s"shingledf_n$n", () => ClusterCache.shingleDf(spark, dir, n),
-        Some("shingle")),
-      (s"minhash_n${n}_p${perms}_b$bands",
-        () => ClusterCache.minhashPairs(spark, dir, n, perms, bands),
-        Some("id_a")),
-      (s"clusters_n${n}_p${perms}_b$bands",
-        () => ClusterCache.documents(spark, dir, n, perms, bands),
-        Some("doc_id")),
-      ("docwordtf", () => ClusterCache.docWordTf(spark, dir), Some("w")),
-      (graft.multimodal.ChunkCache.chunksArtifact(64),
-        () => graft.multimodal.ChunkCache.chunks(spark, dir, 64),
-        Some("doc_id")),
-      ("doclengths", () => ClusterCache.docLengths(spark, dir),
-        Some("doc_id")),
-      // the verified-pair family (r15): RAW builders, not the getters —
-      // the getters write through on a miss (loadOrWrite), so routing
-      // them through primeIfMissing would double-write; built here they
-      // prime once and the getters load. Parameters match the committed
-      // consumers (d4/d11 τ=0.12, x16 τ=0.6, x15 k3/w4/m2); other
-      // parameterizations still self-prime via the getters' write-through.
-      (ClusterCache.jaccardPairsArtifact(n, 0.12),
-        () => Dedup.ngramJaccardPairsFrom(ClusterCache.postings(spark, dir, n),
-          0.12, dfcPre = Some(ClusterCache.shingleDf(spark, dir, n)),
-          statsPre = Some(ClusterCache.dfSkewStats(spark, dir, n))),
-        Some("id_a")),
-      (ClusterCache.containmentPairsArtifact(n, 0.6),
-        () => Dedup.containmentPairsFrom(ClusterCache.postings(spark, dir, n),
-          0.6, dfcPre = Some(ClusterCache.shingleDf(spark, dir, n)),
-          statsPre = Some(ClusterCache.dfSkewStats(spark, dir, n))),
-        Some("id_a")),
-      (ClusterCache.winnowPairsArtifact(3, 4, 2),
-        () => Dedup.winnowPairs(graft.sources.Tables.documents(spark, dir),
-          "doc_id", "text", 3, 4, 2),
-        Some("id_a")),
-      (CellIndexCache.semanticClustersArtifact(0.4),
-        () => Dedup.connectedComponents(
-          graft.sources.Tables.embeddings(spark, dir).select(col("vec_id")),
-          CellIndexCache.scaledPairs(spark, dir)
-            .filter(col("cos") >= 0.4).select(col("id_a"), col("id_b")),
-          "vec_id"),
-        Some("cluster_id")),
-      (ClusterCache.dsirFeatsArtifact(4096, col("lang") === "en"),
-        () => graft.operators.Pipeline.dsirFeatTable(
-          graft.sources.Tables.documents(spark, dir), "doc_id", "text",
-          "source", col("lang") === "en", 4096),
-        Some("b")),
-      // dependency-ordered: builds from the dsirfeats getter (loads
-      // the artifact written by the entry above when present)
-      (ClusterCache.dsirDocStatsArtifact(4096, col("lang") === "en"),
-        () => graft.operators.Pipeline.dsirDocStats(
-          ClusterCache.dsirFeats(spark, dir, 4096, col("lang") === "en"),
-          "doc_id", "source"),
-        Some("source")),
-      (CellIndexCache.kmeansCentroidsArtifact(8, 2),
-        () => graft.ann.Ann.kmeansCentroids(
-          graft.sources.Tables.embeddings(spark, dir),
-          "vec_id", "embedding", 8, 2),
-        None))
+  /** The standard artifact set every corpus is primed with, in
+    * DEPENDENCY order: a later builder reads earlier artifacts through
+    * [[get]] (doclengths reads docwordtf, pqcodes reads centroids,
+    * dsirdoc reads dsirfeats, ...). The parameterized entries are the
+    * parameterizations the committed keys consume (each declaration's
+    * defaults); any other parameterization still self-primes through
+    * [[get]]. Renaming an entry orphans every primed warehouse —
+    * IndexStoreSpec pins the names. */
+  def standard: Seq[Artifact] = {
+    import graft.ann.{CellIndexCache => V}
+    import graft.dedup.{ClusterCache => T}
+    Seq(V.cellsArtifact, V.centroidsArtifact, V.groupCentroidsArtifact,
+      V.pqCodebookArtifact, V.pqCodesArtifact, V.rawPqCodebookArtifact,
+      V.rawPqCodesArtifact, V.pairsArtifact,
+      T.postingsArtifact(), T.shingleDfArtifact(), T.minhashArtifact(),
+      T.clustersArtifact(), T.docWordTfArtifact,
+      graft.multimodal.ChunkCache.chunksArtifact(), T.docLengthsArtifact,
+      T.jaccardPairsArtifact(), T.containmentPairsArtifact(),
+      T.winnowPairsArtifact(), V.semanticClustersArtifact(),
+      T.dsirFeatsArtifact(), T.dsirDocStatsArtifact(),
+      V.kmeansCentroidsArtifact())
   }
 
-  /** Build and persist ALL index artifacts for `dir`'s corpus,
+  /** Build and persist ALL standard artifacts for `dir`'s corpus,
     * OVERWRITING any present (the measurement/rewrite entry point —
     * IndexAb, IndexStoreSpec). Callers must be in build mode with
-    * fresh caches (GRAFT_INDEX_TABLES=0 or no valid tables on disk):
-    * a getter that already LOADED artifact X would make this overwrite
+    * fresh memos (GRAFT_INDEX_TABLES=0 or no valid tables on disk): a
+    * getter that already LOADED artifact X would make this overwrite
     * the very table it reads. First-touch production priming is
     * [[primeIfMissing]], which skips present artifacts and has no such
     * hazard. Returns the written table names. */
-  def writeAll(spark: SparkSession, dir: String,
-               n: Int = 3, perms: Int = 16, bands: Int = 4): Seq[String] =
-    artifactSet(spark, dir, n, perms, bands)
-      .map { case (a, build, key) => write(build(), dir, a, key) }
+  def writeAll(spark: SparkSession, dir: String): Seq[String] =
+    standard.map(a => write(get(spark, dir, a), dir, a.name, a.bucketKey))
 
   /** First-touch priming (the Bench/Verify session-start hook): write
-    * ONLY the artifacts whose durable table is missing or stale —
-    * present ones are skipped (their getters may already be serving
-    * the loaded table, which is also why overwriting them from here
-    * would be a read-from-self). Builders run through the session
-    * caches, so a primed session's queries reuse the freshly built
-    * (persisted) artifacts and the NEXT session loads everything.
-    * No-op in build mode. Returns the written table names. */
-  def primeIfMissing(spark: SparkSession, dir: String,
-                     n: Int = 3, perms: Int = 16, bands: Int = 4): Seq[String] =
+    * ONLY the standard artifacts whose durable table is missing or
+    * stale — present ones are skipped (their getters may already be
+    * serving the loaded table, which is also why overwriting them from
+    * here would be a read-from-self). [[get]] writes a missing artifact
+    * through; one this session had already memoized before its table
+    * went missing is written here. No-op in build mode. Returns the
+    * written table names. */
+  def primeIfMissing(spark: SparkSession, dir: String): Seq[String] =
     if (!enabled) Nil
-    else artifactSet(spark, dir, n, perms, bands)
-      .filterNot { case (a, _, _) => exists(spark, dir, a) }
-      .map { case (a, build, key) => write(build(), dir, a, key) }
+    else standard.filterNot(a => exists(spark, dir, a.name)).map { a =>
+      val df = get(spark, dir, a)
+      if (exists(spark, dir, a.name)) tableName(dir, a.name)
+      else write(df, dir, a.name, a.bucketKey)
+    }
 }

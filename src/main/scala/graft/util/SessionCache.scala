@@ -4,17 +4,18 @@ import scala.collection.concurrent.TrieMap
 
 /** Keyed memo for session-owned values (persisted DataFrames, built
   * index structures) with stopped-session recovery — the ONE copy of
-  * the getOrElseUpdate + isStopped-rebuild + clear boilerplate that
-  * ClusterCache / CellIndexCache / RetrievalCache each used to carry
-  * (four hand-rolled copies were correct but could drift under edits).
+  * the getOrElseUpdate + isStopped-rebuild + clear boilerplate.
   *
-  * Semantics, identical to the hand-rolled originals:
+  * Semantics:
   *  - `getOrBuild` memoizes `build` per key; if the cached value's
   *    owning SparkSession has been stopped (a test tore it down), the
   *    value is rebuilt against the live session and re-cached.
   *  - `clear` runs `release` (typically `unpersist`) on every value
-  *    whose session is still live, then forgets everything — test
-  *    hygiene, never called on query paths.
+  *    whose session is still live, then forgets everything.
+  *
+  * Every instance registers itself at construction, so
+  * [[SessionCache.clearAll]] reaches every memo in the process — no
+  * hand-kept list of caches to drift out of date.
   *
   * `live` must be cheap and side-effect-free (it runs on every hit);
   * for DataFrames it is `!df.sparkSession.sparkContext.isStopped`.
@@ -24,6 +25,7 @@ import scala.collection.concurrent.TrieMap
   */
 final class SessionCache[K, V](live: V => Boolean, release: V => Unit) {
   private val m = TrieMap.empty[K, V]
+  SessionCache.all.add(this)
 
   /** The cached value iff present AND its session is live — never
     * builds. Lets callers choose a cheaper input when the shared one
@@ -52,6 +54,15 @@ final class SessionCache[K, V](live: V => Boolean, release: V => Unit) {
 object SessionCache {
   import org.apache.spark.sql.DataFrame
 
+  private val all = new java.util.concurrent.ConcurrentLinkedQueue[SessionCache[_, _]]
+
+  /** Unpersist and forget every memo in the process: the index
+    * artifacts, the coarse index, the eval legs, the quantile memos.
+    * Called after anything that changes what the memos were computed
+    * from (an index append) and between test phases; never on a query
+    * path. */
+  def clearAll(): Unit = all.forEach(_.clear())
+
   private def dfLive(df: DataFrame): Boolean =
     !df.sparkSession.sparkContext.isStopped
 
@@ -59,14 +70,6 @@ object SessionCache {
     * owning context, release = unpersist. */
   def forDf[K]: SessionCache[K, DataFrame] =
     new SessionCache[K, DataFrame](dfLive, df => { df.unpersist(); () })
-
-  /** Cache of persisted DataFrame PAIRS (e.g. the two hybrid-retrieval
-    * legs) — liveness via the first element's context (both are built
-    * against the same session), release unpersists both. */
-  def forDfPair[K]: SessionCache[K, (DataFrame, DataFrame)] =
-    new SessionCache[K, (DataFrame, DataFrame)](
-      p => dfLive(p._1),
-      p => { p._1.unpersist(); p._2.unpersist(); () })
 
   /** Cache of plain values (routing stats, a few longs) — always live,
     * nothing to release. */

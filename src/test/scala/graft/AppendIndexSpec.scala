@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ann.{Ann, CellIndexCache}
+import graft.operators.RetrievalCache
 import graft.sources.{IndexStore, Tables}
+import graft.util.SessionCache
 
 /** Incremental index append (r17): folding a corpus delta into the
   * durable vector index with FROZEN anchors/centroids/codebooks must
@@ -37,24 +39,42 @@ class AppendIndexSpec extends SparkSpec {
 
   test("appendVectorDelta == pinned-structure rebuild; searches see the delta") {
     val dir = java.nio.file.Files.createTempDirectory("append_ix").toString
+    try appendAndCheck(dir)
+    finally { SessionCache.clearAll(); dropIndexTables(dir) }
+  }
+
+  private def appendAndCheck(dir: String): Unit = {
     writeEmb(dir, 0L until 200L)
 
     // ---- build + persist the 7 vector artifacts on the BASE corpus ----
     sys.props(IndexStore.EnvFlag) = "0"
-    CellIndexCache.clear()
-    val k2base = CellIndexCache.embeddings(spark, dir).k2
-    IndexStore.write(CellIndexCache.embeddingsWithCell(spark, dir),
-      dir, "cells", Some("cell"))
-    IndexStore.write(CellIndexCache.centroids(spark, dir)
-        .select(expr(s"c_cell div $k2base").as("g_grp"), col("c_cell"), col("c_vec")),
-      dir, "centroids", Some("g_grp"))
-    IndexStore.write(CellIndexCache.groupCentroids(spark, dir), dir, "gcents", None)
-    IndexStore.write(CellIndexCache.pqCodebook(spark, dir), dir, "pqcodebook", None)
-    IndexStore.write(CellIndexCache.pqCodes(spark, dir), dir, "pqcodes", Some("c_cell"))
-    IndexStore.write(CellIndexCache.rawPqCodebook(spark, dir), dir, "rawpqcodebook", None)
-    IndexStore.write(CellIndexCache.rawPqCodes(spark, dir), dir, "rawpqcodes", Some("__vid"))
+    SessionCache.clearAll()
+    Seq(CellIndexCache.cellsArtifact, CellIndexCache.centroidsArtifact,
+        CellIndexCache.groupCentroidsArtifact, CellIndexCache.pqCodebookArtifact,
+        CellIndexCache.pqCodesArtifact, CellIndexCache.rawPqCodebookArtifact,
+        CellIndexCache.rawPqCodesArtifact)
+      .foreach(a => IndexStore.write(IndexStore.get(spark, dir, a), dir, a.name, a.bucketKey))
     sys.props.remove(IndexStore.EnvFlag)
-    CellIndexCache.clear()
+    SessionCache.clearAll()
+
+    // results memoized on the base corpus: a4's probe and a1's brute
+    // truth (eval legs), a13's IVF leg (a self-primed candidate table)
+    // and d8's semantic clusters (a write-through artifact over the
+    // pairs artifact). The append must invalidate all of them.
+    def twinOf0(df: org.apache.spark.sql.DataFrame, hit: String): Boolean =
+      df.filter(col("query_id") === 0L && col(hit) === 500L).count() > 0
+    def clusteredWith0(): Boolean = {
+      val c = CellIndexCache.semanticClusters(spark, dir)
+        .filter(col("vec_id").isin(0L, 500L)).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cluster_id")).toMap
+      c.contains(500L) && c(500L) == c(0L)
+    }
+    def legs(): Seq[(String, Boolean)] = Seq(
+      "a4" -> twinOf0(SparkEntry.queries("a4_ivf_nprobe")(spark, dir), "nn_id"),
+      "a1" -> twinOf0(SparkEntry.queries("a1_knn_brute")(spark, dir), "nn_id"),
+      "ivfLeg" -> twinOf0(RetrievalCache.ivfLeg(spark, dir), "doc_id"),
+      "semanticClusters" -> clusteredWith0())
+    assert(legs().forall(!_._2))
 
     // frozen structures, captured for the pinned reference
     val frozenCents = IndexStore.load(spark, dir, "centroids")
@@ -114,6 +134,9 @@ class AppendIndexSpec extends SparkSpec {
     assert(a4.exists(r => r.getAs[Long]("query_id") == 0L &&
       Seq(r.get(1)).exists(_ == 500L)),
       s"a4 must surface the appended twin; got ${a4.toSeq}")
+    // ... and so does every leg memoized before the append
+    legs().foreach { case (leg, twin) =>
+      assert(twin, s"$leg served its pre-append result") }
 
     // a9 runs green on the appended artifacts (codebook guards would
     // throw on any structural mismatch)

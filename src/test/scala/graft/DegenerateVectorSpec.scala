@@ -57,7 +57,7 @@ class DegenerateVectorSpec extends SparkSpec {
   }
 
   test("embedding-family production queries: no crash, no NaN/NULL scores, twins found") {
-    graft.ann.CellIndexCache.clear()
+    graft.util.SessionCache.clearAll()
     val queries = Seq("a1_knn_brute", "a2_ann_lsh", "a3_ivf_coarse",
       "a4_ivf_nprobe", "a5_range_search", "a6_knn_classify", "a7_kmeans",
       "a8_pq_adc", "a9_ivfpq", "a10_index_stats", "d5_embedding_neardup",
@@ -90,7 +90,7 @@ class DegenerateVectorSpec extends SparkSpec {
         .filter(col("rank") === 1).select("query_id", "nn_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       (0L until 5L).foreach(q => assert(a1(q) == 1000L + q, s"twin lost for $q"))
-    } finally graft.ann.CellIndexCache.clear()
+    } finally { graft.util.SessionCache.clearAll(); dropIndexTables(dir) }
   }
 
   test("degenerate QUERY ids drop out instead of emitting NaN rows") {

@@ -18,9 +18,36 @@ class IndexStoreSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  private def freshCaches(): Unit = {
-    CellIndexCache.clear(); ClusterCache.clear()
-    graft.multimodal.ChunkCache.clear()
+  private def freshCaches(): Unit = graft.util.SessionCache.clearAll()
+
+  /** The standard set's table names, in priming order. A rename
+    * orphans every primed warehouse, so they are pinned literally. */
+  private val StandardNames = Seq("cells", "centroids", "gcents",
+    "pqcodebook", "pqcodes", "rawpqcodebook", "rawpqcodes", "pairs",
+    "postings_n3", "shingledf_n3", "minhash_n3_p16_b4",
+    "clusters_n3_p16_b4", "docwordtf", "chunks_c64", "doclengths",
+    "jpairs_n3_t1200", "cpairs_n3_t6000", "wpairs_k3_w4_m2",
+    "sclusters_t4000", "dsirfeats_b4096_p75a5e39e",
+    "dsirdoc_b4096_p75a5e39e", "kmcents_k8_r2")
+
+  test("SessionCache.clearAll releases everything the getters cached") {
+    freshCaches()
+    // frames other suites persisted outside any memo are not under test
+    spark.catalog.clearCache()
+    IndexStore.standard.foreach(a => IndexStore.get(spark, sfDir, a).count())
+    val (lex, vec) = graft.operators.RetrievalCache.hybridLegs(spark, sfDir)
+    lex.count(); vec.count()
+    graft.operators.RetrievalCache.ivfLeg(spark, sfDir).count()
+    CellIndexCache.sq8Stats(spark, sfDir)
+    // x20: the bench-probe BM25 table; the eval legs (a12: brute truth
+    // + probe; a14: IVFPQ); the quantile trio's projection (ts9)
+    Seq("x20_bm25_search", "a12_ivf_recall", "a14_ivfpq_recall",
+        "ts9_percentiles")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir).collect())
+    val cm = spark.sharedState.cacheManager
+    assert(!cm.isEmpty)
+    graft.util.SessionCache.clearAll()
+    assert(cm.isEmpty, "a memo survived SessionCache.clearAll")
   }
 
   test("loaded == built, queries transfer, probes bucket-prune") {
@@ -54,7 +81,14 @@ class IndexStoreSpec extends SparkSpec {
 
     // ---- persist, flip to load mode, drop every session cache ----
     val names = IndexStore.writeAll(spark, sfDir)
-    assert(names.length == 22 && names.forall(spark.catalog.tableExists))
+    assert(names == StandardNames.map(IndexStore.tableName(sfDir, _)) &&
+      names.forall(spark.catalog.tableExists))
+    assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"),
+      Some("g_grp"), None, None, Some("c_cell"), None, Some("__vid"),
+      Some("id_a"), Some("shingle"), Some("shingle"), Some("id_a"),
+      Some("doc_id"), Some("w"), Some("doc_id"), Some("doc_id"),
+      Some("id_a"), Some("id_a"), Some("id_a"), Some("cluster_id"),
+      Some("b"), Some("source"), None))
     // flag REMOVED = the r14 default: auto-load, no env needed
     sys.props.remove(IndexStore.EnvFlag)
     freshCaches()
@@ -143,9 +177,9 @@ class IndexStoreSpec extends SparkSpec {
 
   test("jaccardPairs: tau-stamped names, write-through self-prime, loaded == built") {
     // tau rides in the table name (the d4 parameter-stamping rule)
-    assert(ClusterCache.jaccardPairsArtifact(3, 0.12)
-      != ClusterCache.jaccardPairsArtifact(3, 0.5))
-    assert(ClusterCache.jaccardPairsArtifact(3, 0.12) == "jpairs_n3_t1200")
+    assert(ClusterCache.jaccardPairsArtifact(3, 0.12).name
+      != ClusterCache.jaccardPairsArtifact(3, 0.5).name)
+    assert(ClusterCache.jaccardPairsArtifact(3, 0.12).name == "jpairs_n3_t1200")
 
     // build-mode reference (pure session build, no durable table)
     sys.props(IndexStore.EnvFlag) = "0"
@@ -156,7 +190,7 @@ class IndexStoreSpec extends SparkSpec {
     // load mode, artifact absent: first touch must WRITE THROUGH
     sys.props.remove(IndexStore.EnvFlag)
     freshCaches()
-    val art = ClusterCache.jaccardPairsArtifact(3, 0.12)
+    val art = ClusterCache.jaccardPairsArtifact(3, 0.12).name
     val name = IndexStore.tableName(sfDir, art)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val whDir = spark.conf.get("spark.sql.warehouse.dir")
@@ -180,14 +214,14 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("containmentPairs: write-through self-prime, loaded == built") {
-    assert(ClusterCache.containmentPairsArtifact(3, 0.6) == "cpairs_n3_t6000")
+    assert(ClusterCache.containmentPairsArtifact(3, 0.6).name == "cpairs_n3_t6000")
     sys.props(IndexStore.EnvFlag) = "0"
     freshCaches()
     val built = rows(ClusterCache.containmentPairs(spark, sfDir, 3, 0.6))
     assert(built.nonEmpty)
     sys.props.remove(IndexStore.EnvFlag)
     freshCaches()
-    val art = ClusterCache.containmentPairsArtifact(3, 0.6)
+    val art = ClusterCache.containmentPairsArtifact(3, 0.6).name
     val name = IndexStore.tableName(sfDir, art)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val whDir = spark.conf.get("spark.sql.warehouse.dir")
@@ -211,10 +245,10 @@ class IndexStoreSpec extends SparkSpec {
     val pred = col("lang") === "en"
     // the artifact name binds the predicate: a different predicate can
     // never load this table (ADVICE r15: the stamp was caller-supplied)
-    assert(ClusterCache.dsirFeatsArtifact(4096, pred) !=
-      ClusterCache.dsirFeatsArtifact(4096, col("lang") === "de"))
-    assert(ClusterCache.dsirFeatsArtifact(4096, pred) ==
-      ClusterCache.dsirFeatsArtifact(4096, col("lang") === "en"))
+    assert(ClusterCache.dsirFeatsArtifact(4096, pred).name !=
+      ClusterCache.dsirFeatsArtifact(4096, col("lang") === "de").name)
+    assert(ClusterCache.dsirFeatsArtifact(4096, pred).name ==
+      ClusterCache.dsirFeatsArtifact(4096, col("lang") === "en").name)
     val builtC = rows(CellIndexCache.semanticClusters(spark, sfDir, 0.4))
     val builtF = rows(ClusterCache.dsirFeats(spark, sfDir, 4096, pred))
     val builtD = rows(ClusterCache.dsirDocStats(spark, sfDir, 4096, pred))
@@ -224,7 +258,7 @@ class IndexStoreSpec extends SparkSpec {
     freshCaches()
     val arts = Seq(CellIndexCache.semanticClustersArtifact(0.4),
       ClusterCache.dsirFeatsArtifact(4096, pred),
-      ClusterCache.dsirDocStatsArtifact(4096, pred))
+      ClusterCache.dsirDocStatsArtifact(4096, pred)).map(_.name)
     val whDir = spark.conf.get("spark.sql.warehouse.dir")
       .replaceFirst("^file:", "")
     def drop(): Unit = arts.foreach { a =>
@@ -263,41 +297,59 @@ class IndexStoreSpec extends SparkSpec {
     var primed: Seq[String] = Nil
     try {
       primed = IndexStore.primeIfMissing(spark, tmp)
-      assert(primed.length == 22, s"expected all 22 written, got $primed")
+      assert(primed == StandardNames.map(IndexStore.tableName(tmp, _)),
+        s"expected all 22 written, got $primed")
       // everything present + valid -> second prime writes NOTHING
       assert(IndexStore.primeIfMissing(spark, tmp).isEmpty)
       assert(IndexStore.exists(spark, tmp, "docwordtf"))
       // parameter changes ride in the table NAME
       assert(IndexStore.tableName(tmp, "postings_n3")
         != IndexStore.tableName(tmp, "postings_n4"))
+      // a legacy 2-line (pre-fingerprint) manifest is stale by
+      // definition. Checked before the content change: after it, the
+      // getter below re-primes docwordtf with a fresh manifest.
+      val whDir = spark.conf.get("spark.sql.warehouse.dir")
+        .replaceFirst("^file:", "")
+      val docwordtf = IndexStore.tableName(tmp, "docwordtf")
+      val mf = Paths.get(whDir, docwordtf, "_graft_index_meta.json")
+      // the nio writes bypass Hadoop's LocalFileSystem checksum — drop
+      // the stale .crc sidecar so the manifest read sees the new bytes
+      def rewrite(bytes: Array[Byte]): Unit = {
+        Files.write(mf, bytes)
+        Files.deleteIfExists(mf.resolveSibling("." + mf.getFileName + ".crc"))
+      }
+      val manifest = Files.readAllBytes(mf)
+      val lines = new String(manifest, "UTF-8").split("\n", 3)
+      spark.sql(s"DROP TABLE $docwordtf") // fresh-JVM simulation
+      rewrite((lines(0) + "\n" + lines(1)).getBytes("UTF-8"))
+      assert(!IndexStore.exists(spark, tmp, "docwordtf"))
+      rewrite(manifest)
+      assert(IndexStore.exists(spark, tmp, "docwordtf"))
+      val staleRows = rows(IndexStore.load(spark, tmp, "docwordtf"))
       // corpus-content change: duplicate a part file (count+bytes move)
       val fp1 = IndexStore.corpusFingerprint(spark, tmp)
       val part = new java.io.File(s"$tmp/documents.parquet").listFiles()
         .filter(_.getName.startsWith("part-")).head
       Files.copy(part.toPath,
         Paths.get(s"$tmp/documents.parquet/part-r14-extra.parquet"))
-      assert(IndexStore.corpusFingerprint(spark, tmp) != fp1)
+      val fp2 = IndexStore.corpusFingerprint(spark, tmp)
+      assert(fp2 != fp1)
       // fresh-JVM simulation: catalog entries gone, only files remain
       primed.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
       freshCaches()
       // the stale manifest must NOT re-register ...
       assert(!IndexStore.exists(spark, tmp, "docwordtf"))
-      // ... and the getter must REBUILD from the corpus, never serve
-      // the stale table
-      val plan = graft.dedup.ClusterCache.docWordTf(spark, tmp)
-        .queryExecution.optimizedPlan.toString
-      assert(!plan.contains("graft_idx"), "getter served a stale index table")
-      // a legacy 2-line (pre-fingerprint) manifest is stale by definition
-      val whDir = spark.conf.get("spark.sql.warehouse.dir")
-        .replaceFirst("^file:", "")
-      val mf = Paths.get(whDir, IndexStore.tableName(tmp, "docwordtf"),
-        "_graft_index_meta.json")
-      val lines = new String(Files.readAllBytes(mf), "UTF-8").split("\n", 3)
-      Files.write(mf, (lines(0) + "\n" + lines(1)).getBytes("UTF-8"))
-      // the nio write bypasses Hadoop's LocalFileSystem checksum — drop
-      // the stale .crc sidecar so the manifest read sees the new bytes
-      Files.deleteIfExists(mf.resolveSibling("." + mf.getFileName + ".crc"))
-      assert(!IndexStore.exists(spark, tmp, "docwordtf"))
+      // ... the getter must REBUILD from the corpus, never serve the
+      // stale table (the extra part file doubles some docs' tf) ...
+      val served = rows(graft.dedup.ClusterCache.docWordTf(spark, tmp))
+      assert(served != staleRows, "getter served a stale index table")
+      assert(served == rows(graft.operators.Pipeline.docWordTable(
+        graft.sources.Tables.documents(spark, tmp), "doc_id", "text")))
+      // ... and write the rebuilt table through, stamped with the new
+      // fingerprint
+      spark.sql(s"DROP TABLE $docwordtf")
+      assert(IndexStore.exists(spark, tmp, "docwordtf"), "getter did not re-prime")
+      assert(new String(Files.readAllBytes(mf), "UTF-8").split("\n", 3)(2) == fp2)
     } finally {
       primed.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
       freshCaches()
@@ -311,7 +363,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("kmeansCentroids: write-through self-prime, loaded == built, a7 transfers") {
-    assert(CellIndexCache.kmeansCentroidsArtifact(8, 2) == "kmcents_k8_r2")
+    assert(CellIndexCache.kmeansCentroidsArtifact(8, 2).name == "kmcents_k8_r2")
     sys.props(IndexStore.EnvFlag) = "0"
     freshCaches()
     val built = rows(CellIndexCache.kmeansCentroids(spark, sfDir, 8, 2))
@@ -319,7 +371,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(built.nonEmpty && builtA7.nonEmpty)
     sys.props.remove(IndexStore.EnvFlag)
     freshCaches()
-    val art = CellIndexCache.kmeansCentroidsArtifact(8, 2)
+    val art = CellIndexCache.kmeansCentroidsArtifact(8, 2).name
     val name = IndexStore.tableName(sfDir, art)
     val whDir = spark.conf.get("spark.sql.warehouse.dir")
       .replaceFirst("^file:", "")
@@ -352,26 +404,29 @@ class IndexStoreSpec extends SparkSpec {
         .replaceFirst("^file:", "")
       scala.reflect.io.Directory(new java.io.File(whDir, name)).deleteRecursively()
     }
+    // the bucket count is the writing session's shuffle width
+    val widthKey = "spark.sql.shuffle.partitions"
+    val width = spark.conf.get(widthKey)
     drop()
     try {
-      sys.props("GRAFT_INDEX_BUCKETS") = "1"
+      spark.conf.set(widthKey, "1")
       IndexStore.write(df, sfDir, art, Some("k"))
       spark.sql(s"DROP TABLE $name") // fresh-JVM simulation (files stay)
       // a same-width (or mildly wider) session keeps serving it
       assert(IndexStore.exists(spark, sfDir, art))
       spark.sql(s"DROP TABLE $name")
-      sys.props("GRAFT_INDEX_BUCKETS") = "2"
+      spark.conf.set(widthKey, "2")
       assert(IndexStore.exists(spark, sfDir, art)) // 1*4 >= 2: valid
       spark.sql(s"DROP TABLE $name")
       // a 4x+ wider session treats it as stale (never capped at the
       // narrow writer's width) ...
-      sys.props("GRAFT_INDEX_BUCKETS") = "8"
+      spark.conf.set(widthKey, "8")
       assert(!IndexStore.exists(spark, sfDir, art))
-      // ... and loadOrWrite re-primes at the session width
-      assert(IndexStore.loadOrWrite(spark, sfDir, art, Some("k"))(df)
-        .count() == 100)
+      // ... and the getter re-primes at the session width
+      assert(IndexStore.get(spark, sfDir,
+        IndexStore.Artifact(art, Some("k"))((_, _) => df)).count() == 100)
       spark.sql(s"DROP TABLE $name")
       assert(IndexStore.exists(spark, sfDir, art)) // recorded 8 now
-    } finally { sys.props.remove("GRAFT_INDEX_BUCKETS"); drop() }
+    } finally { spark.conf.set(widthKey, width); freshCaches(); drop() }
   }
 }

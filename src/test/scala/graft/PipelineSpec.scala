@@ -65,7 +65,7 @@ class PipelineSpec extends SparkSpec {
       .select($"cluster_id", $"survivor_id", $"n_members", $"saved_chars")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(sharedSurv == directSurv)
-    graft.dedup.ClusterCache.clear()
+    graft.util.SessionCache.clearAll()
   }
 
   test("dedupSurvivors keeps the longest member (ties to min id) per cluster") {

@@ -176,6 +176,14 @@ class R18OpsSpec extends SparkSpec {
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .orderBy("doc_id", "chunk_idx"))
     assert(rows(shared.orderBy("doc_id", "chunk_idx")) === direct)
+    // ... built from ONE documents scan: `source` rides the payload
+    // projection instead of a second scan joined back on doc_id
+    val build = graft.multimodal.ChunkCache.chunksArtifact(64).build(spark, sfDir)
+    assert(build.columns.toSeq ===
+      Seq("doc_id", "chunk_idx", "chunk_len", "chunk_md5", "source"))
+    val scans = build.queryExecution.optimizedPlan.collectLeaves()
+    assert(scans.size === 1, s"expected one documents scan:\n$scans")
+    assert(build.inputFiles.forall(_.contains("documents.parquet")))
   }
 
   // ---- t8/t10 two-phase changesBetween -----------------------------------

@@ -16,4 +16,17 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
+
+  /** Drop the index tables written for the corpus under `dir` (catalog
+    * entries and warehouse files). Specs that build a corpus in a fresh
+    * temp dir call it when done; otherwise every run leaves a new set
+    * of tables in the warehouse. Clear the memos first. */
+  def dropIndexTables(dir: String): Unit = {
+    graft.sources.IndexStore.dropRegistrations(spark, dir)
+    val prefix = graft.sources.IndexStore.tableName(dir, "")
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").replaceFirst("^file:", ""))
+    Option(wh.listFiles).toSeq.flatten.filter(_.getName.startsWith(prefix))
+      .foreach(f => scala.reflect.io.Directory(f).deleteRecursively())
+  }
 }
