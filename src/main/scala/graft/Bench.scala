@@ -54,9 +54,13 @@ object Bench {
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
     spark.range(1000000L).selectExpr("md5(cast(id as string)) h")
       .agg(org.apache.spark.sql.functions.min("h")).count()
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a key that throws fails the run: its wall time is never a timing
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch { case scala.util.control.NonFatal(e) =>
+        throw new RuntimeException(s"bench key $name failed: ${e.getMessage}", e)
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // dev convenience: GRAFT_BENCH_ONLY=d4_ngram_jaccard,a2_... times a
@@ -77,18 +81,18 @@ object Bench {
     // median exceeds 2× its min (+0.2s floor) is presumed stalled and
     // re-measured ONCE; the smaller group median wins. Work bound:
     // ≤ 2 rep groups per query.
-    def groupMedian(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def groupMedian(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Double) = {
-      val times = (1 to reps).map(_ => once(fn)).sorted
+      val times = (1 to reps).map(_ => once(name, fn)).sorted
       (times(times.length / 2), times.head)
     }
     def onePass(): Seq[(String, Double)] = qlist.map { case (name, fn) =>
-      val (med1, min1) = groupMedian(fn)
+      val (med1, min1) = groupMedian(name, fn)
       val med =
         if (reps >= 3 && med1 > 2 * min1 + 0.2) {
           System.err.println(
             f"[bench] $name rep group looks stalled (median $med1%.2f vs min $min1%.2f); re-measuring")
-          math.min(med1, groupMedian(fn)._1)
+          math.min(med1, groupMedian(name, fn)._1)
         } else med1
       name -> med
     }

@@ -282,9 +282,10 @@ object CellIndexCache {
     * cell centroid → no residual PQ code (counted in `pqSkipped`);
     * a3's cell join still finds them, and a4/a9 never probe
     * centroid-less cells by construction, so search behavior stays
-    * consistent. Every memo ([[SessionCache.clearAll]]) and every
-    * catalog registration of this corpus's tables are dropped at the
-    * end, so later queries in this session see the grown tables. */
+    * consistent. Every memo ([[SessionCache.clearAll]]) is dropped at
+    * the end, and the getters drop the registrations the append left
+    * fingerprint-stale, so later queries in this session see the grown
+    * tables. */
   def appendVectorDelta(spark: SparkSession, dir: String,
                         id: String = "vec_id", vec: String = "embedding",
                         targetCellSize: Int = Ann.DefaultTargetCellSize,
@@ -383,11 +384,10 @@ object CellIndexCache {
           pqSkipped, drift, drift || imbalance > imbalanceThreshold)
     } finally {
       // later queries in this session must see the grown tables, not
-      // pre-append memos: forget every memo, and every registration of
-      // this corpus's tables, so each getter re-checks its manifest —
-      // the migrated tables load, the ones left stale rebuild
+      // pre-append memos: forget every memo, so each getter re-checks
+      // its manifest — the migrated tables load, the ones left stale
+      // rebuild
       SessionCache.clearAll()
-      store.dropRegistrations(spark, dir)
     }
   }
 }

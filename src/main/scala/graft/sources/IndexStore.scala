@@ -117,14 +117,24 @@ object IndexStore {
     * carrying schema + bucket spec, and a later session re-registers
     * the table with CREATE TABLE ... CLUSTERED BY ... LOCATION before
     * first use. That is what makes the index durable across sessions,
-    * not merely across queries. */
+    * not merely across queries.
+    *
+    * A table already registered passes the same freshness check, so a
+    * corpus rewritten in place mid-session is never served the index
+    * registered before the rewrite: a stale registration is dropped
+    * (EXTERNAL table — the files stay, and the getter rewrites them). */
   private def registerIfNeeded(spark: SparkSession, name: String,
                                dir: String,
                                checkFreshness: Boolean = true): Boolean = {
-    if (spark.catalog.tableExists(name)) return true
+    val registered = spark.catalog.tableExists(name)
+    if (registered && !checkFreshness) return true
+    def stale(): Boolean = {
+      if (registered) spark.sql(s"DROP TABLE IF EXISTS `$name`")
+      false
+    }
     val mp = manifestPath(spark, name)
     val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) return false
+    if (!fs.exists(mp)) return stale()
     val in = fs.open(mp)
     val manifest =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -132,9 +142,9 @@ object IndexStore {
     // line 3 corpus fingerprint. A 2-line (pre-r14) manifest carries no
     // fingerprint and is treated as stale — rebuilt, never trusted.
     val parts = manifest.split("\n", 3)
-    if (parts.length < 3) return false
+    if (parts.length < 3) return stale()
     if (checkFreshness && parts(2).trim != corpusFingerprint(spark, dir))
-      return false
+      return stale()
     // width-staleness (ADVICE r15): a bucketed artifact primed by a
     // low-parallelism session (e.g. the CPUS=3 gate writing 3 buckets)
     // would cap every later wide session's loaded-index joins at the
@@ -147,9 +157,10 @@ object IndexStore {
           b.toInt * 4 < buckets(spark) =>
         System.err.println(s"[indexstore] $name recorded ${b.toInt} buckets " +
           s"<< session width ${buckets(spark)} — treating as stale, will re-prime")
-        return false
+        return stale()
       case _ =>
     }
+    if (registered) return true
     val schema = org.apache.spark.sql.types.DataType.fromJson(parts(0))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val cluster = parts(1).trim match {
@@ -275,11 +286,9 @@ object IndexStore {
     * BEFORE the delta landed, which is exactly why the append is
     * needed). Returns None when no manifest exists at all.
     *
-    * CONTRACT: a catalog-registered table short-circuits the
-    * freshness check for the rest of the session, so the caller must
-    * either complete the migration ([[refreshManifest]] /
-    * [[appendRows]]) or undo the registration
-    * ([[dropRegistrations]]) before returning. */
+    * The registration it leaves stays stale until the caller
+    * completes the migration ([[refreshManifest]] / [[appendRows]]);
+    * the next [[exists]] drops a registration left stale. */
   private[graft] def loadStale(spark: SparkSession, dir: String,
                                artifact: String): Option[DataFrame] = {
     val name = tableName(dir, artifact)
@@ -291,8 +300,7 @@ object IndexStore {
   /** Drop the catalog registration of every artifact table of `dir`
     * (EXTERNAL tables: the files and manifests stay), so the next
     * [[exists]] re-registers each one through the manifest's freshness
-    * check — how the append path hands back both the tables it
-    * migrated and the ones it left fingerprint-stale on purpose. */
+    * check. */
   private[graft] def dropRegistrations(spark: SparkSession, dir: String): Unit = {
     val catalog = spark.sessionState.catalog
     catalog.listTables(catalog.getCurrentDatabase, tableName(dir, "") + "*")

@@ -362,6 +362,43 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
+  test("a registered table whose corpus is rewritten in place is rebuilt, not served") {
+    import java.nio.file.{Files, Paths}
+    sys.props.remove(IndexStore.EnvFlag)
+    freshCaches()
+    val tmp = Files.createTempDirectory("gregistered_corpus").toString
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .write.parquet(s"$tmp/documents.parquet")
+    val art = ClusterCache.docWordTfArtifact
+    val name = IndexStore.tableName(tmp, art.name)
+    try {
+      // first touch writes the table through and leaves it registered
+      val primed = rows(IndexStore.get(spark, tmp, art))
+      assert(spark.catalog.tableExists(name))
+      // corpus-content change: duplicate a part file (count+bytes move)
+      val part = new java.io.File(s"$tmp/documents.parquet").listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      Files.copy(part.toPath,
+        Paths.get(s"$tmp/documents.parquet/part-rewrite-extra.parquet"))
+      // the memos go, the catalog registration stays
+      freshCaches()
+      assert(spark.catalog.tableExists(name))
+      val served = rows(IndexStore.get(spark, tmp, art))
+      assert(served != primed, "getter served the pre-rewrite index table")
+      assert(served == rows(graft.operators.Pipeline.docWordTable(
+        graft.sources.Tables.documents(spark, tmp), "doc_id", "text")))
+      // ... written through again, stamped with the new fingerprint
+      val whDir = spark.conf.get("spark.sql.warehouse.dir").replaceFirst("^file:", "")
+      val mf = Paths.get(whDir, name, "_graft_index_meta.json")
+      assert(new String(Files.readAllBytes(mf), "UTF-8").split("\n", 3)(2) ==
+        IndexStore.corpusFingerprint(spark, tmp))
+    } finally {
+      freshCaches()
+      dropIndexTables(tmp)
+      scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
   test("kmeansCentroids: write-through self-prime, loaded == built, a7 transfers") {
     assert(CellIndexCache.kmeansCentroidsArtifact(8, 2).name == "kmcents_k8_r2")
     sys.props(IndexStore.EnvFlag) = "0"

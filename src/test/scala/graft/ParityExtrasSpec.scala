@@ -45,8 +45,7 @@ class ParityExtrasSpec extends SparkSpec {
   test("cache TTL expires entries, LRU cap evicts, both unpersist") {
     val dir = java.nio.file.Files.createTempDirectory("vault_ttl").toString
     var nowMs = 0L
-    val v = new TemporalVault(spark, dir,
-      cacheTtlSeconds = 10L, cacheMaxEntries = 2, clock = () => nowMs)
+    val v = new TemporalVault(spark, dir, clock = () => nowMs)
     def batch(rows: (String, String, Long, String)*) =
       rows.toDF("record_id", "ts_s", "seq", "data")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
@@ -61,17 +60,19 @@ class ParityExtrasSpec extends SparkSpec {
     // SAME logical plan, and storageLevel is plan-keyed — so the
     // unpersist itself is proven on the eviction path below, whose
     // plan is never re-cached.)
-    nowMs = 10001L
+    nowMs = TemporalVault.CacheTtlMs + 1L
     val miss0 = v.cacheStats("misses")
     v.queryCached("2024-01-02 00:00:00").count()
     assert(v.cacheStats("misses") == miss0 + 1)
     assert(v.cacheStats("expirations") == 1)
 
-    // LRU cap: inserting past cacheMaxEntries=2 unpersists the eldest
+    // LRU cap: the 65th distinct instant unpersists the eldest
     val df2 = v.queryCached("2024-01-03 00:00:00")
     val df3 = v.queryCached("2024-01-02 00:00:00") // LRU touch — df2 is now eldest
-    v.queryCached("2024-01-04 00:00:00")
-    assert(v.cacheStats("evictions") >= 1)
+    assert(v.cacheStats("evictions") == 0)
+    (1 to TemporalVault.CacheMaxEntries - 1).foreach(i =>
+      v.queryCached(f"2024-01-04 ${i / 60}%02d:${i % 60}%02d:00"))
+    assert(v.cacheStats("evictions") == 1)
     assert(df2.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(df3.storageLevel.useMemory)
   }

@@ -15,15 +15,12 @@ class TemporalVaultSpec extends SparkSpec {
     new TemporalVault(spark, dir)
   }
 
-  test("record-cache invalidation: precise under the id cap, flush-all past it") {
-    val dir = java.nio.file.Files.createTempDirectory("vault").toString
-    // cache can hold 8 record entries but the precise-diff path is
-    // capped at 4 ids — past it the whole record cache must flush
-    val v = new TemporalVault(spark, dir, cacheMaxEntries = 8, invalidateIdCap = 4)
+  test("record-cache invalidation is precise: only the touched ids reload") {
+    val v = mkVault()
     v.append(batch((1 to 6).map(i =>
       (s"u$i", "2024-01-01 00:00:00", i.toLong, "a")): _*))
 
-    // UNDER the cap: 3 cached ids, batch touches u1 only -> u2/u3 stay hot
+    // 3 cached ids, batch touches u1 only -> u2/u3 stay hot
     Seq("u1", "u2", "u3").foreach(id => v.recordCached(id).count())
     val hits0 = v.cacheStats("hits")
     v.append(batch(("u1", "2024-01-02 00:00:00", 10, "b")))
@@ -33,15 +30,6 @@ class TemporalVaultSpec extends SparkSpec {
     v.recordCached("u1").count()
     assert(v.cacheStats("misses") == miss0 + 1, "touched id survived invalidation")
     assert(v.recordCached("u1").select("data").as[String].head() == "b")
-
-    // PAST the cap: 6 cached ids > cap 4 -> flush-all (every id misses),
-    // and no unbounded isin/collect runs against the append
-    (1 to 6).foreach(i => v.recordCached(s"u$i").count())
-    v.append(batch(("u9", "2024-01-03 00:00:00", 20, "c")))
-    val missFlush = v.cacheStats("misses")
-    (1 to 6).foreach(i => v.recordCached(s"u$i").count())
-    assert(v.cacheStats("misses") == missFlush + 6,
-      "flush-all path left stale entries cached")
   }
 
   private def batch(rows: (String, String, Long, String)*) =
@@ -105,6 +93,41 @@ class TemporalVaultSpec extends SparkSpec {
     // not restored with a null payload
     v.rollback("2024-01-03 00:00:00", "2024-01-06 00:00:00")
     assert(v.query("2024-01-07 00:00:00").filter(col("record_id") === "u1").count() == 0)
+  }
+
+  /** The log's rows, for asserting a rejected call wrote nothing. */
+  private def logRows(v: TemporalVault) =
+    v.log.select("record_id", "ts", "seq", "data", "_op").collect().map(_.toString).sorted.toSeq
+
+  test("rollback rejects a stamp equal to an affected version's ts, before any write") {
+    val v = mkVault()
+    v.append(batch(
+      ("u1", "2024-01-01 00:00:00", 1, "a"),
+      ("u1", "2024-01-05 00:00:00", 7, "b")))
+    val before = logRows(v)
+    // a compensation at 01-05 with tie 0 would lose to `b` (tie 7)
+    val e = intercept[IllegalArgumentException](
+      v.rollback("2024-01-02 00:00:00", "2024-01-05 00:00:00"))
+    assert(e.getMessage.contains("2024-01-05 00:00:00"))
+    assert(logRows(v) == before)
+    assert(v.rollbackHistory.count() == 0)
+    assert(v.query("2024-01-06 00:00:00").select("data").as[String].collect().toSeq == Seq("b"))
+  }
+
+  test("rollback rejects a stamp before a version it would undo, before any write") {
+    val v = mkVault()
+    v.append(batch(
+      ("u1", "2024-01-01 00:00:00", 1, "a"),
+      ("u1", "2024-01-20 00:00:00", 2, "z")))
+    val before = logRows(v)
+    // a compensation at 01-10 would leave `z`@01-20 as the state at 01-25
+    intercept[IllegalArgumentException](
+      v.rollback("2024-01-02 00:00:00", "2024-01-10 00:00:00"))
+    assert(logRows(v) == before)
+    assert(v.rollbackHistory.count() == 0)
+    // a stamp after every affected version is accepted and restores `a`
+    v.rollback("2024-01-02 00:00:00", "2024-01-21 00:00:00")
+    assert(v.query("2024-01-25 00:00:00").select("data").as[String].collect().toSeq == Seq("a"))
   }
 
   test("rollbackHistory(limit) pages newest-first like the reference endpoint") {
