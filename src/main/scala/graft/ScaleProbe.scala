@@ -459,12 +459,14 @@ object ScaleProbe {
     // interleaving rationale as `interleave`, extended to the three
     // corpus sizes: each op times 1x/8x/64x back-to-back so a
     // contention wave cannot inflate one whole size column.
+    // each op builds its coarse index inside the timed region
+    def scaledPairs(emb: DataFrame, tau: Double): DataFrame =
+      graft.ann.Ann.nearDupPairsScaledIndexed(emb, "vec_id", "embedding", tau,
+        graft.ann.Ann.buildCoarseIndex(emb, "vec_id", "embedding", emb.count()))
     val ndOps: Seq[(String, DataFrame => Long)] = Seq(
-      ("neardup", emb => graft.ann.Ann.nearDupPairsScaled(
-        emb, "vec_id", "embedding", tau = 0.25).count()),
+      ("neardup", emb => scaledPairs(emb, tau = 0.25).count()),
       ("semantic_dedup", emb => {
-        val pairs = graft.ann.Ann.nearDupPairsScaled(
-            emb, "vec_id", "embedding", tau = 0.4)
+        val pairs = scaledPairs(emb, tau = 0.4)
           .select(col("id_a"), col("id_b"))
         graft.dedup.Dedup.connectedComponents(
             emb.select(col("vec_id")), pairs, "vec_id")

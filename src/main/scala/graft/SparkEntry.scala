@@ -101,17 +101,16 @@ object SparkEntry {
     * a9 (the search) and a14 (its recall evaluation) cannot drift. */
   private[graft] def ivfPqTopk(s: SparkSession, d: String): DataFrame = {
     val ix = graft.ann.CellIndexCache.embeddings(s, d)
-    val np = Ann.ivfPqNprobe(ix.k1.toLong * ix.k2)
+    val np = Ann.ivfPqNprobe(ix.cells)
     Ann.knnIvfPq(
       graft.ann.CellIndexCache.embeddingsWithCell(s, d),
       "vec_id", "embedding", "cell",
       graft.ann.CellIndexCache.centroids(s, d),
       graft.ann.CellIndexCache.pqCodes(s, d),
       graft.ann.CellIndexCache.pqCodebook(s, d),
-      Seq(0L, 1L, 2L, 3L, 4L), 10, np,
-      k2 = ix.k2,
-      groupProbe = Ann.hierGroupProbe(ix.k1, ix.k2, np),
-      gvec = Some(graft.ann.CellIndexCache.groupCentroids(s, d)))
+      ix.k2, Seq(0L, 1L, 2L, 3L, 4L), 10, np,
+      Ann.hierGroupProbe(ix.k1, ix.k2, np),
+      graft.ann.CellIndexCache.groupCentroids(s, d))
   }
 
   // The a-family's three bounded top-k legs, each consumed by several
@@ -900,7 +899,7 @@ object SparkEntry {
       val ix = graft.ann.CellIndexCache.embeddings(s, d)
       Ann.indexStats(
         graft.ann.CellIndexCache.embeddingsWithCell(s, d),
-        "cell", ix.k1.toLong * ix.k2)
+        "cell", ix.cells)
     }),
 
     // hybrid lexical+vector retrieval via reciprocal-rank fusion
@@ -1553,7 +1552,7 @@ object SparkEntry {
          |    GROUP BY a.c_cell, p.i) GROUP BY c_cell)""".stripMargin
     // Corpus-proportional coarse cells, shared by d5/d8 (blocking) and
     // a3/a4 (IVF cells) — the same derivation Ann.coarseCellParams/
-    // anchorAssignments run, digit-for-digit: k1·k2 ≈ ceil(n/64)
+    // buildCoarseIndex run, digit-for-digit: k1·k2 ≈ ceil(n/64)
     // product cells; anchors = the k1+k2 rows with the smallest
     // md5('cells:'||id), first k1 level 0, rest level 1; assignment =
     // nearest anchor per level by ROUNDED cosine (ties by anchor idx);

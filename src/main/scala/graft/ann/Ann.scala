@@ -18,12 +18,16 @@ import graft.functions.Vec
   *  - random-hyperplane LSH bucketing (round 2) follows the same shape
   *    with sign-bit bucket keys.
   */
-/** A built coarse-cell index: the probe-`CellProbe` anchor assignment
-  * (`asg`: id, lvl ∈ {0,1}, idx, rn) plus the product dimensions. One
-  * index serves every consumer — near-dup blocking (rn ≤ 2 probe
-  * cells) and IVF cells (rn = 1 primary) — so the n·(k1+k2) anchor
-  * scan runs once per (corpus, cell size), not once per query. */
-final case class CoarseIndex(asg: DataFrame, k1: Int, k2: Int)
+/** A built coarse-cell index: the k1+k2 anchor table (`anchors`: lvl ∈
+  * {0,1}, idx, __avec), the probe-`CellProbe` anchor assignment
+  * (`asg`: id, lvl, idx, rn) and the product dimensions. One index
+  * serves every consumer — near-dup blocking (rn ≤ 2 probe cells) and
+  * IVF cells (rn = 1 primary) — so the n·(k1+k2) anchor scan runs once
+  * per (corpus, cell size), not once per query. */
+final case class CoarseIndex(anchors: DataFrame, asg: DataFrame, k1: Int, k2: Int) {
+  /** The product cell count k1·k2. */
+  def cells: Long = k1.toLong * k2
+}
 
 object Ann {
 
@@ -711,32 +715,14 @@ object Ann {
         .as("imbalance"))
   }
 
-  /** IVF multi-probe top-k: compute each cell's centroid, probe the
-    * `nprobe` cells whose centroids are nearest the query (cosine),
-    * then rank exactly within the probed cells' rows. This is the
-    * standard IVF accuracy knob `knnBlocked` (nprobe=1, cell given)
-    * lacks: a query near a cell boundary recovers its neighbors from
-    * the adjacent cell instead of losing them.
-    *
-    * Centroid components are DECIMAL-exact means (sum of exact
-    * float→double casts in decimal, order-independent across any
-    * partitioning — the ts19 trick), so both engines derive
-    * bit-identical centroids and the probed-cell choice is
-    * deterministic (rounded cosine, ties by cell id). Centroids are
-    * one vocabulary-of-cells-sized aggregate; the probe join is an
-    * equi-join on the cell key (broadcast of queries × nprobe); at
-    * scale the corpus is partitioned by cell so a probe touches only
-    * nprobe cells' partitions. Norms precomputed per row, pairs pay
-    * only the dot. */
-  def knnIvfProbe(emb: DataFrame, id: String, vec: String, cell: String,
-                  queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame =
-    knnIvfProbeCentroids(emb, id, vec, cell, ivfCentroids(emb, vec, cell),
-      queryIds, k, nprobe)
-
   /** Decimal-exact per-cell centroids (c_cell, c_vec) — a corpus-level
     * artifact: one posexplode + aggregation over the whole corpus,
     * shared across every IVF probe against the same (corpus, cells)
-    * via [[CellIndexCache.centroids]] instead of recomputed per query. */
+    * via [[CellIndexCache.centroids]] instead of recomputed per query.
+    * Components are DECIMAL-exact means (sum of exact float→double
+    * casts in decimal, order-independent across any partitioning — the
+    * ts19 trick), so both engines derive bit-identical centroids and
+    * the probed-cell choice is deterministic. */
   def ivfCentroids(emb: DataFrame, vec: String, cell: String): DataFrame = {
     val comp = emb
       .select(col(cell).as("c_cell"), posexplode(col(vec).cast("array<double>")))
@@ -769,9 +755,9 @@ object Ann {
 
   /** Level-0 GROUP centroids (g_grp, g_vec): the decimal-exact mean of
     * the group's leaf-cell centroids, grouped by the level-0 anchor
-    * component g = cell div k2 of the 2-level product key (cell =
-    * idx0·k2 + idx1). A corpus-level artifact like [[ivfCentroids]]
-    * itself: k1 rows derived from the cells-sized centroid table (one
+    * component ([[cellGroup]]) of the 2-level product key. A
+    * corpus-level artifact like [[ivfCentroids]] itself: k1 rows
+    * derived from the cells-sized centroid table (one
     * narrow aggregation — never a corpus scan), cached next to the
     * centroids ([[CellIndexCache.groupCentroids]]). Unweighted mean of
     * cell centroids, not of rows: the group vector only RANKS groups
@@ -779,7 +765,7 @@ object Ann {
     * is still leaf-centroid-exact. */
   def groupCentroids(centroids: DataFrame, k2: Int): DataFrame =
     centroids
-      .select(expr(s"c_cell div $k2").as("g_grp"), posexplode(col("c_vec")))
+      .select(cellGroup("c_cell", k2).as("g_grp"), posexplode(col("c_vec")))
       .groupBy(col("g_grp"), col("pos"))
       .agg((sum(col("col").cast("decimal(38,12)")).cast("double") /
         count(lit(1))).as("gv"))
@@ -791,15 +777,15 @@ object Ann {
     * the scale fix for the flat centroid scan (the one remaining
     * linear-in-n query cost at the 10⁹-vector target: k1·k2 ≈ n/64
     * centroids is a ~16M-row broadcast + per-query 16M-row crossJoin
-    * there). Stage 1 ranks the k1 level-0 GROUP centroids
+    * there). Stage 1 ranks the k1 level-0 GROUP centroids `gvec`
     * ([[groupCentroids]]) by rounded cosine (ties by group id) and
     * keeps the top `groupProbe`; stage 2 ranks ONLY those groups' leaf
     * centroids — an EQUI-join on the group key, so with the centroid
     * table bucketed by group a query batch reads groupProbe groups'
     * partitions, never the full table. Per-query coarse cost drops
     * from k1·k2 to k1 + groupProbe·k2 ≈ O(√cells) when groupProbe is
-    * O(1) (a9's constant-count probe) — the two-level analog of the
-    * IMI/[[coarseCellParamsL]] construction, applied at query time.
+    * O(1) (a9's constant-count probe) — the two-level product of
+    * [[coarseCellParams]], applied at query time.
     *
     * Same determinism treatment as the flat probe at both stages
     * (6-dp rounded decimal-exact centroid cosines, integer
@@ -810,12 +796,12 @@ object Ann {
     * toward the query); measured (ANN_SWEEP_r12): set bit-equal at
     * sf0.01, one truth pair of 250 at sf0.1 (0.736 vs 0.740), and the
     * clustered op point reads 0.864 == the flat twin == the shortlist
-    * ceiling. */
+    * ceiling. `groupProbe = k1` probes every group: exactly the flat
+    * scan. */
   def probedCellsHier(queries: DataFrame, centroids: DataFrame, k2: Int,
                       nprobe: Int, groupProbe: Int,
-                      gvec: Option[DataFrame] = None): DataFrame = {
-    val topGroups = queries.crossJoin(
-        broadcast(gvec.getOrElse(groupCentroids(centroids, k2))))
+                      gvec: DataFrame): DataFrame = {
+    val topGroups = queries.crossJoin(broadcast(gvec))
       .select(col("query_id"), col("g_grp"),
         Vec.cosine(col("q_vec"), col("g_vec")).as("g_cos"))
       .withColumn("g_rank", row_number().over(
@@ -824,7 +810,7 @@ object Ann {
       .filter(col("g_rank") <= groupProbe)
       .select(col("query_id"), col("g_grp"))
     val qg = topGroups.join(queries, Seq("query_id"))
-    centroids.withColumn("g_grp", expr(s"c_cell div $k2"))
+    centroids.withColumn("g_grp", cellGroup("c_cell", k2))
       .join(broadcast(qg), Seq("g_grp"))
       .select(col("query_id"), col("c_cell"),
         Vec.cosine(col("q_vec"), col("c_vec")).as("c_cos"))
@@ -862,40 +848,23 @@ object Ann {
     math.min(k1.toLong, math.max(1L, frac + 1L)).toInt
   }
 
-  /** [[knnIvfProbe]] over pre-built centroids — flat coarse scan. */
-  def knnIvfProbeCentroids(emb: DataFrame, id: String, vec: String, cell: String,
-                           centroids: DataFrame,
-                           queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
-    val queries = ivfQueries(emb, id, vec, queryIds)
-    knnIvfProbeFrom(emb, id, vec, cell, queries,
-      probedCellsFlat(queries, centroids, nprobe), k)
-  }
-
-  /** [[knnIvfProbeCentroids]] with the hierarchical coarse stage —
-    * the production a4 path (probed set ranked within the top
-    * [[recommendedGroupProbe]] groups only). */
+  /** IVF multi-probe top-k — the production a4 path: probe the
+    * `nprobe` cells whose centroids are nearest the query through the
+    * hierarchical coarse stage ([[probedCellsHier]]: ranked within
+    * the top `groupProbe` groups only), then rank exactly within the
+    * probed cells' rows. This is the standard IVF accuracy knob
+    * `knnBlocked` (nprobe=1, cell given) lacks: a query near a cell
+    * boundary recovers its neighbors from the adjacent cell instead of
+    * losing them. The probe join is an equi-join on the cell key
+    * (broadcast of queries × nprobe); at scale the corpus is
+    * partitioned by cell so a probe touches only nprobe cells'
+    * partitions. Norms precomputed per row, pairs pay only the dot. */
   def knnIvfProbeHier(emb: DataFrame, id: String, vec: String, cell: String,
                       centroids: DataFrame, k2: Int,
                       queryIds: Seq[Long], k: Int, nprobe: Int,
-                      groupProbe: Int,
-                      gvec: Option[DataFrame] = None): DataFrame = {
+                      groupProbe: Int, gvec: DataFrame): DataFrame = {
     val queries = ivfQueries(emb, id, vec, queryIds)
-    knnIvfProbeFrom(emb, id, vec, cell, queries,
-      probedCellsHier(queries, centroids, k2, nprobe, groupProbe, gvec), k)
-  }
-
-  /** The broadcast (query_id, q_vec, q_nrm) probe side. */
-  private def ivfQueries(emb: DataFrame, id: String, vec: String,
-                         queryIds: Seq[Long]): DataFrame =
-    emb.filter(col(id).isin(queryIds: _*))
-      .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        Vec.normNative(col(vec)).as("q_nrm"))
-
-  /** Exact rerank within a (query_id, c_cell) probed-cell table —
-    * the stage downstream of either coarse probe. */
-  private def knnIvfProbeFrom(emb: DataFrame, id: String, vec: String,
-                              cell: String, queries: DataFrame,
-                              probed: DataFrame, k: Int): DataFrame = {
+    val probed = probedCellsHier(queries, centroids, k2, nprobe, groupProbe, gvec)
     val corpus = emb.select(col(id).as("nn_id"), col(vec).as("nn_vec"),
       col(cell).as("c_cell"), Vec.normNative(col(vec)).as("nn_nrm"))
     val scored = corpus
@@ -910,6 +879,13 @@ object Ann {
       .filter(col("rank") <= k)
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** The broadcast (query_id, q_vec, q_nrm) probe side. */
+  private def ivfQueries(emb: DataFrame, id: String, vec: String,
+                         queryIds: Seq[Long]): DataFrame =
+    emb.filter(col(id).isin(queryIds: _*))
+      .select(col(id).as("query_id"), col(vec).as("q_vec"),
+        Vec.normNative(col(vec)).as("q_nrm"))
 
   /** a9's probed-cell COUNT target: a CONSTANT number of cells, not a
     * corpus fraction. On clustered corpora — a9's use case — recall
@@ -959,7 +935,7 @@ object Ann {
 
   /** True IVFPQ: IVF coarse probe + PQ/ADC candidate scoring + exact
     * rerank of a bounded shortlist — the composition of
-    * [[knnIvfProbeCentroids]] (which reranks EVERY row of every probed
+    * [[knnIvfProbeHier]] (which reranks EVERY row of every probed
     * cell with exact cosine) and [[pqAdc]] (which ADC-scores the whole
     * corpus). This is the scale shape FAISS ships as IndexIVFPQ +
     * refine: the probe touches nprobe cells' CODE rows (one packed
@@ -997,26 +973,17 @@ object Ann {
     * lets the code discriminate WITHIN a cell (see [[pqResiduals]]). */
   def knnIvfPq(emb: DataFrame, id: String, vec: String, cell: String,
                centroids: DataFrame, codes: DataFrame, codebook: DataFrame,
-               queryIds: Seq[Long], k: Int, nprobe: Int,
+               k2: Int, queryIds: Seq[Long], k: Int, nprobe: Int,
+               groupProbe: Int, gvec: DataFrame,
                rerank: Int = IvfPqRerank, m: Int = 8,
-               kCb: Int = IvfPqCodebookK,
-               k2: Int = 0, groupProbe: Int = 0,
-               gvec: Option[DataFrame] = None): DataFrame = {
+               kCb: Int = IvfPqCodebookK): DataFrame = {
     require(codes.columns.contains("__codes"),
       "codes must be the PACKED cell-indexed residual table (Ann.ivfPqCodes)")
-    val queries = emb.filter(col(id).isin(queryIds: _*))
-      .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        Vec.normNative(col(vec)).as("q_nrm"))
+    val queries = ivfQueries(emb, id, vec, queryIds)
     // 1. coarse probe: nprobe nearest cells by rounded centroid
-    //    cosine — through the 2-stage hierarchical probe when the
-    //    caller passes the product radix (the production a9 path:
-    //    coarse cost k1 + groupProbe·k2 ≈ O(√cells) instead of the
-    //    flat k1·k2 scan)
-    val probed =
-      if (groupProbe > 0) {
-        require(k2 > 0, "hierarchical probe needs the product radix k2")
-        probedCellsHier(queries, centroids, k2, nprobe, groupProbe, gvec)
-      } else probedCellsFlat(queries, centroids, nprobe)
+    //    cosine through the 2-stage hierarchical probe (coarse cost
+    //    k1 + groupProbe·k2 ≈ O(√cells) instead of the flat k1·k2 scan)
+    val probed = probedCellsHier(queries, centroids, k2, nprobe, groupProbe, gvec)
     // 2. ADC: the per-(query, probed cell) PACKED distance table is
     //    broadcast; joining the inverted-list code table on c_cell
     //    restricts candidates to probed cells, and each candidate is
@@ -1166,9 +1133,11 @@ object Ann {
     * stays ~n·targetCellSize = linear, and assignment costs
     * n·(k1+k2) = O(n^1.5/√targetCellSize) — the 2-level product keeps
     * the anchor scan at 2·sqrt(cells) instead of a flat quantizer's
-    * `cells` (deeper products extend the same construction when even
-    * sqrt(cells) anchors per row is too many). Mirrored digit-for-digit
-    * by the DuckDB oracle (ceil over exact doubles both sides). */
+    * `cells`. Deeper products, for when even sqrt(cells) anchors per
+    * row is too many, are designed in NOTES_r8 §2/§10; their code is at
+    * `git show 94808ac:src/main/scala/graft/ann/Ann.scala`. Mirrored
+    * digit-for-digit by the DuckDB oracle (ceil over exact doubles both
+    * sides). */
   def coarseCellParams(n: Long, targetCellSize: Int): (Int, Int) = {
     require(targetCellSize > 0)
     val cells = math.max(1L, (n + targetCellSize - 1) / targetCellSize)
@@ -1183,53 +1152,57 @@ object Ann {
     (k1, k2)
   }
 
+  /** The product cell of a (level-0, level-1) anchor pair,
+    * idx0·k2 + idx1: the one Scala spelling of the cell number, behind
+    * primary cells ([[cellsFromIndex]]) and near-dup probe cells
+    * ([[nearDupPairsScaledIndexed]]). */
+  private def productCell(idx0: Column, idx1: Column, k2: Int): Column =
+    idx0.cast("long") * k2 + idx1.cast("long")
+
+  /** The level-0 group of a product cell, cell div k2: the one Scala
+    * spelling of the group key, behind [[groupCentroids]], the second
+    * stage of [[probedCellsHier]] and the stored centroid table's
+    * bucket column ([[CellIndexCache.centroidsArtifact]]). */
+  def cellGroup(cell: String, k2: Int): Column = expr(s"$cell div $k2")
+
   /** Build the shared coarse index for a corpus of `n` rows: one
     * probe-[[CellProbe]] anchor assignment serving d5/d8 blocking and
-    * a3/a4 IVF cells alike. `n` should come from cheap metadata
-    * (parquet footers — [[graft.sources.ParquetStats.rowCount]]), not
-    * a `count()` job. The caller decides persistence. */
+    * a3/a4 IVF cells alike. Anchors are [[anchorsOf]]; each row ranks
+    * each level's anchors by ROUNDED cosine desc (ties by anchor idx),
+    * so both engines pick the same anchors (the a4 determinism
+    * treatment). The anchor pick is a distributed top-(k1+k2)
+    * (TakeOrderedAndProject), the assignment one broadcast join:
+    * n·(k1+k2) fused cosines, no shuffle wider than (id, lvl, idx).
+    * `n` should come from cheap metadata (parquet footers —
+    * [[graft.sources.ParquetStats.rowCount]]), not a `count()` job.
+    * The caller decides persistence. */
   def buildCoarseIndex(emb: DataFrame, id: String, vec: String, n: Long,
                        targetCellSize: Int = DefaultTargetCellSize,
                        salt: String = CellSalt): CoarseIndex = {
     val (k1, k2) = coarseCellParams(n, targetCellSize)
-    CoarseIndex(anchorAssignments(emb, id, vec, k1, k2, CellProbe, salt), k1, k2)
+    val anchors = anchorsOf(emb, id, vec, k1, k2, salt)
+    CoarseIndex(anchors, assignToAnchors(emb, id, vec, anchors, CellProbe), k1, k2)
   }
 
   /** Primary cell per row, (id, cell), from a built index: the rn=1
-    * anchor of each level, cell = idx0·k2 + idx1. */
+    * anchor of each level, as a [[productCell]]. */
   def cellsFromIndex(ix: CoarseIndex, id: String): DataFrame =
     ix.asg.filter(col("rn") === 1)
       .groupBy(col(id))
-      .agg((max(when(col("lvl") === 0, col("idx"))).cast("long") * ix.k2 +
-        max(when(col("lvl") === 1, col("idx"))).cast("long")).as("cell"))
+      .agg(productCell(max(when(col("lvl") === 0, col("idx"))),
+        max(when(col("lvl") === 1, col("idx"))), ix.k2).as("cell"))
 
   /** `emb` with the primary coarse-cell column from a built index. */
   def withCoarseCellIndexed(emb: DataFrame, id: String, ix: CoarseIndex,
                             cellCol: String = "cell"): DataFrame =
     emb.join(cellsFromIndex(ix, id).withColumnRenamed("cell", cellCol), id)
 
-  /** Per-row, per-level nearest coarse anchors: (id, lvl ∈ {0,1},
-    * idx ∈ [0,k), rn ∈ [1,probe]) — rn ranks the level's anchors by
-    * ROUNDED cosine desc (ties by anchor idx), so both engines pick the
-    * same anchors (the a4 determinism treatment). Anchors are the
-    * k1+k2 corpus rows with the smallest md5("salt:id") — seeded,
-    * data-dependent, and reproducible in SQL (QUALIFY row_number) —
-    * first k1 are level 0, the rest level 1. The anchor pick is a
-    * distributed top-(k1+k2) (TakeOrderedAndProject), the assignment
-    * one broadcast join: n·(k1+k2) fused cosines, no shuffle wider
-    * than (id, lvl, idx). */
-  private[graft] def anchorAssignments(emb: DataFrame, id: String, vec: String,
-                                       k1: Int, k2: Int, probe: Int,
-                                       salt: String): DataFrame = {
-    assignToAnchors(emb, id, vec, anchorsOf(emb, id, vec, k1, k2, salt), probe)
-  }
-
   /** The coarse anchor TABLE of a corpus: the k1+k2 rows with the
-    * smallest md5("salt:id"), as (lvl ∈ {0,1}, idx, __avec). A pure
-    * function of the corpus ID SET and vectors — which is what lets
-    * the incremental append path (CellIndexCache.appendVectorDelta)
-    * reconstruct the FROZEN anchor set from the stored cells table
-    * instead of needing a separate anchors artifact. */
+    * smallest md5("salt:id"), as (lvl ∈ {0,1}, idx, __avec) — seeded,
+    * data-dependent, and reproducible in SQL (QUALIFY row_number);
+    * first k1 are level 0, the rest level 1. Stored as the `anchors`
+    * artifact, so an append assigns new rows against the build's
+    * anchors (CellIndexCache.appendVectorDelta). */
   private[graft] def anchorsOf(emb: DataFrame, id: String, vec: String,
                                k1: Int, k2: Int, salt: String): DataFrame = {
     val key = md5(concat(lit(salt + ":"), col(id).cast("string")))
@@ -1247,10 +1220,11 @@ object Ann {
         col("__avec"))
   }
 
-  /** The per-row half of [[anchorAssignments]] over a PRE-BUILT anchor
-    * table: one broadcast join, n·(k1+k2) fused cosines. Factored out
-    * so a delta batch can be assigned against FROZEN anchors (the
-    * incremental-append path) with bit-identical tie-breaking. */
+  /** Per-row, per-level nearest anchors of an anchor table: (id, lvl,
+    * idx, rn ∈ [1,probe]), one broadcast join, n·(k1+k2) fused
+    * cosines. The build and a delta batch assigned against FROZEN
+    * anchors (the incremental-append path) share it, so their
+    * tie-breaking is bit-identical. */
   private[graft] def assignToAnchors(emb: DataFrame, id: String, vec: String,
                                      anchors: DataFrame,
                                      probe: Int): DataFrame = {
@@ -1263,76 +1237,6 @@ object Ann {
       .filter(col("rn") <= probe)
       .select(col(id), col("lvl"), col("idx"), col("rn"))
   }
-
-  /** Primary coarse cell per row: (id, cell), cell = idx0·k2 + idx1 —
-    * the corpus-proportional blocking/IVF key shared by the scaled
-    * near-dup tier (d5/d8) and the IVF queries (a3/a4). */
-  def coarseCells(emb: DataFrame, id: String, vec: String,
-                  targetCellSize: Int, salt: String = CellSalt): DataFrame =
-    cellsFromIndex(buildCoarseIndex(emb, id, vec, emb.count(),
-      targetCellSize, salt), id)
-
-  /** `emb` with the primary coarse-cell column attached. */
-  def withCoarseCell(emb: DataFrame, id: String, vec: String,
-                     targetCellSize: Int, cellCol: String = "cell",
-                     salt: String = CellSalt): DataFrame =
-    withCoarseCellIndexed(emb, id,
-      buildCoarseIndex(emb, id, vec, emb.count(), targetCellSize, salt), cellCol)
-
-  // ---------------------------------------------------------------
-  // Generalized L-level product quantizer (NOTES_r8 §2 implemented).
-  // The 2-level functions above stay the production path — at bench
-  // corpus sizes (n ≤ 2×10⁵, three orders below the L=3 crossover) a
-  // third level is pure constant overhead on every query and the
-  // oracle — but the construction below is the same one, parameterized
-  // by per-level anchor counts, and the L=2 instantiation is
-  // spec-pinned equal to the production path (ProductQuantizerSpec).
-  // ---------------------------------------------------------------
-
-  /** Per-level anchor counts for an L-level product quantizer with
-    * ~`n / targetCellSize` cells: level l takes ceil of the L−l'th
-    * root of the cells still to cover, so the product is ≥ cells and
-    * `coarseCellParamsL(n, B, 2)` reproduces [[coarseCellParams]]
-    * exactly (k1 = ceil(√cells), k2 = ceil(cells/k1)). Per-row
-    * assignment work is Σ ks = O(L·cells^(1/L)) anchor cosines — the
-    * deeper the product, the flatter the superlinear term
-    * (2·√C at L=2 → 3·∛C at L=3: 250k → 7.5k cosines/row at
-    * n = 10¹², and the anchor broadcast shrinks the same factor). */
-  def coarseCellParamsL(n: Long, targetCellSize: Int, levels: Int): Seq[Int] = {
-    require(targetCellSize > 0 && levels >= 1)
-    val cells = math.max(1L, (n + targetCellSize - 1) / targetCellSize)
-    val ks = new Array[Int](levels)
-    var remaining = cells.toDouble
-    for (l <- 0 until levels) {
-      val k = math.ceil(math.pow(remaining, 1.0 / (levels - l))).toInt
-      ks(l) = k
-      remaining = math.ceil(remaining / k)
-    }
-    require(n == 0 || n >= ks.map(_.toLong).sum,
-      s"corpus of $n rows cannot seat ${ks.sum} coarse anchors " +
-        s"(targetCellSize=$targetCellSize, levels=$levels) — rows would get NULL cells")
-    ks.toSeq
-  }
-
-  /** The smallest product depth L ≥ 2 at which the per-row anchor
-    * assignment stops dominating the per-row in-cell pair work — the
-    * NOTES_r8 §2 rule "raise L only while L·C^(1/L) > B·P(L)", with
-    * the measured probe fan-out model P(L) ≈ 1.25·L (probe-2 anchors
-    * only materialize near level boundaries; measured mean 2.5 at
-    * L=2). At B=64 this crosses 2→3 at n ≈ 4.1×10⁵ (= B³P²/4) and
-    * keeps deepening as the corpus grows; a 10¹²-row corpus gets the
-    * depth whose assignment term (L·C^(1/L) cosines/row) no longer
-    * exceeds the linear in-cell term. Capped at 8 levels — beyond it
-    * the probe fan-out bound, not the assignment, is the cost. */
-  def recommendedLevels(n: Long, targetCellSize: Int = DefaultTargetCellSize): Int = {
-    val cells = math.max(1L, (n + targetCellSize - 1) / targetCellSize).toDouble
-    def assign(l: Int): Double = l * math.pow(cells, 1.0 / l)
-    def inCell(l: Int): Double = targetCellSize.toDouble * (1.25 * l)
-    var l = 2
-    while (l < 8 && assign(l) > inCell(l)) l += 1
-    l
-  }
-
   /** The probed corpus FRACTION targeting recall@10 ≈ 0.8 on a
     * NEAR-UNIFORM corpus, from the model recall(f) ≈ 1 − (1−f)^2.7
     * (f(0.8) = 1 − 0.2^(1/2.7) ≈ 0.449). Measured (ANN_SWEEP_r11,
@@ -1387,95 +1291,11 @@ object Ann {
       math.max(1L,
         math.min(cells, (fracNum * cells + fracDen - 1) / fracDen))).toInt
 
-  /** Per-row, per-level nearest coarse anchors for an L-level product:
-    * (id, lvl ∈ [0,L), idx ∈ [0,ks(lvl)), rn ∈ [1,probe]) — the exact
-    * [[anchorAssignments]] construction with the two hard-coded level
-    * buckets replaced by the `ks` partition of the one md5-ordered
-    * anchor list (level l owns ranks (Σ ks(<l), Σ ks(≤l)]). Same
-    * determinism treatment: rounded-cosine ranking, ties by idx. */
-  private[graft] def anchorAssignmentsL(emb: DataFrame, id: String, vec: String,
-                                        ks: Seq[Int], probe: Int,
-                                        salt: String): DataFrame = {
-    val key = md5(concat(lit(salt + ":"), col(id).cast("string")))
-    val starts = ks.scanLeft(0)(_ + _) // length L+1; starts(L) = total
-    val total = starts.last
-    val anchors = emb
-      .select(col(id).as("__aid"), col(vec).as("__avec"), key.as("__akey"))
-      .orderBy(col("__akey"), col("__aid")).limit(total)
-      .withColumn("__rk", row_number().over(
-        Window.orderBy(col("__akey"), col("__aid"))))
-      .select(
-        coalesce(ks.indices.map(l =>
-          when(col("__rk") <= starts(l + 1), lit(l))): _*).as("lvl"),
-        coalesce(ks.indices.map(l =>
-          when(col("__rk") <= starts(l + 1), col("__rk") - 1 - starts(l))): _*)
-          .cast("int").as("idx"),
-        col("__avec"))
-    emb.select(col(id), col(vec)).crossJoin(broadcast(anchors))
-      .select(col(id), col("lvl"), col("idx"),
-        Vec.cosine(col(vec), col("__avec")).as("__c"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col(id), col("lvl"))
-          .orderBy(col("__c").desc, col("idx").asc)))
-      .filter(col("rn") <= probe)
-      .select(col(id), col("lvl"), col("idx"), col("rn"))
-  }
-
-  /** A built L-level index: assignment table + per-level radices. */
-  final case class CoarseIndexN(asg: DataFrame, ks: Seq[Int])
-
-  /** Build an L-level coarse index (levels from [[recommendedLevels]]
-    * when not forced). `n` from cheap metadata, as [[buildCoarseIndex]]. */
-  def buildCoarseIndexL(emb: DataFrame, id: String, vec: String, n: Long,
-                        levels: Int,
-                        targetCellSize: Int = DefaultTargetCellSize,
-                        salt: String = CellSalt): CoarseIndexN = {
-    val ks = coarseCellParamsL(n, targetCellSize, levels)
-    CoarseIndexN(anchorAssignmentsL(emb, id, vec, ks, CellProbe, salt), ks)
-  }
-
-  /** Mixed-radix primary cell per row from an L-level index:
-    * cell = ((idx0·k1 + idx1)·k2 + idx2)… — `(idx0·k2 + idx1)` at
-    * L=2, i.e. [[cellsFromIndex]]'s formula. */
-  def cellsFromIndexL(ix: CoarseIndexN, id: String): DataFrame = {
-    val prim = ix.asg.filter(col("rn") === 1).groupBy(col(id))
-      .agg(
-        max(when(col("lvl") === 0, col("idx"))).cast("long").as("__x0"),
-        ix.ks.indices.tail.map(l =>
-          max(when(col("lvl") === l, col("idx"))).cast("long").as(s"__x$l")): _*)
-    val cell = ix.ks.indices.tail.foldLeft(col("__x0")) { (acc, l) =>
-      acc * ix.ks(l) + col(s"__x$l")
-    }
-    prim.select(col(id), cell.as("cell"))
-  }
-
-  /** [[nearDupPairsScaledIndexed]] over an L-level index: probe cells
-    * are the product of each level's ≤probe nearest anchors (fan-out
-    * bound probe^L; the measured realized mean stays near 1 + L/4
-    * because non-primary anchors only materialize near boundaries),
-    * then the same shared pair join. */
-  def nearDupPairsScaledIndexedL(emb: DataFrame, id: String, vec: String,
-                                 tau: Double, ix: CoarseIndexN,
-                                 subBlocks: Int = 8,
-                                 hotCellThreshold: Int = DefaultHotCellThreshold): DataFrame = {
-    val legs = ix.ks.indices.map { l =>
-      ix.asg.filter(col("lvl") === l)
-        .select(col(id), col("idx").as(s"__i$l"), col("rn").as(s"__r$l"))
-    }
-    val joined = legs.reduce((a, b) => a.join(b, id))
-    val cell = ix.ks.indices.tail.foldLeft(col("__i0").cast("long")) { (acc, l) =>
-      acc * ix.ks(l) + col(s"__i$l")
-    }
-    val primary = ix.ks.indices.map(l => col(s"__r$l") === 1).reduce(_ && _)
-    val probeCells = joined.select(col(id), cell.as("cell"), primary.as("__primary"))
-    pairsFromProbeCells(emb, id, vec, tau, probeCells, subBlocks, hotCellThreshold)
-  }
-
   /** Embedding near-dup pairs over CORPUS-PROPORTIONAL coarse cells —
     * the scale tier of [[nearDupPairs]] (which stays as the
     * fixed-cell exact form, the d4-grounds-d2 pattern).
     *
-    * Blocking: each row's primary product cell (see [[coarseCells]]);
+    * Blocking: each row's primary product cell (see [[cellsFromIndex]]);
     * candidates = same-cell pairs. Boundary probing: the PROBE side
     * replicates to its top-2 anchors per level (≤4 cells), the build
     * side stays at its primary — a near-identical pair whose argmax
@@ -1503,47 +1323,21 @@ object Ann {
     *
     * In-cell pair work: ~n·targetCellSize·probeCells = LINEAR in the
     * corpus (the fixed-10-cell form measured 18× wall for 10× data;
-    * ScaleProbe's embeddings_8x leg measures this one). */
-  def nearDupPairsScaled(emb: DataFrame, id: String, vec: String,
-                         tau: Double,
-                         targetCellSize: Int = DefaultTargetCellSize,
-                         subBlocks: Int = 8,
-                         salt: String = CellSalt,
-                         hotCellThreshold: Int = DefaultHotCellThreshold): DataFrame =
-    nearDupPairsScaledIndexed(emb, id, vec, tau,
-      buildCoarseIndex(emb, id, vec, emb.count(), targetCellSize, salt),
-      subBlocks, hotCellThreshold)
-
-  /** [[nearDupPairsScaled]] over a pre-built (usually persisted and
-    * shared) [[CoarseIndex]] — the form the d5/d8/a3/a4 query family
-    * uses so the anchor assignment runs once per corpus, not once per
-    * query. */
+    * ScaleProbe's embeddings_8x leg measures this one). `ix` is built
+    * once per corpus and usually persisted and shared
+    * ([[CellIndexCache.embeddings]]), so the d5/d8/a3/a4 family pays
+    * the anchor assignment once, not once per query. */
   def nearDupPairsScaledIndexed(emb: DataFrame, id: String, vec: String,
                                 tau: Double, ix: CoarseIndex,
                                 subBlocks: Int = 8,
                                 hotCellThreshold: Int = DefaultHotCellThreshold): DataFrame = {
-    val k2 = ix.k2
-    val asg = ix.asg
-    val a0 = asg.filter(col("lvl") === 0)
+    val a0 = ix.asg.filter(col("lvl") === 0)
       .select(col(id), col("idx").as("__i0"), col("rn").as("__r0"))
-    val a1 = asg.filter(col("lvl") === 1)
+    val a1 = ix.asg.filter(col("lvl") === 1)
       .select(col(id), col("idx").as("__i1"), col("rn").as("__r1"))
     val probeCells = a0.join(a1, id)
-      .select(col(id),
-        (col("__i0").cast("long") * k2 + col("__i1")).as("cell"),
+      .select(col(id), productCell(col("__i0"), col("__i1"), ix.k2).as("cell"),
         (col("__r0") === 1 && col("__r1") === 1).as("__primary"))
-    pairsFromProbeCells(emb, id, vec, tau, probeCells, subBlocks, hotCellThreshold)
-  }
-
-  /** The pair join downstream of a (id, cell, __primary) probe-cell
-    * table — shared by the production 2-level path and the
-    * generalized L-level path ([[nearDupPairsScaledIndexedL]]): hot
-    * cells flagged from primary occupancy, adaptive sub-block
-    * sharding, prenormed cosine, min-cell/max-cos pair collapse. */
-  private def pairsFromProbeCells(emb: DataFrame, id: String, vec: String,
-                                  tau: Double, probeCells: DataFrame,
-                                  subBlocks: Int,
-                                  hotCellThreshold: Int): DataFrame = {
     // cells worth sharding: primary occupancy above the threshold —
     // a narrow (cell, count) aggregate, broadcast onto both legs
     val hotCells = probeCells.filter(col("__primary"))

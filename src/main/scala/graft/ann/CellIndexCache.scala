@@ -124,6 +124,14 @@ object CellIndexCache {
   def embeddingsWithCell(spark: SparkSession, dir: String): DataFrame =
     IndexStore.get(spark, dir, cellsArtifact)
 
+  /** The k1+k2 anchor table (lvl, idx, __avec) the cells were assigned
+    * against — the frozen coarse structure [[appendVectorDelta]]
+    * assigns new rows against. Plain table (k1+k2 rows). */
+  val anchorsArtifact: IndexStore.Artifact =
+    IndexStore.Artifact("anchors", None) { (spark, dir) =>
+      embeddings(spark, dir).anchors
+    }
+
   /** The shared (id, vec, cell) table when it is already session-warm
     * or loadable as a durable artifact — else None. Callers that do
     * not NEED the cell column (a7's kmeans report scan reads the same
@@ -147,10 +155,10 @@ object CellIndexCache {
     * `g_grp IN (...)` prunes buckets; [[centroids]] projects it away. */
   val centroidsArtifact: IndexStore.Artifact =
     IndexStore.Artifact("centroids", Some("g_grp")) { (spark, dir) =>
-      import org.apache.spark.sql.functions.{col, expr}
-      val k2 = embeddings(spark, dir).k2
+      import org.apache.spark.sql.functions.col
       Ann.ivfCentroids(embeddingsWithCell(spark, dir), "embedding", "cell")
-        .select(expr(s"c_cell div $k2").as("g_grp"), col("c_cell"), col("c_vec"))
+        .select(Ann.cellGroup("c_cell", embeddings(spark, dir).k2).as("g_grp"),
+          col("c_cell"), col("c_vec"))
     }
 
   /** The (c_cell, c_vec) centroid table. */
@@ -228,9 +236,9 @@ object CellIndexCache {
     Ann.knnIvfProbeHier(
       embeddingsWithCell(spark, dir), "vec_id", "embedding", "cell",
       centroids(spark, dir), ix.k2, queryIds, k,
-      Ann.recommendedNprobe(ix.k1.toLong * ix.k2),
+      Ann.recommendedNprobe(ix.cells),
       Ann.recommendedGroupProbe(ix.k1),
-      Some(groupCentroids(spark, dir)))
+      groupCentroids(spark, dir))
   }
 
   /** Result card of [[appendVectorDelta]] — delta size, the grown
@@ -253,13 +261,12 @@ object CellIndexCache {
     * shape): fold the corpus rows that are NOT yet in the durable
     * vector index into it, without retraining — a production corpus
     * GROWS, and before this path any new batch invalidated the corpus
-    * fingerprint and rebuilt all 21 artifacts from scratch.
+    * fingerprint and rebuilt every artifact from scratch.
     *
-    *  1. The FROZEN anchor set is reconstructed from the stored cells
-    *     table itself (anchors are the k1+k2 old-corpus rows with the
-    *     smallest md5(salt:id) — Ann.anchorsOf is a pure function of
-    *     the stored (id, vec) rows), so no separate anchors artifact
-    *     is needed and existing deployments migrate as-is.
+    *  1. The FROZEN anchor set is the stored `anchors` table
+    *     ([[anchorsArtifact]]) and (k1, k2) are its level sizes: the
+    *     structure the cells were built with, however many appends
+    *     have grown the cells table since.
     *  2. delta = current corpus ANTI-JOIN indexed ids (one id-only
     *     probe of the corpus — the unavoidable delta discovery).
     *  3. delta rows are assigned to cells against the frozen anchors
@@ -267,7 +274,7 @@ object CellIndexCache {
     *     tie-breaking to the build, Ann.assignToAnchors) and appended
     *     to the cells table; PQ codes are encoded against the FROZEN
     *     codebooks/centroids and appended to pqcodes/rawpqcodes.
-    *  4. Frozen-but-still-valid artifacts (centroids, gcents,
+    *  4. Frozen-but-still-valid artifacts (anchors, centroids, gcents,
     *     codebooks) get their manifest fingerprint refreshed; pair/
     *     cluster artifacts (pairs, sclusters, kmcents) are left
     *     fingerprint-stale ON PURPOSE — new pairs involve old rows,
@@ -289,39 +296,36 @@ object CellIndexCache {
   def appendVectorDelta(spark: SparkSession, dir: String,
                         id: String = "vec_id", vec: String = "embedding",
                         targetCellSize: Int = Ann.DefaultTargetCellSize,
-                        salt: String = Ann.CellSalt,
                         imbalanceThreshold: Double = AppendImbalanceThreshold)
       : AppendReport = {
     import org.apache.spark.sql.functions._
     val store = graft.sources.IndexStore
-    val frozen = Seq("centroids", "gcents", "pqcodebook", "rawpqcodebook")
+    val frozen = Seq("anchors", "centroids", "gcents", "pqcodebook", "rawpqcodebook")
     val appended = Seq("cells", "pqcodes", "rawpqcodes")
+    def stored(a: String): DataFrame = store.loadStale(spark, dir, a).getOrElse(
+      sys.error(s"appendVectorDelta: no durable $a index under $dir — " +
+        "build one first (IndexStore.writeAll / primeIfMissing)"))
     try {
-      val cellsOld = store.loadStale(spark, dir, "cells").getOrElse(
-        sys.error(s"appendVectorDelta: no durable cells index under $dir — " +
-          "build one first (IndexStore.writeAll / primeIfMissing)"))
-      val nOld = cellsOld.count()
-      val (k1, k2) = Ann.coarseCellParams(nOld, targetCellSize)
+      val cellsOld = stored("cells")
+      val anchors = stored("anchors")
+      val lv = anchors.agg(count(when(col("lvl") === 0, 1)),
+        count(when(col("lvl") === 1, 1))).head()
+      val (k1, k2) = (lv.getLong(0).toInt, lv.getLong(1).toInt)
       // localCheckpoint, not persist: inserting into the cells table
       // below INVALIDATES every cached plan that reads that table
       // (Spark's CacheManager recursively uncaches dependents on a
       // table write), and a mere persist would silently recompute the
       // anti-join against the GROWN table — an empty delta. The
-      // checkpoint severs the lineage, so the pre-append row sets
-      // survive the write. Both are delta/k-sized, never corpus-sized.
-      val anchors = Ann.anchorsOf(
-        cellsOld.select(col(id), col(vec)), id, vec, k1, k2, salt)
-        .localCheckpoint()
+      // checkpoint severs the lineage, so the pre-append row set
+      // survives the write. It is delta-sized, never corpus-sized.
       val delta = Tables.embeddings(spark, dir)
         .join(cellsOld.select(col(id)), Seq(id), "left_anti")
         .localCheckpoint()
       val deltaRows = delta.count()
         var pqSkipped = 0L
         if (deltaRows > 0) {
-          val deltaCell = Ann.assignToAnchors(delta, id, vec, anchors, 1)
-            .groupBy(col(id))
-            .agg((max(when(col("lvl") === 0, col("idx"))).cast("long") * k2 +
-              max(when(col("lvl") === 1, col("idx"))).cast("long")).as("cell"))
+          val deltaCell = Ann.cellsFromIndex(CoarseIndex(anchors,
+            Ann.assignToAnchors(delta, id, vec, anchors, 1), k1, k2), id)
           val deltaWithCell = delta.join(deltaCell, id)
             .localCheckpoint()
           val cellCols = spark.table(store.tableName(dir, "cells")).columns

@@ -353,7 +353,7 @@ object Binary {
   val PhashHotBucketThreshold = 1024
 
   /** Sub-block fan-out for hot phash buckets (d5's pattern,
-    * Ann.pairsFromProbeCells): build side hashed into this many blocks,
+    * Ann.nearDupPairsScaledIndexed): build side hashed into this many blocks,
     * probe side replicated to all of them. */
   val PhashSubBlocks = 8
 

@@ -445,7 +445,10 @@ object Pipeline {
     * min(bigram) — each 60-bit word hash names one word, the same
     * no-collision granularity the (bgh, ah, th) keying is already
     * built on; X28Probe + R18OpsSpec pin bit-equality with the
-    * payload-carrying form). One broadcast total, TakeOrdered top-k —
+    * payload-carrying form). A 60-bit word-hash collision therefore
+    * does not only merge counts: the display string pairs the smaller
+    * word of each colliding hash, so it can show a bigram that never
+    * occurs in the corpus. One broadcast total, TakeOrdered top-k —
     * the ranked set never leaves a bounded heap. `minCount` prunes
     * the hapax tail (the classic PMI degenerate: two words seen once,
     * together — perfect PMI, zero evidence) before the joins, so the

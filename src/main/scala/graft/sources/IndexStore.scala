@@ -352,7 +352,7 @@ object IndexStore {
   def standard: Seq[Artifact] = {
     import graft.ann.{CellIndexCache => V}
     import graft.dedup.{ClusterCache => T}
-    Seq(V.cellsArtifact, V.centroidsArtifact, V.groupCentroidsArtifact,
+    Seq(V.cellsArtifact, V.anchorsArtifact, V.centroidsArtifact, V.groupCentroidsArtifact,
       V.pqCodebookArtifact, V.pqCodesArtifact, V.rawPqCodebookArtifact,
       V.rawPqCodesArtifact, V.pairsArtifact,
       T.postingsArtifact(), T.shingleDfArtifact(), T.minhashArtifact(),

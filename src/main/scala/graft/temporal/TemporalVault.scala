@@ -332,13 +332,19 @@ class TemporalVault(
     * and long-replay problems reset. Append-only stores compact by
     * generation switch — the old root stays readable until dropped. */
   def compactTo(newRoot: String, at: String): TemporalVault = {
-    val atTs = instant(micros(at))
+    val atM = micros(at)
+    val atTs = instant(atM)
     val compacted = new TemporalVault(spark, newRoot, key, ts, tie, clock)
     val live = Temporal.asOf(log, key, ts, tie, atTs)
       .filter(col(Op) =!= "D").drop(Op, Day)
     compacted.append(live)
     val tail = log.filter(col(ts) > atTs).drop(Day)
     if (!tail.isEmpty) compacted.writeLog(tail)
+    // every record deleted by `at` and no tail: the partitioned writes
+    // left no data file, and a log without one cannot be read. An
+    // unpartitioned empty write still leaves one carrying the schema.
+    if (Option(fs.globStatus(new Path(s"$newRoot/log/$Day=*"))).forall(_.isEmpty))
+      tail.limit(0).write.parquet(s"$newRoot/log/$Day=${day(atM)}")
     if (exists(rbDir))
       spark.read.parquet(rbDir).write.mode(SaveMode.Append)
         .parquet(s"$newRoot/rollback_log")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ann.{Ann, CellIndexCache}
+import graft.ann.{Ann, CellIndexCache, CoarseIndex}
 import graft.operators.RetrievalCache
 import graft.sources.{IndexStore, Tables}
 import graft.util.SessionCache
@@ -46,10 +46,11 @@ class AppendIndexSpec extends SparkSpec {
   private def appendAndCheck(dir: String): Unit = {
     writeEmb(dir, 0L until 200L)
 
-    // ---- build + persist the 7 vector artifacts on the BASE corpus ----
+    // ---- build + persist the 8 vector artifacts on the BASE corpus ----
     sys.props(IndexStore.EnvFlag) = "0"
     SessionCache.clearAll()
-    Seq(CellIndexCache.cellsArtifact, CellIndexCache.centroidsArtifact,
+    Seq(CellIndexCache.cellsArtifact, CellIndexCache.anchorsArtifact,
+        CellIndexCache.centroidsArtifact,
         CellIndexCache.groupCentroidsArtifact, CellIndexCache.pqCodebookArtifact,
         CellIndexCache.pqCodesArtifact, CellIndexCache.rawPqCodebookArtifact,
         CellIndexCache.rawPqCodesArtifact)
@@ -96,12 +97,12 @@ class AppendIndexSpec extends SparkSpec {
     assert((report.k1, report.k2) === ((k1, k2)))
     val anchors = Ann.anchorsOf(base, "vec_id", "embedding", k1, k2, Ann.CellSalt)
       .localCheckpoint()
-    val pinnedCells = grown.join(
-      Ann.assignToAnchors(grown, "vec_id", "embedding", anchors, 1)
-        .groupBy(col("vec_id"))
-        .agg((max(when(col("lvl") === 0, col("idx"))).cast("long") * k2 +
-          max(when(col("lvl") === 1, col("idx"))).cast("long")).as("cell")),
-      "vec_id").localCheckpoint()
+    // every row of `corpus` with its cell against the BASE anchors
+    def pinnedCellsOf(corpus: org.apache.spark.sql.DataFrame) =
+      corpus.join(Ann.cellsFromIndex(CoarseIndex(anchors,
+          Ann.assignToAnchors(corpus, "vec_id", "embedding", anchors, 1), k1, k2),
+        "vec_id"), "vec_id").localCheckpoint()
+    val pinnedCells = pinnedCellsOf(grown)
 
     // the appended tables ARE the pinned rebuild, row for row
     val loadedCells = IndexStore.load(spark, dir, "cells")
@@ -142,13 +143,28 @@ class AppendIndexSpec extends SparkSpec {
     // throw on any structural mismatch)
     assert(SparkEntry.queries("a9_ivfpq")(spark, dir).count() > 0)
 
-    // ---- drift gate: a skewed second delta (all in one cell) ----
-    writeEmb(dir, 600L until 620L, twin = (600L until 620L).map(_ -> 1L).toMap)
+    // ---- drift gate: a skewed second delta (20 rows in one cell) ----
+    // plus a twin of row 9, whose level-1 anchor flips if the second
+    // append re-derives the anchors from the grown cells table (appended
+    // row 501 then enters the 4 smallest md5 keys)
+    writeEmb(dir, 600L until 621L,
+      twin = (600L until 620L).map(_ -> 1L).toMap + (620L -> 9L))
     val r2 = CellIndexCache.appendVectorDelta(spark, dir,
       imbalanceThreshold = 1.5)
-    assert(r2.deltaRows === 20L && r2.totalRows === 250L)
-    assert(!r2.structureDrift, "250 rows still implies 4 cells")
+    assert(r2.deltaRows === 21L && r2.totalRows === 251L)
+    assert(!r2.structureDrift, "251 rows still implies 4 cells")
+    assert((r2.k1, r2.k2) === ((k1, k2)))
     assert(r2.imbalance > 1.5 && r2.rebuildRecommended,
       s"20 same-direction rows in one of 4 cells must trip the gate: $r2")
+    // the second delta is assigned against the BASE anchors too
+    val pinned2 = pinnedCellsOf(Tables.embeddings(spark, dir))
+    val loaded2 = IndexStore.load(spark, dir, "cells")
+      .select(pinned2.columns.map(col): _*)
+    assert(rows(loaded2) === rows(pinned2))
+    val cellOf = loaded2.filter(col("vec_id").isin(9L, 620L))
+      .select("vec_id", "cell").as[(Long, Long)].collect().toMap
+    assert(cellOf(620L) === cellOf(9L), s"row 9's twin left its cell: $cellOf")
+    assert(rows(IndexStore.load(spark, dir, "anchors")) === rows(anchors),
+      "the stored anchors must stay the base corpus's")
   }
 }

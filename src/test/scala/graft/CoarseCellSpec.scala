@@ -49,7 +49,7 @@ class CoarseCellSpec extends SparkSpec {
     assert(cells.count() == (nBase + nTwins).toLong)
     assert(cells.filter(col("cell").isNull).isEmpty)
     val bad = cells.filter(col("cell") < 0 ||
-      col("cell") >= index.k1.toLong * index.k2)
+      col("cell") >= index.cells)
     assert(bad.isEmpty)
     // withCoarseCellIndexed drops no rows (the NULL-cell failure mode)
     assert(Ann.withCoarseCellIndexed(corpus, "vec_id", index).count() ==
@@ -123,8 +123,8 @@ class CoarseCellSpec extends SparkSpec {
     assert(ParquetStats.rowCount(spark, s"$sfDir/embeddings.parquet") == emb.count())
     val viaCache = Ann.cellsFromIndex(CellIndexCache.embeddings(spark, sfDir), "vec_id")
       .as[(Long, Long)].collect().toSet
-    val direct = Ann.coarseCells(emb, "vec_id", "embedding",
-        Ann.DefaultTargetCellSize)
+    val direct = Ann.cellsFromIndex(
+        Ann.buildCoarseIndex(emb, "vec_id", "embedding", emb.count()), "vec_id")
       .as[(Long, Long)].collect().toSet
     assert(viaCache == direct)
   }

@@ -195,15 +195,18 @@ class DedupAnnTextSpec extends SparkSpec {
     val qs = Seq(0L, 1L, 2L, 3L, 4L)
     val brute = Ann.knnBrute(emb, "vec_id", "embedding", qs, 10)
       .select("query_id", "nn_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val all = Ann.knnIvfProbe(emb, "vec_id", "embedding", "label", qs, 10,
-        nprobe = 1000)
+    // the `label` cells 0..9 form ONE level-0 group at k2 = 10, so a
+    // one-group probe ranks every cell, as a flat probe would
+    val cents = Ann.ivfCentroids(emb, "embedding", "label")
+    val gvec = Ann.groupCentroids(cents, 10)
+    def probe(nprobe: Int) = Ann.knnIvfProbeHier(emb, "vec_id", "embedding",
+      "label", cents, 10, qs, 10, nprobe, groupProbe = 1, gvec = gvec)
+    val all = probe(1000)
       .select("query_id", "nn_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(all == brute)
     // nprobe=2 finds at least as much as probing the single best cell
-    val n1 = Ann.knnIvfProbe(emb, "vec_id", "embedding", "label", qs, 10, 1)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSet
-    val n2 = Ann.knnIvfProbe(emb, "vec_id", "embedding", "label", qs, 10, 2)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSet
+    val n1 = probe(1).select("query_id", "nn_id").as[(Long, Long)].collect().toSet
+    val n2 = probe(2).select("query_id", "nn_id").as[(Long, Long)].collect().toSet
     val r1 = (brute.map(t => (t._1, t._2)) intersect n1).size
     val r2 = (brute.map(t => (t._1, t._2)) intersect n2).size
     assert(r2 >= r1, s"nprobe=2 recall $r2 < nprobe=1 recall $r1")

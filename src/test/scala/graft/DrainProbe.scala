@@ -92,8 +92,8 @@ object DrainProbe {
     // run SEQUENTIALLY (the suite shape: each query awaits its own
     // drain) vs CONCURRENTLY (start all, then await all — guide §2.6
     // overlap; each keeps its own plan/checkpoint/state store, only
-    // wall-clock overlaps). Drained tables are hash-compared across
-    // modes: any drift kills the idea.
+    // wall-clock overlaps). Every rep's drained tables are hashed and
+    // compared across reps and modes: any drift kills the idea.
     if (shapes.contains("wave")) {
       val waveShapes = Seq("tumbling", "session", "dedup")
       def tableHash(name: String): String = {
@@ -113,13 +113,13 @@ object DrainProbe {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
         (shape, name)
       }
-      var hashesSeq: Map[String, String] = Map.empty
-      var hashesConc: Map[String, String] = Map.empty
+      // (shape, mode, rep) -> drained-table hash, for every rep
+      val hashes = scala.collection.mutable.LinkedHashMap.empty[(String, String, Int), String]
       for (rep <- 1 to 3) {
         val t0 = System.nanoTime()
         val done = waveShapes.map(sh => drainOne(sh, s"seq$rep"))
         val wall = (System.nanoTime() - t0) / 1e9
-        hashesSeq = done.map { case (sh, nm) => sh -> tableHash(nm) }.toMap
+        done.foreach { case (sh, nm) => hashes((sh, "seq", rep)) = tableHash(nm) }
         println(f"wave sequential rep $rep wall=$wall%.3fs (${waveShapes.size} drains)")
       }
       for (rep <- 1 to 3) {
@@ -138,11 +138,17 @@ object DrainProbe {
         val wall = (System.nanoTime() - t0) / 1e9
         started.foreach(x =>
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(x._4)))
-        hashesConc = started.map { case (sh, nm, _, _) => sh -> tableHash(nm) }.toMap
+        started.foreach { case (sh, nm, _, _) => hashes((sh, "conc", rep)) = tableHash(nm) }
         println(f"wave concurrent rep $rep wall=$wall%.3fs (${waveShapes.size} drains)")
       }
-      val drift = waveShapes.filter(sh => hashesSeq(sh) != hashesConc(sh))
+      // drift: any rep of a shape, in either mode, hashing differently
+      val drift = waveShapes.filter(sh =>
+        hashes.collect { case ((`sh`, _, _), h) => h }.toSet.size > 1)
       println(s"wave hash drift: ${if (drift.isEmpty) "NONE" else drift.mkString(",")}")
+      drift.foreach { sh =>
+        println(s"  $sh: " + hashes.collect { case ((`sh`, mode, rep), h) =>
+          s"$mode$rep=${h.take(8)}" }.mkString(" "))
+      }
     }
 
     for (shape <- shapes.filterNot(s0 => s0 == "session_batch" || s0 == "wave"); rep <- 1 to 3) {

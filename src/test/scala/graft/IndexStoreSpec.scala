@@ -22,7 +22,7 @@ class IndexStoreSpec extends SparkSpec {
 
   /** The standard set's table names, in priming order. A rename
     * orphans every primed warehouse, so they are pinned literally. */
-  private val StandardNames = Seq("cells", "centroids", "gcents",
+  private val StandardNames = Seq("cells", "anchors", "centroids", "gcents",
     "pqcodebook", "pqcodes", "rawpqcodebook", "rawpqcodes", "pairs",
     "postings_n3", "shingledf_n3", "minhash_n3_p16_b4",
     "clusters_n3_p16_b4", "docwordtf", "chunks_c64", "doclengths",
@@ -69,11 +69,11 @@ class IndexStoreSpec extends SparkSpec {
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .localCheckpoint()
-    val np = Ann.ivfPqNprobe(ix.k1.toLong * ix.k2)
+    val np = Ann.ivfPqNprobe(ix.cells)
     val gp = Ann.hierGroupProbe(ix.k1, ix.k2, np)
     val bProbed = rows(Ann.probedCellsHier(queries,
       CellIndexCache.centroids(spark, sfDir), ix.k2, np, gp,
-      Some(CellIndexCache.groupCentroids(spark, sfDir))))
+      CellIndexCache.groupCentroids(spark, sfDir)))
     def q(name: String) = rows(SparkEntry.queries(name)(spark, sfDir))
     val bQ = Seq("a3_ivf_coarse", "a4_ivf_nprobe", "a9_ivfpq", "a10_index_stats",
       "d5_embedding_neardup", "d6_dup_clusters", "d7_dedup_survivors",
@@ -83,7 +83,7 @@ class IndexStoreSpec extends SparkSpec {
     val names = IndexStore.writeAll(spark, sfDir)
     assert(names == StandardNames.map(IndexStore.tableName(sfDir, _)) &&
       names.forall(spark.catalog.tableExists))
-    assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"),
+    assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"), None,
       Some("g_grp"), None, None, Some("c_cell"), None, Some("__vid"),
       Some("id_a"), Some("shingle"), Some("shingle"), Some("id_a"),
       Some("doc_id"), Some("w"), Some("doc_id"), Some("doc_id"),
@@ -104,7 +104,7 @@ class IndexStoreSpec extends SparkSpec {
       // probed set bit-equal through the loaded coarse structures
       val lProbed = rows(Ann.probedCellsHier(queries,
         CellIndexCache.centroids(spark, sfDir), ix.k2, np, gp,
-        Some(CellIndexCache.groupCentroids(spark, sfDir))))
+        CellIndexCache.groupCentroids(spark, sfDir)))
       assert(lProbed == bProbed)
       // production queries row-identical in load mode → the committed
       // oracle-green verdict transfers to the persisted index
@@ -298,7 +298,7 @@ class IndexStoreSpec extends SparkSpec {
     try {
       primed = IndexStore.primeIfMissing(spark, tmp)
       assert(primed == StandardNames.map(IndexStore.tableName(tmp, _)),
-        s"expected all 22 written, got $primed")
+        s"expected all 23 written, got $primed")
       // everything present + valid -> second prime writes NOTHING
       assert(IndexStore.primeIfMissing(spark, tmp).isEmpty)
       assert(IndexStore.exists(spark, tmp, "docwordtf"))

@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 
-/** The generalized L-level product quantizer (NOTES_r8 §2
-  * implemented): the L=2 instantiation must be the production
-  * 2-level path exactly (params, cells, pair set), the L=3
-  * instantiation must be a working index (total cells, twin recall,
-  * determinism), and the crossover rule must reproduce the
-  * documented thresholds. */
+/** a9's IVFPQ over the 2-level product quantizer: the hierarchical
+  * probe at full width degenerates to exact search, the ADC shortlist
+  * bounds the rerank, the a9 operating point recovers planted twins,
+  * the probe-width rules hold, and the hierarchical probe matches the
+  * flat reference ([[Ann.probedCellsFlat]]) at the a4/a9 points. */
 class ProductQuantizerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,86 +27,6 @@ class ProductQuantizerSpec extends SparkSpec {
   }
   private val n = (nBase + nTwins).toLong
 
-  test("coarseCellParamsL at L=2 reproduces the production (k1, k2) exactly") {
-    // n = 1 fails the anchor-seating guard in BOTH paths (by design)
-    for (sz <- Seq(2L, 63L, 64L, 65L, 500L, 4096L, 65537L, 1000000L, 123456789L)) {
-      val (k1, k2) = Ann.coarseCellParams(sz, Ann.DefaultTargetCellSize)
-      assert(Ann.coarseCellParamsL(sz, Ann.DefaultTargetCellSize, 2) == Seq(k1, k2),
-        s"n=$sz")
-    }
-  }
-
-  test("coarseCellParamsL covers the cell count at any depth and fails loudly when it can't") {
-    for (sz <- Seq(1000L, 100000L, 10000000L); l <- 2 to 5) {
-      val ks = Ann.coarseCellParamsL(sz, 64, l)
-      val cells = (sz + 63) / 64
-      assert(ks.map(_.toLong).product >= cells, s"n=$sz L=$l ks=$ks")
-      assert(ks.forall(_ >= 1))
-    }
-    // a corpus too small to seat its anchors must not silently NULL out
-    assertThrows[IllegalArgumentException] {
-      Ann.coarseCellParamsL(2L, 1, 2) // 2 cells want k1+k2 = 3 > n
-    }
-  }
-
-  test("recommendedLevels follows the NOTES_r8 §2 crossover rule") {
-    // below n* = B³P²/4 ≈ 4.1e5 (B=64, P=2.5) the 2-level assignment
-    // term is already dominated — stay at L=2
-    for (sz <- Seq(1000L, 20000L, 128000L, 400000L))
-      assert(Ann.recommendedLevels(sz) == 2, s"n=$sz")
-    // just past the crossover the rule deepens
-    assert(Ann.recommendedLevels(500000L) >= 3)
-    // monotone nondecreasing in n, and a 10^12-row corpus (the
-    // literal 100 TB point) never stays at the O(n^1.5) depth
-    val depths = Seq(1000L, 1000000L, 1000000000L, 1000000000000L)
-      .map(Ann.recommendedLevels(_))
-    assert(depths == depths.sorted)
-    assert(depths.last >= 3)
-  }
-
-  test("L=2 generalized index equals the production 2-level path (cells and pairs)") {
-    val prod = Ann.buildCoarseIndex(corpus, "vec_id", "embedding", n)
-    val gen = Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 2)
-    assert(gen.ks == Seq(prod.k1, prod.k2))
-    val cellsProd = Ann.cellsFromIndex(prod, "vec_id")
-      .as[(Long, Long)].collect().toSet
-    val cellsGen = Ann.cellsFromIndexL(gen, "vec_id")
-      .as[(Long, Long)].collect().toSet
-    assert(cellsGen == cellsProd)
-    val pairsProd = Ann.nearDupPairsScaledIndexed(
-        corpus, "vec_id", "embedding", 0.25, prod)
-      .select("id_a", "id_b", "cell", "cos")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val pairsGen = Ann.nearDupPairsScaledIndexedL(
-        corpus, "vec_id", "embedding", 0.25, gen)
-      .select("id_a", "id_b", "cell", "cos")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(pairsGen == pairsProd)
-  }
-
-  test("L=3 index: one in-range cell per row, twins recovered, deterministic") {
-    val ix = Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 3)
-    assert(ix.ks.length == 3)
-    val cells = Ann.cellsFromIndexL(ix, "vec_id")
-    assert(cells.count() == n)
-    assert(cells.filter(col("cell").isNull ||
-      col("cell") < 0 ||
-      col("cell") >= ix.ks.map(_.toLong).product).isEmpty)
-    // planted cos >= ~0.99 twins survive the deeper blocking: the
-    // probe legs cover an argmax flip per level, and a twin pair's
-    // anchors only flip near boundaries
-    val pairs = Ann.nearDupPairsScaledIndexedL(
-        corpus, "vec_id", "embedding", 0.9, ix)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val found = (0 until nTwins).count(i => pairs.contains((i.toLong, 1000L + i)))
-    assert(found >= (nTwins * 0.9).toInt, s"only $found/$nTwins twins at L=3")
-    // deterministic across independent builds
-    val again = Ann.nearDupPairsScaledIndexedL(corpus, "vec_id", "embedding", 0.9,
-        Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 3))
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(again == pairs)
-  }
-
   // ---- a9 IVFPQ (coarse probe + ADC shortlist + exact rerank) ----
 
   private lazy val ivfpqStructures = {
@@ -121,11 +40,18 @@ class ProductQuantizerSpec extends SparkSpec {
     (ix, withCell, cents, cb, codes)
   }
 
+  private lazy val gvec = {
+    val (ix, _, cents, _, _) = ivfpqStructures
+    Ann.groupCentroids(cents, ix.k2).localCheckpoint()
+  }
+
   test("knnIvfPq with nprobe=cells and full-width rerank degenerates to exact knnBrute") {
     val (ix, withCell, cents, cb, codes) = ivfpqStructures
     val qs = Seq(0L, 1L, 2L)
+    // groupProbe = k1: every group, so the hierarchical probe is the flat one
     val got = Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-        cents, codes, cb, qs, 10, nprobe = ix.k1 * ix.k2, rerank = n.toInt)
+        cents, codes, cb, ix.k2, qs, 10, nprobe = ix.cells.toInt,
+        groupProbe = ix.k1, gvec = gvec, rerank = n.toInt)
       .select("query_id", "nn_id", "cos", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     val brute = Ann.knnBrute(corpus, "vec_id", "embedding", qs, 10)
@@ -141,11 +67,13 @@ class ProductQuantizerSpec extends SparkSpec {
     // (the ADC argmin can fall outside the exact top-10 under PQ
     // quantization error, which made the old form spuriously fail)
     val full = Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-        cents, codes, cb, Seq(0L), n.toInt, nprobe = ix.k1 * ix.k2, rerank = n.toInt)
+        cents, codes, cb, ix.k2, Seq(0L), n.toInt, nprobe = ix.cells.toInt,
+        groupProbe = ix.k1, gvec = gvec, rerank = n.toInt)
       .select("query_id", "nn_id", "adc_dist")
       .as[(Long, Long, Double)].collect()
     val one = Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-        cents, codes, cb, Seq(0L), 10, nprobe = ix.k1 * ix.k2, rerank = 1)
+        cents, codes, cb, ix.k2, Seq(0L), 10, nprobe = ix.cells.toInt,
+        groupProbe = ix.k1, gvec = gvec, rerank = 1)
       .select("query_id", "nn_id", "adc_dist")
       .as[(Long, Long, Double)].collect()
     assert(one.length == 1)
@@ -157,12 +85,12 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("knnIvfPq at the a9 operating point: <=k per query, deterministic, planted twin recovered") {
     val (ix, withCell, cents, cb, codes) = ivfpqStructures
-    val cells = ix.k1 * ix.k2
-    val np = Ann.ivfPqNprobe(cells.toLong)
-    assert(np >= 1 && np <= cells)
+    val np = Ann.ivfPqNprobe(ix.cells)
+    assert(np >= 1 && np <= ix.cells)
     val qs = (0L until 10L).toSeq
     def run() = Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-        cents, codes, cb, qs, 10, np)
+        cents, codes, cb, ix.k2, qs, 10, np,
+        Ann.hierGroupProbe(ix.k1, ix.k2, np), gvec)
       .select("query_id", "nn_id", "rank")
       .as[(Long, Long, Int)].collect().toSeq
     val got = run()
@@ -198,7 +126,7 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("hierarchical probe == flat probe on the probed-cell set at the a4/a9 operating points") {
     val (ix, withCell, cents, _, _) = ivfpqStructures
-    val cells = ix.k1.toLong * ix.k2
+    val cells = ix.cells
     val queries = withCell.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .localCheckpoint()
@@ -207,7 +135,7 @@ class ProductQuantizerSpec extends SparkSpec {
         (Ann.ivfPqNprobe(cells), Ann.hierGroupProbe(ix.k1, ix.k2, Ann.ivfPqNprobe(cells))))) {
       val flat = Ann.probedCellsFlat(queries, cents, np)
         .as[(Long, Long)].collect().toSet
-      val hier = Ann.probedCellsHier(queries, cents, ix.k2, np, gp)
+      val hier = Ann.probedCellsHier(queries, cents, ix.k2, np, gp, gvec)
         .as[(Long, Long)].collect().toSet
       // the sets can differ when a top cell hides in a low-ranked
       // group; on this corpus (and the sweep corpora) they don't —
@@ -227,7 +155,8 @@ class ProductQuantizerSpec extends SparkSpec {
       cents, k = 32).localCheckpoint()
     val e = intercept[Exception] {
       Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-        cents, codes, cb32, Seq(0L), 10, nprobe = 4).count()
+        cents, codes, cb32, ix.k2, Seq(0L), 10, nprobe = 4,
+        groupProbe = ix.k1, gvec = gvec).count()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
@@ -238,6 +167,7 @@ class ProductQuantizerSpec extends SparkSpec {
     val codes32 = Ann.ivfPqCodes(withCell, "vec_id", "embedding", "cell",
       cents, cb32).localCheckpoint()
     assert(Ann.knnIvfPq(withCell, "vec_id", "embedding", "cell",
-      cents, codes32, cb32, Seq(0L), 10, nprobe = 4, kCb = 32).count() > 0)
+      cents, codes32, cb32, ix.k2, Seq(0L), 10, nprobe = 4,
+      groupProbe = ix.k1, gvec = gvec, kCb = 32).count() > 0)
   }
 }
