@@ -18,13 +18,12 @@ import graft.functions.Vec
   *  - random-hyperplane LSH bucketing (round 2) follows the same shape
   *    with sign-bit bucket keys.
   */
-/** A built coarse-cell index: the k1+k2 anchor table (`anchors`: lvl ∈
-  * {0,1}, idx, __avec), the probe-`CellProbe` anchor assignment
+/** A built coarse-cell index: the probe-`CellProbe` anchor assignment
   * (`asg`: id, lvl, idx, rn) and the product dimensions. One index
   * serves every consumer — near-dup blocking (rn ≤ 2 probe cells) and
   * IVF cells (rn = 1 primary) — so the n·(k1+k2) anchor scan runs once
-  * per (corpus, cell size), not once per query. */
-final case class CoarseIndex(anchors: DataFrame, asg: DataFrame, k1: Int, k2: Int) {
+  * per corpus, not once per query. */
+final case class CoarseIndex(asg: DataFrame, k1: Int, k2: Int) {
   /** The product cell count k1·k2. */
   def cells: Long = k1.toLong * k2
 }
@@ -1167,21 +1166,42 @@ object Ann {
 
   /** Build the shared coarse index for a corpus of `n` rows: one
     * probe-[[CellProbe]] anchor assignment serving d5/d8 blocking and
-    * a3/a4 IVF cells alike. Anchors are [[anchorsOf]]; each row ranks
-    * each level's anchors by ROUNDED cosine desc (ties by anchor idx),
-    * so both engines pick the same anchors (the a4 determinism
-    * treatment). The anchor pick is a distributed top-(k1+k2)
-    * (TakeOrderedAndProject), the assignment one broadcast join:
-    * n·(k1+k2) fused cosines, no shuffle wider than (id, lvl, idx).
-    * `n` should come from cheap metadata (parquet footers —
-    * [[graft.sources.ParquetStats.rowCount]]), not a `count()` job.
-    * The caller decides persistence. */
-  def buildCoarseIndex(emb: DataFrame, id: String, vec: String, n: Long,
-                       targetCellSize: Int = DefaultTargetCellSize,
-                       salt: String = CellSalt): CoarseIndex = {
-    val (k1, k2) = coarseCellParams(n, targetCellSize)
-    val anchors = anchorsOf(emb, id, vec, k1, k2, salt)
-    CoarseIndex(anchors, assignToAnchors(emb, id, vec, anchors, CellProbe), k1, k2)
+    * a3/a4 IVF cells alike. The anchors are the k1+k2 rows with the
+    * smallest md5("cells:id") ([[CellSalt]]) — seeded, data-dependent,
+    * and reproducible in SQL (QUALIFY row_number); the first k1 are
+    * level 0, the rest level 1. Each row ranks each level's anchors by
+    * ROUNDED cosine desc (ties by anchor idx), so both engines pick the
+    * same anchors (the a4 determinism treatment). The anchor pick is a
+    * distributed top-(k1+k2) (TakeOrderedAndProject), the assignment
+    * one broadcast join: n·(k1+k2) fused cosines, no shuffle wider than
+    * (id, lvl, idx). `n` should come from cheap metadata (parquet
+    * footers — [[graft.sources.ParquetStats.rowCount]]), not a
+    * `count()` job. The caller decides persistence. */
+  def buildCoarseIndex(emb: DataFrame, id: String, vec: String,
+                       n: Long): CoarseIndex = {
+    val (k1, k2) = coarseCellParams(n, DefaultTargetCellSize)
+    val key = md5(concat(lit(CellSalt + ":"), col(id).cast("string")))
+    // the window runs over exactly k1+k2 rows (post-limit) — the
+    // single-partition sort is k-sized, never corpus-sized
+    val anchors = emb
+      .select(col(id).as("__aid"), col(vec).as("__avec"), key.as("__akey"))
+      .orderBy(col("__akey"), col("__aid")).limit(k1 + k2)
+      .withColumn("__rk", row_number().over(
+        Window.orderBy(col("__akey"), col("__aid"))))
+      .select(
+        when(col("__rk") <= k1, lit(0)).otherwise(lit(1)).as("lvl"),
+        (when(col("__rk") <= k1, col("__rk") - 1)
+          .otherwise(col("__rk") - 1 - k1)).cast("int").as("idx"),
+        col("__avec"))
+    val asg = emb.select(col(id), col(vec)).crossJoin(broadcast(anchors))
+      .select(col(id), col("lvl"), col("idx"),
+        Vec.cosine(col(vec), col("__avec")).as("__c"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col(id), col("lvl"))
+          .orderBy(col("__c").desc, col("idx").asc)))
+      .filter(col("rn") <= CellProbe)
+      .select(col(id), col("lvl"), col("idx"), col("rn"))
+    CoarseIndex(asg, k1, k2)
   }
 
   /** Primary cell per row, (id, cell), from a built index: the rn=1
@@ -1197,46 +1217,6 @@ object Ann {
                             cellCol: String = "cell"): DataFrame =
     emb.join(cellsFromIndex(ix, id).withColumnRenamed("cell", cellCol), id)
 
-  /** The coarse anchor TABLE of a corpus: the k1+k2 rows with the
-    * smallest md5("salt:id"), as (lvl ∈ {0,1}, idx, __avec) — seeded,
-    * data-dependent, and reproducible in SQL (QUALIFY row_number);
-    * first k1 are level 0, the rest level 1. Stored as the `anchors`
-    * artifact, so an append assigns new rows against the build's
-    * anchors (CellIndexCache.appendVectorDelta). */
-  private[graft] def anchorsOf(emb: DataFrame, id: String, vec: String,
-                               k1: Int, k2: Int, salt: String): DataFrame = {
-    val key = md5(concat(lit(salt + ":"), col(id).cast("string")))
-    // the window runs over exactly k1+k2 rows (post-limit) — the
-    // single-partition sort is k-sized, never corpus-sized
-    emb
-      .select(col(id).as("__aid"), col(vec).as("__avec"), key.as("__akey"))
-      .orderBy(col("__akey"), col("__aid")).limit(k1 + k2)
-      .withColumn("__rk", row_number().over(
-        Window.orderBy(col("__akey"), col("__aid"))))
-      .select(
-        when(col("__rk") <= k1, lit(0)).otherwise(lit(1)).as("lvl"),
-        (when(col("__rk") <= k1, col("__rk") - 1)
-          .otherwise(col("__rk") - 1 - k1)).cast("int").as("idx"),
-        col("__avec"))
-  }
-
-  /** Per-row, per-level nearest anchors of an anchor table: (id, lvl,
-    * idx, rn ∈ [1,probe]), one broadcast join, n·(k1+k2) fused
-    * cosines. The build and a delta batch assigned against FROZEN
-    * anchors (the incremental-append path) share it, so their
-    * tie-breaking is bit-identical. */
-  private[graft] def assignToAnchors(emb: DataFrame, id: String, vec: String,
-                                     anchors: DataFrame,
-                                     probe: Int): DataFrame = {
-    emb.select(col(id), col(vec)).crossJoin(broadcast(anchors))
-      .select(col(id), col("lvl"), col("idx"),
-        Vec.cosine(col(vec), col("__avec")).as("__c"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col(id), col("lvl"))
-          .orderBy(col("__c").desc, col("idx").asc)))
-      .filter(col("rn") <= probe)
-      .select(col(id), col("lvl"), col("idx"), col("rn"))
-  }
   /** The probed corpus FRACTION targeting recall@10 ≈ 0.8 on a
     * NEAR-UNIFORM corpus, from the model recall(f) ≈ 1 − (1−f)^2.7
     * (f(0.8) = 1 − 0.2^(1/2.7) ≈ 0.449). Measured (ANN_SWEEP_r11,

@@ -6,32 +6,31 @@ import graft.sources.{IndexStore, ParquetStats, Tables}
 import graft.util.SessionCache
 
 /** Process-wide memo of built [[CoarseIndex]]es, keyed by (session,
-  * corpus dir, cell size, salt). Four queries share one blocking
-  * structure (d5/d8 near-dup, a3/a4 IVF); without the memo each ran
-  * its own `count()` plus the full n·(k1+k2) anchor assignment — 4×
-  * the same job per bench/verify pass (the round-7 a/d-family
-  * regression). The assignment is persisted MEMORY_AND_DISK: ≤
-  * 2·probe small rows per corpus row, far under the corpus itself.
+  * corpus dir). Four queries share one blocking structure (d5/d8
+  * near-dup, a3/a4 IVF); without the memo each ran its own `count()`
+  * plus the full n·(k1+k2) anchor assignment — 4× the same job per
+  * bench/verify pass (the round-7 a/d-family regression). The
+  * assignment is persisted MEMORY_AND_DISK: ≤ 2·probe small rows per
+  * corpus row, far under the corpus itself.
   *
   * The corpus row count comes from parquet footers
   * ([[ParquetStats.rowCount]]), not a scan job. Entries from stopped
   * sessions are rebuilt transparently. The durable vector artifacts
   * (cells, centroids, PQ tables, pairs, ...) are declared below as
-  * [[IndexStore.Artifact]]s and read through [[IndexStore.get]]. */
+  * [[IndexStore.Artifact]]s and read through [[IndexStore.get]]; a
+  * changed corpus rebuilds them (IndexStore's fingerprint check), it
+  * never patches them. */
 object CellIndexCache {
-  private case class Key(session: Int, dir: String, cellSize: Int, salt: String)
-  private val cache = new SessionCache[Key, CoarseIndex](
+  private val cache = new SessionCache[(Int, String), CoarseIndex](
     ix => !ix.asg.sparkSession.sparkContext.isStopped,
     ix => { ix.asg.unpersist(); () })
 
   /** The shared index over `dir`'s embeddings table. */
-  def embeddings(spark: SparkSession, dir: String,
-                 targetCellSize: Int = Ann.DefaultTargetCellSize,
-                 salt: String = Ann.CellSalt): CoarseIndex =
-    cache.getOrBuild(Key(System.identityHashCode(spark), dir, targetCellSize, salt)) {
+  def embeddings(spark: SparkSession, dir: String): CoarseIndex =
+    cache.getOrBuild((System.identityHashCode(spark), dir)) {
       val n = ParquetStats.rowCount(spark, s"$dir/embeddings.parquet")
       val ix = Ann.buildCoarseIndex(Tables.embeddings(spark, dir), "vec_id",
-        "embedding", n, targetCellSize, salt)
+        "embedding", n)
       ix.copy(asg = ix.asg.persist(StorageLevel.MEMORY_AND_DISK))
     }
 
@@ -123,14 +122,6 @@ object CellIndexCache {
 
   def embeddingsWithCell(spark: SparkSession, dir: String): DataFrame =
     IndexStore.get(spark, dir, cellsArtifact)
-
-  /** The k1+k2 anchor table (lvl, idx, __avec) the cells were assigned
-    * against — the frozen coarse structure [[appendVectorDelta]]
-    * assigns new rows against. Plain table (k1+k2 rows). */
-  val anchorsArtifact: IndexStore.Artifact =
-    IndexStore.Artifact("anchors", None) { (spark, dir) =>
-      embeddings(spark, dir).anchors
-    }
 
   /** The shared (id, vec, cell) table when it is already session-warm
     * or loadable as a durable artifact — else None. Callers that do
@@ -239,159 +230,5 @@ object CellIndexCache {
       Ann.recommendedNprobe(ix.cells),
       Ann.recommendedGroupProbe(ix.k1),
       groupCentroids(spark, dir))
-  }
-
-  /** Result card of [[appendVectorDelta]] — delta size, the grown
-    * occupancy profile, and the a10-style drift flag. */
-  final case class AppendReport(deltaRows: Long, totalRows: Long,
-                                k1: Int, k2: Int,
-                                maxOcc: Long, meanOcc: Double,
-                                imbalance: Double, pqSkipped: Long,
-                                structureDrift: Boolean,
-                                rebuildRecommended: Boolean)
-
-  /** Occupancy-imbalance threshold above which [[appendVectorDelta]]
-    * recommends a full rebuild: target cell size is ~64, so an 8×-mean
-    * hottest cell means the frozen coarse structure has drifted enough
-    * that in-cell work (d5 pairs, a3/a4 candidate scans) is
-    * straggler-bound and re-anchoring pays. */
-  val AppendImbalanceThreshold = 8.0
-
-  /** INCREMENTAL index append (the FAISS add-with-frozen-quantizer
-    * shape): fold the corpus rows that are NOT yet in the durable
-    * vector index into it, without retraining — a production corpus
-    * GROWS, and before this path any new batch invalidated the corpus
-    * fingerprint and rebuilt every artifact from scratch.
-    *
-    *  1. The FROZEN anchor set is the stored `anchors` table
-    *     ([[anchorsArtifact]]) and (k1, k2) are its level sizes: the
-    *     structure the cells were built with, however many appends
-    *     have grown the cells table since.
-    *  2. delta = current corpus ANTI-JOIN indexed ids (one id-only
-    *     probe of the corpus — the unavoidable delta discovery).
-    *  3. delta rows are assigned to cells against the frozen anchors
-    *     (ONE broadcast join over the delta — bit-identical
-    *     tie-breaking to the build, Ann.assignToAnchors) and appended
-    *     to the cells table; PQ codes are encoded against the FROZEN
-    *     codebooks/centroids and appended to pqcodes/rawpqcodes.
-    *  4. Frozen-but-still-valid artifacts (anchors, centroids, gcents,
-    *     codebooks) get their manifest fingerprint refreshed; pair/
-    *     cluster artifacts (pairs, sclusters, kmcents) are left
-    *     fingerprint-stale ON PURPOSE — new pairs involve old rows,
-    *     so they rebuild on next use (over the already-appended cells
-    *     table).
-    *  5. The a10-style occupancy card runs over the grown cells table;
-    *     imbalance > [[AppendImbalanceThreshold]] flags
-    *     rebuildRecommended (the drift gate — append keeps working,
-    *     the caller schedules the retrain).
-    *
-    * Delta rows landing in a cell that had NO old occupants have no
-    * cell centroid → no residual PQ code (counted in `pqSkipped`);
-    * a3's cell join still finds them, and a4/a9 never probe
-    * centroid-less cells by construction, so search behavior stays
-    * consistent. Every memo ([[SessionCache.clearAll]]) is dropped at
-    * the end, and the getters drop the registrations the append left
-    * fingerprint-stale, so later queries in this session see the grown
-    * tables. */
-  def appendVectorDelta(spark: SparkSession, dir: String,
-                        id: String = "vec_id", vec: String = "embedding",
-                        targetCellSize: Int = Ann.DefaultTargetCellSize,
-                        imbalanceThreshold: Double = AppendImbalanceThreshold)
-      : AppendReport = {
-    import org.apache.spark.sql.functions._
-    val store = graft.sources.IndexStore
-    val frozen = Seq("anchors", "centroids", "gcents", "pqcodebook", "rawpqcodebook")
-    val appended = Seq("cells", "pqcodes", "rawpqcodes")
-    def stored(a: String): DataFrame = store.loadStale(spark, dir, a).getOrElse(
-      sys.error(s"appendVectorDelta: no durable $a index under $dir — " +
-        "build one first (IndexStore.writeAll / primeIfMissing)"))
-    try {
-      val cellsOld = stored("cells")
-      val anchors = stored("anchors")
-      val lv = anchors.agg(count(when(col("lvl") === 0, 1)),
-        count(when(col("lvl") === 1, 1))).head()
-      val (k1, k2) = (lv.getLong(0).toInt, lv.getLong(1).toInt)
-      // localCheckpoint, not persist: inserting into the cells table
-      // below INVALIDATES every cached plan that reads that table
-      // (Spark's CacheManager recursively uncaches dependents on a
-      // table write), and a mere persist would silently recompute the
-      // anti-join against the GROWN table — an empty delta. The
-      // checkpoint severs the lineage, so the pre-append row set
-      // survives the write. It is delta-sized, never corpus-sized.
-      val delta = Tables.embeddings(spark, dir)
-        .join(cellsOld.select(col(id)), Seq(id), "left_anti")
-        .localCheckpoint()
-      val deltaRows = delta.count()
-        var pqSkipped = 0L
-        if (deltaRows > 0) {
-          val deltaCell = Ann.cellsFromIndex(CoarseIndex(anchors,
-            Ann.assignToAnchors(delta, id, vec, anchors, 1), k1, k2), id)
-          val deltaWithCell = delta.join(deltaCell, id)
-            .localCheckpoint()
-          val cellCols = spark.table(store.tableName(dir, "cells")).columns
-          store.appendRows(spark, dir, "cells",
-            deltaWithCell.select(cellCols.map(col): _*))
-          // IVFPQ residual codes against the FROZEN centroids/codebook
-          (store.loadStale(spark, dir, "centroids"),
-              store.loadStale(spark, dir, "pqcodebook"),
-              store.loadStale(spark, dir, "pqcodes")) match {
-            case (Some(cents), Some(cb), Some(_)) =>
-              val c2 = cents.select(col("c_cell"), col("c_vec"))
-              val codes = Ann.ivfPqCodes(deltaWithCell, id, vec, "cell", c2, cb)
-              val codeCols = spark.table(store.tableName(dir, "pqcodes")).columns
-              // packed codes: exactly one row per encoded vector
-              pqSkipped = deltaRows - codes.count()
-              store.appendRows(spark, dir, "pqcodes",
-                codes.select(codeCols.map(col): _*))
-            case _ => ()
-          }
-          // raw (cell-free) PQ codes against the frozen raw codebook
-          (store.loadStale(spark, dir, "rawpqcodebook"),
-              store.loadStale(spark, dir, "rawpqcodes")) match {
-            case (Some(rcb), Some(_)) =>
-              val rcodes = Ann.pqCodes(delta, id, vec, rcb)
-              val rCols = spark.table(store.tableName(dir, "rawpqcodes")).columns
-              store.appendRows(spark, dir, "rawpqcodes",
-                rcodes.select(rCols.map(col): _*))
-            case _ => ()
-          }
-        } else {
-          // nothing to fold in — just stamp the appendable artifacts
-          appended.foreach { a =>
-            if (store.loadStale(spark, dir, a).isDefined)
-              store.refreshManifest(spark, dir, a)
-          }
-        }
-        frozen.foreach { a =>
-          if (store.loadStale(spark, dir, a).isDefined)
-            store.refreshManifest(spark, dir, a)
-        }
-        // a10-style occupancy drift card over the GROWN cells table
-        val occ = spark.table(store.tableName(dir, "cells"))
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-          .agg(sum(col("n")).cast("long").as("total"),
-            max(col("n")).cast("long").as("mx"),
-            avg(col("n")).as("mean"))
-          .head()
-        val (total, mx, mean) =
-          (occ.getLong(0), occ.getLong(1), occ.getDouble(2))
-        val imbalance = if (mean > 0) mx / mean else 0.0
-        // STRUCTURE drift: a4/a9 derive their probe constants (k2,
-        // nprobe, group probe) from the CURRENT corpus size at query
-        // time — if the grown corpus now implies a different (k1, k2)
-        // than the frozen cells were built with, the probe constants
-        // and the loaded centroids' g_grp grouping no longer agree,
-        // and a retrain is due regardless of occupancy balance.
-        val (k1g, k2g) = Ann.coarseCellParams(total, targetCellSize)
-        val drift = (k1g, k2g) != (k1, k2)
-        AppendReport(deltaRows, total, k1, k2, mx, mean, imbalance,
-          pqSkipped, drift, drift || imbalance > imbalanceThreshold)
-    } finally {
-      // later queries in this session must see the grown tables, not
-      // pre-append memos: forget every memo, so each getter re-checks
-      // its manifest — the migrated tables load, the ones left stale
-      // rebuild
-      SessionCache.clearAll()
-    }
   }
 }

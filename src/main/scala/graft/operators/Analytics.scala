@@ -561,7 +561,7 @@ object Analytics {
     * arithmetic, engine-exact). This is the suite's honest BIG-BIG join:
     * both lineitem and orders arrive filtered but still fact-sized, so
     * the join shuffles both sides on the order key — the case bucketing
-    * both tables on orderkey (sources/Bucketing.scala) turns into a
+    * both tables on orderkey (IndexStore.write's bucketing) turns into a
     * zero-exchange sort-merge at 100 TB. Counts are integer. */
   def q12ShipDelayPriority(spark: SparkSession, sfDir: String, year: Int,
                            fastDays: Int, mediumDays: Int): DataFrame = {

@@ -31,7 +31,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * re-derive deterministically from the parquet footer row count)
   * ride in the table NAME, and corpus CONTENT changes invalidate the
   * manifest's source fingerprint — either way a stale table is
-  * rebuilt, never silently served. Storage is the session warehouse
+  * rebuilt, never silently served, and never patched in place: a
+  * table is written whole by [[write]], the one bucketed writer
+  * (SourceGateSpec keeps it so). Storage is the session warehouse
   * dir (spark-warehouse + embedded metastore by default; a deployment
   * points spark.sql.warehouse.dir at the object store). */
 object IndexStore {
@@ -124,10 +126,8 @@ object IndexStore {
     * registered before the rewrite: a stale registration is dropped
     * (EXTERNAL table — the files stay, and the getter rewrites them). */
   private def registerIfNeeded(spark: SparkSession, name: String,
-                               dir: String,
-                               checkFreshness: Boolean = true): Boolean = {
+                               dir: String): Boolean = {
     val registered = spark.catalog.tableExists(name)
-    if (registered && !checkFreshness) return true
     def stale(): Boolean = {
       if (registered) spark.sql(s"DROP TABLE IF EXISTS `$name`")
       false
@@ -143,8 +143,7 @@ object IndexStore {
     // fingerprint and is treated as stale — rebuilt, never trusted.
     val parts = manifest.split("\n", 3)
     if (parts.length < 3) return stale()
-    if (checkFreshness && parts(2).trim != corpusFingerprint(spark, dir))
-      return stale()
+    if (parts(2).trim != corpusFingerprint(spark, dir)) return stale()
     // width-staleness (ADVICE r15): a bucketed artifact primed by a
     // low-parallelism session (e.g. the CPUS=3 gate writing 3 buckets)
     // would cap every later wide session's loaded-index joins at the
@@ -152,7 +151,7 @@ object IndexStore {
     // GROSS mismatch (recorded < 1/4 of this session's write width) as
     // stale: the getter rebuilds and re-primes at the current width.
     // The reverse (wide table, narrow reader) stays valid.
-    if (checkFreshness) parts(1).trim.split(",") match {
+    parts(1).trim.split(",") match {
       case Array(_, b) if b.nonEmpty && b.forall(_.isDigit) &&
           b.toInt * 4 < buckets(spark) =>
         System.err.println(s"[indexstore] $name recorded ${b.toInt} buckets " +
@@ -280,23 +279,6 @@ object IndexStore {
     name
   }
 
-  /** Register + load `artifact` even when its manifest fingerprint
-    * does not match `dir`'s CURRENT corpus — the incremental-append
-    * path's read primitive (the artifacts were built on the corpus
-    * BEFORE the delta landed, which is exactly why the append is
-    * needed). Returns None when no manifest exists at all.
-    *
-    * The registration it leaves stays stale until the caller
-    * completes the migration ([[refreshManifest]] / [[appendRows]]);
-    * the next [[exists]] drops a registration left stale. */
-  private[graft] def loadStale(spark: SparkSession, dir: String,
-                               artifact: String): Option[DataFrame] = {
-    val name = tableName(dir, artifact)
-    if (registerIfNeeded(spark, name, dir, checkFreshness = false))
-      Some(spark.table(name))
-    else None
-  }
-
   /** Drop the catalog registration of every artifact table of `dir`
     * (EXTERNAL tables: the files and manifests stay), so the next
     * [[exists]] re-registers each one through the manifest's freshness
@@ -305,40 +287,6 @@ object IndexStore {
     val catalog = spark.sessionState.catalog
     catalog.listTables(catalog.getCurrentDatabase, tableName(dir, "") + "*")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.table}`"))
-  }
-
-  /** Append `rows` into an existing artifact table (columns are
-    * matched by POSITION — the caller orders them to the table schema;
-    * the catalog's bucket spec is enforced by the bucketed write) and
-    * refresh the manifest fingerprint to the current corpus. */
-  private[graft] def appendRows(spark: SparkSession, dir: String,
-                                artifact: String, rows: DataFrame): Unit = {
-    val name = tableName(dir, artifact)
-    require(spark.catalog.tableExists(name),
-      s"appendRows: $name is not registered — loadStale it first")
-    rows.write.insertInto(name)
-    refreshManifest(spark, dir, artifact)
-  }
-
-  /** Stamp `artifact`'s manifest with the CURRENT corpus fingerprint,
-    * keeping schema + bucket lines — how the append path marks a
-    * frozen-but-still-valid artifact (centroids, codebooks) or a
-    * just-appended one as belonging to the grown corpus. */
-  private[graft] def refreshManifest(spark: SparkSession, dir: String,
-                                     artifact: String): Unit = {
-    val name = tableName(dir, artifact)
-    val mp = manifestPath(spark, name)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp), s"refreshManifest: no manifest for $name")
-    val in = fs.open(mp)
-    val manifest =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val parts = manifest.split("\n", 3)
-    require(parts.length >= 2, s"refreshManifest: malformed manifest for $name")
-    val out = fs.create(mp, true)
-    try out.write((parts(0) + "\n" + parts(1) + "\n" +
-      corpusFingerprint(spark, dir)).getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** The standard artifact set every corpus is primed with, in
@@ -352,7 +300,7 @@ object IndexStore {
   def standard: Seq[Artifact] = {
     import graft.ann.{CellIndexCache => V}
     import graft.dedup.{ClusterCache => T}
-    Seq(V.cellsArtifact, V.anchorsArtifact, V.centroidsArtifact, V.groupCentroidsArtifact,
+    Seq(V.cellsArtifact, V.centroidsArtifact, V.groupCentroidsArtifact,
       V.pqCodebookArtifact, V.pqCodesArtifact, V.rawPqCodebookArtifact,
       V.rawPqCodesArtifact, V.pairsArtifact,
       T.postingsArtifact(), T.shingleDfArtifact(), T.minhashArtifact(),

@@ -40,14 +40,18 @@ object Tables {
     * parquet scan; the NanoTsPushdown rule rewrites them back onto the
     * raw column (pushed row-group pruning).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val df = load(s, d, "events")
+  def events(s: SparkSession, d: String): DataFrame =
+    withEventTs(load(s, d, "events"))
+
+  /** `events` with its `ts` in the one µs TimestampType form, from
+    * either physical form above — batch scans ([[events]]) and the
+    * streaming source (graft.streaming.Streams) share it. */
+  def withEventTs(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast(org.apache.spark.sql.types.TimestampType))
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Streams {
 
-  /** events as a stream with the nanos ts normalized, like Tables.events. */
+  /** events as a stream with the ts normalized by Tables.withEventTs. */
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(path).schema
@@ -30,12 +30,7 @@ object Streams {
       else
         spark.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else if (schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
-      raw.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    else raw
+    graft.sources.Tables.withEventTs(raw)
   }
 
   /** State-store partition count for a drain: a stateful streaming agg

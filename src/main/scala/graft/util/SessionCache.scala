@@ -59,8 +59,8 @@ object SessionCache {
   /** Unpersist and forget every memo in the process: the index
     * artifacts, the coarse index, the eval legs, the quantile memos.
     * Called after anything that changes what the memos were computed
-    * from (an index append) and between test phases; never on a query
-    * path. */
+    * from (a corpus rewritten in place) and between test phases; never
+    * on a query path. */
   def clearAll(): Unit = all.forEach(_.clear())
 
   private def dfLive(df: DataFrame): Boolean =

@@ -22,7 +22,7 @@ class IndexStoreSpec extends SparkSpec {
 
   /** The standard set's table names, in priming order. A rename
     * orphans every primed warehouse, so they are pinned literally. */
-  private val StandardNames = Seq("cells", "anchors", "centroids", "gcents",
+  private val StandardNames = Seq("cells", "centroids", "gcents",
     "pqcodebook", "pqcodes", "rawpqcodebook", "rawpqcodes", "pairs",
     "postings_n3", "shingledf_n3", "minhash_n3_p16_b4",
     "clusters_n3_p16_b4", "docwordtf", "chunks_c64", "doclengths",
@@ -83,7 +83,7 @@ class IndexStoreSpec extends SparkSpec {
     val names = IndexStore.writeAll(spark, sfDir)
     assert(names == StandardNames.map(IndexStore.tableName(sfDir, _)) &&
       names.forall(spark.catalog.tableExists))
-    assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"), None,
+    assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"),
       Some("g_grp"), None, None, Some("c_cell"), None, Some("__vid"),
       Some("id_a"), Some("shingle"), Some("shingle"), Some("id_a"),
       Some("doc_id"), Some("w"), Some("doc_id"), Some("doc_id"),
@@ -298,7 +298,7 @@ class IndexStoreSpec extends SparkSpec {
     try {
       primed = IndexStore.primeIfMissing(spark, tmp)
       assert(primed == StandardNames.map(IndexStore.tableName(tmp, _)),
-        s"expected all 23 written, got $primed")
+        s"expected all 22 written, got $primed")
       // everything present + valid -> second prime writes NOTHING
       assert(IndexStore.primeIfMissing(spark, tmp).isEmpty)
       assert(IndexStore.exists(spark, tmp, "docwordtf"))
@@ -392,6 +392,64 @@ class IndexStoreSpec extends SparkSpec {
       val mf = Paths.get(whDir, name, "_graft_index_meta.json")
       assert(new String(Files.readAllBytes(mf), "UTF-8").split("\n", 3)(2) ==
         IndexStore.corpusFingerprint(spark, tmp))
+    } finally {
+      freshCaches()
+      dropIndexTables(tmp)
+      scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("a grown vector corpus is rebuilt: searches and clusters see the new rows") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    // deterministic unit vectors, non-periodic in i (Knuth mix): exact
+    // twins exist only where the test plants them
+    def vec(i: Long): Array[Float] = {
+      val raw = Array.tabulate(graft.sources.Tables.EmbDims)(d =>
+        (((i * 2654435761L + d * 40503L + 7) % 1013) - 506).toFloat / 506f)
+      val n = math.sqrt(raw.map(x => x * x.toDouble).sum).toFloat
+      raw.map(_ / n)
+    }
+    def writeEmb(dir: String, ids: Seq[Long], twin: Map[Long, Long]): Unit =
+      ids.map(i => (i, vec(twin.getOrElse(i, i)), (i % 10).toInt))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("append").parquet(s"$dir/embeddings.parquet")
+    def twinOf0(df: org.apache.spark.sql.DataFrame, hit: String): Boolean =
+      df.filter(col("query_id") === 0L && col(hit) === 500L).count() > 0
+    def clusteredWith0(dir: String): Boolean = {
+      val c = CellIndexCache.semanticClusters(spark, dir)
+        .filter(col("vec_id").isin(0L, 500L)).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cluster_id")).toMap
+      c.contains(500L) && c(500L) == c(0L)
+    }
+    // a4's probe (an eval-leg memo), a13's IVF leg and d8's semantic
+    // clusters (write-through artifacts over the cells/pairs tables)
+    def legs(dir: String): Seq[(String, Boolean)] = Seq(
+      "a4" -> twinOf0(SparkEntry.queries("a4_ivf_nprobe")(spark, dir), "nn_id"),
+      "ivfLeg" -> twinOf0(graft.operators.RetrievalCache.ivfLeg(spark, dir), "doc_id"),
+      "semanticClusters" -> clusteredWith0(dir))
+
+    sys.props.remove(IndexStore.EnvFlag)
+    freshCaches()
+    val tmp = Files.createTempDirectory("ggrown_corpus").toString
+    val cells = IndexStore.tableName(tmp, CellIndexCache.cellsArtifact.name)
+    val whDir = spark.conf.get("spark.sql.warehouse.dir").replaceFirst("^file:", "")
+    def cellsFingerprint(): String = new String(Files.readAllBytes(
+      Paths.get(whDir, cells, "_graft_index_meta.json")), "UTF-8").split("\n", 3)(2)
+    try {
+      // prime: the first touch writes the vector tables through
+      writeEmb(tmp, 0L until 200L, Map.empty)
+      legs(tmp).foreach { case (leg, twin) => assert(!twin, s"$leg: no twin yet") }
+      assert(spark.catalog.tableExists(cells))
+      val fp1 = cellsFingerprint()
+      // grow the corpus by 30 rows, one an exact twin of row 0; the
+      // memos go, the catalog registrations stay
+      writeEmb(tmp, 500L until 530L, Map(500L -> 0L))
+      freshCaches()
+      legs(tmp).foreach { case (leg, twin) => assert(twin, s"$leg missed the new twin") }
+      val fp2 = IndexStore.corpusFingerprint(spark, tmp)
+      assert(fp2 != fp1 && cellsFingerprint() == fp2,
+        "the cells table was not rebuilt for the grown corpus")
     } finally {
       freshCaches()
       dropIndexTables(tmp)

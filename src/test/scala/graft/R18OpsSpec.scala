@@ -264,7 +264,8 @@ class R18OpsSpec extends SparkSpec {
   test("BigramHashes == composed 3xmd5/substring_index pipeline on adversarial texts") {
     // double/leading/trailing spaces (empty tokens), tab and newline
     // INSIDE tokens (the single-space split keeps them), unicode,
-    // repeated bigrams, a single word (no bigrams), empty and NULL
+    // repeated bigrams, a single word (no bigrams), empty and NULL, and
+    // ill-formed UTF-8 (a lone 0xFF byte: "a\xFFb c\nd")
     val docs = Seq(
       Some("a b a b a"), Some("  leading twice"), Some("trailing  "),
       Some("mid  dle double"), Some("tab\tinside and new\nline tokens"),
@@ -272,6 +273,8 @@ class R18OpsSpec extends SparkSpec {
       None: Option[String]
     ).zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
       .toDF("doc_id", "text")
+      .union(spark.range(1).select(lit(9L).as("doc_id"),
+        unhex(lit("61FF6220630A64")).cast("string").as("text")))
     val composed = docs
       .select(explode(Text.bigrams(col("text"))).as("bg"))
       .select(Text.md5Prefix60(col("bg")).as("bgh"),

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-tree gates that keep removed structure from growing back:
-  * one session builder, a fixed set of mains, and single-partition
-  * windows only behind util/BoundedWindows. Plus the session policy
-  * that builder holds, checked on a live session. */
+  * one session builder, a fixed set of mains, single-partition windows
+  * only behind util/BoundedWindows, and one table writer. Plus the
+  * session policy that builder holds, checked on a live session. */
 class SourceGateSpec extends SparkSpec {
 
   private val root = Paths.get("src/main/scala")
@@ -37,6 +37,12 @@ class SourceGateSpec extends SparkSpec {
   test("Window.partitionBy() appears only in util/BoundedWindows") {
     assert(filesContaining("Window.partitionBy()") ==
       Set("graft/util/BoundedWindows.scala"))
+  }
+
+  test("tables are written only by IndexStore.write") {
+    Seq("saveAsTable(", "insertInto(", "bucketBy(").foreach { call =>
+      assert(filesContaining(call).subsetOf(Set("graft/sources/IndexStore.scala")), call)
+    }
   }
 
   test("Session.local carries the session policy") {
