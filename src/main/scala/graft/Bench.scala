@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "1").toInt
     // *MEDIANS* files are reserved for noise-controlled (reps >= 3)
     // runs: a single-rep pass writing over the committed medians is
@@ -32,7 +31,7 @@ object Bench {
             s"[bench] refusing to write $p (reps=$reps, subset=$subsetRun); writing BENCH_LAST_RUN.json"))
           "BENCH_LAST_RUN.json"
       }
-    val spark = Session.local(cpus)
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // First-touch index priming (before the timed region): write
     // whichever durable bucketed index artifacts are missing/stale, so

@@ -39,7 +39,7 @@ object GenData {
     val out = if (args.length > 1) args(1) else "data/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
 
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Session.local()
     // the output layout is fixed at 32 shuffle partitions whatever the
     // core count, so the generated tables do not depend on the box
     spark.conf.set("spark.sql.shuffle.partitions", "32")

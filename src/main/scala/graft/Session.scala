@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   *  - [[graft.plans.GraftExtensions]]: the ts pushdown rule, the
   *    as-of join strategy and the native SQL functions;
   *  - `local[cpus]` with `cpus` shuffle partitions (one task per core
-  *    per stage; AQE, on by default, coalesces or splits at scale);
+  *    per stage; AQE, on by default, coalesces or splits at scale).
+  *    The width is `SPARK_GRAFT_CPUS` when set, else the cores this JVM
+  *    sees; only tests pass their own;
   *  - the UTC session zone, which every day bucket and timestamp
   *    oracle assumes;
   *  - `spark.sql.legacy.parquet.nanosAsLong`: `events.ts` ships as
@@ -20,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   * A caller that needs a different width for one step (GenData's fixed
   * output layout) sets it on the returned session. */
 object Session {
-  def local(cpus: String): SparkSession =
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession =
     SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")

@@ -11,7 +11,7 @@ object VaultDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("vault_demo").toString)
-    val spark = Session.local("4")
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

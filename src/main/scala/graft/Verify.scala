@@ -9,8 +9,7 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Session.local(cpus)
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // first-touch index priming: write whichever durable bucketed
     // index artifacts are missing/stale for this corpus, so THIS

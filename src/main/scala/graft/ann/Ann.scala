@@ -31,7 +31,7 @@ final case class CoarseIndex(asg: DataFrame, k1: Int, k2: Int) {
 object Ann {
 
   /** The ONE place the coarse-cell constants live: the Scala plans
-    * below and SparkEntry's DuckDB oracle CTEs both interpolate these,
+    * below and the DuckDB oracle CTEs in graft/keys both interpolate these,
     * so a retune cannot desynchronize the two engines silently. */
   val DefaultTargetCellSize = 64
   val CellSalt = "cells"

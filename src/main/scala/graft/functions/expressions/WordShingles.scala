@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `doGenCode` emits a single static call, so the surrounding
   * scan→project pipeline stays in whole-stage codegen with no
   * interpreted-eval dispatch per row. Semantics are identical
-  * (oracle-verified vs the DuckDB SQL formulation in
-  * SparkEntry.oracleSql d2/d4/d6/x5).
+  * (oracle-verified vs the DuckDB SQL formulations in graft/keys:
+  * Shared.shingleCtes for the 3-shingles, x5's oracle for bigrams).
   */
 case class WordShingles(child: Expression, n: Int,
                         distinct: Boolean = true, shortAsSelf: Boolean = true)

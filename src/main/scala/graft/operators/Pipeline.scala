@@ -330,7 +330,7 @@ object Pipeline {
     // than checkpointed (1.49s vs 1.70s at sf1, NOTES_r11 §7) — its single
     // downstream aggregation doesn't amortize a PRIVATE
     // materialization (a shared warm one — ClusterCache.docWordTf —
-    // is better still, and is what SparkEntry wires)
+    // is better still, and is what the x-keys wire)
     unigramLmProfileFrom(docWordTable(docs, id, text), id)
 
   /** [[unigramLmProfile]] over a pre-built (id, term, tf) table. */

@@ -54,8 +54,8 @@ object IndexStore {
     * compute width: a fixed 8 capped every loaded-index join at
     * 8 tasks on the 32-thread box — measured 4x on d11's pair join at
     * sf1 (34.5s loaded vs 8.3s built; 34.5 ≈ 8.3 · 32/8). Default =
-    * the WRITING session's shuffle-partition width (which Bench/Verify
-    * set to SPARK_GRAFT_CPUS — so the count tracks the box, 32 here,
+    * the WRITING session's shuffle-partition width (Session.local's
+    * width for every main — so the count tracks the box, 32 there,
     * 3 at the CPUS3 gate, hundreds on a cluster: the same sizing rule
     * as shuffle partitions). Already-written tables keep their
     * recorded bucket spec until re-primed. */

@@ -2,9 +2,10 @@ package graft.temporal
 
 import scala.collection.mutable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** User-facing façade over a durable temporal store — the drop-in
@@ -293,12 +294,13 @@ class TemporalVault(
   }
 
   /** Rollback audit log, newest rollback instant first
-    * (GET /rollback/history, app/main.py:249). */
+    * (GET /rollback/history, app/main.py:249); a vault that never
+    * rolled back returns no rows with the same fields. */
   def rollbackHistory: DataFrame =
     graft.Metrics.timedCall(spark, "vault.rollback_history")(
       if (exists(rbDir))
         spark.read.parquet(rbDir).orderBy(to_timestamp(col("rollback_ts")).desc)
-      else spark.emptyDataFrame)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), AuditSchema))
 
   /** The reference endpoint's paged form: newest `limit` audit entries
     * (`limit: int = 10`, app/main.py:254). */
@@ -367,4 +369,10 @@ object TemporalVault {
   val CacheTtlMs: Long = 3600L * 1000L
   val CacheMaxEntries = 64
   val AuditSampleK = 100
+  /** One rollback audit row, as `rollback` writes it. */
+  val AuditSchema: StructType = StructType(Seq(
+    StructField("affected_records", LongType),
+    StructField("record_ids", StringType),
+    StructField("rollback_to", StringType),
+    StructField("rollback_ts", StringType)))
 }

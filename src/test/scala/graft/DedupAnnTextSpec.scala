@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.ann.Ann
 import graft.functions.{Text, Vec}
+import graft.sources.Tables
 
 class DedupAnnTextSpec extends SparkSpec {
   import spark.implicits._
@@ -369,5 +370,37 @@ class DedupAnnTextSpec extends SparkSpec {
     // the measured df=1 mass clears the gate (pins the gate wiring,
     // not just the constant)
     assert(plan.contains("LeftSemi") == (df1Frac >= Dedup.PruneDf1Fraction))
+  }
+
+  test("LSH ANN recall@10 vs brute force is useful (> 0.3)") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val qs = Seq(0L, 1L, 2L, 3L, 4L)
+    val brute = Ann.knnBrute(emb, "vec_id", "embedding", qs, 10)
+      .select("query_id", "nn_id").as[(Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val lsh = Ann.knnLsh(emb, "vec_id", "embedding", qs, 10, 8, 3, 42L)
+      .select("query_id", "nn_id").as[(Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val recalls = qs.map { q =>
+      val b = brute(q)
+      (b intersect lsh.getOrElse(q, Set.empty)).size.toDouble / b.size
+    }
+    val mean = recalls.sum / recalls.size
+    assert(mean > 0.3, s"mean recall@10 = $mean")
+  }
+
+  test("simhash: clones collide at hamming 0, fingerprints are 32-bit") {
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta epsilon zeta"),
+      (3L, "one two three four five six")
+    ).toDF("doc_id", "text")
+    val fp = Dedup.simhashFingerprints(docs, "doc_id", "text", 8)
+      .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
+    assert(fp(1L) == fp(2L))
+    assert(fp.values.forall(v => v >= 0 && v < (1L << 32)))
+    val pairs = Dedup.simhashHammingPairs(docs, "doc_id", "text", 8, 3)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs.contains((1L, 2L)))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 import graft.operators.{Pipeline, TimeSeries}
+import graft.sources.Tables
 
 /** Hand-derivations for the r14 closing additions: a16 (filtered
   * vector search), p2 (epoch-capped mixture plan), ts33 (seasonal
@@ -193,5 +194,14 @@ class FilteredMixAudioSpec extends SparkSpec {
     assert(out.filter(abs(col("fertility") -
       round(col("re_tokens").cast("double") / col("ws_tokens"), 6)) > 1e-12)
       .count() === 0)
+  }
+
+  test("frame sampling is deterministic and stride-bounded") {
+    val docs = Tables.documents(spark, sfDir).limit(50)
+    val a = graft.multimodal.Binary.frameSample(docs, "doc_id", "text", 7)
+      .select("doc_id", "frame_sum").as[(Long, Long)].collect().toMap
+    val b = graft.multimodal.Binary.frameSample(docs, "doc_id", "text", 7)
+      .select("doc_id", "frame_sum").as[(Long, Long)].collect().toMap
+    assert(a == b && a.nonEmpty)
   }
 }

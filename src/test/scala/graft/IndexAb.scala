@@ -7,7 +7,7 @@ package graft
   * tables eliminate — and record the probe's bucket-pruning counts.
   * Writes GRAFT_INDEX_OUT (default INDEX_AB.json).
   *
-  * Usage: sbt "runMain graft.IndexAb [sfDir]"
+  * Usage: sbt "Test/runMain graft.IndexAb [sfDir]"
   * After this has run once, any later JVM (load mode is the default
   * since r14; Verify/Bench also self-prime via
   * IndexStore.primeIfMissing) re-attaches the tables via the on-disk
@@ -26,8 +26,7 @@ object IndexAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = sys.env.getOrElse("GRAFT_INDEX_OUT", "INDEX_AB.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Session.local(cpus)
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.TimeSeries
+import graft.ann.Ann
+import graft.sources.Tables
 
-/** ts30 (MAD outliers) hand-derivations + a12 (IVF recall eval)
-  * cross-derivation against its own legs. */
+/** ts30 (MAD outliers) hand-derivations + the a-family recall evals
+  * (a12, a14) cross-derived against their own legs, and those memoized
+  * legs pinned equal to a direct computation. */
 class MadRecallSpec extends SparkSpec {
   import spark.implicits._
 
@@ -94,5 +97,45 @@ class MadRecallSpec extends SparkSpec {
 
   test("a14_ivfpq_recall equals the intersection of its own legs (a1 truth x a9 IVFPQ)") {
     checkRecallEval("a9_ivfpq", "a14_ivfpq_recall")
+  }
+
+  // the a-family's memoized eval legs (brute truth / hierarchical
+  // probe / IVFPQ, shared by a1+a12+a14+a15+a17, a4+a12+a17 and a9+a14)
+  // return row-for-row the same tables as a fresh direct computation
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  test("a1 (memoized brute truth) == direct Ann.knnBrute") {
+    val shared = rows(SparkEntry.queries("a1_knn_brute")(spark, sfDir))
+    val direct = rows(Ann.knnBrute(Tables.embeddings(spark, sfDir),
+      "vec_id", "embedding", Seq(0L, 1L, 2L, 3L, 4L), 10))
+    assert(shared === direct)
+  }
+
+  test("a4 (memoized probe leg) == direct hierarchical probe") {
+    val shared = rows(SparkEntry.queries("a4_ivf_nprobe")(spark, sfDir))
+    val direct = rows(graft.keys.AnnKeys.ivfProbeTopk(spark, sfDir))
+    assert(shared === direct)
+  }
+
+  test("a9 (memoized IVFPQ leg) == direct IVFPQ wiring") {
+    val shared = rows(SparkEntry.queries("a9_ivfpq")(spark, sfDir))
+    val direct = rows(graft.keys.AnnKeys.ivfPqTopk(spark, sfDir))
+    assert(shared === direct)
+  }
+
+  test("a12 recall eval rederives from the a1/a4 outputs") {
+    val truth = rows(SparkEntry.queries("a1_knn_brute")(spark, sfDir))
+      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).toSet
+    val probe = rows(SparkEntry.queries("a4_ivf_nprobe")(spark, sfDir))
+      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long])).toSet
+    val a12 = SparkEntry.queries("a12_ivf_recall")(spark, sfDir).collect()
+    a12.foreach { r =>
+      val q = r.getLong(0)
+      val nTruth = truth.count(_._1 == q)
+      val nHit = truth.count(t => t._1 == q && probe(t))
+      assert(r.getLong(1) === nTruth.toLong)
+      assert(r.getLong(2) === nHit.toLong)
+    }
   }
 }

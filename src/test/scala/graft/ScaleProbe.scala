@@ -17,7 +17,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val slug = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val bigPath = s"/tmp/graft_scale/$slug/events8"
-    val spark = Session.local("32")
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val e1 = Tables.events(spark, sfDir)

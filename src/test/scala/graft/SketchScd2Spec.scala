@@ -5,6 +5,7 @@ import graft.functions.Sketch
 import graft.temporal.Temporal
 import graft.dedup.Dedup
 import graft.multimodal.Binary
+import graft.sources.Tables
 
 /** Round-8 additions: sketches (HLL / Count-Min), SCD2, containment,
   * perceptual-hash index. */
@@ -279,5 +280,13 @@ class SketchScd2Spec extends SparkSpec {
     rows.foreach { r =>
       if (r.getAs[Long]("n_cand") == 0L) assert(r.isNullAt(r.fieldIndex("min_ham")))
     }
+  }
+
+  test("approx distinct (HLL) is within 5% of exact") {
+    val ev = Tables.events(spark, sfDir)
+    val (exact, approx) = ev.agg(
+      countDistinct($"user_id"), approx_count_distinct($"user_id", 0.01))
+      .as[(Long, Long)].head()
+    assert(math.abs(approx - exact).toDouble / exact <= 0.05)
   }
 }

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-tree gates that keep removed structure from growing back:
-  * one session builder, a fixed set of mains, single-partition windows
-  * only behind util/BoundedWindows, and one table writer. Plus the
+  * one session builder and one session width, a fixed set of mains,
+  * single-partition windows only behind util/BoundedWindows, and one
+  * table writer. Plus the
   * session policy that builder holds, checked on a live session. */
 class SourceGateSpec extends SparkSpec {
 
@@ -28,10 +29,14 @@ class SourceGateSpec extends SparkSpec {
     assert(filesContaining("SparkSession.builder") == Set("graft/Session.scala"))
   }
 
-  test("the mains are exactly the seven entry points") {
-    val mains = Set("Bench", "Verify", "Explain", "GenData", "VaultDemo",
-      "IndexAb", "ScaleProbe").map(n => s"graft/$n.scala")
+  test("the mains are exactly the five entry points") {
+    val mains = Set("Bench", "Verify", "Explain", "GenData", "VaultDemo")
+      .map(n => s"graft/$n.scala")
     assert(filesContaining("def main(") == mains)
+  }
+
+  test("SPARK_GRAFT_CPUS is read only in graft/Session.scala") {
+    assert(filesContaining("SPARK_GRAFT_CPUS") == Set("graft/Session.scala"))
   }
 
   test("Window.partitionBy() appears only in util/BoundedWindows") {

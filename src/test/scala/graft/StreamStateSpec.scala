@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.streaming.Streams
+import graft.operators.TimeSeries
 
 /** The flatMapGroupsWithState version monitor must agree with the batch
   * window formulation of the same semantics. */
@@ -52,5 +53,16 @@ class StreamStateSpec extends SparkSpec {
     val survivors = report.sparkSession.table("graft_ts26")
       .select("user_id", "event_type", "day").collect().toSeq
     assert(survivors.length == survivors.toSet.size)
+  }
+
+  test("streaming tumbling agg equals the batch operator") {
+    val stream = graft.streaming.Streams.tumblingDailyStream(spark, sfDir)
+      .select("event_type", "day", "n", "sum_value")
+      .as[(String, String, Long, Double)].collect().toSet
+    val batch = TimeSeries.tumblingDaily(Tables.events(spark, sfDir),
+        "event_type", "ts", "value")
+      .select("event_type", "day", "n", "sum_value")
+      .as[(String, String, Long, Double)].collect().toSet
+    assert(stream == batch && stream.nonEmpty)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.temporal.Temporal
+import graft.sources.Tables
 
 class TemporalSpec extends SparkSpec {
   import spark.implicits._
@@ -75,5 +76,16 @@ class TemporalSpec extends SparkSpec {
       .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
       .select("user_id", "event_id").as[(Long, Long)].collect().toSet
     assert(viaAgg == viaWindow && viaAgg.nonEmpty)
+  }
+
+  test("snapshot+delta reconstruction equals direct AS-OF") {
+    val ev = Tables.events(spark, sfDir)
+    val at = lit("2024-01-20 00:00:00").cast("timestamp")
+    val snapAt = lit("2024-01-15 00:00:00").cast("timestamp")
+    val direct = Temporal.asOf(ev, "user_id", "ts", "event_id", at)
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    val recon = Temporal.snapshotReconstruct(ev, "user_id", "ts", "event_id", snapAt, at)
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    assert(recon == direct && recon.nonEmpty)
   }
 }

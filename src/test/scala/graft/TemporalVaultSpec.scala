@@ -143,6 +143,17 @@ class TemporalVaultSpec extends SparkSpec {
     assert(top2.toSeq == Seq("2024-01-12 00:00:00", "2024-01-11 00:00:00"))
   }
 
+  test("rollbackHistory of a vault that never rolled back has the audit fields") {
+    val fresh = mkVault()
+    fresh.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
+    val v = mkVault()
+    v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
+    v.rollback("2023-12-31 00:00:00", "2024-01-02 00:00:00")
+    assert(fresh.rollbackHistory.schema.fieldNames.toSeq ==
+      v.rollbackHistory.schema.fieldNames.toSeq)
+    assert(fresh.rollbackHistory(2).select("rollback_ts").as[String].collect().isEmpty)
+  }
+
   test("versionsAsOf dumps every version <= at, not latest-per-record") {
     val v = mkVault()
     v.append(batch(

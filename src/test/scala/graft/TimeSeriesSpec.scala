@@ -101,4 +101,13 @@ class TimeSeriesSpec extends SparkSpec {
       .select("rank", "user_id").as[(Int, Long)].collect()
     assert(got.map(_._1).toSeq == (1 to 5))
   }
+
+  test("gap fill produces a dense day grid with zero-filled gaps") {
+    val got = TimeSeries.gapFillDaily(Tables.events(spark, sfDir),
+      "event_type", "ts", "value")
+    val types = got.select("event_type").distinct().count()
+    val days = got.select("day").distinct().count()
+    assert(got.count() == types * days) // dense grid
+    assert(got.filter($"n" === 0 && $"sum_value" =!= 0.0).count() == 0)
+  }
 }
