@@ -20,8 +20,10 @@ object Bench {
     // A medians file must also cover the FULL query set: a
     // GRAFT_BENCH_ONLY subset run at reps>=3 clobbered the committed
     // 82-query medians with 4 queries in r8 — same artifact confusion,
-    // second axis.
-    val subsetRun = sys.env.get("GRAFT_BENCH_ONLY").exists(_.trim.nonEmpty)
+    // second axis. Dev convenience: GRAFT_BENCH_ONLY=d4_ngram_jaccard,
+    // a2_... times a subset (driver contract unchanged when unset).
+    val names = SparkEntry.selectKeys(sys.env.get("GRAFT_BENCH_ONLY"))
+    val subsetRun = names.size < SparkEntry.keys.size
     val outFile =
       if (reps >= 3 && !subsetRun) requestedOut.getOrElse("BENCH_MEDIANS.json")
       else requestedOut match {
@@ -62,12 +64,8 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // dev convenience: GRAFT_BENCH_ONLY=d4_ngram_jaccard,a2_... times a
-    // subset (driver contract unchanged when unset)
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val queries = SparkEntry.queries
+    val qlist = names.map(n => n -> queries(n))
     // Reps run back-to-back (warm steady-state: JIT, broadcasts, OS
     // caches), with STALL DETECTION on top: the box (a microVM) takes
     // occasional multi-second host stalls under full 32-thread load,

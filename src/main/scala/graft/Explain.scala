@@ -5,21 +5,18 @@ package graft
   * honest — check PushedFilters/ReadSchema on scans, broadcast vs
   * shuffle joins, and WholeStageCodegen spans.
   *
-  * Usage: runMain graft.Explain [sfDir] [queryName ...]
+  * Usage: runMain graft.Explain [sfDir] [queryName ...] — an unknown
+  * name fails before any work.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.selectKeys(Some(args.drop(1).mkString(",")))
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries.get(n) match {
-        case Some(fn) => fn(spark, sfDir).explain("formatted")
-        case None => println(s"unknown query: $n")
-      }
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -30,4 +30,16 @@ object SparkEntry {
 
   /** Formats every oracle on each read. */
   def oracleSql: Map[String, String] = keys.map(k => k.name -> k.oracle()).toMap
+
+  /** The sorted key names a comma-separated subset selects (the mains'
+    * GRAFT_BENCH_ONLY / GRAFT_VERIFY_ONLY / Explain arguments). Names
+    * are trimmed; unset or blank selects every key. A name that is no
+    * key throws, naming it, so a typo fails before any work. */
+  def selectKeys(subset: Option[String]): Seq[String] = {
+    val all = keys.map(_.name)
+    val names = subset.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).distinct
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"no such key: ${unknown.mkString(", ")}")
+    (if (names.isEmpty) all else names).sorted
+  }
 }

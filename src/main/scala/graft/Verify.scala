@@ -9,6 +9,10 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
+    // dev convenience: GRAFT_VERIFY_ONLY=q1_pricing_summary,ts11_...
+    // re-dumps a subset into an existing outDir (oracle json still
+    // covers all queries; the driver never sets this)
+    val names = SparkEntry.selectKeys(sys.env.get("GRAFT_VERIFY_ONLY"))
     val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // first-touch index priming: write whichever durable bucketed
@@ -24,15 +28,9 @@ object Verify {
       System.err.println(s"[verify] index priming failed (building per-session): ${e.getMessage}")
     }
     new java.io.File(outDir).mkdirs()
-    // dev convenience: GRAFT_VERIFY_ONLY=q1_pricing_summary,ts11_...
-    // re-dumps a subset into an existing outDir (oracle json still
-    // covers all queries; the driver never sets this)
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

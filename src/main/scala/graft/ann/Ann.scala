@@ -541,19 +541,13 @@ object Ann {
     * argmin tie-breaks and the ADC sum are exact integer arithmetic,
     * immune to float summation order. The report carries the exact
     * cosine of each returned neighbor alongside the ADC estimate, so
-    * the quantization error is visible in the result itself. */
-  def pqAdc(emb: DataFrame, id: String, vec: String, queryIds: Seq[Long],
-            m: Int = 8, k: Int = 16, topK: Int = 10): DataFrame = {
-    val codebook = broadcast(pqCodebook(emb, id, vec, m, k))
-    // the code table: n·m narrow rows — the compressed index
-    pqAdcFromIndex(emb, id, vec, codebook,
-      pqCodes(emb, id, vec, codebook, m), queryIds, m, topK)
-  }
-
-  /** [[pqAdc]] over a PREBUILT (codebook, code table) — the index is a
-    * corpus artifact built once ([[CellIndexCache.rawPqCodes]]), the
-    * way FAISS separates index construction from search; per-query
-    * work is then the q·m·k distance table + the integer ADC join. */
+    * the quantization error is visible in the result itself.
+    *
+    * Takes a PREBUILT (codebook, code table) — [[pqCodebook]] and
+    * [[pqCodes]]; the index is a corpus artifact built once
+    * ([[CellIndexCache.rawPqCodes]]), the way FAISS separates index
+    * construction from search; per-query work is then the q·m·k
+    * distance table + the integer ADC join. */
   def pqAdcFromIndex(emb: DataFrame, id: String, vec: String,
                      codebook: DataFrame, codes: DataFrame,
                      queryIds: Seq[Long], m: Int = 8,
@@ -734,23 +728,6 @@ object Ann {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
         s => s.getField("cv")).as("c_vec"))
   }
-
-  /** Per-query probed cells (query_id, c_cell) by a FLAT scan of all
-    * leaf centroids: rounded centroid cosine desc, ties by cell id —
-    * the r11 coarse stage, kept as the reference the hierarchical
-    * probe is spec-pinned against. Per query it touches every one of
-    * the k1·k2 ≈ n/64 centroids — linear-in-n coarse cost, which is
-    * why the production probes route through [[probedCellsHier]]. */
-  def probedCellsFlat(queries: DataFrame, centroids: DataFrame,
-                      nprobe: Int): DataFrame =
-    queries.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("c_cell"),
-        Vec.cosine(col("q_vec"), col("c_vec")).as("c_cos"))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("c_cos").desc, col("c_cell").asc)))
-      .filter(col("c_rank") <= nprobe)
-      .select(col("query_id"), col("c_cell"))
 
   /** Level-0 GROUP centroids (g_grp, g_vec): the decimal-exact mean of
     * the group's leaf-cell centroids, grouped by the level-0 anchor
@@ -935,8 +912,8 @@ object Ann {
   /** True IVFPQ: IVF coarse probe + PQ/ADC candidate scoring + exact
     * rerank of a bounded shortlist — the composition of
     * [[knnIvfProbeHier]] (which reranks EVERY row of every probed
-    * cell with exact cosine) and [[pqAdc]] (which ADC-scores the whole
-    * corpus). This is the scale shape FAISS ships as IndexIVFPQ +
+    * cell with exact cosine) and [[pqAdcFromIndex]] (which ADC-scores
+    * the whole corpus). This is the scale shape FAISS ships as IndexIVFPQ +
     * refine: the probe touches nprobe cells' CODE rows (one packed
     * m-int code word per vector — no embedding is read for
     * candidates), ADC scoring is one broadcast equi-join on the cell
@@ -1271,9 +1248,9 @@ object Ann {
       math.max(1L,
         math.min(cells, (fracNum * cells + fracDen - 1) / fracDen))).toInt
 
-  /** Embedding near-dup pairs over CORPUS-PROPORTIONAL coarse cells —
-    * the scale tier of [[nearDupPairs]] (which stays as the
-    * fixed-cell exact form, the d4-grounds-d2 pattern).
+  /** Embedding near-dup pairs: cosine ≥ tau within the same
+    * CORPUS-PROPORTIONAL coarse cell (cell-blocked so the pair space
+    * never goes quadratic corpus-wide).
     *
     * Blocking: each row's primary product cell (see [[cellsFromIndex]]);
     * candidates = same-cell pairs. Boundary probing: the PROBE side
@@ -1286,7 +1263,11 @@ object Ann {
     * direction)s; the groupBy collapses it to one row with the
     * MINIMUM meeting cell (deterministic, oracle-reproducible).
     *
-    * Sub-block sharding as in [[nearDupPairs]], but ADAPTIVE: only
+    * Sub-block sharding: the in-cell pair work of a HOT cell is split
+    * into `subBlocks` deterministic hash sub-blocks — the probe side
+    * replicates to every sub-block, the build side keeps its own — so
+    * its O(n²) candidate work spreads over `subBlocks` tasks instead
+    * of serializing in one straggler. ADAPTIVE: only
     * cells whose primary occupancy exceeds `hotCellThreshold` are
     * sharded (probe side exploded ×subBlocks, build side hashed);
     * cells near the target size — the overwhelming majority, since
@@ -1353,46 +1334,6 @@ object Ann {
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("cell")).as("cell"), max(col("cos")).as("cos"))
       .select(col("cell"), col("id_a"), col("id_b"), col("cos"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Embedding near-dup pairs: cosine ≥ tau within the same coarse cell
-    * (cell-blocked so the pair space never goes quadratic corpus-wide).
-    *
-    * The in-cell pair work is additionally sharded into `subBlocks`
-    * deterministic hash sub-blocks: the probe side replicates to every
-    * sub-block and the build side keeps its own, so the join key is
-    * (cell, sub-block) and a HOT cell's O(n²) candidate work spreads
-    * over `subBlocks` tasks instead of serializing in one straggler.
-    * Each unordered pair still surfaces exactly once — (x,y) meets at
-    * y's sub-block, (y,x) at x's, and the id_a < id_b filter keeps one
-    * — so the output set is identical to the unsharded join (the
-    * sub-block id never reaches the output, and the oracle is
-    * unchanged). Replication cost: probe side × subBlocks.
-    *
-    * Norms are precomputed per ROW (`normNative`, O(n) total), so the
-    * O(pairs) in-cell loop pays only the dot — bit-equal to the full
-    * per-pair cosine at a third of its arithmetic. (A norm-PRODUCT
-    * candidate prune is vacuous here: embedding corpora are unit-norm,
-    * every pair's norm product is 1.0 — and in high dimension no cheap
-    * per-vector scalar separates cos ≥ tau pairs; the honest cuts are
-    * the cell block, the sub-block sharding, and cheaper arithmetic.) */
-  def nearDupPairs(emb: DataFrame, id: String, vec: String, cell: String,
-                   tau: Double, subBlocks: Int = 8): DataFrame = {
-    val withNorm = emb.select(col(id), col(vec), col(cell),
-      Vec.normNative(col(vec)).as("__nrm"))
-    val a = withNorm.select(col(id).as("id_a"), col(vec).as("vec_a"),
-        col(cell).as("cell"), col("__nrm").as("na"))
-      .withColumn("sb", explode(array((0 until subBlocks).map(lit): _*)))
-    val b = withNorm.select(col(id).as("id_b"), col(vec).as("vec_b"),
-      col(cell).as("cell"), col("__nrm").as("nb"),
-      pmod(hash(col(id)), lit(subBlocks)).as("sb"))
-    a.join(b, Seq("cell", "sb"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("cell"), col("id_a"), col("id_b"),
-        Vec.cosinePrenormed(col("vec_a"), col("vec_b"),
-          col("na"), col("nb")).as("cos"))
-      .filter(col("cos") >= tau)
       .orderBy(col("id_a"), col("id_b"))
   }
 }

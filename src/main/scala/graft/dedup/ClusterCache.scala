@@ -21,7 +21,7 @@ object ClusterCache {
     * x17 (tf-idf top-k) all start from. One explode + aggregation per
     * corpus, persisted; each consumer pays only its own downstream
     * (Catalyst cannot share the differently-pruned branches between
-    * consumers OR within one — see Pipeline.docWordTf). */
+    * consumers OR within one — see Pipeline.docWordTable). */
   val docWordTfArtifact: IndexStore.Artifact =
     IndexStore.Artifact("docwordtf", Some("w")) { (spark, dir) =>
       graft.operators.Pipeline.docWordTable(

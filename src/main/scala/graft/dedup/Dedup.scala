@@ -99,44 +99,6 @@ object Dedup {
       .select(col(id), col("n_sh"),
         Text.md5Prefix60(col("__s")).as("shingle"))
 
-  /** Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard ≥ tau),
-    * ADAPTIVE between two exact plans (same output either way):
-    *
-    *  - DIRECT inverted-index self-join (+ size bound): one join, one
-    *    aggregation. Join volume is Σdf² over shingle document
-    *    frequencies — optimal when df is FLAT (no shingle is hot), as
-    *    in vocabularies where no boilerplate repeats across the corpus.
-    *  - PPJoin-style PREFIX-FILTERED join (Xiao/Wang/Lin/Yu, WWW'08 —
-    *    public method) when df is SKEWED: under any global total order
-    *    of shingles, two sets with |A∩B| ≥ o share an element among
-    *    their first |set|−o+1 elements, and J ≥ tau implies |A∩B| ≥
-    *    ceil(tau·max(|A|,|B|)); each doc indexes only its
-    *    floor((1−tau)·|d|)+1 RAREST shingles (global df asc), so hot
-    *    boilerplate shingles — where the Σdf² blowup lives — never
-    *    enter the join. Candidates are then verified with the exact
-    *    overlap count (the prefix lemma is lossless; the prefix length
-    *    carries +1e-6 slack so float rounding can only LENGTHEN it,
-    *    covering the round-6 boundary of the final J filter too).
-    *
-    * The router measures df-skew with one cheap vocabulary-sized
-    * aggregation (the AQE-style runtime-stats pattern ts4's sessionize
-    * uses): the share of Σdf² carried by shingles above the p99.9 df.
-    * Flat distribution → that share is ~0.1% and the prefix would cut
-    * almost nothing while paying an extra dedup + verify pass
-    * (measured 2.4× slower at sf0.1); Zipf-ish boilerplate → the top
-    * shingles carry most of Σdf² and the prefix excises them
-    * (ScaleProbe's hot-shingle leg measures the win). Note the prefix
-    * plan's leverage also grows with tau (prefix fraction ≈ 1−tau):
-    * at high thresholds it indexes only the rare tail of each doc; at
-    * tau ≈ 0.1 it indexes ~90% of every doc and candidate volume
-    * approaches the direct join's, with extra passes on top — PPJoin
-    * is a high-threshold design (its paper sweeps 0.8–0.95).
-    * Exactness does not depend on the routing decision. */
-  def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
-                        n: Int, tau: Double,
-                        skewThreshold: Double = 0.5): DataFrame =
-    ngramJaccardPairsFrom(shinglePostings(docs, id, text, n), tau, skewThreshold)
-
   /** Per-shingle document frequency AND first-occurrence doc over a
     * postings table — the vocabulary-sized table every df consumer
     * (router statistics, prefix ranks, the df>=2 prune, x19's
@@ -187,9 +149,43 @@ object Dedup {
       q.getLong(2), q.getLong(3))
   }
 
-  /** [[ngramJaccardPairs]] over a PREBUILT (possibly cached/persisted)
-    * postings table — the one-postings-table-many-consumers shape:
-    * d4 and x16 share one shingle+hash build per corpus
+  /** Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard ≥ tau),
+    * ADAPTIVE between two exact plans (same output either way):
+    *
+    *  - DIRECT inverted-index self-join (+ size bound): one join, one
+    *    aggregation. Join volume is Σdf² over shingle document
+    *    frequencies — optimal when df is FLAT (no shingle is hot), as
+    *    in vocabularies where no boilerplate repeats across the corpus.
+    *  - PPJoin-style PREFIX-FILTERED join (Xiao/Wang/Lin/Yu, WWW'08 —
+    *    public method) when df is SKEWED: under any global total order
+    *    of shingles, two sets with |A∩B| ≥ o share an element among
+    *    their first |set|−o+1 elements, and J ≥ tau implies |A∩B| ≥
+    *    ceil(tau·max(|A|,|B|)); each doc indexes only its
+    *    floor((1−tau)·|d|)+1 RAREST shingles (global df asc), so hot
+    *    boilerplate shingles — where the Σdf² blowup lives — never
+    *    enter the join. Candidates are then verified with the exact
+    *    overlap count (the prefix lemma is lossless; the prefix length
+    *    carries +1e-6 slack so float rounding can only LENGTHEN it,
+    *    covering the round-6 boundary of the final J filter too).
+    *
+    * The router measures df-skew with one cheap vocabulary-sized
+    * aggregation (the AQE-style runtime-stats pattern ts4's sessionize
+    * uses): the share of Σdf² carried by shingles above the p99.9 df.
+    * Flat distribution → that share is ~0.1% and the prefix would cut
+    * almost nothing while paying an extra dedup + verify pass
+    * (measured 2.4× slower at sf0.1); Zipf-ish boilerplate → the top
+    * shingles carry most of Σdf² and the prefix excises them
+    * (ScaleProbe's hot-shingle leg measures the win). Note the prefix
+    * plan's leverage also grows with tau (prefix fraction ≈ 1−tau):
+    * at high thresholds it indexes only the rare tail of each doc; at
+    * tau ≈ 0.1 it indexes ~90% of every doc and candidate volume
+    * approaches the direct join's, with extra passes on top — PPJoin
+    * is a high-threshold design (its paper sweeps 0.8–0.95).
+    * Exactness does not depend on the routing decision.
+    *
+    * Takes a PREBUILT (possibly cached/persisted) postings table
+    * ([[shinglePostings]]) — the one-postings-table-many-consumers
+    * shape: d4 and x16 share one shingle+hash build per corpus
     * ([[ClusterCache.postings]]). `dfcPre`/`statsPre` accept the
     * corpus-shared df table and routing statistics
     * ([[ClusterCache.shingleDf]]/[[ClusterCache.dfSkewStats]]);
@@ -208,37 +204,6 @@ object Dedup {
     else jaccardPrefix(sh, dfc, tau)
   }
 
-  /** N-gram CONTAINMENT pairs — the asymmetric companion of
-    * [[ngramJaccardPairs]]: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|, the
-    * measure that catches "A is inside B" (quoted snippets, benchmark
-    * questions embedded in crawl pages, doc-in-doc contamination) where
-    * Jaccard stays low because |B| ≫ |A|. Output is ORDERED pairs
-    * (id_a ≠ id_b, containment of a in b ≥ tau) — a full inclusion
-    * reports in both directions, a snippet only as (snippet → host).
-    *
-    * Same postings plan as d4's direct tier: candidates only where a
-    * shingle is shared, with the asymmetric size bound n_b ≥ tau·n_a
-    * (shared ≤ n_b, so C ≥ tau is impossible below it) pruning before
-    * the aggregation. */
-  def containmentPairs(docs: DataFrame, id: String, text: String,
-                       n: Int, tau: Double): DataFrame =
-    containmentPairsFrom(shinglePostings(docs, id, text, n), tau)
-
-  /** [[containmentPairs]] over a prebuilt postings table (see
-    * [[ngramJaccardPairsFrom]]), ADAPTIVE between the direct postings
-    * join and the asymmetric PREFIX-FILTERED plan (identical output):
-    * the same df-skew router as [[ngramJaccardPairsFrom]] (one
-    * vocabulary-sized aggregation), and the routing margin is WIDER
-    * here than for Jaccard — the prefix arm's verify join fans each
-    * candidate × n_a, and the one-sided size bound keeps every
-    * (small a, larger b) candidate the two-sided Jaccard bound would
-    * drop, so on a flat-df corpus the arm is not merely slower but
-    * explosive (sf1: >60 GB of shuffle spill, DNF, NOTES_r12 §4 — see
-    * [[containmentDirect]]). It repays only when hot shingles
-    * dominate Σdf² AND their excision collapses the candidate set,
-    * which is the regime the router gates on. Exactness does not
-    * depend on the routing decision (both arms spec-pinned equal on
-    * the degenerate corpus). */
   /** Minimum fraction of postings rows that must be corpus-unique
     * (df=1) before the direct arm's unique-shingle prune engages: the
     * prune costs one extra semi-join pass over the postings PER
@@ -253,6 +218,33 @@ object Dedup {
     * driver action). */
   val PruneDf1Fraction = 0.25
 
+  /** N-gram CONTAINMENT pairs — the asymmetric companion of
+    * [[ngramJaccardPairsFrom]]: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|, the
+    * measure that catches "A is inside B" (quoted snippets, benchmark
+    * questions embedded in crawl pages, doc-in-doc contamination) where
+    * Jaccard stays low because |B| ≫ |A|. Output is ORDERED pairs
+    * (id_a ≠ id_b, containment of a in b ≥ tau) — a full inclusion
+    * reports in both directions, a snippet only as (snippet → host).
+    *
+    * Same postings plan as d4's direct tier: candidates only where a
+    * shingle is shared, with the asymmetric size bound n_b ≥ tau·n_a
+    * (shared ≤ n_b, so C ≥ tau is impossible below it) pruning before
+    * the aggregation.
+    *
+    * Takes a prebuilt postings table (see [[ngramJaccardPairsFrom]]) and
+    * is ADAPTIVE between the direct postings join and the asymmetric
+    * PREFIX-FILTERED plan (identical output): the same df-skew router
+    * (one vocabulary-sized aggregation), and the routing margin is WIDER
+    * here than for Jaccard — the prefix arm's verify join fans each
+    * candidate × n_a, and the one-sided size bound keeps every
+    * (small a, larger b) candidate the two-sided Jaccard bound would
+    * drop, so on a flat-df corpus the arm is not merely slower but
+    * explosive (sf1: >60 GB of shuffle spill, DNF, NOTES_r12 §4 — see
+    * [[containmentDirect]]). It repays only when hot shingles
+    * dominate Σdf² AND their excision collapses the candidate set,
+    * which is the regime the router gates on. Exactness does not
+    * depend on the routing decision (both arms spec-pinned equal on
+    * the degenerate corpus). */
   def containmentPairsFrom(sh: DataFrame, tau: Double,
                            skewThreshold: Double = 0.5,
                            dfcPre: Option[DataFrame] = None,
@@ -480,70 +472,11 @@ object Dedup {
   }
 
   /** Per-doc SimHash + coarse bucket (top `bucketBits` bits). Near-dup
-    * candidates are same-bucket pairs within small hamming distance —
-    * see `simhashHammingPairs`. */
+    * candidates are same-bucket pairs within small hamming distance. */
   def simhashFingerprints(docs: DataFrame, id: String, text: String,
                           bucketBits: Int): DataFrame =
     docs.select(col(id), simhash32(col(text)).as("simhash"))
       .withColumn("bucket", shiftright(col("simhash"), 32 - bucketBits))
-
-  /** ALL pairs with hamming distance ≤ maxHamming, via the pigeonhole
-    * combination join (Manku/Jain/Sarma, WWW'07 "Detecting
-    * Near-Duplicates for Web Crawling" — public): split the 32-bit
-    * fingerprint into `chunks` ≥ maxHamming+1 pieces; a pair within
-    * `maxHamming` differing bits leaves at least `chunks - maxHamming`
-    * pieces untouched, so every such pair agrees exactly on at least
-    * one (chunks−maxHamming)-sized chunk COMBINATION. Candidates come
-    * from equi-joins on the C(chunks, chunks−maxHamming) packed
-    * combination keys — recall is 100% (unlike the former coarse
-    * top-bits bucket, which missed pairs whose differing bits fell in
-    * the bucket), and the key width is (chunks−maxHamming) pieces, not
-    * one: with the default chunks = 2·maxHamming the keys carry ~16 of
-    * the 32 bits, so a corpus hot in any one bit range still shards
-    * across the other pieces' values — the planted-hot-chunk ScaleProbe
-    * suite measures the difference. Only fingerprint-near-equal groups
-    * collide on every key, and those emit output pairs anyway. */
-  def simhashHammingPairs(docs: DataFrame, id: String, text: String,
-                   chunks: Int, maxHamming: Int): DataFrame =
-    simhashPairsFromFp(
-      docs.select(col(id), simhash32(col(text)).as("simhash")),
-      id, maxHamming, chunks)
-
-  /** The combination-join core of `simhashHammingPairs`, over precomputed
-    * fingerprints (`simhash` column) — also the probe surface for the
-    * ScaleProbe hot-bucket suite. `chunks` ≤ maxHamming means "use the
-    * default" (2·maxHamming, floored at maxHamming+1). */
-  def simhashPairsFromFp(fp: DataFrame, id: String, maxHamming: Int,
-                         chunks: Int = 0): DataFrame = {
-    val t = if (chunks > maxHamming) chunks
-            else math.max(maxHamming + 1, 2 * maxHamming)
-    require(t <= 32, s"at most 32 chunks over a 32-bit fingerprint, got $t")
-    val w = 32 / t
-    def chunk(c: Column, i: Int): Column = {
-      val lo = i * w
-      val width = if (i == t - 1) 32 - lo else w
-      shiftright(c, lo).bitwiseAND(lit((1L << width) - 1))
-    }
-    // one packed long key per (chunks−maxHamming)-sized index subset:
-    // subset ordinal in the high bits, member chunk values below
-    val subsets = (0 until t).combinations(t - maxHamming).toIndexedSeq
-    val keys = subsets.zipWithIndex.map { case (s, ord) =>
-      s.foldLeft(lit(ord.toLong)) { (acc, i) =>
-        val width = if (i == t - 1) 32 - i * w else w
-        shiftleft(acc, width).bitwiseOR(chunk(col("simhash"), i))
-      }
-    }
-    val keyed = fp.select(col(id), col("simhash"),
-        explode(array(keys: _*)).as("ck"))
-    val a = keyed.select(col(id).as("id_a"), col("simhash").as("sh_a"), col("ck"))
-    val b = keyed.select(col(id).as("id_b"), col("simhash").as("sh_b"), col("ck"))
-    a.join(b, Seq("ck"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      // a pair agreeing on several combinations surfaces once per key
-      .select("id_a", "id_b", "hamming").distinct()
-  }
 
   /** Banded-LSH candidate pairs: docs sharing ≥1 identical band of the
     * MinHash signature. `perms` must be divisible by `bands`. One
@@ -568,24 +501,6 @@ object Dedup {
     // ordered=false skips the global range exchange for cached /
     // CC-consumed pair tables (ClusterCache) — joins never need it
     if (ordered) pairs.orderBy("id_a", "id_b") else pairs
-  }
-
-  /** Duplicate clusters: connected components over the MinHash-LSH
-    * candidate graph, labeled by the component's minimum doc id.
-    * Delegates to [[connectedComponents]] — alternating large-star/
-    * small-star contraction (O(log n) rounds even on adversarial
-    * chains; LSH dup clusters are near-cliques, so typically 1-2).
-    * The driver only steers the loop; every round is one distributed
-    * aggregation + equi-join on the candidate edge set. */
-  def dupClusters(docs: DataFrame, id: String, text: String,
-                  n: Int, perms: Int, bands: Int, maxIter: Int = 64,
-                  ordered: Boolean = true): DataFrame = {
-    val pairs = minhashLshPairs(docs, id, text, n, perms, bands)
-      .select("id_a", "id_b")
-    val cc = connectedComponents(docs.select(col(id)), pairs, id, maxIter)
-    // ordered=false skips the global range exchange — for a cached
-    // table consumed by joins/windows (ClusterCache) the sort is waste
-    if (ordered) cc.orderBy(id) else cc
   }
 
   /** Connected components over an undirected pair list (`id_a`,`id_b`):

@@ -3,27 +3,19 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float>` embedding columns, expressed
-  * with higher-order functions (`zip_with` + `aggregate`) so the whole
-  * computation stays inside Catalyst/codegen — no UDF serialization, no
-  * driver round-trips. Inputs are cast to double once; accumulation is
-  * strict left-to-right, which both Spark and the DuckDB oracle honor.
+/** Dense-vector math over `array<float>` embedding columns, backed by
+  * native expressions (CosineSim, DotProduct) so the whole computation
+  * stays inside Catalyst/codegen — no UDF serialization, no driver
+  * round-trips. Elements are widened to double; accumulation is strict
+  * left-to-right, which both Spark and the DuckDB oracle honor.
   */
 object Vec {
 
-  private def d(a: Column): Column = a.cast("array<double>")
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(d(a), lit(0.0), (acc, x) => acc + x * x))
-
   /** Cosine similarity, rounded to 6dp for stable cross-engine compare.
-    * Backed by the native CosineSim expression (one tight loop per pair
-    * — the HOF formulation above is kept for the scalar building
-    * blocks); accumulation order is identical, so results are bit-equal
-    * to `round(dot/(norm*norm), 6)`. */
+    * Backed by the native CosineSim expression (one tight loop per
+    * pair): the dot and both norms accumulate in double, strictly left
+    * to right, so results are bit-equal to `round(dot/(norm*norm), 6)`
+    * over the same doubles. */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     round(ColumnBridge.column(graft.functions.expressions.CosineSim(

@@ -92,9 +92,8 @@ object DedupKeys {
     // cosine ≥ τ pairs over CORPUS-PROPORTIONAL coarse cells (k ≈ n/64
     // product-quantizer cells, probe-2 boundary recovery) — in-cell
     // pair work stays ~linear in the corpus where the former fixed
-    // 10-label blocking measured 18× wall for 10× data. The
-    // fixed-cell exact form (Ann.nearDupPairs) remains the
-    // correctness-grounding tier, the d4-grounds-d2 pattern.
+    // 10-label blocking measured 18× wall for 10× data (CoarseCellSpec
+    // grounds it against the fixed-cell exact form).
     // The coarse index (anchor assignment) is built ONCE per corpus
     // via CellIndexCache and shared with d8/a3/a4 — n comes from
     // parquet footers, so no count() job either. The PAIR TABLE is

@@ -104,8 +104,8 @@ object TimeSeriesKeys {
       val e = ev(s, d).select("user_id", "ts", "event_id", "event_type")
       val purchases = e.filter(col("event_type") === "purchase").drop("event_type")
       val clicks = e.filter(col("event_type") === "click").drop("event_type")
-      // native AsOfJoinExec (spec-checked identical to the composed
-      // union+window form in TimeSeries.asOfJoin)
+      // native AsOfJoinExec (spec-checked identical to the brute-force
+      // inequality join with max_by)
       graft.plans.AsOfJoinDsl.asof(purchases, clicks, "user_id", "ts", "event_id")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           unix_micros(col("ts")).as("purchase_ts_us"),
@@ -132,7 +132,7 @@ object TimeSeriesKeys {
 
     // exact per-series percentiles off the suite-shared selection memo
     // (QuantileCache: one cutoff selection serves ts9/ts30/s5) — same
-    // code path, bit-identical to TimeSeries.percentiles (spec-pinned)
+    // code path, bit-identical to a direct exactQuantiles run (spec-pinned)
     Key("ts9_percentiles", () =>
       """SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50,
         |  round(quantile_cont(value, 0.9), 6) AS p90,

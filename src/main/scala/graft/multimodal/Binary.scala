@@ -68,7 +68,7 @@ object Binary {
   /** Chunk-level near-dup pairs over binary payloads — the STORAGE
     * dedup a multimodal lake runs on opaque blobs (image/video/audio
     * files whose bytes, not semantics, repeat): payloads are cut into
-    * fixed `chunkSize`-byte chunks (the aligned-store case; a
+    * fixed-size chunks ([[chunked]]; the aligned-store case, a
     * content-defined rolling-hash chunker is the unaligned extension
     * with the same downstream plan), each chunk keyed by its md5, and
     * two payloads pair when the Jaccard overlap of their DISTINCT
@@ -76,17 +76,13 @@ object Binary {
     * machinery ([[graft.dedup.Dedup.jaccardDirect]]) over chunk keys
     * instead of shingles — candidates only where a chunk is shared,
     * never all-pairs, and the payload bytes never enter the exchange
-    * (only 64-bit key prefixes and counts do). */
-  def chunkDupPairs(withPayload: DataFrame, id: String,
-                    chunkSize: Int, tau: Double): DataFrame =
-    chunkDupPairsFrom(chunked(withPayload, id, chunkSize), id, tau)
-
-  /** [[chunkDupPairs]] over a PRE-BUILT chunk table (id, chunk_idx,
-    * chunk_len, chunk_md5) — the shared-artifact path: m4 consumes
-    * [[ChunkCache.chunks]] instead of re-exploding the corpus payloads
-    * (the chunk table appears twice in the pair plan — the key
+    * (only 64-bit key prefixes and counts do).
+    *
+    * Takes the chunk table (id, chunk_idx, chunk_len, chunk_md5): m4
+    * consumes [[ChunkCache.chunks]] instead of re-exploding the corpus
+    * payloads (the chunk table appears twice in the pair plan — the key
     * distinct and the per-doc counts — so the artifact saves repeated
-    * payload passes, the r18 m4/m6 restructure). */
+    * payload passes). */
   def chunkDupPairsFrom(chunks: DataFrame, id: String, tau: Double): DataFrame = {
     // distinct keys + a count join, never a per-payload buffer: a
     // single blob can carry millions of chunks at lake scale, so no
@@ -109,18 +105,12 @@ object Binary {
     * the number a 100 TB media lake actually budgets by. The tenant
     * column attaches via a doc-level join (never token/chunk-level
     * metadata fan-out); dedup is scoped per source, the common tenancy
-    * boundary. Integer arithmetic throughout; one rounded ratio. */
-  def casStats(docs: DataFrame, id: String, text: String, source: String,
-               chunkSize: Int): DataFrame =
-    casStatsFrom(chunked(withPayload(docs, id, text), id, chunkSize)
-        .join(docs.select(col(id), col(source)), Seq(id)),
-      id, source)
-
-  /** [[casStats]] over a PRE-BUILT chunk table that already carries
-    * the tenant column (see [[chunkDupPairsFrom]]): the totals and
-    * distinct-chunk legs both consume the chunk explode AND the
-    * doc-level tenant join, so m6 reads [[ChunkCache.chunks]] instead
-    * of re-deriving both twice. */
+    * boundary. Integer arithmetic throughout; one rounded ratio.
+    *
+    * Takes a chunk table that already carries the tenant column: the
+    * totals and distinct-chunk legs both consume the chunk explode AND
+    * the doc-level tenant join, so m6 reads [[ChunkCache.chunks]]
+    * instead of re-deriving both twice. */
   def casStatsFrom(chunks: DataFrame, id: String,
                    source: String): DataFrame = {
     val sch = chunks
@@ -329,8 +319,8 @@ object Binary {
     * docs sharing ≥ 1 of the 4 hash chunks are candidates; the report
     * carries each doc's hash, candidate count and minimum hamming
     * distance among candidates (NULL when no chunk collides). The
-    * full pair set at `maxHam` is [[perceptualHashPairs]]; the report
-    * shape keeps the query non-degenerate on corpora with no
+    * candidates filtered to hamming ≤ 3 are the full near-dup pair set;
+    * the report shape keeps the query non-degenerate on corpora with no
     * byte-identical payloads (true hamming twins are spec-planted). */
   def perceptualHashIndex(docs: DataFrame, id: String, text: String): DataFrame = {
     val ph = perceptualHash(docs, id, text)
@@ -405,16 +395,6 @@ object Binary {
           (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
           lit(0L), (acc, x) => acc + x).as("hamming"))
       .distinct()
-  }
-
-  /** Near-dup pairs at `maxHam` (≤ 3 for the 4-chunk guarantee to be
-    * complete — Manku et al. WWW'07 pigeonhole): the candidate join
-    * filtered to the exact hamming bound. */
-  def perceptualHashPairs(docs: DataFrame, id: String, text: String,
-                          maxHam: Int = 3): DataFrame = {
-    require(maxHam <= 3, s"4-chunk pigeonhole is only complete to hamming 3, got $maxHam")
-    phashCandidates(perceptualHash(docs, id, text), id)
-      .filter(col("hamming") <= maxHam)
   }
 
   /** Frame sampling: every `stride`-th byte as a "frame", with count /

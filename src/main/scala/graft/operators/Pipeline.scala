@@ -95,14 +95,10 @@ object Pipeline {
     * cluster saves: member count, total chars, chars dropped by
     * keeping only the survivor. The window and the aggregation share
     * the cluster_id partitioning, so the reduction costs one exchange
-    * beyond the clustering itself. */
-  def dedupSurvivors(docs: DataFrame, id: String, text: String,
-                     nChars: String, n: Int, perms: Int, bands: Int): DataFrame =
-    dedupSurvivorsFrom(
-      Dedup.dupClusters(docs, id, text, n, perms, bands), docs, id, nChars)
-
-  /** Survivorship over a PRE-BUILT cluster table (doc_id, cluster_id)
-    * — the shared-table path: d6's clustering job feeds d7 through
+    * beyond the clustering itself.
+    *
+    * Takes a PRE-BUILT cluster table (doc_id, cluster_id) — the
+    * shared-table path: d6's clustering job feeds d7 through
     * [[graft.dedup.ClusterCache]] instead of re-running LSH + CC. */
   def dedupSurvivorsFrom(clusters: DataFrame, docs: DataFrame, id: String,
                          nChars: String): DataFrame = {
@@ -286,28 +282,21 @@ object Pipeline {
       .orderBy(id)
   }
 
-  /** The LAZY (id, term, tf) plan — what [[docWordTf]] materializes
-    * and what [[graft.dedup.ClusterCache.docWordTf]] persists as the
-    * shared corpus artifact x11/x14/x17 all hang off. */
+  /** The (id, term, tf) token aggregate x11/x14/x17 start from — the
+    * plan [[graft.dedup.ClusterCache.docWordTf]] persists as the shared
+    * corpus artifact. Each of x14/x17 derives a vocabulary aggregate
+    * from this table AND joins back to it, and Catalyst cannot reuse
+    * the subtree across the two branches (column pruning drops tf on
+    * the vocabulary side, so the exchanges differ and ReuseExchange
+    * never fires) — left lazy, the token-level explode + aggregation
+    * runs TWICE, the dominant cost of those plans (x17 at sf1 measured
+    * 4.2s lazy vs 1.5s materialized — NOTES_r11 §7). This is the
+    * classic two-pass tf-idf shape: at scale the intermediate is the
+    * same volume the exchange writes anyway, and a production pipeline
+    * persists it as a table. */
   def docWordTable(docs: DataFrame, id: String, text: String): DataFrame =
     docs.select(col(id), explode(Text.words(col(text))).as("w"))
       .groupBy(col(id), col("w")).agg(count(lit(1)).as("tf"))
-
-  /** The (id, term, tf) token aggregate x14/x17 start from,
-    * materialized ONCE per call. Each of those operators derives a
-    * vocabulary aggregate from this table AND joins back to it, and
-    * Catalyst cannot reuse the subtree across the two branches
-    * (column pruning drops tf on the vocabulary side, so the
-    * exchanges differ and ReuseExchange never fires) — left lazy, the
-    * token-level explode + aggregation runs TWICE, the dominant cost
-    * of all three plans (x17 at sf1 measured 4.2s lazy vs 1.5s
-    * materialized — NOTES_r11 §7). This is the classic two-pass tf-idf
-    * shape: at scale the intermediate is the same volume the exchange
-    * writes anyway, and a production pipeline persists it as a table.
-    * (Eager job at DataFrame-construction time: the ts4 probe
-    * precedent.) */
-  private def docWordTf(docs: DataFrame, id: String, text: String): DataFrame =
-    docWordTable(docs, id, text).localCheckpoint()
 
   /** Corpus-unigram-LM rarity profile — the CCNet-style "LM quality"
     * pass, with the token information content QUANTIZED to integer
@@ -324,16 +313,10 @@ object Pipeline {
     * the exchange — no second scan), then an equi-join on `word`
     * (vocabulary ≪ token count; AQE handles hot stopword keys) and a
     * per-doc aggregation. No window, no collect, every sum an
-    * integer until the final rounded ratio. */
-  def unigramLmProfile(docs: DataFrame, id: String, text: String): DataFrame =
-    // NOT [[docWordTf]]: x11 is the one consumer measured FASTER lazy
-    // than checkpointed (1.49s vs 1.70s at sf1, NOTES_r11 §7) — its single
-    // downstream aggregation doesn't amortize a PRIVATE
-    // materialization (a shared warm one — ClusterCache.docWordTf —
-    // is better still, and is what the x-keys wire)
-    unigramLmProfileFrom(docWordTable(docs, id, text), id)
-
-  /** [[unigramLmProfile]] over a pre-built (id, term, tf) table. */
+    * integer until the final rounded ratio.
+    *
+    * Takes a pre-built (id, term, tf) table ([[docWordTable]]): the
+    * keys wire the shared warm one, ClusterCache.docWordTf. */
   def unigramLmProfileFrom(docWord: DataFrame, id: String): DataFrame = {
     val wordCnt = docWord.groupBy(col("w")).agg(sum(col("tf")).as("cnt"))
     docWord.join(wordCnt, Seq("w"))
@@ -444,7 +427,7 @@ object Pipeline {
     * bigram (`min(w|ah) ⊔ ' ' ⊔ min(w|th)` == the old per-group
     * min(bigram) — each 60-bit word hash names one word, the same
     * no-collision granularity the (bgh, ah, th) keying is already
-    * built on; X28Probe + R18OpsSpec pin bit-equality with the
+    * built on; X28Probe + BigramSurprisalSpec pin bit-equality with the
     * payload-carrying form). A 60-bit word-hash collision therefore
     * does not only merge counts: the display string pairs the smaller
     * word of each colliding hash, so it can show a bigram that never
@@ -655,9 +638,10 @@ object Pipeline {
     * integer end to end and both engines rank the identical numbers —
     * where a float log(N/df) sum would be libm-dependent.
     *
-    * Shape: one scan → (doc, word) tf aggregate, MATERIALIZED once
-    * ([[docWordTf]] — Catalyst cannot share the differently-pruned
-    * branches); df table derived from that materialization; N from a
+    * Shape: the (doc, word) tf aggregate comes in MATERIALIZED (the
+    * shared-artifact path, [[graft.dedup.ClusterCache.docWordTf]] —
+    * Catalyst cannot share the differently-pruned branches, see
+    * [[docWordTable]]); df table derived from that table; N from a
     * scalar count broadcast back; top-k via a BOUNDED CollectMinK
     * aggregate over an order-encoding key — never a per-doc
     * row_number window: the window form re-shuffles and SORTS the
@@ -682,12 +666,6 @@ object Pipeline {
     * raises instead of silently misranking (the '-' a negative
     * difference would inject sorts above the digits and would float
     * the highest-scoring terms to the bottom). */
-  def tfidfTopTerms(docs: DataFrame, id: String, text: String,
-                    topK: Int): DataFrame =
-    tfidfTopTermsFrom(docWordTf(docs, id, text), docs, id, topK)
-
-  /** [[tfidfTopTerms]] over a pre-built (id, term, tf) table — the
-    * shared-artifact path ([[graft.dedup.ClusterCache.docWordTf]]). */
   def tfidfTopTermsFrom(docWord: DataFrame, docs: DataFrame, id: String,
                         topK: Int): DataFrame = {
     val Big = 1000000000000L // 10^12 > any tf·idf_bits
@@ -913,8 +891,8 @@ object Pipeline {
   /** CCNet-style head/middle/tail quality bucketing (Wenzek et al.
     * 2020): per-language `nBuckets`-quantile split on the corpus-LM
     * bits-per-token score (the same integer bit-bucket quantization
-    * as [[unigramLmProfile]], so both engines sort the identical IEEE
-    * double sum_bits/n_tokens; ties broken by doc id). Bucket 1 =
+    * as [[unigramLmProfileFrom]], so both engines sort the identical
+    * IEEE double sum_bits/n_tokens; ties broken by doc id). Bucket 1 =
     * most-predictable ("head") documents.
     *
     * Exact ntile needs a per-language sort — fine per-partition here
@@ -922,12 +900,9 @@ object Pipeline {
     * At 100 TB the same split is served by approx-quantile CUTOFFS
     * (one pass, no sort) and a map-side comparison against the
     * broadcast cutoff table; exact ntile is kept because the oracle
-    * must agree bit-for-bit. */
-  def ccnetBuckets(docs: DataFrame, id: String, text: String,
-                   lang: String, nBuckets: Int): DataFrame =
-    ccnetBucketsFrom(docWordTf(docs, id, text), docs, id, lang, nBuckets)
-
-  /** [[ccnetBuckets]] over a pre-built (id, term, tf) table. */
+    * must agree bit-for-bit.
+    *
+    * Takes a pre-built (id, term, tf) table ([[docWordTable]]). */
   def ccnetBucketsFrom(docWord: DataFrame, docs: DataFrame, id: String,
                        lang: String, nBuckets: Int): DataFrame = {
     val wordCnt = docWord.groupBy(col("w")).agg(sum(col("tf")).as("cnt"))

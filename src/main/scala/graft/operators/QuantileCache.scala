@@ -76,9 +76,9 @@ object QuantileCache {
           r.drop(2).map(_.asInstanceOf[Double]).toIndexedSeq).toMap)
     }
 
-  /** ts9's report off the shared selection — identical to
-    * TimeSeries.percentiles(events, "event_type", "value") (same
-    * selection code, same 6-dp rounding). */
+  /** ts9's report off the shared selection — identical to a direct
+    * TimeSeries.exactQuantiles(events, "event_type", "value", Ps) run
+    * rounded to 6 dp (same selection code, same rounding). */
   def percentiles(spark: SparkSession, dir: String): DataFrame = {
     val sel = selection(spark, dir)
     import scala.jdk.CollectionConverters._

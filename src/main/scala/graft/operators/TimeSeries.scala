@@ -28,7 +28,7 @@ object TimeSeries {
   private def dec(c: Column): Column = c.cast("decimal(18,6)")
 
   /** Group-cardinality bound for the cutoff-selection quantile
-    * operators ([[exactQuantiles]], [[madOutliers]]): their selection
+    * operators ([[exactQuantiles]], [[madReportFromMedian]]): their selection
     * maps are driver-literal per group — output-sized state, which is
     * only the right trade for per-SERIES reports. 10⁴ groups ≈ a few
     * MB of literal plan (the measured practical edge); beyond it the
@@ -330,9 +330,9 @@ object TimeSeries {
     * lose. The collect itself is group-row-sized (~300B/group: a
     * 10⁵-group caller materializes ~30MB then fails the require), and
     * the driver-sized LITERAL PLAN — the actual scale hazard — is
-    * never built. Shared by [[exactQuantiles]], [[madOutliers]] and
-    * QuantileCache (the suite-level memo that runs ONE selection per
-    * corpus for ts9/ts30/s5). */
+    * never built. Shared by [[exactQuantiles]] and QuantileCache (the
+    * suite-level memo that runs ONE selection per corpus for
+    * ts9/ts30/s5). */
   private[graft] def quantileCuts(t: DataFrame, opLabel: String,
                                   groupLabel: String,
                                   parts: Int = 32): Seq[(Any, Seq[Double])] = {
@@ -353,10 +353,10 @@ object TimeSeries {
     * (per group): exact counts + offsets (action), rank-and-pick the
     * target buckets (action), interpolate driver-side. `t` must be
     * (__g, __v double, non-null). Returns one Seq(group, n, q*) per
-    * group. Factored out so [[madOutliers]] can reuse the VALUE
-    * ordering's cutoffs for the deviation pass (|cut − median| is a
-    * valid, balanced cut list for |v − median|) instead of paying a
-    * second approx_percentile scan. */
+    * group. Factored out so the MAD report ([[madReportFromMedian]])
+    * can reuse the VALUE ordering's cutoffs for the deviation pass
+    * (|cut − median| is a valid, balanced cut list for |v − median|)
+    * instead of paying a second approx_percentile scan. */
   /** The per-row range-bucket expression over a literal group→cuts
     * map: #cutoffs STRICTLY below __v — equal values always share a
     * bucket, buckets are contiguous under the value ordering. */
@@ -451,17 +451,21 @@ object TimeSeries {
     }
   }
 
-  /** Exact per-series percentiles (linear interpolation, matching ANSI
-    * PERCENTILE_CONT) via [[exactQuantiles]] — bit-identical to Spark's
-    * built-in `percentile` aggregate (spec-pinned) but with bounded
-    * state, so the same code path is the 100 TB path. */
-  def percentiles(df: DataFrame, series: String, value: String): DataFrame =
-    exactQuantiles(df, series, value, Seq(0.5, 0.9, 0.99))
-      .select(col(series),
-        round(col("__q0"), 6).as("p50"),
-        round(col("__q1"), 6).as("p90"),
-        round(col("__q2"), 6).as("p99"),
-        col("__n").as("n"))
+  /** Spark round(_, 6) semantics (BigDecimal.valueOf + HALF_UP), so
+    * rounded medians/MADs are the identical IEEE doubles both engines
+    * reuse. */
+  private[graft] def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
+    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  private[graft] def madReportSchema(series: String,
+      sType: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    StructType(Seq(StructField(series, sType), StructField("med", DoubleType),
+      StructField("mad", DoubleType), StructField("n", LongType),
+      StructField("n_outliers", LongType),
+      StructField("out_rate", DoubleType)))
+  }
 
   /** Robust per-series outlier report: median / MAD / outlier counts
     * under the classic |v − median| > k·MAD rule (Hampel filter — the
@@ -484,60 +488,14 @@ object TimeSeries {
     * actions / input scans: value cuts; median counts + pick; dev
     * counts + pick; outlier recount (at the caller's action). Every
     * driver table is series- or (series × parts)-sized — the same
-    * output-sized budget as [[exactQuantiles]]. */
-  def madOutliers(df: DataFrame, series: String, value: String,
-                  k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val spark = df.sparkSession
-    val sType = df.schema(series).dataType
-    // persisted for the SIX chained actions (see exactQuantiles): the
-    // chain is irreducible, the parquet re-reads are not — 1 scan + 5
-    // in-RAM passes over two narrow columns. Unpersisted on return
-    // (the report is a LocalRelation, outlier counts included).
-    val t = df.select(col(series).as("__g"), col(value).cast("double").as("__v"))
-      .filter(col("__v").isNotNull && col("__g").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // action 1: value cutoffs — shared by BOTH medians (the deviation
-    // cut list derives from them); guarded like exactQuantiles
-    val cutsByGroup = quantileCuts(t, "madOutliers", series)
-    if (cutsByGroup.isEmpty)
-      return spark.createDataFrame(Seq.empty[org.apache.spark.sql.Row].asJava,
-        madReportSchema(series, sType))
-    // actions 2-3: exact per-series median
-    val medRows = selectQuantiles(t, cutsByGroup, Seq(0.5))
-    val med: Map[Any, Double] =
-      medRows.map(r => r(0) -> r6(r(2).asInstanceOf[Double])).toMap
-    val n: Map[Any, Long] =
-      medRows.map(r => r(0) -> r(1).asInstanceOf[Long]).toMap
-    madReportFromMedian(t, series, sType, cutsByGroup, med, n, k)
-    } finally t.unpersist()
-  }
-
-  /** Spark round(_, 6) semantics (BigDecimal.valueOf + HALF_UP), so
-    * rounded medians/MADs are the identical IEEE doubles both engines
-    * reuse. */
-  private[graft] def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private[graft] def madReportSchema(series: String,
-      sType: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    StructType(Seq(StructField(series, sType), StructField("med", DoubleType),
-      StructField("mad", DoubleType), StructField("n", LongType),
-      StructField("n_outliers", LongType),
-      StructField("out_rate", DoubleType)))
-  }
-
-  /** [[madOutliers]]' post-median half (actions 4-6: deviation counts +
-    * pick over the derived cut list, eager outlier recount) — factored
-    * out so QuantileCache can feed it the suite-shared cutoffs/median
-    * (its memoized ts9 selection) instead of re-running actions 1-3.
-    * `med` must already be 6-dp rounded; `t` is the (__g, __v)
-    * projection the caller keeps persisted across these three
-    * actions. */
+    * output-sized budget as [[exactQuantiles]].
+    *
+    * This is the post-median half (actions 4-6: deviation counts +
+    * pick over the derived cut list, eager outlier recount): the
+    * caller supplies the cutoffs and the 6-dp rounded median (actions
+    * 1-3) — QuantileCache feeds it the suite-shared cutoffs/median (its
+    * memoized ts9 selection). `t` is the (__g, __v) projection the
+    * caller keeps persisted across these three actions. */
   private[graft] def madReportFromMedian(t: DataFrame, series: String,
       sType: org.apache.spark.sql.types.DataType,
       cutsByGroup: Seq[(Any, Seq[Double])],
@@ -654,36 +612,6 @@ object TimeSeries {
       }: _*)).as("__r"))
       .select(col("__r.stage_idx"), col("__r.stage"), col("__r.n_keys"))
       .orderBy("stage_idx")
-  }
-
-  /** As-of join: for each left row, the latest right row with the same
-    * key and `rightTs <= leftTs`. Implemented as union + time-ordered
-    * last(ignoreNulls) — one shuffle on `key`, linear merge per key.
-    *
-    * `left`/`right` must share (key, ts, tie) columns; `carry` names the
-    * right-side columns to attach to each left row.
-    */
-  def asOfJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
-               tie: String, carry: Seq[String]): DataFrame = {
-    val lCols = left.columns
-    val tagged =
-      left.withColumn("__side", lit(1))
-        .select((lCols.map(col) :+ col("__side")) ++
-          carry.map(c => lit(null).cast(right.schema(c).dataType).as(s"__r_$c")): _*)
-      .unionByName(
-        right.withColumn("__side", lit(0))
-          .select((lCols.map(c => if (right.columns.contains(c)) col(c)
-                                  else lit(null).cast(left.schema(c).dataType).as(c)) :+
-            col("__side")) ++ carry.map(c => col(c).as(s"__r_$c")): _*))
-    // right rows sort before left rows at equal (ts, tie) so an exact
-    // timestamp match is visible to the left row (ASOF `<=` semantics).
-    val w = Window.partitionBy(col(key)).orderBy(col(ts), col("__side"), col(tie))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = carry.foldLeft(tagged) { (d, c) =>
-      d.withColumn(s"__last_$c", last(col(s"__r_$c"), ignoreNulls = true).over(w))
-    }
-    filled.filter(col("__side") === 1)
-      .select(lCols.map(col) ++ carry.map(c => col(s"__last_$c").as(s"right_$c")): _*)
   }
 
   /** Interval (range) join, bucketized: for each probe row, the number

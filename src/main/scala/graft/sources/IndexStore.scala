@@ -41,8 +41,8 @@ object IndexStore {
 
   /** Load-from-tables mode: ON unless explicitly disabled
     * (GRAFT_INDEX_TABLES=0/off/false; system property first — tests —
-    * env second). Writes via [[writeAll]]/[[primeIfMissing]] work
-    * regardless of the flag's value; only loading is gated. */
+    * env second). Writes via [[write]] work regardless of the flag's
+    * value; only loading and [[primeIfMissing]] are gated. */
   def enabled: Boolean =
     !sys.props.get(EnvFlag).orElse(sys.env.get(EnvFlag))
       .exists(v => v == "0" || v.equalsIgnoreCase("off") ||
@@ -279,16 +279,6 @@ object IndexStore {
     name
   }
 
-  /** Drop the catalog registration of every artifact table of `dir`
-    * (EXTERNAL tables: the files and manifests stay), so the next
-    * [[exists]] re-registers each one through the manifest's freshness
-    * check. */
-  private[graft] def dropRegistrations(spark: SparkSession, dir: String): Unit = {
-    val catalog = spark.sessionState.catalog
-    catalog.listTables(catalog.getCurrentDatabase, tableName(dir, "") + "*")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.table}`"))
-  }
-
   /** The standard artifact set every corpus is primed with, in
     * DEPENDENCY order: a later builder reads earlier artifacts through
     * [[get]] (doclengths reads docwordtf, pqcodes reads centroids,
@@ -311,17 +301,6 @@ object IndexStore {
       T.dsirFeatsArtifact(), T.dsirDocStatsArtifact(),
       V.kmeansCentroidsArtifact())
   }
-
-  /** Build and persist ALL standard artifacts for `dir`'s corpus,
-    * OVERWRITING any present (the measurement/rewrite entry point —
-    * IndexAb, IndexStoreSpec). Callers must be in build mode with
-    * fresh memos (GRAFT_INDEX_TABLES=0 or no valid tables on disk): a
-    * getter that already LOADED artifact X would make this overwrite
-    * the very table it reads. First-touch production priming is
-    * [[primeIfMissing]], which skips present artifacts and has no such
-    * hazard. Returns the written table names. */
-  def writeAll(spark: SparkSession, dir: String): Seq[String] =
-    standard.map(a => write(get(spark, dir, a), dir, a.name, a.bucketKey))
 
   /** First-touch priming (the Bench/Verify session-start hook): write
     * ONLY the standard artifacts whose durable table is missing or

@@ -185,21 +185,6 @@ object Streams {
         round(col("sum_value") / col("n"), 6).as("avg_value"))
   }
 
-  /** Production-shape windowed aggregation: APPEND output with a
-    * watermark — each window is emitted exactly once, after the
-    * watermark (max event time − `delay`) passes its end, and its state
-    * is evicted. This is the plan that runs unbounded against a live
-    * source; the complete-mode twins above are the drain-everything
-    * harness variant. Returns the un-started aggregation; the caller
-    * owns the sink/trigger. */
-  def tumblingCountsWithWatermark(events: DataFrame, win: String,
-                                  delay: String): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), win), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
   /** Per-record version-chain state for `versionMonitorStream`. */
   case class VersionState(nVersions: Long, lastValue: Double, lastTsUs: Long)
 

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 import graft.operators.Pipeline
 
 /** x23 (bigram-LM surprisal) hand-derivations + corpus invariants. */
@@ -97,5 +99,102 @@ class BigramSurprisalSpec extends SparkSpec {
       assert(r.getAs[Long]("sum_bits") >= 0L)
       assert(r.getAs[Double]("avg_bits") >= 0.0)
     }
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  // ---- x28 PMI collocations and the BigramHashes expression -------------
+
+  /** VERBATIM round-17 pmiCollocations (payload-carrying aggregate +
+    * 3×md5 + substring_index projection) — the pre-restructure
+    * equality reference for x28. */
+  private def pmiR17(docs: DataFrame, docWord: DataFrame,
+                     id: String, text: String,
+                     minCount: Int, k: Int): DataFrame = {
+    val bg = docs.select(explode(Text.bigrams(col(text))).as("bg"))
+      .select(Text.md5Prefix60(col("bg")).as("bgh"),
+        Text.md5Prefix60(substring_index(col("bg"), " ", 1)).as("ah"),
+        Text.md5Prefix60(substring_index(col("bg"), " ", -1)).as("th"),
+        col("bg"))
+      .groupBy(col("bgh"), col("ah"), col("th"))
+      .agg(count(lit(1)).as("n_ab"), min(col("bg")).as("bigram"))
+      .filter(col("n_ab") >= minCount)
+    val wc = docWord.select(Text.md5Prefix60(col("w")).as("wh"), col("tf"))
+      .groupBy(col("wh")).agg(sum(col("tf")).as("cnt"))
+    val total = docWord.agg(sum(col("tf")).as("n_tok"))
+    bg
+      .join(wc.select(col("wh").as("ah"), col("cnt").as("n_a")), Seq("ah"))
+      .join(wc.select(col("wh").as("th"), col("cnt").as("n_b")), Seq("th"))
+      .crossJoin(broadcast(total))
+      .select(col("bigram"), col("n_ab"), col("n_a"), col("n_b"),
+        (length(bin(col("n_ab"))) + length(bin(col("n_tok"))) -
+          length(bin(col("n_a"))) - length(bin(col("n_b"))))
+          .cast("long").as("pmi_bits"))
+      .orderBy(col("pmi_bits").desc, col("n_ab").desc, col("bigram").asc)
+      .limit(k)
+  }
+
+  test("BigramHashes == composed 3xmd5/substring_index pipeline on adversarial texts") {
+    // double/leading/trailing spaces (empty tokens), tab and newline
+    // INSIDE tokens (the single-space split keeps them), unicode,
+    // repeated bigrams, a single word (no bigrams), empty and NULL, and
+    // ill-formed UTF-8 (a lone 0xFF byte: "a\xFFb c\nd")
+    val docs = Seq(
+      Some("a b a b a"), Some("  leading twice"), Some("trailing  "),
+      Some("mid  dle double"), Some("tab\tinside and new\nline tokens"),
+      Some("héllo wörld héllo wörld"), Some("solo"), Some(""),
+      None: Option[String]
+    ).zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+      .toDF("doc_id", "text")
+      .union(spark.range(1).select(lit(9L).as("doc_id"),
+        unhex(lit("61FF6220630A64")).cast("string").as("text")))
+    val composed = docs
+      .select(explode(Text.bigrams(col("text"))).as("bg"))
+      .select(Text.md5Prefix60(col("bg")).as("bgh"),
+        Text.md5Prefix60(substring_index(col("bg"), " ", 1)).as("ah"),
+        Text.md5Prefix60(substring_index(col("bg"), " ", -1)).as("th"))
+      .orderBy("bgh", "ah", "th").collect().map(_.toSeq).toSeq
+    val native = docs
+      .select(explode(Text.bigramHashes(col("text"))).as("b"))
+      .select(col("b.bgh"), col("b.ah"), col("b.th"))
+      .orderBy("bgh", "ah", "th").collect().map(_.toSeq).toSeq
+    assert(native === composed)
+    assert(native.nonEmpty)
+  }
+
+  test("x28 restructure == r17 form on the real sf0.001 corpus") {
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val dw = graft.dedup.ClusterCache.docWordTf(spark, sfDir)
+    // k large enough to exercise deep (pmi, n_ab, bigram) tie-breaks
+    val now = rows(Pipeline.pmiCollocations(docs, dw, "doc_id", "text", 2, 100))
+    val r17 = rows(pmiR17(docs, dw, "doc_id", "text", 2, 100))
+    assert(now === r17)
+    assert(now.size === 100)
+  }
+
+  test("x28 restructure == r17 form on an adversarial synthetic corpus") {
+    // engineered (pmi_bits, n_ab) ties so the bigram-ASC tie-break is
+    // load-bearing, double spaces (empty tokens through the join),
+    // words shared across head/tail positions, and a hapax tail that
+    // the minCount prune must drop identically
+    val docs = Seq(
+      (0L, "aa bb aa bb aa bb cc dd cc dd cc dd"),
+      (1L, "aa bb cc dd ee ff ee ff ee ff"),
+      (2L, "bb aa dd cc ff ee zz yy"),
+      (3L, "mid  dle mid  dle mid  dle"),
+      (4L, "aa bb aa bb cc dd hapax1 hapax2"),
+      (5L, "tie1 tie2 tie1 tie2 tie3 tie4 tie3 tie4")
+    ).toDF("doc_id", "text")
+    val dw = Pipeline.docWordTable(docs, "doc_id", "text")
+    val now = rows(Pipeline.pmiCollocations(docs, dw, "doc_id", "text", 2, 50))
+    val r17 = rows(pmiR17(docs, dw, "doc_id", "text", 2, 50))
+    assert(now === r17)
+    assert(now.nonEmpty)
+    // the ties really occur: at least two output rows share
+    // (pmi_bits, n_ab) so the reconstructed-bigram ordering is proven
+    val keyPairs = now.map(r => (r(4), r(1)))
+    assert(keyPairs.size !== keyPairs.distinct.size,
+      "tie-break never exercised — strengthen the corpus")
   }
 }

@@ -36,7 +36,7 @@ class CoarseCellSpec extends SparkSpec {
   /** Exact all-pairs cosine >= tau — every row in one cell, unsharded:
     * the fixed-cell exact tier as the ground truth. */
   private def exactPairs(tau: Double): Set[(Long, Long)] =
-    Ann.nearDupPairs(corpus.withColumn("c", lit(0L)), "vec_id", "embedding",
+    References.nearDupPairs(corpus.withColumn("c", lit(0L)), "vec_id", "embedding",
         "c", tau, subBlocks = 1)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
 

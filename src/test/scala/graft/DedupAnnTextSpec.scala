@@ -56,7 +56,8 @@ class DedupAnnTextSpec extends SparkSpec {
       (2L, "a b c d e f g"),        // clone -> jaccard 1.0
       (3L, "x y z q w e r")
     ).toDF("doc_id", "text")
-    val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5)
+    val got = Dedup.ngramJaccardPairsFrom(
+        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.5)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
     assert(got.toSeq == Seq((1L, 2L, 1.0)))
   }
@@ -89,7 +90,8 @@ class DedupAnnTextSpec extends SparkSpec {
       // force EACH plan through the router: threshold 0 routes to the
       // prefix plan, threshold 1.1 to the direct plan
       for (thr <- Seq(0.0, 1.1)) {
-        val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, tau, thr)
+        val got = Dedup.ngramJaccardPairsFrom(
+            Dedup.shinglePostings(docs, "doc_id", "text", 3), tau, thr)
           .as[(Long, Long, Long, Double)].collect().toSet
         assert(got == want, s"tau=$tau threshold=$thr plan changed the output")
       }
@@ -140,7 +142,8 @@ class DedupAnnTextSpec extends SparkSpec {
 
   test("ngram jaccard returns empty on an empty corpus (no NPE)") {
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).isEmpty)
+    assert(Dedup.ngramJaccardPairsFrom(
+      Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.5).isEmpty)
   }
 
   test("dot_product and cosine_sim reject mismatched vector lengths") {
@@ -399,8 +402,5 @@ class DedupAnnTextSpec extends SparkSpec {
       .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
     assert(fp(1L) == fp(2L))
     assert(fp.values.forall(v => v >= 0 && v < (1L << 32)))
-    val pairs = Dedup.simhashHammingPairs(docs, "doc_id", "text", 8, 3)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
   }
 }

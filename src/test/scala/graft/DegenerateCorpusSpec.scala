@@ -41,7 +41,8 @@ class DegenerateCorpusSpec extends SparkSpec {
   }
 
   test("d4 ngram Jaccard survives degenerate docs and still finds the twin") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.12)
+    val pairs = Dedup.ngramJaccardPairsFrom(
+        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.12)
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect()
     assert(pairs.exists(p => p._1 == 5L && p._2 == 6L && p._3 == 1.0))
@@ -67,7 +68,8 @@ class DegenerateCorpusSpec extends SparkSpec {
   }
 
   test("x16 containment: both arms complete and agree on the degenerate corpus") {
-    val got = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.6)
+    val got = Dedup.containmentPairsFrom(
+        Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.6)
       .select("id_a", "id_b", "containment")
       .as[(Long, Long, Double)].collect().toSet
     // identical twins contain each other: both ordered directions
@@ -121,7 +123,8 @@ class DegenerateCorpusSpec extends SparkSpec {
   }
 
   test("x17 tf-idf completes; NULL text yields no terms, twins rank identically") {
-    val out = Pipeline.tfidfTopTerms(docs, "doc_id", "text", 5)
+    val out = Pipeline.tfidfTopTermsFrom(
+      Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", 5)
     val rows = out.select("doc_id", "term", "rank")
       .as[(Long, String, Int)].collect()
     assert(!rows.exists(_._1 == 1L)) // NULL text tokenizes to nothing

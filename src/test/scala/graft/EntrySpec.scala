@@ -40,6 +40,18 @@ class EntrySpec extends SparkSpec {
     assert(declared.map(_._1).sorted == SparkEntry.keys.map(_.name).sorted)
   }
 
+  test("key subsets: an unknown name fails naming it, blank selects all, names are trimmed") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selectKeys(Some("t1_asof_snapshot,t1_asof_snapsh0t"))
+    }
+    assert(e.getMessage.contains("t1_asof_snapsh0t") && !e.getMessage.contains("t1_asof_snapshot"))
+    val all = SparkEntry.keys.map(_.name).sorted
+    assert(all.size == 158)
+    assert(SparkEntry.selectKeys(Some(" ")) == all && SparkEntry.selectKeys(None) == all)
+    assert(SparkEntry.selectKeys(Some(" ts9_percentiles , q1_pricing_summary ")) ==
+      Seq("q1_pricing_summary", "ts9_percentiles"))
+  }
+
   test("every query runs at sf0.001 and has a stable schema") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)

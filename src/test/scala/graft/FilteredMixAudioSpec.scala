@@ -204,4 +204,45 @@ class FilteredMixAudioSpec extends SparkSpec {
       .select("doc_id", "frame_sum").as[(Long, Long)].collect().toMap
     assert(a == b && a.nonEmpty)
   }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  // ---- m4/m6 over the shared chunk artifact -----------------------------
+
+  test("m4/m6 From-variants over ChunkCache == the direct derivations") {
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val withP = graft.multimodal.Binary.withPayload(docs, "doc_id", "text")
+    val shared = graft.multimodal.ChunkCache.chunks(spark, sfDir, 64)
+
+    val m4Direct = rows(graft.multimodal.Binary.chunkDupPairsFrom(
+      graft.multimodal.Binary.chunked(withP, "doc_id", 64), "doc_id", 0.5)
+      .orderBy("id_a", "id_b"))
+    val m4Shared = rows(graft.multimodal.Binary.chunkDupPairsFrom(
+      shared, "doc_id", 0.5).orderBy("id_a", "id_b"))
+    assert(m4Shared === m4Direct)
+
+    val m6Direct = rows(graft.multimodal.Binary.casStatsFrom(
+      graft.multimodal.Binary.chunked(withP, "doc_id", 64)
+        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id")),
+      "doc_id", "source"))
+    val m6Shared = rows(graft.multimodal.Binary.casStatsFrom(
+      shared, "doc_id", "source"))
+    assert(m6Shared === m6Direct)
+
+    // and the chunk table itself is the chunked() derivation plus the
+    // doc-keyed tenant column
+    val direct = rows(graft.multimodal.Binary.chunked(withP, "doc_id", 64)
+      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .orderBy("doc_id", "chunk_idx"))
+    assert(rows(shared.orderBy("doc_id", "chunk_idx")) === direct)
+    // ... built from ONE documents scan: `source` rides the payload
+    // projection instead of a second scan joined back on doc_id
+    val build = graft.multimodal.ChunkCache.chunksArtifact(64).build(spark, sfDir)
+    assert(build.columns.toSeq ===
+      Seq("doc_id", "chunk_idx", "chunk_len", "chunk_md5", "source"))
+    val scans = build.queryExecution.optimizedPlan.collectLeaves()
+    assert(scans.size === 1, s"expected one documents scan:\n$scans")
+    assert(build.inputFiles.forall(_.contains("documents.parquet")))
+  }
 }

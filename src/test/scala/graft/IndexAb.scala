@@ -44,7 +44,7 @@ object IndexAb {
     graft.util.SessionCache.clearAll()
     val buildCold = runAll()
     // ---- persist (artifacts are warm in the session caches now) ----
-    val (names, writeSecs) = timed(graft.sources.IndexStore.writeAll(spark, sfDir))
+    val (names, writeSecs) = timed(References.writeAll(spark, sfDir))
     // ---- load mode (the r14 default), cold caches: no index build,
     // bucketed reads ----
     sys.props.remove(graft.sources.IndexStore.EnvFlag)

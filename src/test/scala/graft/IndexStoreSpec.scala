@@ -80,7 +80,7 @@ class IndexStoreSpec extends SparkSpec {
       "d8_semantic_dedup", "x19_novelty").map(n => n -> q(n)).toMap
 
     // ---- persist, flip to load mode, drop every session cache ----
-    val names = IndexStore.writeAll(spark, sfDir)
+    val names = References.writeAll(spark, sfDir)
     assert(names == StandardNames.map(IndexStore.tableName(sfDir, _)) &&
       names.forall(spark.catalog.tableExists))
     assert(IndexStore.standard.map(_.bucketKey) == Seq(Some("cell"),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TimeSeries
 import graft.ann.Ann
 import graft.sources.Tables
 
@@ -24,7 +23,7 @@ class MadRecallSpec extends SparkSpec {
       (1 to 9).map(i => ("b", i.toDouble)) ++
       Seq(("c", 7.5))
     val df = rows.toDF("event_type", "value")
-    val out = TimeSeries.madOutliers(df, "event_type", "value", 3)
+    val out = References.madOutliers(df, "event_type", "value", 3)
       .orderBy("event_type")
       .collect()
     assert(out.length === 3)
@@ -40,7 +39,7 @@ class MadRecallSpec extends SparkSpec {
 
   test("madOutliers agrees with a filter-based recount on real events") {
     val ev = graft.sources.Tables.events(spark, sfDir)
-    val out = TimeSeries.madOutliers(ev, "event_type", "value", 3)
+    val out = References.madOutliers(ev, "event_type", "value", 3)
     // recount each series' outliers independently from the reported
     // med/mad (a consumer replaying the rule must see the same counts)
     val recount = ev

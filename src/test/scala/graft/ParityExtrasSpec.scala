@@ -153,4 +153,35 @@ class ParityExtrasSpec extends SparkSpec {
     assert(h.sliding(2).forall(p => p(0)._2 <= p(1)._2))
     assert(h.last._2 == n)
   }
+
+  // ---- vault per-op metrics (the reference's /metrics counters) ----------
+
+  test("TemporalVault ops move the per-endpoint counters and histogram") {
+    val root = java.nio.file.Files.createTempDirectory("vault_metrics").toString
+    val v = new graft.temporal.TemporalVault(spark, root)
+    def c(op: String) = Metrics.count(op)
+    val (a0, q0, h0, r0) = (c("vault.append"), c("vault.query"),
+      c("vault.history"), c("vault.rollback"))
+    val batch = Seq(
+      ("alice", "2024-01-01 09:00:00", 1L, "v1"),
+      ("alice", "2024-01-10 09:00:00", 2L, "v2"))
+      .toDF("record_id", "ts_s", "seq", "data")
+      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+      .select("record_id", "ts", "seq", "data")
+    v.append(batch)
+    v.query("2024-01-05 00:00:00").collect()
+    v.history("alice").collect()
+    v.rollback("2024-01-05 00:00:00", "2024-01-15 00:00:00").collect()
+    assert(c("vault.append") === a0 + 1)
+    assert(c("vault.query") === q0 + 1)
+    assert(c("vault.history") === h0 + 1)
+    assert(c("vault.rollback") === r0 + 1)
+    // histogram: cumulative, final +Inf bucket equals the count
+    val hist = Metrics.histogram("vault.append")
+    assert(hist.last._1.isPosInfinity && hist.last._2 === c("vault.append"))
+    // append is eager (log write + min-ts probe): its inner SQL
+    // executions are attributed to the .sql label, not the endpoint
+    assert(Metrics.count("vault.append.sql") >= 1L)
+    assert(Metrics.totalSeconds("vault.append") > 0.0)
+  }
 }

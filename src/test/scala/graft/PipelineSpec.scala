@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.dedup.Dedup
+import graft.functions.Text
 import graft.operators.Pipeline
 import graft.sources.Tables
 
@@ -49,14 +52,14 @@ class PipelineSpec extends SparkSpec {
     val cachedPairs = graft.dedup.ClusterCache.minhashPairs(spark, sfDir)
       .as[(Long, Long)].collect().toSet
     assert(cachedPairs == directPairs)
-    val direct = graft.dedup.Dedup
-      .dupClusters(docs, "doc_id", "text", 3, 16, 4)
+    val directClusters = References.dupClusters(docs, "doc_id", "text", 3, 16, 4)
+    val direct = directClusters
       .select($"doc_id", $"cluster_id").as[(Long, Long)].collect().toSet
     val cached = graft.dedup.ClusterCache.documents(spark, sfDir)
       .select($"doc_id", $"cluster_id").as[(Long, Long)].collect().toSet
     assert(cached == direct)
     val directSurv = Pipeline
-      .dedupSurvivors(docs, "doc_id", "text", "n_chars", 3, 16, 4)
+      .dedupSurvivorsFrom(directClusters, docs, "doc_id", "n_chars")
       .select($"cluster_id", $"survivor_id", $"n_members", $"saved_chars")
       .as[(Long, Long, Long, Long)].collect().toSet
     val sharedSurv = Pipeline
@@ -70,12 +73,12 @@ class PipelineSpec extends SparkSpec {
 
   test("dedupSurvivors keeps the longest member (ties to min id) per cluster") {
     val docs = Tables.documents(spark, sfDir)
+    val dup = References.dupClusters(docs, "doc_id", "text", 3, 16, 4)
     val survivors = Pipeline
-      .dedupSurvivors(docs, "doc_id", "text", "n_chars", 3, 16, 4)
+      .dedupSurvivorsFrom(dup, docs, "doc_id", "n_chars")
       .select($"cluster_id", $"survivor_id", $"n_members", $"saved_chars")
       .as[(Long, Long, Long, Long)].collect()
-    val clusters = graft.dedup.Dedup
-      .dupClusters(docs, "doc_id", "text", 3, 16, 4)
+    val clusters = dup
       .join(docs.select($"doc_id", $"n_chars"), "doc_id")
       .select($"cluster_id", $"doc_id", $"n_chars".cast("long"))
       .as[(Long, Long, Long)].collect().groupBy(_._1)
@@ -125,7 +128,8 @@ class PipelineSpec extends SparkSpec {
   test("unigram LM profile: exact bit-bucket arithmetic on a known corpus") {
     // counts: a=3 ('11', 2 bits), b=1, c=1 (1 bit each)
     val docs = Seq((1L, "a a b"), (2L, "a c")).toDF("doc_id", "text")
-    val got = Pipeline.unigramLmProfile(docs, "doc_id", "text")
+    val got = Pipeline.unigramLmProfileFrom(
+        Pipeline.docWordTable(docs, "doc_id", "text"), "doc_id")
       .as[(Long, Long, Long, Long, Long, Double)].collect().toList
     //            (id, n_tokens, n_distinct, rare, min_cnt, avg_bits)
     assert(got == List(
@@ -135,13 +139,15 @@ class PipelineSpec extends SparkSpec {
 
   test("unigram LM profile: deterministic and token-conserving on the corpus") {
     val docs = Tables.documents(spark, sfDir)
-    val prof = Pipeline.unigramLmProfile(docs, "doc_id", "text")
+    val prof = Pipeline.unigramLmProfileFrom(
+      Pipeline.docWordTable(docs, "doc_id", "text"), "doc_id")
     val rows = prof.as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(rows.length == docs.count())
     // total tokens equals the whitespace token count of the corpus
     val toks = docs.select(sum(size(split($"text", " ")))).as[Long].head()
     assert(rows.map(_._2).sum == toks)
-    val again = Pipeline.unigramLmProfile(docs, "doc_id", "text")
+    val again = Pipeline.unigramLmProfileFrom(
+        Pipeline.docWordTable(docs, "doc_id", "text"), "doc_id")
       .as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(rows.sameElements(again))
   }
@@ -193,5 +199,143 @@ class PipelineSpec extends SparkSpec {
     assert(funnel.map(_._4).sum == d7Clusters)
     // something must actually survive the whole chain on this corpus
     assert(funnel.map(_._7).sum > 0)
+  }
+
+  // ---- p1 curation chain vs its round-17 form ---------------------------
+
+  private val stop = Seq("the", "a")
+  private val block = Seq("slow", "dup", "big")
+
+  /** VERBATIM round-17 curationPipelineFrom (the pre-restructure
+    * reference: separate flags3 scan + id-join, canon groupBy +
+    * __h-left-join, domainMixture threshold detour, kept5 re-joining
+    * docs for text). */
+  private def curationR17(docs: DataFrame, clusters: DataFrame,
+                          postings: DataFrame, id: String, text: String,
+                          source: String, nChars: String,
+                          stopwords: Seq[String], blockWords: Seq[String],
+                          qualityMin: Double = 0.5, denomPer: Int = 20,
+                          benchMod: Int = 20, minShared: Int = 3,
+                          buckets: Int = 10000, pctNum: Int = 3,
+                          pctDen: Int = 10, nStrata: Int = 20,
+                          packBudget: Int = 512, packShards: Int = 8): DataFrame = {
+    val d0 = docs.select(col(id), col(source), col(text), col(nChars))
+    val canon = d0.groupBy(md5(col(text)).as("__h"))
+      .agg(min(col(id)).as("__canon"))
+    val survivors = Pipeline.dedupSurvivorsFrom(clusters, docs, id, nChars)
+      .select(col("survivor_id").as(id), lit(true).as("__surv"))
+    val ws = Text.words(col(text))
+    val flags3 = d0.select(col(id), col(nChars),
+        size(ws).as("__nw"), size(array_distinct(ws)).as("__nd"),
+        Text.stopwordHits(ws, stopwords).as("__sh"),
+        Text.stopwordHits(ws, blockWords).as("__bh"))
+      .select(col(id),
+        (Text.qualityScore(col("__nw"), col("__nd"), col("__sh"), col(nChars))
+          >= qualityMin).as("__qual"),
+        (col("__bh") * denomPer <= col("__nw")).as("__block"))
+    val contaminated = Pipeline.decontaminate(docs, id, text, 3,
+        pmod(col(id), lit(benchMod)) === 0, minShared, Some(postings))
+      .select(col(id), lit(true).as("__cont"))
+    val flagged = d0.select(col(id), col(source), col(text))
+      .withColumn("__h", md5(col(text)))
+      .join(canon, Seq("__h"), "left")
+      .withColumn("__exact", coalesce(col(id) === col("__canon"), lit(false)))
+      .join(survivors, Seq(id), "left")
+      .join(flags3, Seq(id))
+      .join(contaminated, Seq(id), "left")
+      .select(col(id), col(source), col(text),
+        col("__exact"),
+        coalesce(col("__surv"), lit(false)).as("__surv"),
+        col("__qual"), col("__block"),
+        (pmod(col(id), lit(benchMod)) =!= 0 &&
+          coalesce(col("__cont"), lit(false)) === false).as("__decon"))
+    val clean = col("__surv") && col("__qual") && col("__block")
+    val kept4 = flagged.filter(clean && col("__decon"))
+    val thresholds = Pipeline.domainMixture(kept4, source, id, buckets, pctNum,
+        pctDen, nStrata)
+      .select(col(source), col("bucket_threshold"))
+    val kept5 = kept4
+      .join(broadcast(thresholds), Seq(source))
+      .filter(Text.hashBucket(col(id), buckets) < col("bucket_threshold"))
+      .select(col(id))
+    val packed = Pipeline.packAssignments(
+        kept5.join(docs.select(col(id), col(text)), Seq(id)),
+        id, text, packBudget, packShards)
+      .select(col(id), lit(true).as("__kept"), col("toks"),
+        (col("shard") * 1000000L + col("bin")).as("__binkey"))
+    flagged
+      .join(packed, Seq(id), "left")
+      .groupBy(col(source))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("__exact").cast("long")).as("n_exact"),
+        sum(col("__surv").cast("long")).as("n_surv"),
+        sum(clean.cast("long")).as("n_clean"),
+        sum((clean && col("__decon")).cast("long")).as("n_decontam"),
+        sum(coalesce(col("__kept"), lit(false)).cast("long")).as("n_sampled"),
+        sum(when(col("__kept"), col("toks")).otherwise(0L)).as("kept_tokens"),
+        countDistinct(when(col("__kept"), col("__binkey"))).as("n_bins"),
+        min(when(col("__kept"), col(id))).as("first_kept"))
+      .orderBy(source)
+  }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
+
+  test("p1 restructure == r17 form on the real sf0.001 corpus") {
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val clusters = graft.dedup.ClusterCache.documents(spark, sfDir)
+    val postings = graft.dedup.ClusterCache.postings(spark, sfDir)
+    val now = rows(Pipeline.curationPipelineFrom(docs, clusters, postings,
+      "doc_id", "text", "source", "n_chars", stop, block))
+    val r17 = rows(curationR17(docs, clusters, postings,
+      "doc_id", "text", "source", "n_chars", stop, block))
+    assert(now === r17)
+  }
+
+  test("p1 restructure == r17 form on an adversarial synthetic corpus") {
+    // exact dups (ids 3/23 share text), a NULL text (id 40 — must stay
+    // in n_docs and never count as __exact), an empty text (id 41),
+    // bench docs (id % 20 == 0), a single-doc source, block-word-heavy
+    // docs, and texts long/distinct enough that some survive quality
+    val texts = Seq(
+      0L -> "the quick brown fox jumps over a lazy dog near the river bank today",
+      1L -> "slow dup big slow dup big slow dup big slow dup big slow dup big",
+      2L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu",
+      3L -> "the quick brown fox jumps over a lazy dog near the river bank today",
+      23L -> "the quick brown fox jumps over a lazy dog near the river bank today",
+      4L -> "one two three four five six seven eight nine ten eleven twelve",
+      20L -> "benchmark document text shared shingles appear here three times over",
+      21L -> "benchmark document text shared shingles appear here three times over",
+      40L -> null,
+      41L -> "",
+      42L -> "solo source document with plenty of distinct words in its body text")
+    val docs = texts.map { case (i, t) =>
+      val src = if (i == 42L) "solo" else if (i % 2 == 0) "web" else "books"
+      (i, src, t, Option(t).map(_.length).getOrElse(0))
+    }.toDF("doc_id", "source", "text", "n_chars")
+    val clusters = References.dupClusters(docs, "doc_id", "text", 3, 16, 4)
+    val postings = Dedup.shinglePostings(docs, "doc_id", "text", 3)
+    val now = rows(Pipeline.curationPipelineFrom(docs, clusters, postings,
+      "doc_id", "text", "source", "n_chars", stop, block,
+      qualityMin = 0.2, denomPer = 4, benchMod = 20, minShared = 2,
+      buckets = 16, pctNum = 9, pctDen = 10, nStrata = 2,
+      packBudget = 8, packShards = 2))
+    val r17 = rows(curationR17(docs, clusters, postings,
+      "doc_id", "text", "source", "n_chars", stop, block,
+      qualityMin = 0.2, denomPer = 4, benchMod = 20, minShared = 2,
+      buckets = 16, pctNum = 9, pctDen = 10, nStrata = 2,
+      packBudget = 8, packShards = 2))
+    assert(now === r17)
+    // the funnel actually exercises every stage on this corpus
+    val bySrc = Pipeline.curationPipelineFrom(docs, clusters, postings,
+        "doc_id", "text", "source", "n_chars", stop, block,
+        qualityMin = 0.2, denomPer = 4, benchMod = 20, minShared = 2,
+        buckets = 16, pctNum = 9, pctDen = 10, nStrata = 2,
+        packBudget = 8, packShards = 2)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(bySrc.keySet === Set("web", "books", "solo"))
+    // NULL text stays counted: web has ids 0,2,4,20,40 -> n_docs 5
+    assert(bySrc("web").getLong(1) === 5L)
   }
 }

@@ -7,9 +7,24 @@ import graft.ann.Ann
   * probe at full width degenerates to exact search, the ADC shortlist
   * bounds the rerank, the a9 operating point recovers planted twins,
   * the probe-width rules hold, and the hierarchical probe matches the
-  * flat reference ([[Ann.probedCellsFlat]]) at the a4/a9 points. */
+  * flat reference (`probedCellsFlat`) at the a4/a9 points. */
 class ProductQuantizerSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per-query probed cells (query_id, c_cell) by a FLAT scan of all
+    * leaf centroids: rounded centroid cosine desc, ties by cell id —
+    * the reference the hierarchical probe is pinned against. */
+  private def probedCellsFlat(queries: org.apache.spark.sql.DataFrame,
+                              centroids: org.apache.spark.sql.DataFrame,
+                              nprobe: Int) =
+    queries.crossJoin(broadcast(centroids))
+      .select(col("query_id"), col("c_cell"),
+        graft.functions.Vec.cosine(col("q_vec"), col("c_vec")).as("c_cos"))
+      .withColumn("c_rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+          .orderBy(col("c_cos").desc, col("c_cell").asc)))
+      .filter(col("c_rank") <= nprobe)
+      .select(col("query_id"), col("c_cell"))
 
   private val dim = 64
   private val nBase = 320
@@ -133,7 +148,7 @@ class ProductQuantizerSpec extends SparkSpec {
     for ((np, gp) <- Seq(
         (Ann.recommendedNprobe(cells), Ann.recommendedGroupProbe(ix.k1)),
         (Ann.ivfPqNprobe(cells), Ann.hierGroupProbe(ix.k1, ix.k2, Ann.ivfPqNprobe(cells))))) {
-      val flat = Ann.probedCellsFlat(queries, cents, np)
+      val flat = probedCellsFlat(queries, cents, np)
         .as[(Long, Long)].collect().toSet
       val hier = Ann.probedCellsHier(queries, cents, ix.k2, np, gp, gvec)
         .as[(Long, Long)].collect().toSet

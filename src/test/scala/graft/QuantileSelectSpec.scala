@@ -16,6 +16,18 @@ class QuantileSelectSpec extends SparkSpec {
 
   private val Ps = Seq(0.5, 0.9, 0.99)
 
+  /** ts9's report computed directly: [[TimeSeries.exactQuantiles]] at
+    * p50/p90/p99, rounded to 6 dp — what QuantileCache.percentiles
+    * serves off the suite-shared selection. */
+  private def percentiles(df: org.apache.spark.sql.DataFrame, series: String,
+                          value: String) =
+    TimeSeries.exactQuantiles(df, series, value, Ps)
+      .select(col(series),
+        round(col("__q0"), 6).as("p50"),
+        round(col("__q1"), 6).as("p90"),
+        round(col("__q2"), 6).as("p99"),
+        col("__n").as("n"))
+
   /** Built-in exact percentile twin (unrounded), same output shape. */
   private def builtin(df: org.apache.spark.sql.DataFrame,
                       ps: Seq[Double]): Map[String, (Long, Seq[Double])] =
@@ -108,7 +120,7 @@ class QuantileSelectSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains(s"${TimeSeries.MaxQuantileGroups} groups"))
     val e2 = intercept[IllegalArgumentException] {
-      TimeSeries.madOutliers(wide, "g", "v")
+      References.madOutliers(wide, "g", "v")
     }
     assert(e2.getMessage.contains("series"))
     // at the bound, the operator still runs (output-sized state OK)
@@ -140,7 +152,7 @@ class QuantileSelectSpec extends SparkSpec {
         round(expr("percentile(value, 0.99)"), 6).as("p99"),
         count(lit(1)).as("n"))
       .orderBy("event_type").collect().map(_.toSeq).toSeq
-    val new9 = TimeSeries.percentiles(ev, "event_type", "value")
+    val new9 = percentiles(ev, "event_type", "value")
       .orderBy("event_type").collect().map(_.toSeq).toSeq
     assert(new9 == old9)
     // ts30 twin: old median/MAD via the exact aggregate
@@ -154,9 +166,44 @@ class QuantileSelectSpec extends SparkSpec {
         round(expr("percentile(__dev, 0.5)"), 6).as("mad"),
         count(lit(1)).as("n"))
       .orderBy("event_type").collect().map(_.toSeq).toSeq
-    val new30 = TimeSeries.madOutliers(ev, "event_type", "value", 3)
+    val new30 = References.madOutliers(ev, "event_type", "value", 3)
       .select(col("event_type"), col("med"), col("mad"), col("n"))
       .orderBy("event_type").collect().map(_.toSeq).toSeq
     assert(new30 == old30)
+  }
+
+  // ---- quantile trio via the shared selection memo -----------------------
+
+  test("QuantileCache.percentiles == TimeSeries.percentiles (direct)") {
+    val direct = percentiles(
+        graft.sources.Tables.events(spark, sfDir), "event_type", "value")
+      .collect().map(_.toSeq).toSet
+    val memo = graft.operators.QuantileCache.percentiles(spark, sfDir)
+      .collect().map(_.toSeq).toSet
+    assert(memo === direct)
+  }
+
+  test("QuantileCache.madOutliers == TimeSeries.madOutliers (direct)") {
+    val direct = References.madOutliers(
+        graft.sources.Tables.events(spark, sfDir), "event_type", "value", 3)
+      .collect().map(_.toSeq).toSet
+    val memo = graft.operators.QuantileCache.madOutliers(spark, sfDir, 3)
+      .collect().map(_.toSeq).toSet
+    assert(memo === direct)
+  }
+
+  test("histQuantiles with QuantileCache exact legs == direct build") {
+    val ev = graft.sources.Tables.events(spark, sfDir)
+      .select("event_type", "value")
+    val direct = graft.functions.Sketch
+      .histQuantiles(ev, "event_type", "value", buckets = 256)
+      .collect().map(_.toSeq).toSet
+    val memo = graft.functions.Sketch.histQuantiles(
+        graft.operators.QuantileCache.projection(spark, sfDir)
+          .select(col("__g").as("event_type"), col("__v").as("value")),
+        "event_type", "value", buckets = 256,
+        exactLegs = Some(graft.operators.QuantileCache.exactLegs(spark, sfDir)))
+      .collect().map(_.toSeq).toSet
+    assert(memo === direct)
   }
 }

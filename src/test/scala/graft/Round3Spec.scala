@@ -164,7 +164,7 @@ class Round3Spec extends SparkSpec {
 
   test("d6: cluster labels are fixpoint-consistent with the pair graph") {
     val docs = Tables.documents(spark, sfDir)
-    val labels = graft.dedup.Dedup.dupClusters(docs, "doc_id", "text", 3, 16, 4)
+    val labels = References.dupClusters(docs, "doc_id", "text", 3, 16, 4)
       .as[(Long, Long)].collect().toMap
     val pairs = graft.dedup.Dedup
       .minhashLshPairs(docs, "doc_id", "text", 3, 16, 4)
@@ -224,9 +224,10 @@ class Round3Spec extends SparkSpec {
     val c = "x" * 64 + "y" * 64  // shares the x-chunk -> jaccard 1/2
     val d = "z" * 128            // no shared chunk
     val docs = Seq((1L, a), (2L, b), (3L, c), (4L, d)).toDF("doc_id", "text")
-    val pairs = graft.multimodal.Binary.chunkDupPairs(
-        graft.multimodal.Binary.withPayload(docs, "doc_id", "text"),
-        "doc_id", 64, 0.5)
+    val pairs = graft.multimodal.Binary.chunkDupPairsFrom(
+        graft.multimodal.Binary.chunked(
+          graft.multimodal.Binary.withPayload(docs, "doc_id", "text"), "doc_id", 64),
+        "doc_id", 0.5)
       .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)]
       .collect().toSet
     assert(pairs.map(p => (p._1, p._2)) == Set((1L, 2L), (1L, 3L), (2L, 3L)))

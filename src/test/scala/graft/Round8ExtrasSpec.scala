@@ -93,8 +93,9 @@ class Round8ExtrasSpec extends SparkSpec {
   // ---- x14 ccnetBuckets --------------------------------------------------
 
   test("ccnetBuckets: partitions each language; bucket means monotone") {
-    val out = Pipeline.ccnetBuckets(Tables.documents(spark, sfDir),
-        "doc_id", "text", "lang", 3)
+    val docs = Tables.documents(spark, sfDir)
+    val out = Pipeline.ccnetBucketsFrom(
+        Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", "lang", 3)
       .select($"lang", $"bucket", $"n_docs", $"bucket_avg_bits")
       .as[(String, Int, Long, Double)].collect().toList
     val perLang = out.groupBy(_._1)
@@ -112,10 +113,13 @@ class Round8ExtrasSpec extends SparkSpec {
   }
 
   test("ccnetBuckets: deterministic across recomputation") {
-    val a = Pipeline.ccnetBuckets(Tables.documents(spark, sfDir),
-      "doc_id", "text", "lang", 3).collect().toList
-    val b = Pipeline.ccnetBuckets(Tables.documents(spark, sfDir),
-      "doc_id", "text", "lang", 3).collect().toList
+    def buckets() = {
+      val docs = Tables.documents(spark, sfDir)
+      Pipeline.ccnetBucketsFrom(Pipeline.docWordTable(docs, "doc_id", "text"),
+        docs, "doc_id", "lang", 3).collect().toList
+    }
+    val a = buckets()
+    val b = buckets()
     assert(a == b)
   }
 

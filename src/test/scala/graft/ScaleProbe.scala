@@ -230,8 +230,8 @@ object ScaleProbe {
     val dedupOps: Seq[(String, DataFrame => Long)] = Seq(
       ("minhash_lsh", docs => graft.dedup.Dedup
         .minhashLshPairs(docs, "doc_id", "text", 3, 16, 4).count()),
-      ("jaccard", docs => graft.dedup.Dedup
-        .ngramJaccardPairs(docs, "doc_id", "text", 3, 0.12).count()),
+      ("jaccard", docs => graft.dedup.Dedup.ngramJaccardPairsFrom(
+        graft.dedup.Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.12).count()),
       ("simhash", docs => graft.dedup.Dedup
         .simhashFingerprints(docs, "doc_id", "text", 8).count()),
       ("bigrams", docs => docs.select(explode(
@@ -300,7 +300,7 @@ object ScaleProbe {
     // md5Prefix60 keys — run on the rotated REAL corpus (structured
     // prose, the honesty item from the r13 synthetic-corpus note).
     val madOps: Seq[(String, DataFrame => Long)] = Seq(
-      ("mad_outliers", ev => TimeSeries.madOutliers(
+      ("mad_outliers", ev => References.madOutliers(
         ev, "event_type", "value", 3).count()),
       // r14 closing keys on events: the slot-moment family (ts31/ts33
       // are one slot-sized aggregate + a broadcast/rollup — both
@@ -632,9 +632,8 @@ object ScaleProbe {
     //    sub-block sharding must spread the quadratic candidate work
     //    across tasks instead of serializing it in one straggler
     //    (subBlocks=1 is the unsharded counterfactual).
-    //  - simhash chunk join: synthetic fingerprints where every doc
-    //    collides on chunk 0 (few surviving pairs — the straggler
-    //    shape) vs uniform random fingerprints of the same size.
+    //  The simhash chunk-join leg is retired with its operator; its
+    //  last numbers are SCALE_r*.json's simhash_hot_chunk_vs_uniform_200k.
     // broadcast off for this suite: at probe scale AQE would broadcast
     // the 4k-row side and sidestep the hot shuffle partition entirely —
     // the 100 TB shape is a shuffle join, where ONE key = ONE partition
@@ -653,27 +652,15 @@ object ScaleProbe {
       .reduce(_ unionByName _)
       .select(col("vec_id"), col("embedding"), lit(0L).as("cell"))
       .localCheckpoint()
-    val nd1 = med3(graft.ann.Ann.nearDupPairs(
+    val nd1 = med3(References.nearDupPairs(
       emb, "vec_id", "embedding", "cell", 0.9, subBlocks = 1).count())
-    val nd8 = med3(graft.ann.Ann.nearDupPairs(
+    val nd8 = med3(References.nearDupPairs(
       emb, "vec_id", "embedding", "cell", 0.9, subBlocks = 8).count())
-    val fpUniform = spark.range(200000L)
-      .select(col("id"), (hash(col("id")).cast("long")
-        .bitwiseAND(lit(0xffffffffL))).as("simhash"))
-      .localCheckpoint()
-    // chunk 0 = bits [0,8) forced to zero: all 200k rows share one
-    // (ci=0, ck=0) join key; the other chunks stay random
-    val fpHot = fpUniform
-      .select(col("id"), col("simhash").bitwiseAND(lit(0xffffff00L)).as("simhash"))
-      .localCheckpoint()
-    val shU = med3(graft.dedup.Dedup.simhashPairsFromFp(fpUniform, "id", 3).count())
-    val shH = med3(graft.dedup.Dedup.simhashPairsFromFp(fpHot, "id", 3).count())
     println(f"${"hot-bucket"}%-22s ${"base"}%8s ${"hot"}%8s ratio")
     // base = unsharded (subBlocks=1), probe = subBlocks=8; ratio < 1 =
     // the sharding win (name convention: A_vs_B -> base=A, probe=B,
     // ratio=probe/base — matches every other leg in the artifact)
     println(f"${"neardup_1cell_sb1v8"}%-22s $nd1%8.2f $nd8%8.2f ${nd8 / nd1}%5.1fx")
-    println(f"${"simhash_hotchunk"}%-22s $shU%8.2f $shH%8.2f ${shH / shU}%5.1fx")
 
     // hot-group exact dedup wall-clock leg: RETIRED in r14. Three
     // rounds of contradictory numbers (r11 bounded faster, r12 parity,
@@ -803,9 +790,7 @@ object ScaleProbe {
          |},
          |"hot_bucket": {
          |  "neardup_one_cell_unsharded_vs_subblocks8":
-         |    {"base_s": ${f"$nd1%.3f"}, "probe_s": ${f"$nd8%.3f"}, "ratio": ${f"${nd8 / nd1}%.2f"}},
-         |  "simhash_hot_chunk_vs_uniform_200k":
-         |    {"base_s": ${f"$shU%.3f"}, "probe_s": ${f"$shH%.3f"}, "ratio": ${f"${shH / shU}%.2f"}}
+         |    {"base_s": ${f"$nd1%.3f"}, "probe_s": ${f"$nd8%.3f"}, "ratio": ${f"${nd8 / nd1}%.2f"}}
          |},
          |"hot_group_exact_dedup": {
          |  "retired": "r14: three rounds of contradictory wall-clock (r11 bounded faster, r12 parity, r13 slower) = the leg measured box memory pressure, not code; the <=K state bound is pinned by construction + spec (CollectMinK), which is the claim that matters"

@@ -169,7 +169,8 @@ class SketchScd2Spec extends SparkSpec {
     val snippet = (20 to 30).map(i => s"w$i").mkString(" ")
     val other = (100 to 160).map(i => s"u$i").mkString(" ")
     val docs = Seq((1L, host), (2L, snippet), (3L, other)).toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.9).collect()
+    val out = Dedup.containmentPairsFrom(
+      Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.9).collect()
     // snippet (2) contained in host (1); host NOT contained in snippet
     assert(out.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((2L, 1L)))
     assert(out.head.getAs[Double]("containment") === 1.0)
@@ -178,7 +179,8 @@ class SketchScd2Spec extends SparkSpec {
   test("containment of identical docs is 1.0 both directions") {
     val t = (1 to 30).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, t), (2L, t)).toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.9)
+    val out = Dedup.containmentPairsFrom(
+      Dedup.shinglePostings(docs, "doc_id", "text", 3), 0.9)
     assert(out.count() === 2)
     assert(out.select("containment").distinct().head().getDouble(0) === 1.0)
   }
@@ -186,15 +188,26 @@ class SketchScd2Spec extends SparkSpec {
   test("cached postings give identical d4/x16 results to the direct build") {
     val docs = sources.Tables.documents(spark, sfDir)
     val sh = graft.dedup.ClusterCache.postings(spark, sfDir, 3)
-    val jd = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.12)
+    val direct = Dedup.shinglePostings(docs, "doc_id", "text", 3)
+    val jd = Dedup.ngramJaccardPairsFrom(direct, 0.12)
     val js = Dedup.ngramJaccardPairsFrom(sh, 0.12)
     assert(js.exceptAll(jd).isEmpty && jd.exceptAll(js).isEmpty)
-    val cd = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.6)
+    val cd = Dedup.containmentPairsFrom(direct, 0.6)
     val cs = Dedup.containmentPairsFrom(sh, 0.6)
     assert(cs.exceptAll(cd).isEmpty && cd.exceptAll(cs).isEmpty)
   }
 
   // ---- PQ / ADC ----------------------------------------------------------
+
+  /** The self-contained ADC search: codebook and codes built from `emb`
+    * itself, then [[graft.ann.Ann.pqAdcFromIndex]]. */
+  private def pqAdc(emb: org.apache.spark.sql.DataFrame, queryIds: Seq[Long],
+                    m: Int = 8, k: Int = 16, topK: Int = 10) = {
+    import graft.ann.Ann
+    val codebook = broadcast(Ann.pqCodebook(emb, "vec_id", "embedding", m, k))
+    Ann.pqAdcFromIndex(emb, "vec_id", "embedding", codebook,
+      Ann.pqCodes(emb, "vec_id", "embedding", codebook, m), queryIds, m, topK)
+  }
 
   test("pqAdc: an exact twin attains the minimum possible ADC distance") {
     // ADC(q, v) = sum_m dt[m][code_v[m]] and code_q[m] is the argmin of
@@ -206,8 +219,7 @@ class SketchScd2Spec extends SparkSpec {
       (i, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
     val withTwin = base :+ (99L, base(20)._2.clone())
     val emb = spark.createDataFrame(withTwin).toDF("vec_id", "embedding")
-    val out = graft.ann.Ann.pqAdc(emb, "vec_id", "embedding",
-      Seq(20L), m = 8, k = 16, topK = 5).collect()
+    val out = pqAdc(emb, Seq(20L), m = 8, k = 16, topK = 5).collect()
     assert(out.head.getAs[Long]("nn_id") === 99L, "twin must rank first")
     // and everything else's ADC >= the twin's
     assert(out.forall(_.getAs[Double]("adc_dist") >= out.head.getAs[Double]("adc_dist")))
@@ -215,8 +227,8 @@ class SketchScd2Spec extends SparkSpec {
 
   test("pqAdc is deterministic and returns topK per query") {
     val emb = sources.Tables.embeddings(spark, sfDir)
-    val a = graft.ann.Ann.pqAdc(emb, "vec_id", "embedding", Seq(0L, 1L)).collect().toSeq
-    val b = graft.ann.Ann.pqAdc(emb, "vec_id", "embedding", Seq(0L, 1L)).collect().toSeq
+    val a = pqAdc(emb, Seq(0L, 1L)).collect().toSeq
+    val b = pqAdc(emb, Seq(0L, 1L)).collect().toSeq
     assert(a === b)
     assert(a.count(_.getAs[Long]("query_id") == 0L) === 10)
   }
@@ -226,8 +238,7 @@ class SketchScd2Spec extends SparkSpec {
     // built once per corpus); the search result must be bit-identical
     // to the self-contained build
     val emb = sources.Tables.embeddings(spark, sfDir)
-    val direct = graft.ann.Ann.pqAdc(emb, "vec_id", "embedding",
-      Seq(0L, 1L, 2L)).collect().toSeq
+    val direct = pqAdc(emb, Seq(0L, 1L, 2L)).collect().toSeq
     val cached = graft.ann.Ann.pqAdcFromIndex(emb, "vec_id", "embedding",
       graft.ann.CellIndexCache.rawPqCodebook(spark, sfDir),
       graft.ann.CellIndexCache.rawPqCodes(spark, sfDir),
@@ -244,7 +255,8 @@ class SketchScd2Spec extends SparkSpec {
     val h = ph.map(r => r.getAs[Long]("c0") :: r.getAs[Long]("c1") ::
       r.getAs[Long]("c2") :: r.getAs[Long]("c3") :: Nil)
     assert(h(0) === h(1), "identical payloads must hash identically")
-    val pairs = Binary.perceptualHashPairs(docs, "doc_id", "text", maxHam = 3).collect()
+    val pairs = Binary.phashCandidates(Binary.perceptualHash(docs, "doc_id", "text"), "doc_id")
+      .filter(col("hamming") <= 3).collect()
     assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L
       && r.getAs[Long]("hamming") == 0L))
   }
@@ -268,7 +280,7 @@ class SketchScd2Spec extends SparkSpec {
         bit_count(col("a3").bitwiseXOR(col("b3"))))
       .filter(col("hamming") <= 3)
       .select("id_a", "id_b", "hamming")
-    val pigeon = Binary.perceptualHashPairs(docs, "doc_id", "text", maxHam = 3)
+    val pigeon = Binary.phashCandidates(ph, "doc_id").filter(col("hamming") <= 3)
     assert(pigeon.exceptAll(brute).isEmpty && brute.exceptAll(pigeon).isEmpty)
   }
 
@@ -288,5 +300,62 @@ class SketchScd2Spec extends SparkSpec {
       countDistinct($"user_id"), approx_count_distinct($"user_id", 0.01))
       .as[(Long, Long)].head()
     assert(math.abs(approx - exact).toDouble / exact <= 0.05)
+  }
+
+  // ---- m5 hot-bucket sharding --------------------------------------------
+
+  // synthetic fingerprint table with a PLANTED hot bucket: 30 of 50 docs
+  // share c0 = 0 (the degenerate flat-frame chunk) while c1..c3 vary;
+  // the rest are spread. Deterministic arithmetic, no RNG.
+  private def plantedFp = (0L until 50L).map { i =>
+    val hot = i < 30
+    (i,
+      if (hot) 0L else (i * 7919L) % 65536L,
+      (i * 104729L) % 65536L,
+      (i * 1299709L) % 65536L,
+      (i * 15485863L) % 65536L)
+  }.toDF("doc_id", "c0", "c1", "c2", "c3")
+
+  private def pairSet(hotThreshold: Int, subBlocks: Int = 4): Set[(Long, Long, Long)] =
+    Binary.phashCandidates(plantedFp, "doc_id", hotThreshold, subBlocks)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("phashCandidates: sub-block sharding preserves the exact pair set") {
+    val unsharded = pairSet(Int.MaxValue)
+    // planted bucket (30 rows) crosses a threshold of 10 -> hot arm fires
+    assert(pairSet(10) === unsharded)
+    // every bucket forced hot -> still the same set
+    assert(pairSet(0) === unsharded)
+    // and the hot arm really does find the planted bucket's pairs: all
+    // 30×29/2 c0-bucket pairs are candidates
+    val hotIds = (0L until 30L).toSet
+    val inHot = unsharded.count { case (a, b, _) => hotIds(a) && hotIds(b) }
+    assert(inHot === 30 * 29 / 2)
+  }
+
+  test("phashCandidates: sub-block count does not change results") {
+    val base = pairSet(10, subBlocks = 4)
+    assert(pairSet(10, subBlocks = 2) === base)
+    assert(pairSet(10, subBlocks = 8) === base)
+  }
+
+  test("perceptualHashIndex is unchanged by forced sharding") {
+    // end-to-end through the real text path: the m5 report must be
+    // bit-identical whether its candidate join sharded or not
+    val docs = (1L to 30L).map(i =>
+      (i, (1 to 80).map(j => ('a' + (i * 31 + j * 7) % 26).toChar).mkString))
+      .toDF("doc_id", "text")
+    val out = Binary.perceptualHashIndex(docs, "doc_id", "text")
+      .orderBy("doc_id").collect().toSeq
+    // the default threshold (1024) never fires at 30 docs, so `out` is
+    // the unsharded report; compare the candidate core under forced
+    // sharding instead
+    val ph = Binary.perceptualHash(docs, "doc_id", "text")
+    val sharded = Binary.phashCandidates(ph, "doc_id", 0, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val plain = Binary.phashCandidates(ph, "doc_id", Int.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(sharded === plain)
+    assert(out.nonEmpty)
   }
 }

@@ -121,7 +121,8 @@ class SketchSetOpsSpec extends SparkSpec {
       (2L, "common x2"), (3L, "common x3"), (4L, "common x4"))
       .toDF("doc_id", "text")
     val out = graft.operators.Pipeline
-      .tfidfTopTerms(docs, "doc_id", "text", 2)
+      .tfidfTopTermsFrom(graft.operators.Pipeline.docWordTable(docs, "doc_id", "text"),
+        docs, "doc_id", 2)
       .filter($"doc_id" === 1L)
       .select($"rank", $"term", $"score").as[(Int, String, Long)]
       .collect().toList
@@ -136,8 +137,11 @@ class SketchSetOpsSpec extends SparkSpec {
       (2L, "a" * 64 + "c" * 10, "s1"),      // A again + 10-byte tail C
       (3L, "d" * 64, "s2"))
       .toDF("doc_id", "text", "source")
+    val carry = Seq("source")
     val out = graft.multimodal.Binary
-      .casStats(docs, "doc_id", "text", "source", 64)
+      .casStatsFrom(graft.multimodal.Binary.chunked(
+        graft.multimodal.Binary.withPayload(docs, "doc_id", "text", carry),
+        "doc_id", 64, carry), "doc_id", "source")
       .select($"source", $"n_blobs", $"total_chunks", $"total_bytes",
         $"uniq_chunks", $"saved_bytes")
       .as[(String, Long, Long, Long, Long, Long)].collect().toList
@@ -153,5 +157,23 @@ class SketchSetOpsSpec extends SparkSpec {
       .collect().toList
     // gmax == gmin → bucket 0, est = gmin + (0+1)·0/buckets = gmin
     assert(out == List(("a", 5.0, 5.0), ("b", 5.0, 5.0)))
+  }
+
+  // ---- sketch merge on empty input (ADVICE r16) --------------------------
+
+  test("kmv/hll merged distinct on empty input: zz_union row, NULL rel_err") {
+    val empty = Seq.empty[(String, Long)].toDF("event_type", "user_id")
+    val kmv = graft.functions.Sketch
+      .kmvMergedDistinct(empty, "event_type", col("user_id"), k = 4).collect()
+    assert(kmv.length === 1 && kmv(0).getString(0) === "zz_union")
+    assert(kmv(0).getLong(kmv(0).fieldIndex("exact_distinct")) === 0L)
+    assert(kmv(0).isNullAt(kmv(0).fieldIndex("rel_err")),
+      "0/0 must surface as NULL, not NaN")
+    val hll = graft.functions.Sketch
+      .hllMergedDistinct(empty, "event_type", col("user_id")).collect()
+    // an empty register table yields no per-shard rows and no union row
+    // OR a guarded union row — either way no NaN may appear
+    hll.foreach(r => assert(r.isNullAt(r.fieldIndex("rel_err")) ||
+      !r.getDouble(r.fieldIndex("rel_err")).isNaN))
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.xbean.asm9.{ClassReader, ClassVisitor, Handle, MethodVisitor, Opcodes, Type}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Source-tree gates that keep removed structure from growing back:
   * one session builder and one session width, a fixed set of mains,
-  * single-partition windows only behind util/BoundedWindows, and one
-  * table writer. Plus the
-  * session policy that builder holds, checked on a live session. */
+  * single-partition windows only behind util/BoundedWindows, one table
+  * writer, and no public method of a graft object that src/main never
+  * calls. Plus the session policy that builder holds, checked on a
+  * live session. */
 class SourceGateSpec extends SparkSpec {
 
   private val root = Paths.get("src/main/scala")
@@ -48,6 +51,82 @@ class SourceGateSpec extends SparkSpec {
     Seq("saveAsTable(", "insertInto(", "bucketBy(").foreach { call =>
       assert(filesContaining(call).subsetOf(Set("graft/sources/IndexStore.scala")), call)
     }
+  }
+
+  /** The methods of a graft object that src/main is allowed not to
+    * call, each with the reason it stays. */
+  private val unreachedAllowed: Map[String, String] = Map(
+    "SparkEntry.entry(SparkSession)" -> "the driver's entry contract",
+    "Metrics.registerSource(SparkSession)" -> "the reference's /metrics API",
+    "Metrics.snapshot()" -> "the reference's /metrics API",
+    "SessionCache.clearAll()" -> "test reset of the private memo registry")
+
+  /** Public methods of graft objects (module classes `X$`) that no
+    * compiled main class calls, as `Object.method(ParamTypes)`. Callers
+    * are the method instructions and invokedynamic handles of every
+    * main class, so a colliding name or a string literal hides nothing;
+    * a companion's static forwarders are not callers. Skipped: names
+    * with `$`, constructors, `apply`/`unapply`, `main`, overrides. */
+  private lazy val unreachedObjectMethods: Set[String] = {
+    val classesDir =
+      Paths.get(SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val defined = mutable.Map.empty[(String, String, String), String]
+    val called = mutable.Set.empty[(String, String, String)]
+    val loader = getClass.getClassLoader
+    def isOverride(owner: String, name: String, desc: String): Boolean = {
+      val cls = Class.forName(owner.replace('/', '.'), false, loader)
+      def declares(c: Class[_]): Boolean = c != null && (
+        c.getDeclaredMethods.exists(m =>
+          m.getName == name && Type.getMethodDescriptor(m) == desc) ||
+          declares(c.getSuperclass) || c.getInterfaces.exists(declares))
+      declares(cls.getSuperclass) || cls.getInterfaces.exists(declares)
+    }
+    val walk = Files.walk(classesDir)
+    val classFiles =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".class")).toList
+      finally walk.close()
+    classFiles.foreach { f =>
+      new ClassReader(Files.readAllBytes(f)).accept(new ClassVisitor(Opcodes.ASM9) {
+        private var owner = ""
+        override def visit(v: Int, access: Int, name: String, sig: String,
+                           sup: String, ifs: Array[String]): Unit = owner = name
+        override def visitMethod(access: Int, name: String, desc: String, sig: String,
+                                 ex: Array[String]): MethodVisitor = {
+          val forwarder = (access & Opcodes.ACC_STATIC) != 0 && !owner.endsWith("$")
+          val publicOnly = Opcodes.ACC_PUBLIC | Opcodes.ACC_SYNTHETIC | Opcodes.ACC_BRIDGE
+          if (owner.startsWith("graft/") && owner.endsWith("$") &&
+              (access & publicOnly) == Opcodes.ACC_PUBLIC &&
+              !name.contains('$') && !name.startsWith("<") &&
+              !Set("apply", "unapply", "main").contains(name) && !isOverride(owner, name, desc)) {
+            val obj = owner.stripSuffix("$").split('/').last
+            val params = Type.getArgumentTypes(desc).map(_.getClassName.split('.').last)
+            defined((owner, name, desc)) = s"$obj.$name(${params.mkString(",")})"
+          }
+          new MethodVisitor(Opcodes.ASM9) {
+            private def ref(o: String, n: String, d: String): Unit =
+              if (!(forwarder && o == owner + "$" && n == name)) called += ((o, n, d))
+            private def handles(args: Seq[Any]): Unit = args.foreach {
+              case h: Handle => ref(h.getOwner, h.getName, h.getDesc)
+              case _ =>
+            }
+            override def visitMethodInsn(op: Int, o: String, n: String, d: String,
+                                         itf: Boolean): Unit = ref(o, n, d)
+            override def visitInvokeDynamicInsn(n: String, d: String, bsm: Handle,
+                                                args: Object*): Unit = handles(bsm +: args)
+            override def visitLdcInsn(v: Any): Unit = handles(Seq(v))
+          }
+        }
+      }, 0)
+    }
+    (defined -- called).values.toSet
+  }
+
+  test("every public method of a graft object has a src/main caller or an allow-listed reason") {
+    val extra = (unreachedObjectMethods -- unreachedAllowed.keySet).toSeq.sorted
+    val stale = (unreachedAllowed.keySet -- unreachedObjectMethods).toSeq.sorted
+    if (extra.nonEmpty || stale.nonEmpty)
+      fail(s"no src/main caller: ${extra.mkString(", ")}; " +
+        s"allow-listed but called from src/main: ${stale.mkString(", ")}")
   }
 
   test("Session.local carries the session policy") {

@@ -22,8 +22,10 @@ abstract class SparkSpec extends AnyFunSuite {
     * temp dir call it when done; otherwise every run leaves a new set
     * of tables in the warehouse. Clear the memos first. */
   def dropIndexTables(dir: String): Unit = {
-    graft.sources.IndexStore.dropRegistrations(spark, dir)
     val prefix = graft.sources.IndexStore.tableName(dir, "")
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase, prefix + "*")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.table}`"))
     val wh = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").replaceFirst("^file:", ""))
     Option(wh.listFiles).toSeq.flatten.filter(_.getName.startsWith(prefix))

@@ -88,4 +88,50 @@ class TemporalSpec extends SparkSpec {
       .select("user_id", "event_id").as[(Long, Long)].collect().toSet
     assert(recon == direct && recon.nonEmpty)
   }
+
+  // ---- t8/t10 two-phase changesBetween -----------------------------------
+
+  test("changesBetween two-phase == one-pass max_by on adversarial keys") {
+    import graft.temporal.Temporal
+    // keys exercising every edge: created-after-from (NULL __ma),
+    // unchanged (filtered out), tie on ts broken by the tie column,
+    // a key whose latest row is BEFORE `from` (__ma == __mb), and a
+    // key deleted... (append-only: no deletes — absent-at-from only)
+    val df = Seq(
+      (1L, "2025-01-05 00:00:00", 10L, "a", 1L),  // before from
+      (1L, "2025-01-20 00:00:00", 11L, "b", 2L),  // between
+      (2L, "2025-01-20 00:00:00", 20L, "c", 3L),  // created after from
+      (3L, "2025-01-02 00:00:00", 30L, "d", 4L),  // latest before from
+      (4L, "2025-01-05 00:00:00", 40L, "e", 5L),  // tie on ts at from side
+      (4L, "2025-01-05 00:00:00", 41L, "f", 6L),
+      (4L, "2025-01-25 00:00:00", 42L, "g", 7L),
+      (5L, "2025-03-01 00:00:00", 50L, "h", 8L))  // after to: invisible
+      .toDF("user_id", "tss", "event_id", "event_type", "value")
+      .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
+    val from = lit("2025-01-10 00:00:00").cast("timestamp")
+    val to = lit("2025-02-10 00:00:00").cast("timestamp")
+    val fields = Seq("event_type", "value")
+    val now = Temporal.changesBetween(df, "user_id", "ts", "event_id",
+      from, to, fields).orderBy("user_id").collect().map(_.toSeq).toSeq
+    // the r17 one-pass reference
+    val payload = struct(fields.map(col): _*)
+    val ord = struct(col("ts"), col("event_id"))
+    val agged = df.filter(col("ts") <= to)
+      .groupBy(col("user_id"))
+      .agg(max_by(payload, when(col("ts") <= from, ord)).as("__a"),
+        max_by(payload, ord).as("__b"))
+    val changed = fields.map { f =>
+      when(not(col(s"__a.$f") <=> col(s"__b.$f")), lit(f))
+    }
+    val ref = agged.select(
+        col("user_id") +:
+          (fields.map(f => col(s"__a.$f").as(s"${f}_from")) ++
+           fields.map(f => col(s"__b.$f").as(s"${f}_to")) :+
+           concat_ws(",", array(changed: _*)).as("changed_fields")): _*)
+      .filter(col("changed_fields") =!= "")
+      .orderBy("user_id").collect().map(_.toSeq).toSeq
+    assert(now === ref)
+    // the edges really occur: user 2 (created) and user 4 (tie) report
+    assert(now.map(_.head).toSet === Set(1L, 2L, 4L))
+  }
 }
