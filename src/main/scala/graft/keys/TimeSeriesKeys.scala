@@ -105,7 +105,7 @@ object TimeSeriesKeys {
       val purchases = e.filter(col("event_type") === "purchase").drop("event_type")
       val clicks = e.filter(col("event_type") === "click").drop("event_type")
       // native AsOfJoinExec (spec-checked identical to the brute-force
-      // inequality join with max_by)
+      // inequality join with max_by and to the union+window composition)
       graft.plans.AsOfJoinDsl.asof(purchases, clicks, "user_id", "ts", "event_id")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           unix_micros(col("ts")).as("purchase_ts_us"),

@@ -23,8 +23,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * the union and never re-sorts the left side for output (left
   * ordering/partitioning are preserved for downstream reuse).
   *
-  * The spec checks it against the brute-force inequality join with
-  * max_by. Right-side columns must be pre-renamed to avoid collisions
+  * The specs check it against the brute-force inequality join with
+  * max_by and against the union + window composition. Right-side columns must be pre-renamed to avoid collisions
   * (AsOfJoinDsl handles it).
   */
 case class AsOfJoinPlan(

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.plans.AsOfJoinDsl
 import graft.sources.Tables
 
-/** The native AsOfJoinExec must agree with a brute-force inequality
-  * join on real data, and its plan must be the custom exec with one
-  * exchange per side. */
+/** The native AsOfJoinExec must agree with the composed union+window
+  * formulation (References.asOfJoin) on real data, and its plan must be
+  * the custom exec with one exchange per side. TimeSeriesSpec checks it
+  * against a brute-force inequality join. */
 class AsOfJoinExecSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,19 +17,16 @@ class AsOfJoinExecSpec extends SparkSpec {
       e.filter($"event_type" === "click").drop("event_type"))
   }
 
-  test("native as-of join matches the brute-force inequality join with max_by") {
+  test("native as-of join matches the union+window composition") {
     val (p, c) = purchasesAndClicks
     val native = AsOfJoinDsl.asof(p, c, "user_id", "ts", "event_id")
       .select($"event_id", $"right_event_id")
       .as[(Long, Option[Long])].collect().toMap
-    val brute = p.as("p").join(c.as("c"),
-        $"p.user_id" === $"c.user_id" && $"c.ts" <= $"p.ts", "left")
-      .groupBy($"p.event_id".as("pid"))
-      .agg(max_by($"c.event_id", struct($"c.ts", $"c.event_id")).as("cid"))
+    val composed = References.asOfJoin(p, c, "user_id", "ts", "event_id", Seq("event_id"))
+      .select($"event_id", $"right_event_id")
       .as[(Long, Option[Long])].collect().toMap
     assert(native.nonEmpty)
-    // the left join keeps a purchase with no earlier click as None
-    assert(native == brute)
+    assert(native == composed)
   }
 
   test("plan contains AsOfJoinExec and at most one exchange per side") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
@@ -74,6 +75,37 @@ object References {
       .select("id_a", "id_b")
     graft.dedup.Dedup.connectedComponents(docs.select(col(id)), pairs, id)
       .orderBy(id)
+  }
+
+  /** As-of join composed from stock operators: for each left row, the
+    * latest right row with the same key and `rightTs <= leftTs`, as
+    * union + time-ordered last(ignoreNulls) over one window on `key`.
+    * The native AsOfJoinExec is checked against it.
+    *
+    * `left`/`right` must share (key, ts, tie) columns; `carry` names the
+    * right-side columns to attach to each left row as `right_<c>`.
+    */
+  def asOfJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
+               tie: String, carry: Seq[String]): DataFrame = {
+    val lCols = left.columns
+    val tagged =
+      left.withColumn("__side", lit(1))
+        .select((lCols.map(col) :+ col("__side")) ++
+          carry.map(c => lit(null).cast(right.schema(c).dataType).as(s"__r_$c")): _*)
+      .unionByName(
+        right.withColumn("__side", lit(0))
+          .select((lCols.map(c => if (right.columns.contains(c)) col(c)
+                                  else lit(null).cast(left.schema(c).dataType).as(c)) :+
+            col("__side")) ++ carry.map(c => col(c).as(s"__r_$c")): _*))
+    // right rows sort before left rows at equal (ts, tie) so an exact
+    // timestamp match is visible to the left row (ASOF `<=` semantics).
+    val w = Window.partitionBy(col(key)).orderBy(col(ts), col("__side"), col(tie))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val filled = carry.foldLeft(tagged) { (d, c) =>
+      d.withColumn(s"__last_$c", last(col(s"__r_$c"), ignoreNulls = true).over(w))
+    }
+    filled.filter(col("__side") === 1)
+      .select(lCols.map(col) ++ carry.map(c => col(s"__last_$c").as(s"right_$c")): _*)
   }
 
   /** Build and write every standard artifact of `dir`'s corpus,

@@ -2,10 +2,32 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.TimeSeries
+import graft.plans.AsOfJoinDsl
 import graft.sources.Tables
 
 class TimeSeriesSpec extends SparkSpec {
   import spark.implicits._
+
+  test("asOfJoin matches a brute-force per-row maximum") {
+    val e = Tables.events(spark, sfDir).select("user_id", "ts", "event_id", "event_type")
+    val p = e.filter($"event_type" === "purchase").drop("event_type")
+    val c = e.filter($"event_type" === "click").drop("event_type")
+
+    val got = AsOfJoinDsl.asof(p, c, "user_id", "ts", "event_id")
+      .select($"event_id", $"right_event_id")
+      .as[(Long, Option[Long])].collect().toMap
+
+    // brute force: inequality join + max_by
+    val brute = p.as("p").join(c.as("c"),
+        $"p.user_id" === $"c.user_id" && $"c.ts" <= $"p.ts", "left")
+      .groupBy($"p.event_id".as("pid"))
+      .agg(max_by($"c.event_id", struct($"c.ts", $"c.event_id")).as("cid"))
+      .as[(Long, Option[Long])].collect().toMap
+
+    assert(got.nonEmpty)
+    // brute's left join keeps unmatched with None; the as-of join too
+    assert(got == brute)
+  }
 
   test("sessionize splits on gaps greater than the threshold") {
     val df = Seq(
