@@ -24,8 +24,9 @@ object Bench {
     // a2_... times a subset (driver contract unchanged when unset).
     val names = SparkEntry.selectKeys(sys.env.get("GRAFT_BENCH_ONLY"))
     val subsetRun = names.size < SparkEntry.keys.size
+    val mediansRun = reps >= 3 && !subsetRun
     val outFile =
-      if (reps >= 3 && !subsetRun) requestedOut.getOrElse("BENCH_MEDIANS.json")
+      if (mediansRun) requestedOut.getOrElse("BENCH_MEDIANS.json")
       else requestedOut match {
         case Some(p) if !p.toUpperCase(java.util.Locale.ROOT).contains("MEDIANS") => p
         case other =>
@@ -168,6 +169,9 @@ object Bench {
           .mkString("{", ",", "}")
         s""","value_median_of_runs":${resultsMed.map(_._2).sum},"queries_median_of_runs":$mqs"""
       }
+    // outFile is user-controlled (GRAFT_BENCH_OUT): escape backslashes
+    // and quotes so a path containing either can't corrupt the JSON
+    val outEsc = outFile.replace("\\", "\\\\").replace("\"", "\\\"")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"runs":$runs,"queries":$qs$floorField$medianField,"sf":"$sfDir"}"""
     println(json)
@@ -175,23 +179,24 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
-    // durable per-run history: the driver's BENCH_r{N}.json keeps only
-    // a truncated stdout TAIL (the 116-query JSON line overflows it —
-    // r10's committed round file lost half its per-query map), and
-    // BENCH_LAST_RUN.json is overwritten by the next run. Appending
-    // each run here (committed with the round) makes every run's full
-    // structured record recoverable from git history.
-    // outFile is user-controlled (GRAFT_BENCH_OUT): escape backslashes
-    // and quotes so a path containing either can't corrupt the JSONL
-    val outEsc = outFile.replace("\\", "\\\\").replace("\"", "\\\"")
-    val histLine =
-      s"""{"at":"${java.time.Instant.now()}","out":"$outEsc",${json.drop(1)}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_HISTORY.jsonl"), histLine + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not append BENCH_HISTORY.jsonl: ${e.getMessage}")
+    // durable history of the noise-controlled runs: the driver's
+    // BENCH_r{N}.json keeps only a truncated stdout TAIL (the 116-query
+    // JSON line overflows it — r10's committed round file lost half its
+    // per-query map), and BENCH_LAST_RUN.json is overwritten by the
+    // next run. Appending each medians run here (committed with the
+    // round) makes its full structured record recoverable from git
+    // history; a single-rep or subset dev run appends nothing, so it
+    // never dirties the committed file that tools/bench_merge.py reads.
+    if (mediansRun) {
+      val histLine =
+        s"""{"at":"${java.time.Instant.now()}","out":"$outEsc",${json.drop(1)}"""
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("BENCH_HISTORY.jsonl"), histLine + "\n",
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+      catch { case e: Exception =>
+        System.err.println(s"[bench] could not append BENCH_HISTORY.jsonl: ${e.getMessage}")
+      }
     }
     // The driver's BENCH_r{N}.json stores only a 2000-char stdout TAIL,
     // and sbt appends its own "[success] ..." trailer after our output,
@@ -200,7 +205,8 @@ object Bench {
     // self-contained line LAST: query keys shortened to their unique
     // leading token ("ts23_rank_suite" -> "ts23"), seconds at 3 dp —
     // ~1.7 KB, fits the tail with the trailer. The full-name map stays
-    // above, in the out file, and in BENCH_HISTORY.jsonl.
+    // above and in the out file (and BENCH_HISTORY.jsonl on a medians
+    // run).
     // Locale.ROOT: the f-interpolator honors the default locale, and a
     // comma decimal separator would corrupt the JSON
     def r3(d: Double): String =
@@ -215,7 +221,7 @@ object Bench {
     val compactFloor =
       if (streamQs == 0 || floor < 0) ""
       else s""","stream_drain_floor_s":${r3(floor)},"total_ex_drain_floor":${r3(total - floor * streamQs)}"""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"runs":$runs,"n_queries":${results.length},"keys":"query-name prefixes; full map in BENCH_HISTORY.jsonl","queries":$compactQs$compactFloor,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"runs":$runs,"n_queries":${results.length},"keys":"query-name prefixes; full map in $outEsc","queries":$compactQs$compactFloor,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

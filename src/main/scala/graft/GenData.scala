@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** sf1 data generator: scales the driver's sf0.1 tables 10× with the
   * same schemas, key relationships and value distributions, so the
-  * CORRECTNESS / BENCH / ScaleProbe suites can run one decade above the
+  * CORRECTNESS / BENCH suites can run one decade above the
   * largest driver-provided scale (TESTDATA.md stops at sf0.1; the
   * testdata tree is read-only, so the output lives in the repo and is
   * gitignored).

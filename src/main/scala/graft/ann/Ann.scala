@@ -1284,7 +1284,7 @@ object Ann {
     *
     * In-cell pair work: ~n·targetCellSize·probeCells = LINEAR in the
     * corpus (the fixed-10-cell form measured 18× wall for 10× data;
-    * ScaleProbe's embeddings_8x leg measures this one). `ix` is built
+    * SCALE_r*.json's embeddings_8x legs measured this one). `ix` is built
     * once per corpus and usually persisted and shared
     * ([[CellIndexCache.embeddings]]), so the d5/d8/a3/a4 family pays
     * the anchor assignment once, not once per query. */

@@ -175,7 +175,7 @@ object Dedup {
     * almost nothing while paying an extra dedup + verify pass
     * (measured 2.4× slower at sf0.1); Zipf-ish boilerplate → the top
     * shingles carry most of Σdf² and the prefix excises them
-    * (ScaleProbe's hot-shingle leg measures the win). Note the prefix
+    * (SCALE_r*.json's hot_shingle legs measured the win). Note the prefix
     * plan's leverage also grows with tau (prefix fraction ≈ 1−tau):
     * at high thresholds it indexes only the rare tail of each doc; at
     * tau ≈ 0.1 it indexes ~90% of every doc and candidate volume

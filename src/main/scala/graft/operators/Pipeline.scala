@@ -427,7 +427,7 @@ object Pipeline {
     * bigram (`min(w|ah) ⊔ ' ' ⊔ min(w|th)` == the old per-group
     * min(bigram) — each 60-bit word hash names one word, the same
     * no-collision granularity the (bgh, ah, th) keying is already
-    * built on; X28Probe + BigramSurprisalSpec pin bit-equality with the
+    * built on; BigramSurprisalSpec pins bit-equality with the
     * payload-carrying form). A 60-bit word-hash collision therefore
     * does not only merge counts: the display string pairs the smaller
     * word of each colliding hash, so it can show a bigram that never
@@ -436,8 +436,8 @@ object Pipeline {
     * the hapax tail (the classic PMI degenerate: two words seen once,
     * together — perfect PMI, zero evidence) before the joins, so the
     * joined volume is the frequent-bigram table, not the bigram
-    * vocabulary. Measured sf1: 2.23 → 0.92s (X28Probe, reps=5
-    * interleaved medians). */
+    * vocabulary. Measured sf1: 2.23 → 0.92s (OPTIMIZATION_r18 §10,
+    * reps=5 interleaved medians). */
   def pmiCollocations(docs: DataFrame, docWord: DataFrame,
                       id: String, text: String,
                       minCount: Int, k: Int): DataFrame = {

@@ -33,6 +33,10 @@ object Streams {
     graft.sources.Tables.withEventTs(raw)
   }
 
+  /** Exact event count from the parquet footers — no job. */
+  private def eventRows(spark: SparkSession, sfDir: String): Long =
+    graft.sources.ParquetStats.rowCount(spark, s"$sfDir/events.parquet")
+
   /** State-store partition count for a drain: a stateful streaming agg
     * materializes one state store per shuffle partition per stateful
     * operator — setup cost is pure overhead when state is small, but
@@ -58,28 +62,14 @@ object Streams {
     * queries (measured: ~0.3-0.9s saved per drain at sf0.1). The
     * shuffle-partition count is (re)set immediately before each drain
     * is planned — drains are sequential in the harness; a production
-    * deployment gives each long-lived stream its own session. */
-  private val sharedDrain =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+    * deployment gives each long-lived stream its own session. The memo
+    * is a [[graft.util.SessionCache]], so `SessionCache.clearAll()`
+    * forgets it with every other memo. */
+  private val sharedDrain = new graft.util.SessionCache[SparkSession, SparkSession](
+    s => !s.sparkContext.isStopped, _ => ())
   private def drainSession(spark: SparkSession, stateRows: Long): SparkSession = {
-    val s = sharedDrain.computeIfAbsent(spark, p => p.newSession())
+    val s = sharedDrain.getOrBuild(spark)(spark.newSession())
     s.conf.set("spark.sql.shuffle.partitions", sizedParts(stateRows).toString)
-    // state-store backend: GRAFT_STATE_STORE=rocksdb swaps the
-    // default in-heap HDFSBackedStateStoreProvider for RocksDB — the
-    // right backend for the O(keys) state families (sessionization,
-    // dedup) whose state outgrows executor memory at scale; the
-    // default stays in-heap because the harness's states are small
-    // and RocksDB pays a per-batch native-store open/commit cost.
-    // Set EXPLICITLY both ways (the drain session is shared): a test
-    // flipping the property must not leak into later drains.
-    val provider = sys.props.get("GRAFT_STATE_STORE")
-      .orElse(sys.env.get("GRAFT_STATE_STORE")) match {
-      case Some(v) if v.equalsIgnoreCase("rocksdb") =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case _ =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    }
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     // a drain has nothing to do in a no-data cycle: none of the drained
     // operators gate EMISSION on the watermark (complete-mode aggs and
     // the inner interval join emit in the data batch; the watermark
@@ -90,44 +80,22 @@ object Streams {
     s
   }
 
-  /** Exact row count from the parquet footers — one cheap metadata-only
-    * job at drain-construction time (the streaming twin of ts4's
-    * adaptive hot-key probe: spend one small job to pick the plan). */
-  private def sourceRows(spark: SparkSession, sfDir: String): Long =
-    spark.read.parquet(s"$sfDir/events.parquet").count()
-
-  /** Checkpoint policy: GRAFT_CHECKPOINT_DIR (env, or system property
-    * for in-process tests) makes checkpoints DURABLE — a stable
-    * per-query path under the given dir (object store/NFS in a
-    * deployment), never deleted, so a restarted drain RESUMES from
-    * its offsets + state instead of reprocessing
-    * (CheckpointResumeSpec pins this). Unset, the harness default: a
-    * RAM-backed throwaway path — the drain's offset/commit/state
-    * fsyncs are a measurable slice of each micro-batch and the
-    * bench's state is rebuilt per drain anyway. Note the memory-sink
-    * caveat under durable resume: a resumed AvailableNow drain with
-    * NO new source data runs zero batches, so the fresh in-memory
-    * sink table stays empty — durable checkpoints pair with durable
-    * sinks in production. */
-  private[graft] def checkpointConf: (String, Boolean) =
-    sys.props.get("GRAFT_CHECKPOINT_DIR")
-      .orElse(sys.env.get("GRAFT_CHECKPOINT_DIR")) match {
-      case Some(d) if d.nonEmpty => (d, true)
-      case _ =>
-        (Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
-          .find(p => new java.io.File(p).canWrite).get + "/graft_ckpt", false)
-    }
+  /** Each drain checkpoints to a throwaway RAM-backed path (unique per
+    * drain, deleted when it ends) and keeps its state in Spark's default
+    * in-heap `HDFSBackedStateStoreProvider`: the drain's
+    * offset/commit/state fsyncs are a measurable slice of each
+    * micro-batch and every drain rebuilds its state from the source
+    * anyway. */
+  private val checkpointBase: String =
+    Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+      .find(p => new java.io.File(p).canWrite).get + "/graft_ckpt"
 
   private def drainToTable(spark: SparkSession, agg: DataFrame, name: String,
                            mode: String = "complete"): DataFrame = {
     // the drain session owns the started query — guard there, not on
     // the parent session's StreamingQueryManager
     agg.sparkSession.streams.active.filter(_.name == name).foreach(_.stop())
-    val (base, durable) = checkpointConf
-    // durable: STABLE path (resume requires the restarted query to
-    // find its old checkpoint); throwaway: unique path per drain
-    val ckpt =
-      if (durable) s"$base/$name" else s"$base/$name-${System.nanoTime()}"
+    val ckpt = s"$checkpointBase/$name-${System.nanoTime()}"
     // AvailableNow: plan all current data, run it, terminate — the
     // query stops itself, so the drain pays no explicit stop() joining
     // a trigger thread that would otherwise idle out a poll interval
@@ -138,8 +106,7 @@ object Streams {
     try {
       q.awaitTermination()
     } finally {
-      if (!durable)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
     agg.sparkSession.table(name)
   }
@@ -274,7 +241,7 @@ object Streams {
   def sessionizeStream(spark: SparkSession, sfDir: String, gap: String): DataFrame = {
     // session state is O(sessions) = O(input keys x activity) — the one
     // drain whose state grows with the corpus; size parts to it
-    val agg = eventStream(drainSession(spark, sourceRows(spark, sfDir)), sfDir)
+    val agg = eventStream(drainSession(spark, eventRows(spark, sfDir)), sfDir)
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -301,7 +268,7 @@ object Streams {
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     // state = O(distinct keys in the horizon) ≤ source rows; size
     // parts to the key cardinality, like ts12 sizes to sessions
-    val deduped = eventStream(drainSession(spark, sourceRows(spark, sfDir) / 2), sfDir)
+    val deduped = eventStream(drainSession(spark, eventRows(spark, sfDir) / 2), sfDir)
       .withWatermark("ts", "1 day")
       .select(col("ts"), col("user_id"), col("event_type"),
         to_date(col("ts")).as("day"))

@@ -256,7 +256,8 @@ class TemporalVault(
     * (`_op`=D) for records that did not exist at `at` or were deleted
     * there (an at-state that is itself a tombstone) — stamped
     * `rollbackTs`, plus the audit entry, which keeps both strings as
-    * given. History between `at` and the rollback stays queryable. */
+    * given. Returns that one audit row. History between `at` and the
+    * rollback stays queryable. */
   def rollback(at: String, rollbackTs: String): DataFrame =
       graft.Metrics.timedCall(spark, "vault.rollback") {
     val (atM, stampM) = (micros(at), micros(rollbackTs))
@@ -275,22 +276,22 @@ class TemporalVault(
         payloadCols.map(col) :+
         when(col("action") === "DELETE" || col(Op) === "D", lit("D"))
           .otherwise(lit("R")).as(Op): _*)
-    writeLog(compensation)
     // exact affected count + a BOUNDED id sample (k smallest): the
     // reference serializes every id into one JSON row (app/main.py:178),
     // which at 100 TB would make the audit row itself a straggler/OOM —
     // CollectMinK keeps every aggregation buffer ≤ AuditSampleK
-    val audit = rset.agg(
-        count(lit(1)).as("affected_records"),
+    val agg = rset.agg(
+        count(lit(1)),
         concat_ws(",",
-          graft.dedup.Dedup.collectMinK(col(key).cast("string"), AuditSampleK))
-          .as("record_ids"))
-      .withColumn("rollback_to", lit(at))
-      .withColumn("rollback_ts", lit(rollbackTs))
+          graft.dedup.Dedup.collectMinK(col(key).cast("string"), AuditSampleK)))
+      .head()
+    val audit = spark.createDataFrame(java.util.Collections.singletonList(
+      Row(agg.getLong(0), agg.getString(1), at, rollbackTs)), AuditSchema)
+    writeLog(compensation)
     audit.write.mode(SaveMode.Append).parquet(rbDir)
     invalidateCache()
     invalidateSince(stampM)
-    spark.read.parquet(rbDir).filter(col("rollback_ts") === rollbackTs)
+    audit
   }
 
   /** Rollback audit log, newest rollback instant first

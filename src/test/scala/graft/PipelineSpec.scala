@@ -7,8 +7,9 @@ import graft.functions.Text
 import graft.operators.Pipeline
 import graft.sources.Tables
 
-/** Round-4 training-data pipeline operators: sequence packing,
-  * survivorship dedup, benchmark decontamination. */
+/** Training-data pipeline operators: sequence packing, survivorship
+  * dedup, benchmark decontamination and its per-source report, hash
+  * sampling, blocklist and CCNet filters, quality and dup drift. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -337,5 +338,200 @@ class PipelineSpec extends SparkSpec {
     assert(bySrc.keySet === Set("web", "books", "solo"))
     // NULL text stays counted: web has ids 0,2,4,20,40 -> n_docs 5
     assert(bySrc("web").getLong(1) === 5L)
+  }
+
+  test("x6: hash sampling is deterministic and monotone under rate changes") {
+    val docs = Tables.documents(spark, sfDir)
+    def sampled(rate: Int) = docs
+      .filter(graft.functions.Text.hashBucket($"doc_id", 100) < rate)
+      .select("doc_id").as[Long].collect().toSet
+    val s15a = sampled(15)
+    val s15b = sampled(15)
+    val s40 = sampled(40)
+    assert(s15a == s15b)            // reproducible
+    assert(s15a.subsetOf(s40))      // tightening a rate never resamples
+    val n = docs.count().toDouble
+    assert(math.abs(s40.size / n - 0.40) < 0.15) // quota roughly honored
+  }
+
+  // ---- x13 blocklistFilter -----------------------------------------------
+
+  test("blocklistFilter: density threshold, not any-hit") {
+    val docs = Seq(
+      // 10 words, 1 hit → 1·20 > 10 → flagged
+      (1L, "s1", "bad w1 w2 w3 w4 w5 w6 w7 w8 w9"),
+      // 10 words, 0 hits → kept
+      (2L, "s1", "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"),
+      // 21 words, 1 hit → 20 > 21 is false → kept despite the hit
+      (3L, "s2", "bad " + (1 to 20).map(i => s"u$i").mkString(" "))
+    ).toDF("doc_id", "source", "text")
+    val out = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
+        Seq("bad", "worse"), 20)
+      .select($"source", $"n_docs", $"total_hits", $"n_flagged", $"n_kept")
+      .as[(String, Long, Long, Long, Long)].collect().toList
+    assert(out == List(("s1", 2L, 1L, 1L, 1L), ("s2", 1L, 1L, 0L, 1L)))
+  }
+
+  test("blocklistFilter: first_flagged is the min flagged id; rate is exact") {
+    val docs = Seq(
+      (9L, "s", "bad bad w1 w2"), (4L, "s", "bad bad w1 w2"),
+      (5L, "s", "w1 w2 w3 w4")
+    ).toDF("doc_id", "source", "text")
+    val row = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
+        Seq("bad"), 20)
+      .select($"first_flagged", $"flagged_rate")
+      .as[(Long, Double)].collect().head
+    assert(row == ((4L, 0.666667)))
+  }
+
+  // ---- x14 ccnetBuckets --------------------------------------------------
+
+  test("ccnetBuckets: partitions each language; bucket means monotone") {
+    val docs = Tables.documents(spark, sfDir)
+    val out = Pipeline.ccnetBucketsFrom(
+        Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", "lang", 3)
+      .select($"lang", $"bucket", $"n_docs", $"bucket_avg_bits")
+      .as[(String, Int, Long, Double)].collect().toList
+    val perLang = out.groupBy(_._1)
+    val docTotal = Tables.documents(spark, sfDir).count()
+    assert(out.map(_._3).sum == docTotal)
+    perLang.foreach { case (_, rows) =>
+      val sorted = rows.sortBy(_._2)
+      assert(sorted.map(_._2) == (1 to sorted.length).toList)
+      // ntile sizes differ by at most one
+      assert(sorted.map(_._3).max - sorted.map(_._3).min <= 1)
+      // consecutive blocks of a ratio-sorted sequence: non-decreasing
+      // (weighted) means — head buckets are the most-predictable docs
+      assert(sorted.map(_._4) == sorted.map(_._4).sorted)
+    }
+  }
+
+  test("ccnetBuckets: deterministic across recomputation") {
+    def buckets() = {
+      val docs = Tables.documents(spark, sfDir)
+      Pipeline.ccnetBucketsFrom(Pipeline.docWordTable(docs, "doc_id", "text"),
+        docs, "doc_id", "lang", 3).collect().toList
+    }
+    val a = buckets()
+    val b = buckets()
+    assert(a == b)
+  }
+
+  // ---- x29 contamination report -----------------------------------------
+
+  test("contaminationReport: hand-derived per-source rollup") {
+    val docs = Seq(
+      // doc 0 is bench (id % 20 == 0); docs 1-2 share its 3 shingles
+      (0L, "src_a", "w1 w2 w3 w4 w5"),
+      (1L, "src_a", "w1 w2 w3 w4 w5"),          // contaminated, 5 toks
+      (2L, "src_b", "x w1 w2 w3 w4 w5"),        // contaminated, 6 toks
+      (3L, "src_b", "q r s t u v"),             // clean, 6 toks
+      (4L, "src_c", "a b c")                    // clean, 3 toks
+    ).toDF("doc_id", "source", "text")
+    val bench = pmod(col("doc_id"), lit(20)) === 0
+    val hits = Pipeline.decontaminate(docs, "doc_id", "text", 3, bench, 3)
+    val out = Pipeline.contaminationReport(
+        docs, "doc_id", "text", "source", bench, hits)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getDouble(5))).toList
+    assert(out == List(
+      ("src_a", 1L, 1L, 5L, 5L, 1.0),
+      ("src_b", 2L, 1L, 12L, 6L, 0.5),
+      ("src_c", 1L, 0L, 3L, 0L, 0.0)))
+  }
+
+  // ---- x30 quality drift -------------------------------------------------
+
+  // two sources, two docs each, quality hand-derived from the x2
+  // formula. Words chosen so every ratio is exact in 6 dp:
+  //   d0 "the a the a": n_words 4, n_distinct 2, stop 4, chars 11
+  //     q = .4*min(2/4*2,1) + .3*min(4/4*5,1) + .3*min((11/4)/8,1)
+  //       = .4*1 + .3*1 + .3*0.34375 = 0.803125 -> round6 0.803125
+  //   d1 "x y z w":        n_words 4, n_distinct 4, stop 0, chars 7
+  //     q = .4*1 + 0 + .3*((7/4)/8 = 0.21875) = 0.465625
+  //   d2 "the the the the": n_words 4, n_distinct 1, stop 4, chars 15
+  //     q = .4*min(.5,1)=.2 + .3 + .3*min(15/32,1)=0.140625 -> 0.640625
+  //   d3 "a b":             n_words 2, n_distinct 2, stop 1, chars 3
+  //     q = .4 + .3*min(.5*5,1)=.3 + .3*min((1.5)/8,1)=0.05625 -> 0.75625
+  private val docs = Seq(
+    (0L, "the a the a", "s1", 11L),
+    (1L, "x y z w", "s1", 7L),
+    (2L, "the the the the", "s2", 15L),
+    (3L, "a b", "s2", 3L)
+  ).toDF("doc_id", "text", "source", "n_chars")
+
+  // 6 events over two ISO weeks (2024-01-01 and 2024-01-08 are both
+  // Mondays); doc_id = event_id % 4
+  private val events = Seq(
+    (0L, "2024-01-01 10:00:00"), // wk1 -> d0 (s1)
+    (1L, "2024-01-02 10:00:00"), // wk1 -> d1 (s1)
+    (2L, "2024-01-03 10:00:00"), // wk1 -> d2 (s2)
+    (5L, "2024-01-09 10:00:00"), // wk2 -> d1 (s1)
+    (6L, "2024-01-10 10:00:00"), // wk2 -> d2 (s2)
+    (7L, "2024-01-11 10:00:00")  // wk2 -> d3 (s2)
+  ).toDF("event_id", "ts_s")
+    .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+
+  private def quality(df: org.apache.spark.sql.DataFrame) = {
+    val ws = graft.functions.Text.words(col("text"))
+    df.select(col("doc_id"), col("source"),
+      graft.functions.Text.qualityScore(size(ws), size(array_distinct(ws)),
+        graft.functions.Text.stopwordHits(ws, Seq("the", "a")),
+        col("n_chars")).as("quality"))
+  }
+
+  test("qualityDrift: hand-derived weekly means, baseline and drift flag") {
+    val out = Pipeline.qualityDrift(quality(docs), "doc_id", "source",
+        "quality", events, "event_id", "ts", 4L, threshMicro = 20000L)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getDouble(3), r.getDouble(4), r.getLong(5), r.getBoolean(6)))
+      .toList
+    // s1 wk1: (d0 .803125 + d1 .465625)/2 = 0.634375; wk2: d1 .465625
+    //   drift = .465625 - .634375 = -0.16875 -> -168750 micro, drifted
+    // s2 wk1: d2 .640625; wk2: (d2 .640625 + d3 .75625)/2 = 0.6984375
+    //   -> round6 0.698438 (round half up); drift micro = 57813
+    assert(out == List(
+      ("s1", "2024-01-01", 2L, 0.634375, 0.634375, 0L, false),
+      ("s1", "2024-01-08", 1L, 0.465625, 0.634375, -168750L, true),
+      ("s2", "2024-01-01", 1L, 0.640625, 0.640625, 0L, false),
+      ("s2", "2024-01-08", 2L, 0.698438, 0.640625, 57813L, true)))
+  }
+
+  test("qualityDrift: a single-week source reads drift 0, not drifted") {
+    val ev1 = events.filter(col("event_id") < 3) // week 1 only
+    val out = Pipeline.qualityDrift(quality(docs), "doc_id", "source",
+        "quality", ev1, "event_id", "ts", 4L, threshMicro = 20000L)
+      .collect().map(r => (r.getString(0), r.getLong(5), r.getBoolean(6)))
+      .toList
+    assert(out == List(("s1", 0L, false), ("s2", 0L, false)))
+  }
+
+  // ---- x31 duplicate-serving drift ---------------------------------------
+
+  test("dupServingDrift: hand-derived dup counts; unique corpus reads zero") {
+    // d1 and d3 share a fingerprint (same normalized text); canonical
+    // is the min id (1), so doc 3 is the only dup
+    val dd = Seq(
+      (0L, "alpha beta", "s1"),
+      (1L, "Dup text!", "s1"),
+      (2L, "gamma", "s2"),
+      (3L, "dup TEXT", "s2") // normalizes equal to doc 1 -> dup
+    ).toDF("doc_id", "text", "source")
+    // wk1 serves docs 0,1,2; wk2 serves 3 (event 7 % 4) and 1 (event 5)
+    val out = Pipeline.dupServingDrift(dd, "doc_id", "text", "source",
+        events, "event_id", "ts", 4L)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))).toList
+    // events: wk1 e0->d0(s1), e1->d1(s1), e2->d2(s2);
+    //         wk2 e5->d1(s1), e6->d2(s2), e7->d3(s2 dup)
+    assert(out == List(
+      ("s1", "2024-01-01", 2L, 0L, 0.0),
+      ("s1", "2024-01-08", 1L, 0L, 0.0),
+      ("s2", "2024-01-01", 1L, 0L, 0.0),
+      ("s2", "2024-01-08", 2L, 1L, 0.5)))
+    val unique = Pipeline.dupServingDrift(docs, "doc_id", "text", "source",
+        events, "event_id", "ts", 4L)
+      .agg(sum(col("dup_served"))).head().getLong(0)
+    assert(unique == 0L)
   }
 }

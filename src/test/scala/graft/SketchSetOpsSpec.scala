@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Sketch
 
-/** Round-8 sketch additions: KMV/theta set operations (s3), Bloom
-  * decontamination (s4), histogram quantiles (s5). Hand-built corpora
+/** Sketch set operations and merges: KMV/theta set operations (s3),
+  * Bloom decontamination (s4), histogram quantiles (s5), cross-shard
+  * histogram (s6), KMV (s7) and HLL merges. Hand-built corpora
   * where the sketch answer is provably exact, plus the approximation
   * invariants each sketch guarantees by construction. */
 class SketchSetOpsSpec extends SparkSpec {
@@ -175,5 +176,127 @@ class SketchSetOpsSpec extends SparkSpec {
     // OR a guarded union row — either way no NaN may appear
     hll.foreach(r => assert(r.isNullAt(r.fieldIndex("rel_err")) ||
       !r.getDouble(r.fieldIndex("rel_err")).isNaN))
+  }
+
+  // ---- s6 histogram-sketch merge ----------------------------------------
+
+  private val vals = Seq(
+    ("a", 0.0), ("a", 1.0), ("a", 2.0), ("a", 3.0),
+    ("b", 4.0), ("b", 5.0), ("b", 6.0), ("b", 7.0),
+    ("c", 8.0), ("c", 9.0), ("c", 10.0), ("c", 16.0)
+  ).toDF("shard", "v")
+
+  test("merged shard sketches equal the flat single-pass histogram") {
+    val mm = vals.agg(min(col("v")).as("gmin"), max(col("v")).as("gmax"))
+    val merged = Sketch.histShardSketches(vals, "shard", "v", mm, 16)
+      .groupBy("__b").agg(sum("__c").as("c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    val flat = Sketch.histShardSketches(
+        vals.withColumn("shard", lit("all")), "shard", "v", mm, 16)
+      .select(col("__b"), col("__c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    assert(merged == flat)
+    // any merge order: sum over a different shard split is identical
+    val resplit = Sketch.histShardSketches(
+        vals.withColumn("shard", (col("v") % 2).cast("int").cast("string")),
+        "shard", "v", mm, 16)
+      .groupBy("__b").agg(sum("__c").as("c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    assert(resplit == flat)
+  }
+
+  test("histMergedQuantiles: hand-derived estimates on a 12-value frame") {
+    // range [0,16], 16 buckets of width 1; v=16 clamps to bucket 15.
+    // cum at bucket b (one value per bucket 0..10, then 15):
+    // p50: ceil(.5*12)=6 -> first cum>=6 is bucket 5 -> est (5+1)*1=6
+    // p90: ceil(.9*12)=11 -> bucket 10 -> est 11
+    // p99: ceil(.99*12)=12 -> bucket 15 -> est 16
+    val out = Sketch.histMergedQuantiles(vals, "shard", "v", 16).head()
+    assert(out.getLong(0) == 12L && out.getLong(1) == 3L)
+    assert(out.getDouble(2) == 6.0 && out.getDouble(3) == 11.0 &&
+      out.getDouble(4) == 16.0)
+  }
+
+  // ---- s7 KMV union merge -------------------------------------------------
+
+  private val stream = Seq(
+    // (shard, key): A has 4 distinct keys, B has 3; |A ∪ B| = 5
+    ("A", "u1"), ("A", "u2"), ("A", "u3"), ("A", "u4"), ("A", "u1"),
+    ("B", "u3"), ("B", "u4"), ("B", "u5"), ("B", "u5")
+  ).toDF("g", "k")
+
+  test("kmvMergedDistinct: unsaturated sketches read est == exact everywhere") {
+    // k = 8 > any cohort: theta = 2^60, est = |sample| = exact
+    val out = Sketch.kmvMergedDistinct(stream, "g", col("k"), k = 8)
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
+        r.getDouble(3))).toList
+    assert(out == List(("A", 4.0, 4L, 0.0), ("B", 3.0, 3L, 0.0),
+      ("zz_union", 5.0, 5L, 0.0)))
+  }
+
+  test("kmvMergedDistinct: union leg equals the flat single-stream sketch " +
+      "when shards are unsaturated") {
+    // shards unsaturated at k=4 (max cohort 4 distinct => theta 2^60
+    // only when size < k; A is exactly at k — saturate it on purpose
+    // with k=3 instead, so the property is exercised on a SATURATED
+    // union: merged sample = union of bottom-3s, and since every
+    // distinct hash of a 3-or-4 element cohort is in its bottom-4...
+    // keep it simple: k=4 keeps B unsaturated and A exactly full; the
+    // merged sample then contains ALL 5 distinct hashes, so the union
+    // leg must equal a flat (single-shard) sketch of the whole stream
+    val flat = Sketch.kmvMergedDistinct(
+        stream.withColumn("g", lit("all")), "g", col("k"), k = 4)
+      .filter(col("cohort") === "all")
+      .collect().map(r => (r.getDouble(1), r.getLong(2))).head
+    val union = Sketch.kmvMergedDistinct(stream, "g", col("k"), k = 4)
+      .filter(col("cohort") === "zz_union")
+      .collect().map(r => (r.getDouble(1), r.getLong(2))).head
+    assert(union == flat)
+  }
+
+  // ---- s8 HLL union merge -------------------------------------------------
+
+  test("hllMergedDistinct: union row equals the flat single-stream build") {
+    // max-merge of per-shard registers must be IDENTICAL to the
+    // registers of the flat stream — so the union estimate equals a
+    // single-shard build over everything, for any p
+    for (p <- Seq(2, 4)) {
+      val flat = Sketch.hllMergedDistinct(
+          stream.withColumn("g", lit("all")), "g", col("k"), p)
+        .filter(col("cohort") === "all")
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).head
+      val union = Sketch.hllMergedDistinct(stream, "g", col("k"), p)
+        .filter(col("cohort") === "zz_union")
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).head
+      assert(union == flat, s"p=$p")
+    }
+  }
+
+  test("hllMergedDistinct: shard-split invariance + exact columns") {
+    val byParity = stream.withColumn("g",
+      concat(lit("par"), (length(col("k")) % 2).cast("string")))
+    def unionRow(df: org.apache.spark.sql.DataFrame) =
+      Sketch.hllMergedDistinct(df, "g", col("k"), 4)
+        .filter(col("cohort") === "zz_union")
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).head
+    assert(unionRow(stream) == unionRow(byParity))
+    // exact side: per-shard and union exact counts are the true ones
+    val rows = Sketch.hllMergedDistinct(stream, "g", col("k"), 4)
+      .collect().map(r => (r.getString(0), r.getLong(2))).toMap
+    assert(rows == Map("A" -> 4L, "B" -> 3L, "zz_union" -> 5L))
+  }
+
+  test("kmvMergedDistinct: shard-split invariance (mergeability)") {
+    // the SAME stream split two different ways must produce the SAME
+    // union row — the associative/commutative set-union-truncate merge
+    val byLen = stream.withColumn("g",
+      concat(lit("len"), length(col("k")).cast("string")))
+    def unionRow(df: org.apache.spark.sql.DataFrame, k: Int) =
+      Sketch.kmvMergedDistinct(df, "g", col("k"), k)
+        .filter(col("cohort") === "zz_union")
+        .collect().map(r => (r.getDouble(1), r.getLong(2), r.getDouble(3)))
+        .head
+    for (k <- Seq(2, 3, 8))
+      assert(unionRow(stream, k) == unionRow(byLen, k), s"k=$k")
   }
 }

@@ -6,16 +6,15 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Source-tree gates that keep removed structure from growing back:
-  * one session builder and one session width, a fixed set of mains,
+  * one session builder and one session width, a fixed set of mains and
+  * none in src/test, a fixed set of environment switches,
   * single-partition windows only behind util/BoundedWindows, one table
   * writer, and no public method of a graft object that src/main never
   * calls. Plus the session policy that builder holds, checked on a
   * live session. */
 class SourceGateSpec extends SparkSpec {
 
-  private val root = Paths.get("src/main/scala")
-
-  private lazy val sources: Seq[(String, String)] = {
+  private def scalaSources(root: java.nio.file.Path): Seq[(String, String)] = {
     val walk = Files.walk(root)
     try walk.iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
@@ -25,17 +24,38 @@ class SourceGateSpec extends SparkSpec {
     finally walk.close()
   }
 
-  private def filesContaining(needle: String): Set[String] =
-    sources.collect { case (f, text) if text.contains(needle) => f }.toSet
+  private lazy val sources = scalaSources(Paths.get("src/main/scala"))
+
+  /** src/test without this file, whose needles would match themselves. */
+  private lazy val testSources = scalaSources(Paths.get("src/test/scala"))
+    .filterNot(_._1 == "graft/SourceGateSpec.scala")
+
+  private def filesContaining(needle: String,
+                              in: Seq[(String, String)] = sources): Set[String] =
+    in.collect { case (f, text) if text.contains(needle) => f }.toSet
 
   test("SparkSession.builder appears only in graft/Session.scala") {
     assert(filesContaining("SparkSession.builder") == Set("graft/Session.scala"))
+    assert(filesContaining("SparkSession.builder", testSources).isEmpty)
   }
 
   test("the mains are exactly the five entry points") {
     val mains = Set("Bench", "Verify", "Explain", "GenData", "VaultDemo")
       .map(n => s"graft/$n.scala")
     assert(filesContaining("def main(") == mains)
+    assert(filesContaining("def main(", testSources).isEmpty)
+  }
+
+  test("src/main reads exactly the eight environment switches") {
+    val switches = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "GRAFT_BENCH_REPS", "GRAFT_BENCH_OUT", "GRAFT_BENCH_ONLY", "GRAFT_BENCH_RUNS",
+      "GRAFT_VERIFY_ONLY", "GRAFT_INDEX_TABLES")
+    val quoted = "\"((?:SPARK_)?GRAFT_[A-Z0-9_]+)".r
+    val found = sources.flatMap { case (_, text) =>
+      quoted.findAllMatchIn(text).map(_.group(1)) }.toSet
+    if (found != switches)
+      fail(s"unlisted: ${(found -- switches).toSeq.sorted.mkString(", ")}; " +
+        s"listed but not read: ${(switches -- found).toSeq.sorted.mkString(", ")}")
   }
 
   test("SPARK_GRAFT_CPUS is read only in graft/Session.scala") {

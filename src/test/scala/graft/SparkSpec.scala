@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one session). */
@@ -16,6 +18,12 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
+
+  /** `n` draws from a raw ScalaCheck generator, one fixed seed per
+    * draw (`seed`, `seed + 1`, ...), so property cases are
+    * deterministic. */
+  def samples[T](g: Gen[T], n: Int, seed: Long = 1337L): Seq[T] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   /** Drop the index tables written for the corpus under `dir` (catalog
     * entries and warehouse files). Specs that build a corpus in a fresh

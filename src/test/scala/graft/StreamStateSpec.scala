@@ -65,4 +65,16 @@ class StreamStateSpec extends SparkSpec {
       .as[(String, String, Long, Double)].collect().toSet
     assert(stream == batch && stream.nonEmpty)
   }
+
+  test("ts17: stream-stream interval join equals the batch pair set") {
+    val e = Tables.events(spark, sfDir)
+    val batch = e.filter($"event_type" === "purchase").alias("p")
+      .join(e.filter($"event_type" === "click").alias("c"),
+        $"p.user_id" === $"c.user_id" &&
+        $"c.ts" >= $"p.ts" - expr("INTERVAL 1 HOUR") && $"c.ts" < $"p.ts")
+      .select($"p.event_id", $"c.event_id").as[(Long, Long)].collect().toSet
+    val stream = graft.streaming.Streams.intervalJoinStream(spark, sfDir)
+      .select($"purchase_id", $"click_id").as[(Long, Long)].collect().toSet
+    assert(stream == batch)
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import graft.temporal.Temporal
 
 /** Property-based checks of the temporal core over random version
@@ -24,9 +23,6 @@ class TemporalPropertiesSpec extends SparkSpec {
     } yield (k, off, 0L, p))
   } yield rows.zipWithIndex.map { case ((k, off, _, p), i) => (k, off, i.toLong, p) }
 
-  private def samples[T](g: Gen[T], n: Int): Seq[T] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
-
   private def toDf(rows: List[(String, Int, Long, String)]) =
     rows.toDF("rid", "off", "seq", "payload")
       .withColumn("ts", expr(s"timestamp_micros(${Base}L + cast(off as long) * 1000000)"))
@@ -35,7 +31,7 @@ class TemporalPropertiesSpec extends SparkSpec {
   private def usOf(off: Int): Long = Base + off.toLong * 1000000L
 
   test("asOf picks the max-(ts,seq) row <= cutoff per key, for any chain") {
-    for ((rows, i) <- samples(chainGen, 8).zipWithIndex) {
+    for ((rows, i) <- samples(chainGen, 8, seed = 42L).zipWithIndex) {
       val cut = usOf(125000 * i)
       val got = Temporal.asOf(toDf(rows), "rid", "ts", "seq",
           expr(s"timestamp_micros(${cut}L)"))
@@ -48,7 +44,7 @@ class TemporalPropertiesSpec extends SparkSpec {
   }
 
   test("versioned assigns a dense 1..n per key in (ts, seq) order") {
-    for ((rows, i) <- samples(chainGen, 8).zipWithIndex) {
+    for ((rows, i) <- samples(chainGen, 8, seed = 42L).zipWithIndex) {
       val got = Temporal.versioned(toDf(rows), "rid", "ts", "seq")
         .select("rid", "seq", "version").as[(String, Long, String)].collect()
       got.groupBy(_._1).foreach { case (k, rs) =>
@@ -62,7 +58,7 @@ class TemporalPropertiesSpec extends SparkSpec {
   }
 
   test("changesBetween finds exactly the keys whose state differs") {
-    for ((rows, i) <- samples(chainGen, 8).zipWithIndex) {
+    for ((rows, i) <- samples(chainGen, 8, seed = 42L).zipWithIndex) {
       val t1 = usOf(300000 + 50000 * i)
       val t2 = usOf(700000 + 30000 * i)
       val got = Temporal.changesBetween(toDf(rows), "rid", "ts", "seq",

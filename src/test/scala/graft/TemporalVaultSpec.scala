@@ -130,6 +130,20 @@ class TemporalVaultSpec extends SparkSpec {
     assert(v.query("2024-01-25 00:00:00").select("data").as[String].collect().toSeq == Seq("a"))
   }
 
+  test("rollback returns only the audit row it wrote, not an earlier one with the same stamp") {
+    val v = mkVault()
+    v.append(batch(
+      ("u1", "2024-01-01 00:00:00", 1, "a"),
+      ("u1", "2024-01-03 00:00:00", 2, "b")))
+    assert(v.rollback("2024-01-02", "2024-01-05").count() == 1)
+    // nothing is stamped after 01-06, so the same stamp passes the rule
+    val second = v.rollback("2024-01-06", "2024-01-05")
+      .select("affected_records", "rollback_to", "rollback_ts")
+      .as[(Long, String, String)].collect()
+    assert(second.toSeq == Seq((0L, "2024-01-06", "2024-01-05")))
+    assert(v.rollbackHistory.count() == 2)
+  }
+
   test("rollbackHistory(limit) pages newest-first like the reference endpoint") {
     val v = mkVault()
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
