@@ -197,39 +197,4 @@ class BigramSurprisalSpec extends SparkSpec {
     assert(keyPairs.size !== keyPairs.distinct.size,
       "tie-break never exercised — strengthen the corpus")
   }
-
-  // ---- x28 -----------------------------------------------------------------
-
-  test("pmiCollocations: hand-derived bit PMI, minCount prunes the hapax tail") {
-    // corpus: 6 docs "a b", 1 doc "x x x x".
-    // N = 16 tokens; n_a = n_b = 6, n_x = 4.
-    // bigrams: "a b" ×6, "x x" ×3.
-    // pmi("a b") = bits(6)+bits(16)−bits(6)−bits(6) = 3+5−3−3 = 2
-    // pmi("x x") = bits(3)+bits(16)−bits(4)−bits(4) = 2+5−3−3 = 1
-    val docs = ((1 to 6).map(i => (i.toLong, "a b")) :+ (7L, "x x x x"))
-      .toDF("doc_id", "text")
-    val dw = Pipeline.docWordTable(docs, "doc_id", "text")
-    val strict = Pipeline.pmiCollocations(docs, dw, "doc_id", "text", 5, 20)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toList
-    assert(strict === List(("a b", 6L, 6L, 6L, 2L)))
-    val loose = Pipeline.pmiCollocations(docs, dw, "doc_id", "text", 2, 20)
-      .collect().map(r => (r.getString(0), r.getLong(4))).toList
-    assert(loose === List(("a b", 2L), ("x x", 1L)))
-  }
-
-  test("pmiCollocations ranks a planted collocation above independent co-occurrences") {
-    // "spark shuffle" always adjacent (collocation); "data" and "table"
-    // frequent but paired only by chance — PMI must separate them even
-    // though raw bigram counts are comparable
-    val planted = (0 until 30).map(i =>
-      (i.toLong, "spark shuffle data table data table data table"))
-    val docs = planted.toDF("doc_id", "text")
-    val dw = Pipeline.docWordTable(docs, "doc_id", "text")
-    val out = Pipeline.pmiCollocations(docs, dw, "doc_id", "text", 5, 5)
-      .collect().map(r => (r.getString(0), r.getLong(4)))
-    assert(out.head._1 === "spark shuffle")
-    val byBg = out.toMap
-    assert(byBg("spark shuffle") > byBg("data table"))
-  }
 }

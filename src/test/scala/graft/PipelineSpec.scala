@@ -8,8 +8,8 @@ import graft.operators.Pipeline
 import graft.sources.Tables
 
 /** Training-data pipeline operators: sequence packing, survivorship
-  * dedup, benchmark decontamination and its per-source report, hash
-  * sampling, blocklist and CCNet filters, quality and dup drift. */
+  * dedup, benchmark decontamination, hash sampling, quality and dup
+  * drift. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -352,92 +352,6 @@ class PipelineSpec extends SparkSpec {
     assert(s15a.subsetOf(s40))      // tightening a rate never resamples
     val n = docs.count().toDouble
     assert(math.abs(s40.size / n - 0.40) < 0.15) // quota roughly honored
-  }
-
-  // ---- x13 blocklistFilter -----------------------------------------------
-
-  test("blocklistFilter: density threshold, not any-hit") {
-    val docs = Seq(
-      // 10 words, 1 hit → 1·20 > 10 → flagged
-      (1L, "s1", "bad w1 w2 w3 w4 w5 w6 w7 w8 w9"),
-      // 10 words, 0 hits → kept
-      (2L, "s1", "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"),
-      // 21 words, 1 hit → 20 > 21 is false → kept despite the hit
-      (3L, "s2", "bad " + (1 to 20).map(i => s"u$i").mkString(" "))
-    ).toDF("doc_id", "source", "text")
-    val out = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
-        Seq("bad", "worse"), 20)
-      .select($"source", $"n_docs", $"total_hits", $"n_flagged", $"n_kept")
-      .as[(String, Long, Long, Long, Long)].collect().toList
-    assert(out == List(("s1", 2L, 1L, 1L, 1L), ("s2", 1L, 1L, 0L, 1L)))
-  }
-
-  test("blocklistFilter: first_flagged is the min flagged id; rate is exact") {
-    val docs = Seq(
-      (9L, "s", "bad bad w1 w2"), (4L, "s", "bad bad w1 w2"),
-      (5L, "s", "w1 w2 w3 w4")
-    ).toDF("doc_id", "source", "text")
-    val row = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
-        Seq("bad"), 20)
-      .select($"first_flagged", $"flagged_rate")
-      .as[(Long, Double)].collect().head
-    assert(row == ((4L, 0.666667)))
-  }
-
-  // ---- x14 ccnetBuckets --------------------------------------------------
-
-  test("ccnetBuckets: partitions each language; bucket means monotone") {
-    val docs = Tables.documents(spark, sfDir)
-    val out = Pipeline.ccnetBucketsFrom(
-        Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", "lang", 3)
-      .select($"lang", $"bucket", $"n_docs", $"bucket_avg_bits")
-      .as[(String, Int, Long, Double)].collect().toList
-    val perLang = out.groupBy(_._1)
-    val docTotal = Tables.documents(spark, sfDir).count()
-    assert(out.map(_._3).sum == docTotal)
-    perLang.foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_._2)
-      assert(sorted.map(_._2) == (1 to sorted.length).toList)
-      // ntile sizes differ by at most one
-      assert(sorted.map(_._3).max - sorted.map(_._3).min <= 1)
-      // consecutive blocks of a ratio-sorted sequence: non-decreasing
-      // (weighted) means — head buckets are the most-predictable docs
-      assert(sorted.map(_._4) == sorted.map(_._4).sorted)
-    }
-  }
-
-  test("ccnetBuckets: deterministic across recomputation") {
-    def buckets() = {
-      val docs = Tables.documents(spark, sfDir)
-      Pipeline.ccnetBucketsFrom(Pipeline.docWordTable(docs, "doc_id", "text"),
-        docs, "doc_id", "lang", 3).collect().toList
-    }
-    val a = buckets()
-    val b = buckets()
-    assert(a == b)
-  }
-
-  // ---- x29 contamination report -----------------------------------------
-
-  test("contaminationReport: hand-derived per-source rollup") {
-    val docs = Seq(
-      // doc 0 is bench (id % 20 == 0); docs 1-2 share its 3 shingles
-      (0L, "src_a", "w1 w2 w3 w4 w5"),
-      (1L, "src_a", "w1 w2 w3 w4 w5"),          // contaminated, 5 toks
-      (2L, "src_b", "x w1 w2 w3 w4 w5"),        // contaminated, 6 toks
-      (3L, "src_b", "q r s t u v"),             // clean, 6 toks
-      (4L, "src_c", "a b c")                    // clean, 3 toks
-    ).toDF("doc_id", "source", "text")
-    val bench = pmod(col("doc_id"), lit(20)) === 0
-    val hits = Pipeline.decontaminate(docs, "doc_id", "text", 3, bench, 3)
-    val out = Pipeline.contaminationReport(
-        docs, "doc_id", "text", "source", bench, hits)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5))).toList
-    assert(out == List(
-      ("src_a", 1L, 1L, 5L, 5L, 1.0),
-      ("src_b", 2L, 1L, 12L, 6L, 0.5),
-      ("src_c", 1L, 0L, 3L, 0L, 0.0)))
   }
 
   // ---- x30 quality drift -------------------------------------------------

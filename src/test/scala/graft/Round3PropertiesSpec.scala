@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import graft.dedup.Dedup
 import graft.operators.TimeSeries
 
@@ -12,9 +11,6 @@ import graft.operators.TimeSeries
   */
 class Round3PropertiesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def samples[T](g: Gen[T], n: Int): Seq[T] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(1337L + i)))
 
   // ---- connected components vs union-find --------------------------------
 

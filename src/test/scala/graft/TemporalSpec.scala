@@ -158,74 +158,4 @@ class TemporalSpec extends SparkSpec {
       }
     }
   }
-
-  private def tsl(s: String) = lit(s).cast("timestamp")
-
-  // ---- t18 vacuum -------------------------------------------------------
-
-  private val vacuumChain = Seq(
-    // key, ts, tie, v — key 1: three pre-cutoff + two post; key 2: pre
-    // only; key 3: post only
-    (1L, "2024-01-01 00:00:00", 1L, 10.0),
-    (1L, "2024-01-03 00:00:00", 2L, 11.0),
-    (1L, "2024-01-05 00:00:00", 3L, 12.0), // latest pre -> CARRIER
-    (1L, "2024-01-12 00:00:00", 4L, 13.0),
-    (1L, "2024-01-15 00:00:00", 5L, 14.0),
-    (2L, "2024-01-02 00:00:00", 6L, 20.0),
-    (2L, "2024-01-04 00:00:00", 7L, 21.0), // latest pre -> CARRIER
-    (3L, "2024-01-11 00:00:00", 8L, 30.0)
-  ).toDF("k", "ts_s", "tie", "v").withColumn("ts", col("ts_s").cast("timestamp"))
-    .select("k", "ts", "tie", "v")
-
-  private val cutoff = "2024-01-10 00:00:00"
-
-  test("vacuum keeps post-cutoff rows verbatim + the latest pre-cutoff carrier") {
-    val out = Temporal.vacuum(vacuumChain, "k", "ts", "tie", tsl(cutoff))
-      .select(col("k"), col("tie"), col("row_kind"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(out == Set(
-      (1L, 4L, "LIVE"), (1L, 5L, "LIVE"), (3L, 8L, "LIVE"),
-      (1L, 3L, "CARRIER"), (2L, 7L, "CARRIER")))
-  }
-
-  test("vacuum preserves every AS-OF read at or after the cutoff") {
-    val vac = Temporal.vacuum(vacuumChain, "k", "ts", "tie", tsl(cutoff))
-      .drop("row_kind")
-    for (t <- Seq("2024-01-10 00:00:00", "2024-01-12 00:00:00",
-        "2024-01-13 00:00:00", "2024-01-20 00:00:00")) {
-      val a = Temporal.asOf(vacuumChain, "k", "ts", "tie", tsl(t))
-        .collect().map(_.toSeq).toSet
-      val b = Temporal.asOf(vac, "k", "ts", "tie", tsl(t))
-        .collect().map(_.toSeq).toSet
-      assert(a == b, s"asOf($t) diverged after vacuum")
-    }
-  }
-
-  test("vacuum row counts reconcile with ttlCompaction's plan") {
-    val plan = Temporal.ttlCompaction(vacuumChain, "k", "ts", tsl(cutoff))
-      .agg(sum("retained")).head().getLong(0)
-    val physical = Temporal.vacuum(vacuumChain, "k", "ts", "tie", tsl(cutoff)).count()
-    assert(plan == physical && physical == 5L)
-  }
-
-  test("retentionAudit: consistent on correct inputs, flags a corrupted vacuum") {
-    val audit = Temporal.retentionAudit(vacuumChain, "k", "ts", "tie", tsl(cutoff))
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4),
-        r.getBoolean(5))).toList
-    // plan == actual everywhere: k1 retained 3 (carrier+2 live),
-    // k2 retained 1 (carrier), k3 retained 1 (live)
-    assert(audit == List((1L, 3L, 3L, true), (2L, 1L, 1L, true),
-      (3L, 1L, 1L, true)))
-    // a corrupted physical output (k2's only retained row — its
-    // carrier — lost entirely) must surface as consistent=false with
-    // actual_retained 0, not silently drop out of the audit: the
-    // operator's join is LEFT with actual_retained coalesced to 0
-    val corrupted = Temporal.vacuum(vacuumChain, "k", "ts", "tie", tsl(cutoff))
-      .filter(!(col("k") === 2L && col("row_kind") === "CARRIER"))
-    val flagged = Temporal.retentionAudit(vacuumChain, "k", "ts", "tie",
-        tsl(cutoff), actualRows = Some(corrupted))
-      .filter(!col("consistent"))
-      .collect().map(r => (r.getLong(0), r.getLong(4))).toList
-    assert(flagged == List((2L, 0L)))
-  }
 }
