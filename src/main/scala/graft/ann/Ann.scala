@@ -50,19 +50,13 @@ object Ann {
                queryIds: Seq[Long], k: Int): DataFrame = {
     val corpus = emb.select(col(id).as("nn_id"), col(vec).as("nn_vec"),
       Vec.normNative(col(vec)).as("nn_nrm"))
-    val queries = emb.filter(col(id).isin(queryIds: _*))
-      .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        Vec.normNative(col(vec)).as("q_nrm"))
+    val queries = ivfQueries(emb, id, vec, queryIds)
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("nn_id") =!= col("query_id"))
       .select(col("query_id"), col("nn_id"),
         Vec.cosinePrenormed(col("q_vec"), col("nn_vec"),
           col("q_nrm"), col("nn_nrm")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** Metadata-FILTERED exact top-k cosine: each query ranks only the
@@ -88,11 +82,7 @@ object Ann {
       .select(col("query_id"), col("__qm").as("label"), col("nn_id"),
         Vec.cosinePrenormed(col("q_vec"), col("nn_vec"),
           col("q_nrm"), col("nn_nrm")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** MMR-diversified top-k (Carbonell & Goldstein 1998 maximal
@@ -265,19 +255,13 @@ object Ann {
     val corpus = emb.select(col(id).as("nn_id"), deq.as("nn_vec"))
       .select(col("nn_id"), col("nn_vec"),
         Vec.normNative(col("nn_vec")).as("nn_nrm"))
-    val queries = emb.filter(col(id).isin(queryIds: _*))
-      .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        Vec.normNative(col(vec)).as("q_nrm"))
+    val queries = ivfQueries(emb, id, vec, queryIds)
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("nn_id") =!= col("query_id"))
       .select(col("query_id"), col("nn_id"),
         Vec.cosinePrenormed(col("q_vec"), col("nn_vec"),
           col("q_nrm"), col("nn_nrm")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** Exact cosine RANGE search (the radius-query API next to top-k):
@@ -291,9 +275,7 @@ object Ann {
                   queryIds: Seq[Long], tau: Double): DataFrame = {
     val corpus = emb.select(col(id).as("nn_id"), col(vec).as("nn_vec"),
       Vec.normNative(col(vec)).as("nn_nrm"))
-    val queries = emb.filter(col(id).isin(queryIds: _*))
-      .select(col(id).as("query_id"), col(vec).as("q_vec"),
-        Vec.normNative(col(vec)).as("q_nrm"))
+    val queries = ivfQueries(emb, id, vec, queryIds)
     corpus.crossJoin(broadcast(queries))
       .filter(col("nn_id") =!= col("query_id"))
       .select(col("query_id"), col("nn_id"),
@@ -674,11 +656,7 @@ object Ann {
       .select(col("query_id"), col("nn_id"),
         Vec.cosinePrenormed(col("q_vec"), col("nn_vec"),
           col("q_nrm"), col("nn_nrm")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** IVF index-health report (a10): the occupancy-balance card an
@@ -849,11 +827,7 @@ object Ann {
       .select(col("query_id"), col("nn_id"),
         Vec.cosinePrenormed(col("q_vec"), col("nn_vec"),
           col("q_nrm"), col("nn_nrm")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** The broadcast (query_id, q_vec, q_nrm) probe side. */
@@ -862,6 +836,17 @@ object Ann {
     emb.filter(col(id).isin(queryIds: _*))
       .select(col(id).as("query_id"), col(vec).as("q_vec"),
         Vec.normNative(col(vec)).as("q_nrm"))
+
+  /** The exact top-k tail over (query_id, nn_id, cos) rows: rank by
+    * cosine desc, then neighbor id, keep `rank <= k`, order by
+    * (query_id, rank). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("nn_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .orderBy(col("query_id"), col("rank"))
+  }
 
   /** a9's probed-cell COUNT target: a CONSTANT number of cells, not a
     * corpus fraction. On clustered corpora — a9's use case — recall
@@ -1095,11 +1080,7 @@ object Ann {
       // union across tables: a pair colliding in several tables (or,
       // with tables=1, never — masks are distinct) surfaces once
       .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, k)
   }
 
   /** k1/k2 for a 2-level product coarse quantizer with ~`n /

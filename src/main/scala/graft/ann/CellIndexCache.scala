@@ -14,20 +14,18 @@ import graft.util.SessionCache
   * corpus row, far under the corpus itself.
   *
   * The corpus row count comes from parquet footers
-  * ([[ParquetStats.rowCount]]), not a scan job. Entries from stopped
-  * sessions are rebuilt transparently. The durable vector artifacts
+  * ([[ParquetStats.rowCount]]), not a scan job. Entries are keyed by
+  * session (a new session builds its own). The durable vector artifacts
   * (cells, centroids, PQ tables, pairs, ...) are declared below as
   * [[IndexStore.Artifact]]s and read through [[IndexStore.get]]; a
   * changed corpus rebuilds them (IndexStore's fingerprint check), it
   * never patches them. */
 object CellIndexCache {
-  private val cache = new SessionCache[(Int, String), CoarseIndex](
-    ix => !ix.asg.sparkSession.sparkContext.isStopped,
-    ix => { ix.asg.unpersist(); () })
+  private val cache = new SessionCache[String, CoarseIndex](ix => { ix.asg.unpersist(); () })
 
   /** The shared index over `dir`'s embeddings table. */
   def embeddings(spark: SparkSession, dir: String): CoarseIndex =
-    cache.getOrBuild((System.identityHashCode(spark), dir)) {
+    cache.getOrBuild(spark, dir) {
       val n = ParquetStats.rowCount(spark, s"$dir/embeddings.parquet")
       val ix = Ann.buildCoarseIndex(Tables.embeddings(spark, dir), "vec_id",
         "embedding", n)
@@ -41,16 +39,16 @@ object CellIndexCache {
     * aggregation (spec-checked in CoarseCellSpec). */
   val BaseTau = 0.25
 
-  private val sq8Cache = SessionCache.forValue[(Int, String), (Array[Double], Array[Double])]
+  private val sq8Cache = SessionCache.forValue[String, (Array[Double], Array[Double])]
 
   /** The SQ8 quantizer's per-dimension (mins, maxs) over `dir`'s
     * embeddings — ONE training scan per (session, corpus), shared by
     * every SQ8 consumer (a15's quantize leg and its recall eval). The
     * cached value is 2·dims doubles (plain data — no session-owned
-    * resources to release), keyed by session only so two live sessions
+    * resources to release), keyed by session so two live sessions
     * never share a driver-collected artifact. */
   def sq8Stats(spark: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    sq8Cache.getOrBuild((System.identityHashCode(spark), dir)) {
+    sq8Cache.getOrBuild(spark, dir) {
       val emb = Tables.embeddings(spark, dir)
       val dims = emb.selectExpr("size(embedding)").head().getInt(0)
       Ann.sq8MinMax(emb, "embedding", dims)

@@ -14,7 +14,7 @@ import graft.util.SessionCache
   * star-contraction rounds per downstream query.
   */
 object ClusterCache {
-  private val statsCache = SessionCache.forValue[(Int, String, Int), Dedup.DfSkewStats]
+  private val statsCache = SessionCache.forValue[(String, Int), Dedup.DfSkewStats]
 
   /** The shared (doc_id, term, tf) token aggregate over `dir`'s
     * documents — the table x11 (unigram LM), x14 (CCNet buckets) and
@@ -87,7 +87,7 @@ object ClusterCache {
     * DataFrame. */
   def dfSkewStats(spark: SparkSession, dir: String,
                   n: Int = 3): Dedup.DfSkewStats =
-    statsCache.getOrBuild((System.identityHashCode(spark), dir, n))(
+    statsCache.getOrBuild(spark, (dir, n))(
       Dedup.dfSkewStats(shingleDf(spark, dir, n)))
 
   /** The shared EXACT n-gram Jaccard verified-pair table

@@ -64,22 +64,22 @@ object AnnKeys {
   // is the same DataFrame (MadRecallSpec pins shared == direct).
   // Nothing survives the session — every run still computes all legs
   // from the parquet corpus.
-  private val bruteTruthCache = graft.util.SessionCache.forDf[(Int, String)]
+  private val bruteTruthCache = graft.util.SessionCache.forDf[String]
   private def bruteTruth(s: SparkSession, d: String): DataFrame =
-    bruteTruthCache.getOrBuild((System.identityHashCode(s), d)) {
+    bruteTruthCache.getOrBuild(s, d) {
       Ann.knnBrute(Tables.embeddings(s, d), "vec_id", "embedding",
           Seq(0L, 1L, 2L, 3L, 4L), 10)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  private val probeTopkCache = graft.util.SessionCache.forDf[(Int, String)]
+  private val probeTopkCache = graft.util.SessionCache.forDf[String]
   private def probeTopkShared(s: SparkSession, d: String): DataFrame =
-    probeTopkCache.getOrBuild((System.identityHashCode(s), d)) {
+    probeTopkCache.getOrBuild(s, d) {
       ivfProbeTopk(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  private val pqTopkCache = graft.util.SessionCache.forDf[(Int, String)]
+  private val pqTopkCache = graft.util.SessionCache.forDf[String]
   private def pqTopkShared(s: SparkSession, d: String): DataFrame =
-    pqTopkCache.getOrBuild((System.identityHashCode(s), d)) {
+    pqTopkCache.getOrBuild(s, d) {
       ivfPqTopk(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }

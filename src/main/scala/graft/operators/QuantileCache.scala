@@ -47,14 +47,14 @@ object QuantileCache {
                        n: Map[Any, Long],
                        qs: Map[Any, IndexedSeq[Double]])
 
-  private val projCache = SessionCache.forDf[(Int, String)]
-  private val selCache = SessionCache.forValue[(Int, String), Sel]
+  private val projCache = SessionCache.forDf[String]
+  private val selCache = SessionCache.forValue[String, Sel]
 
   /** The shared non-null (__g = event_type, __v = value) projection
     * over `dir`'s events, persisted for the session (both quantile
     * selections and s5's histogram passes scan it). */
   def projection(spark: SparkSession, dir: String): DataFrame =
-    projCache.getOrBuild((System.identityHashCode(spark), dir)) {
+    projCache.getOrBuild(spark, dir) {
       Tables.events(spark, dir)
         .select(col("event_type").as("__g"),
           col("value").cast("double").as("__v"))
@@ -66,7 +66,7 @@ object QuantileCache {
     * group counts (actions 2-3) — raw doubles; consumers apply their
     * own rounding. */
   def selection(spark: SparkSession, dir: String): Sel =
-    selCache.getOrBuild((System.identityHashCode(spark), dir)) {
+    selCache.getOrBuild(spark, dir) {
       val t = projection(spark, dir)
       val cuts = TimeSeries.quantileCuts(t, "QuantileCache", "event_type")
       val rows = TimeSeries.selectQuantiles(t, cuts, Ps)

@@ -192,10 +192,7 @@ object IndexStore {
   final case class Artifact(name: String, bucketKey: Option[String])(
       val build: (SparkSession, String) => DataFrame)
 
-  private val memo = graft.util.SessionCache.forDf[(Int, String, String)]
-
-  private def key(spark: SparkSession, dir: String, a: Artifact) =
-    (System.identityHashCode(spark), dir, a.name)
+  private val memo = graft.util.SessionCache.forDf[(String, String)]
 
   /** The ONE getter for every artifact, memoized per (session, dir,
     * name). When [[enabled]], a missing or stale table is first built
@@ -224,7 +221,7 @@ object IndexStore {
     * A width- or fingerprint-stale manifest reads as a miss, so the
     * getter rebuilds and re-primes it at the current width. */
   def get(spark: SparkSession, dir: String, a: Artifact): DataFrame =
-    memo.getOrBuild(key(spark, dir, a)) {
+    memo.getOrBuild(spark, (dir, a.name)) {
       if (enabled && !exists(spark, dir, a.name)) {
         try write(a.build(spark, dir), dir, a.name, a.bucketKey)
         catch { case scala.util.control.NonFatal(e) => System.err.println(
@@ -240,7 +237,7 @@ object IndexStore {
   /** The memoized frame iff this session already holds it — never
     * loads or builds. */
   def peek(spark: SparkSession, dir: String, a: Artifact): Option[DataFrame] =
-    memo.peek(key(spark, dir, a))
+    memo.peek(spark, (dir, a.name))
 
   private[graft] def write(df: DataFrame, dir: String, artifact: String,
                            bucketKey: Option[String]): String = {

@@ -65,10 +65,9 @@ object Streams {
     * deployment gives each long-lived stream its own session. The memo
     * is a [[graft.util.SessionCache]], so `SessionCache.clearAll()`
     * forgets it with every other memo. */
-  private val sharedDrain = new graft.util.SessionCache[SparkSession, SparkSession](
-    s => !s.sparkContext.isStopped, _ => ())
+  private val sharedDrain = graft.util.SessionCache.forValue[Unit, SparkSession]
   private def drainSession(spark: SparkSession, stateRows: Long): SparkSession = {
-    val s = sharedDrain.getOrBuild(spark)(spark.newSession())
+    val s = sharedDrain.getOrBuild(spark, ())(spark.newSession())
     s.conf.set("spark.sql.shuffle.partitions", sizedParts(stateRows).toString)
     // a drain has nothing to do in a no-data cycle: none of the drained
     // operators gate EMISSION on the watermark (complete-mode aggs and

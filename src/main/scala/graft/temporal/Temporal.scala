@@ -3,6 +3,7 @@ package graft.temporal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
 /** Spark-native re-expression of the reference's temporal-database core
   * (TemporalVault, reference app/main.py + app/models.py).
@@ -318,15 +319,30 @@ object Temporal {
     * must not materialize a multi-GB id string in the one final-merge
     * task. Every aggregation buffer (map-side partial, shuffle row,
     * final merge) stays ≤ sampleK entries. Same treatment as
-    * `Dedup.exact`'s `doc_ids` and the vault audit's `record_ids`. */
+    * `Dedup.exact`'s `doc_ids`; the vault's audit row is the same
+    * [[auditRow]]. */
   def rollbackLog(df: DataFrame, key: String, ts: String, at: Column,
                   sampleK: Int = 100): DataFrame =
-    df.filter(col(ts) > at).select(col(key)).distinct()
-      .agg(
-        count(lit(1)).as("affected_records"),
-        concat_ws(",",
-          graft.dedup.Dedup.collectMinK(col(key), sampleK).cast("array<string>"))
-          .as("record_ids"))
+    auditRow(df.filter(col(ts) > at).select(col(key)).distinct(), key, sampleK)
+
+  /** The one rollback audit aggregate, over one row per affected key:
+    * (`affected_records` exact count, `record_ids` = the `sampleK`
+    * smallest keys in KEY order, comma-joined). CollectMinK orders
+    * BIGINT and STRING only, so an integral key widens to bigint (ids
+    * 9, 10 list as "9,10", not the string order "10,9") and any other
+    * key orders as its string. */
+  def auditRow(affected: DataFrame, key: String, sampleK: Int): DataFrame = {
+    val ordered = affected.schema(key).dataType match {
+      case LongType | StringType => col(key)
+      case ByteType | ShortType | IntegerType => col(key).cast(LongType)
+      case _ => col(key).cast(StringType)
+    }
+    affected.agg(
+      count(lit(1)).as("affected_records"),
+      concat_ws(",",
+        graft.dedup.Dedup.collectMinK(ordered, sampleK).cast("array<string>"))
+        .as("record_ids"))
+  }
 
   /** Temporal ALIGNMENT join of two version chains over the same key
     * (the adjust/align primitive of temporal-database algebra, e.g.

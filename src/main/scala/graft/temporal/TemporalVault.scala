@@ -31,10 +31,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * At 100 TB the log is written partitioned by a time bucket of `ts`
   * (AS-OF reads prune partitions via the pushed-down range predicate)
-  * and compacted periodically with `writeSnapshot`, after which reads
-  * replay only `last snapshot + log tail`.
+  * and compacted by snapshot: `writeSnapshot` materializes a state,
+  * after which reads replay only `last snapshot + log tail`.
   *
-  * Batches carry (key, ts timestamp, tie long, payload...) columns.
+  * Batches carry the reference `TemporalRecord`'s fixed columns
+  * (`record_id`, `ts` timestamp, `seq` long tie-break; the constants
+  * on the companion) plus any payload columns. `clock` is the cache's
+  * time source (its TTL test seam).
+  *
+  * One query-result cache (the reference's Redis layer): AS-OF states
+  * persisted per instant, bounded by a TTL and an LRU cap, and dropped
+  * by a write exactly where it changes them.
   *
   * Times: any string Spark's timestamp cast accepts, in the session
   * time zone (`2024-01-05`, `2024-01-05 10:00:00`, the `T` form, a `Z`
@@ -48,7 +55,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class TemporalVault(
     spark: SparkSession, root: String,
-    key: String = "record_id", ts: String = "ts", tie: String = "seq",
     clock: () => Long = () => System.currentTimeMillis()) {
   import TemporalVault._
 
@@ -80,7 +86,7 @@ class TemporalVault(
     * (pushed-down) ts range. At 100 TB this is the partition-pruning
     * leg of the reference's (record_id, timestamp) index. */
   private def writeLog(df: DataFrame): Unit =
-    df.withColumn(Day, date_format(col(ts), "yyyy-MM-dd"))
+    df.withColumn(Day, date_format(col(Ts), "yyyy-MM-dd"))
       .write.mode(SaveMode.Append).partitionBy(Day).parquet(logDir)
 
   private def fs = new Path(root)
@@ -93,32 +99,24 @@ class TemporalVault(
   /** Append a batch of new record versions (POST /records,
     * app/main.py:67-98). Invalidation is precise: a version at t only
     * changes AS-OF reads at `at >= t`, so only those cached states and
-    * snapshots go, and only the touched ids' record entries (the
-    * reference's `redis_client.delete(f"record:{record_id}")`,
-    * app/main.py:94). */
+    * snapshots go. */
   def append(batch: DataFrame): Unit = graft.Metrics.timedCall(spark, "vault.append") {
-    // one materialization: the write, the min-ts probe and the
-    // invalidation filter must all see the SAME rows even when the
-    // caller's plan is non-deterministic or reads a moving source
+    // one materialization: the write and the min-ts probe must see the
+    // SAME rows even when the caller's plan is non-deterministic or
+    // reads a moving source
     val b = batch.persist()
     try {
       writeLog(b.withColumn(Op, lit("I")))
-      val since = b.agg(unix_micros(min(col(ts)))).head()
+      val since = b.agg(unix_micros(min(col(Ts)))).head()
       if (!since.isNullAt(0)) invalidateSince(since.getLong(0))
-      invalidateRecords(b)
     } finally b.unpersist()
   }
-
-  /** Version labels (v1, v2, ... per record, time order) — computed,
-    * not stored, so always consistent with the log (the reference
-    * stores them: app/main.py:79-86). */
-  def versionedLog: DataFrame = Temporal.versioned(log, key, ts, tie)
 
   /** Full history of one record with version labels (`_op` kept for
     * rollback-row transparency). */
   def history(recordId: String): DataFrame =
     graft.Metrics.timedCall(spark, "vault.history")(
-      Temporal.history(log, key, ts, tie, lit(recordId)).drop(Day))
+      Temporal.history(log, Key, Ts, Tie, lit(recordId)).drop(Day))
 
   /** State of all records as of `at` (GET /query). Uses the latest
     * snapshot ≤ at when present (replay only the log tail after it),
@@ -135,9 +133,9 @@ class TemporalVault(
     val pruned = logUpTo(at)
     val state = snapshots.filter(_._1 <= at).maxByOption(_._1) match {
       case Some((snapAt, dir)) =>
-        val tail = pruned.filter(col(ts) > instant(snapAt) && col(ts) <= instant(at))
-        Temporal.asOf(spark.read.parquet(dir).unionByName(tail), key, ts, tie, instant(at))
-      case None => Temporal.asOf(pruned, key, ts, tie, instant(at))
+        val tail = pruned.filter(col(Ts) > instant(snapAt) && col(Ts) <= instant(at))
+        Temporal.asOf(spark.read.parquet(dir).unionByName(tail), Key, Ts, Tie, instant(at))
+      case None => Temporal.asOf(pruned, Key, Ts, Tie, instant(at))
     }
     state.filter(col(Op) =!= "D").drop(Op, Day)
   }
@@ -145,7 +143,7 @@ class TemporalVault(
   /** Single-record state as of `at`. */
   def query(at: String, recordId: String): DataFrame =
     graft.Metrics.timedCall(spark, "vault.query")(
-      queryState(micros(at)).filter(col(key) === recordId))
+      queryState(micros(at)).filter(col(Key) === recordId))
 
   /** Natural-language time-travel read, like the reference's
     * `GET /query?timestamp=yesterday at 4:00 PM` (app/main.py:105);
@@ -154,40 +152,39 @@ class TemporalVault(
     query(TimeParse.parse(phrase, now))
 
   // --- query-result cache (the reference's Redis layer, main.py:60-64:
-  // `query:{timestamp}` entries with a 1h TTL, app/main.py:147;
-  // `record:{record_id}` entries deleted individually on write,
-  // app/main.py:94). AS-OF states are keyed by instant, records by id.
+  // `query:{timestamp}` entries with a 1h TTL, app/main.py:147), keyed
+  // by instant.
   private case class Entry(df: DataFrame, bornMs: Long)
   private val cache = mutable.LinkedHashMap.empty[Long, Entry]
-  private val recordCache = mutable.LinkedHashMap.empty[String, Entry]
   @volatile private var cacheHitCount = 0L
   @volatile private var cacheMissCount = 0L
   @volatile private var cacheEvictCount = 0L
   @volatile private var cacheExpireCount = 0L
 
-  /** TTL + LRU bookkeeping shared by both caches: an expired entry is
-    * unpersisted on access, a hit re-queues the entry, and an insert
-    * past `CacheMaxEntries` evicts and unpersists the least recently
-    * used one — executor memory holds at most that many states. */
-  private def cachedIn[K](m: mutable.LinkedHashMap[K, Entry], k: K)(load: K => DataFrame): DataFrame =
-    m.synchronized {
+  /** The state at instant `at`, through the cache's TTL + LRU
+    * bookkeeping: an expired entry is unpersisted on access, a hit
+    * re-queues the entry, and an insert past `CacheMaxEntries` evicts
+    * and unpersists the least recently used one — executor memory
+    * holds at most that many states. */
+  private def cachedIn(at: Long): DataFrame =
+    cache.synchronized {
       val now = clock()
-      m.get(k) match {
+      cache.get(at) match {
         case Some(e) if now - e.bornMs < CacheTtlMs =>
           cacheHitCount += 1
-          m.remove(k); m.put(k, e) // LRU touch
+          cache.remove(at); cache.put(at, e) // LRU touch
           e.df
         case stale =>
           stale.foreach { e =>
-            e.df.unpersist(); m.remove(k); cacheExpireCount += 1
+            e.df.unpersist(); cache.remove(at); cacheExpireCount += 1
           }
           cacheMissCount += 1
-          val df = load(k).persist()
-          if (m.size >= CacheMaxEntries) {
-            val (oldK, oldE) = m.head
-            oldE.df.unpersist(); m.remove(oldK); cacheEvictCount += 1
+          val df = queryState(at).persist()
+          if (cache.size >= CacheMaxEntries) {
+            val (oldK, oldE) = cache.head
+            oldE.df.unpersist(); cache.remove(oldK); cacheEvictCount += 1
           }
-          m.put(k, Entry(df, now))
+          cache.put(at, Entry(df, now))
           df
       }
     }
@@ -195,25 +192,16 @@ class TemporalVault(
   /** AS-OF read memoized per instant: the state is persisted in
     * executor memory on first use (the Spark analog of the reference's
     * Redis `setex(query:{ts}, 3600, ...)`) and served partition-local
-    * after that. Unlike the reference's TTL-only Redis, a write drops
-    * exactly the states it can affect — never stale. */
+    * after that. Unlike the reference's TTL-only Redis, a write through
+    * this vault drops exactly the states it can affect; the TTL bounds
+    * staleness from writers in other vault instances. */
   def queryCached(at: String): DataFrame =
-    graft.Metrics.timedCall(spark, "vault.query")(cachedIn(cache, micros(at))(queryState))
+    graft.Metrics.timedCall(spark, "vault.query")(cachedIn(micros(at)))
 
-  /** Latest state of one record, memoized per record id — the
-    * reference's `record:{record_id}` Redis entry. Appends drop only
-    * the touched ids' entries (app/main.py:94). */
-  def recordCached(recordId: String): DataFrame =
-    cachedIn(recordCache, recordId)(id =>
-      Temporal.asOf(log.filter(col(key) === id), key, ts, tie, instant(Long.MaxValue))
-        .filter(col(Op) =!= "D").drop(Op, Day))
-
-  def cacheHits: Long = cacheHitCount
   def cacheStats: Map[String, Long] = Map(
     "hits" -> cacheHitCount, "misses" -> cacheMissCount,
     "evictions" -> cacheEvictCount, "expirations" -> cacheExpireCount,
-    "entries" -> (cache.synchronized(cache.size) +
-      recordCache.synchronized(recordCache.size)).toLong)
+    "entries" -> cache.synchronized(cache.size).toLong)
 
   /** A write stamped at epoch micros `since` changes the state at every
     * instant ≥ since: drop those cached states and snapshots. */
@@ -224,30 +212,14 @@ class TemporalVault(
     snapshots.filter(_._1 >= since).foreach { case (_, dir) => fs.delete(new Path(dir), true) }
   }
 
-  /** Drop per-record entries for the ids `batch` touches. The record
-    * cache holds at most `CacheMaxEntries` ids, so the `isin` literal
-    * and the collect stay that small however large the append. */
-  private def invalidateRecords(batch: DataFrame): Unit = {
-    val cachedIds = recordCache.synchronized(recordCache.keys.toSeq)
-    if (cachedIds.nonEmpty) {
-      val touched = batch.filter(col(key).cast("string").isin(cachedIds: _*))
-        .select(col(key).cast("string")).distinct().collect().map(_.getString(0))
-      recordCache.synchronized {
-        touched.foreach(k => recordCache.remove(k).foreach(_.df.unpersist()))
-      }
-    }
-  }
-
-  private def invalidateCache(): Unit = {
+  private def invalidateCache(): Unit =
     cache.synchronized { cache.values.foreach(_.df.unpersist()); cache.clear() }
-    recordCache.synchronized { recordCache.values.foreach(_.df.unpersist()); recordCache.clear() }
-  }
 
   /** Field-level diff of one record between two timestamps
     * (GET /compare, app/main.py:267). */
   def compare(recordId: String, from: String, to: String, fields: Seq[String]): DataFrame =
     graft.Metrics.timedCall(spark, "vault.compare")(
-      Temporal.changesBetween(log.filter(col(key) === recordId), key, ts, tie,
+      Temporal.changesBetween(log.filter(col(Key) === recordId), Key, Ts, Tie,
         instant(micros(from)), instant(micros(to)), fields))
 
   /** Roll the store back to its state at `at` (POST /rollback,
@@ -262,17 +234,17 @@ class TemporalVault(
       graft.Metrics.timedCall(spark, "vault.rollback") {
     val (atM, stampM) = (micros(at), micros(rollbackTs))
     val log = this.log // one listing and schema read for the whole call
-    val latest = log.filter(col(Day) >= day(atM) && col(ts) > instant(atM))
-      .agg(coalesce(unix_micros(max(col(ts))), lit(Long.MinValue))).head().getLong(0)
+    val latest = log.filter(col(Day) >= day(atM) && col(Ts) > instant(atM))
+      .agg(coalesce(unix_micros(max(col(Ts))), lit(Long.MinValue))).head().getLong(0)
     require(stampM > latest, s"rollback stamp '$rollbackTs' is not after " +
       s"${DateTimeUtils.microsToInstant(latest)}, the latest version after '$at'")
-    val rset = Temporal.rollbackSet(log, key, ts, tie, instant(atM))
+    val rset = Temporal.rollbackSet(log, Key, Ts, Tie, instant(atM))
     val payloadCols = log.columns
-      .filterNot(c => c == key || c == ts || c == tie || c == Op || c == Day)
+      .filterNot(c => c == Key || c == Ts || c == Tie || c == Op || c == Day)
     val compensation = rset.select(
-      col(key) +:
-        instant(stampM).as(ts) +:
-        lit(0L).as(tie) +:
+      col(Key) +:
+        instant(stampM).as(Ts) +:
+        lit(0L).as(Tie) +:
         payloadCols.map(col) :+
         when(col("action") === "DELETE" || col(Op) === "D", lit("D"))
           .otherwise(lit("R")).as(Op): _*)
@@ -280,11 +252,7 @@ class TemporalVault(
     // reference serializes every id into one JSON row (app/main.py:178),
     // which at 100 TB would make the audit row itself a straggler/OOM —
     // CollectMinK keeps every aggregation buffer ≤ AuditSampleK
-    val agg = rset.agg(
-        count(lit(1)),
-        concat_ws(",",
-          graft.dedup.Dedup.collectMinK(col(key).cast("string"), AuditSampleK)))
-      .head()
+    val agg = Temporal.auditRow(rset, Key, AuditSampleK).head()
     val audit = spark.createDataFrame(java.util.Collections.singletonList(
       Row(agg.getLong(0), agg.getString(1), at, rollbackTs)), AuditSchema)
     writeLog(compensation)
@@ -314,7 +282,7 @@ class TemporalVault(
     * versions of its key. */
   def versionsAsOf(at: String): DataFrame = {
     val m = micros(at)
-    Temporal.versioned(logUpTo(m).filter(col(ts) <= instant(m)), key, ts, tie).drop(Day)
+    Temporal.versioned(logUpTo(m).filter(col(Ts) <= instant(m)), Key, Ts, Tie).drop(Day)
   }
 
   /** Materialize the full live state at `at` (the reference's Snapshot
@@ -324,34 +292,8 @@ class TemporalVault(
   def writeSnapshot(at: String): Unit = {
     val m = micros(at)
     graft.Metrics.timedCall(spark, "vault.snapshot")(
-      Temporal.asOf(logUpTo(m), key, ts, tie, instant(m)).filter(col(Op) =!= "D")
+      Temporal.asOf(logUpTo(m), Key, Ts, Tie, instant(m)).filter(col(Op) =!= "D")
         .write.mode(SaveMode.Overwrite).parquet(s"$snapDir/at=${DateTimeUtils.microsToInstant(m)}"))
-  }
-
-  /** Compact into a fresh vault at `newRoot`: the log prefix ≤ `at`
-    * collapses to one surviving version per live record (original ts
-    * kept, tombstoned records dropped) and the tail is carried over
-    * verbatim. Reads for any T ≥ `at` are unchanged; the small-files
-    * and long-replay problems reset. Append-only stores compact by
-    * generation switch — the old root stays readable until dropped. */
-  def compactTo(newRoot: String, at: String): TemporalVault = {
-    val atM = micros(at)
-    val atTs = instant(atM)
-    val compacted = new TemporalVault(spark, newRoot, key, ts, tie, clock)
-    val live = Temporal.asOf(log, key, ts, tie, atTs)
-      .filter(col(Op) =!= "D").drop(Op, Day)
-    compacted.append(live)
-    val tail = log.filter(col(ts) > atTs).drop(Day)
-    if (!tail.isEmpty) compacted.writeLog(tail)
-    // every record deleted by `at` and no tail: the partitioned writes
-    // left no data file, and a log without one cannot be read. An
-    // unpartitioned empty write still leaves one carrying the schema.
-    if (Option(fs.globStatus(new Path(s"$newRoot/log/$Day=*"))).forall(_.isEmpty))
-      tail.limit(0).write.parquet(s"$newRoot/log/$Day=${day(atM)}")
-    if (exists(rbDir))
-      spark.read.parquet(rbDir).write.mode(SaveMode.Append)
-        .parquet(s"$newRoot/rollback_log")
-    compacted
   }
 
   /** (instant, dir) of every snapshot. Names parse with [[micros]], so
@@ -363,10 +305,16 @@ class TemporalVault(
       .map(n => micros(n.stripPrefix("at=")) -> s"$snapDir/$n")
 }
 
-/** The vault's fixed sizes: the reference's 1 h query-cache TTL
-  * (`setex(key, 3600, ...)`, app/main.py:147), the LRU cap of each
-  * cache, and the ids sampled into a rollback audit row. */
+/** The vault's fixed record columns, those of the reference's
+  * `TemporalRecord` (app/models.py), and its fixed sizes: the
+  * reference's 1 h query-cache TTL (`setex(key, 3600, ...)`,
+  * app/main.py:147), the cache's LRU cap, and the ids sampled into a
+  * rollback audit row. */
 object TemporalVault {
+  val Key = "record_id"
+  val Ts = "ts"
+  val Tie = "seq"
+
   val CacheTtlMs: Long = 3600L * 1000L
   val CacheMaxEntries = 64
   val AuditSampleK = 100

@@ -1,52 +1,39 @@
 package graft.util
 
 import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.SparkSession
 
 /** Keyed memo for session-owned values (persisted DataFrames, built
-  * index structures) with stopped-session recovery — the ONE copy of
-  * the getOrElseUpdate + isStopped-rebuild + clear boilerplate.
+  * index structures) — the ONE copy of the getOrElseUpdate + clear
+  * boilerplate.
   *
   * Semantics:
-  *  - `getOrBuild` memoizes `build` per key; if the cached value's
-  *    owning SparkSession has been stopped (a test tore it down), the
-  *    value is rebuilt against the live session and re-cached.
+  *  - `getOrBuild(spark, key)` memoizes `build` per (session, key):
+  *    entries are keyed by the session object itself, so two live
+  *    sessions never share an entry, and a stopped session's entries
+  *    are simply never looked up again (a new session is a new key).
   *  - `clear` runs `release` (typically `unpersist`) on every value
   *    whose session is still live, then forgets everything.
   *
   * Every instance registers itself at construction, so
   * [[SessionCache.clearAll]] reaches every memo in the process — no
   * hand-kept list of caches to drift out of date.
-  *
-  * `live` must be cheap and side-effect-free (it runs on every hit);
-  * for DataFrames it is `!df.sparkSession.sparkContext.isStopped`.
-  * Keys must embed the session identity (the callers key on
-  * `System.identityHashCode(spark)`) so two live sessions never share
-  * an entry.
   */
-final class SessionCache[K, V](live: V => Boolean, release: V => Unit) {
-  private val m = TrieMap.empty[K, V]
+final class SessionCache[K, V](release: V => Unit) {
+  private val m = TrieMap.empty[(SparkSession, K), V]
   SessionCache.all.add(this)
 
-  /** The cached value iff present AND its session is live — never
-    * builds. Lets callers choose a cheaper input when the shared one
-    * isn't already warm (e.g. a7's kmeans report falling back to the
-    * raw corpus scan when the cell table would have to be built just
-    * for it). */
-  def peek(key: K): Option[V] = m.get(key).filter(live)
+  /** The cached value iff present — never builds. Lets callers choose
+    * a cheaper input when the shared one isn't already warm (e.g. a7's
+    * kmeans report falling back to the raw corpus scan when the cell
+    * table would have to be built just for it). */
+  def peek(spark: SparkSession, key: K): Option[V] = m.get((spark, key))
 
-  def getOrBuild(key: K)(build: => V): V = {
-    val v = m.getOrElseUpdate(key, build)
-    if (live(v)) v
-    else {
-      // the owning session was stopped; rebuild against the live one
-      val fresh = build
-      m.put(key, fresh)
-      fresh
-    }
-  }
+  def getOrBuild(spark: SparkSession, key: K)(build: => V): V =
+    m.getOrElseUpdate((spark, key), build)
 
   def clear(): Unit = {
-    m.values.foreach(v => if (live(v)) release(v))
+    m.foreach { case ((s, _), v) => if (!s.sparkContext.isStopped) release(v) }
     m.clear()
   }
 }
@@ -63,16 +50,12 @@ object SessionCache {
     * on a query path. */
   def clearAll(): Unit = all.forEach(_.clear())
 
-  private def dfLive(df: DataFrame): Boolean =
-    !df.sparkSession.sparkContext.isStopped
-
-  /** Cache of persisted DataFrames: stopped-session detection via the
-    * owning context, release = unpersist. */
+  /** Cache of persisted DataFrames: release = unpersist. */
   def forDf[K]: SessionCache[K, DataFrame] =
-    new SessionCache[K, DataFrame](dfLive, df => { df.unpersist(); () })
+    new SessionCache[K, DataFrame](df => { df.unpersist(); () })
 
-  /** Cache of plain values (routing stats, a few longs) — always live,
-    * nothing to release. */
+  /** Cache of plain values (routing stats, a few longs, a cloned
+    * session) — nothing to release. */
   def forValue[K, V]: SessionCache[K, V] =
-    new SessionCache[K, V](_ => true, _ => ())
+    new SessionCache[K, V](_ => ())
 }

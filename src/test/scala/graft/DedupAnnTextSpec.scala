@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import graft.dedup.Dedup
 import graft.ann.Ann
 import graft.functions.{Text, Vec}
@@ -453,5 +454,132 @@ class DedupAnnTextSpec extends SparkSpec {
         conv(substring(md5($"text"), 1, 15), 16, 10).cast("long").as("composed"))
       .filter($"native" =!= $"composed").count()
     assert(mismatches == 0)
+  }
+
+  // ---- connected components vs union-find --------------------------------
+
+  private val graphGen: Gen[(Int, List[(Long, Long)])] = for {
+    n <- Gen.choose(2, 30)
+    m <- Gen.choose(0, 40)
+    edges <- Gen.listOfN(m, for {
+      a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1) if a != b
+    } yield (math.min(a, b).toLong, math.max(a, b).toLong))
+  } yield (n, edges.distinct)
+
+  private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (0 until n).map(i => i.toLong -> find(i).toLong).toMap
+  }
+
+  test("connectedComponents equals union-find on random graphs") {
+    for ((n, edges) <- samples(graphGen, 8)) {
+      val ids = (0L until n.toLong).toDF("id")
+      val pairs = edges.toDF("id_a", "id_b")
+      val got = Dedup.connectedComponents(ids, pairs, "id", maxIter = n + 1)
+        .as[(Long, Long)].collect().toMap
+      val want = unionFind(n, edges)
+      assert(got == want, s"n=$n edges=$edges")
+    }
+  }
+
+  test("connectedComponents converges in O(log n) rounds on a 300-node path") {
+    // min-label propagation would need 299 rounds here; the alternating
+    // large-star/small-star contraction must finish within 12
+    val n = 300
+    val ids = (0L until n.toLong).toDF("id")
+    val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(ids, pairs, "id", maxIter = 12)
+      .as[(Long, Long)].collect().toMap
+    assert(got.size == n && got.values.forall(_ == 0L))
+  }
+
+  // ---- a18 -----------------------------------------------------------------
+
+  /** Test-only naive MMR over collected pool+pairs — the independent
+    * twin the distributed unrolled greedy must match pick-for-pick. */
+  private def naiveMmr(pool: Seq[(Long, Long, Long)],
+                       pm: Map[(Long, Long, Long), Long],
+                       selectK: Int, lt: Long): Seq[(Long, Int, Long)] =
+    pool.map(_._1).distinct.sorted.flatMap { q =>
+      val cands = pool.filter(_._1 == q).map(t => (t._2, t._3))
+      val picks = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      (1 to selectK).foreach { _ =>
+        val rest = cands.filterNot(c => picks.exists(_._1 == c._1))
+        val best = rest.map { case (id, rel) =>
+          val red = if (picks.isEmpty) 0L
+            else picks.map(p => pm((q, id, p._1))).max
+          (lt * rel - (10 - lt) * red, rel, id)
+        }.sortBy(t => (-t._1, -t._2, t._3)).head
+        picks += ((best._3, best._2))
+      }
+      picks.zipWithIndex.map { case ((id, _), i) => (q, i + 1, id) }
+    }
+
+  test("mmrDiversify matches the naive greedy twin at λ∈{3,7}") {
+    val emb = Tables.embeddings(spark, sfDir)
+    for (lt <- Seq(3, 7)) {
+      val got = Ann.mmrDiversify(emb, "vec_id", "embedding",
+          Seq(0L, 1L, 2L), 10, 4, lt)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      // independent pool + pair sims straight off knnBrute + cosine
+      val pool = Ann.knnBrute(emb, "vec_id", "embedding", Seq(0L, 1L, 2L), 10)
+        .select(col("query_id"), col("nn_id"),
+          round(col("cos") * 1e6).cast("long").as("rel"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val ids = pool.map(_._2).distinct
+      val vecs = emb.filter(col("vec_id").isin(ids: _*))
+        .select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0),
+          r.getSeq[Float](1).map(_.toDouble).toArray)).toMap
+      def cos(a: Array[Double], b: Array[Double]): Long = {
+        val dot = a.zip(b).map { case (x, y) => x * y }.sum
+        val na = math.sqrt(a.map(x => x * x).sum)
+        val nb = math.sqrt(b.map(x => x * x).sum)
+        math.round(BigDecimal(dot / (na * nb))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble * 1e6)
+      }
+      val pm = (for {
+        (q, ai, _) <- pool; (q2, bi, _) <- pool
+        if q2 == q && ai != bi
+      } yield ((q, ai, bi), cos(vecs(ai), vecs(bi)))).toMap
+      assert(got === naiveMmr(pool, pm, 4, lt),
+        s"λ₁₀=$lt greedy mismatch")
+    }
+  }
+
+  test("mmrDiversify at λ₁₀=10 degenerates to knnBrute's top-selectK") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val got = Ann.mmrDiversify(emb, "vec_id", "embedding",
+        Seq(0L, 1L), 10, 5, 10)
+      .select(col("query_id"), col("pick_rank").as("rank"), col("nn_id"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toList
+    val want = Ann.knnBrute(emb, "vec_id", "embedding", Seq(0L, 1L), 10)
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("nn_id"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toList
+    assert(got === want)
+  }
+
+  test("mmrDiversify skips an exact duplicate that pure relevance would keep") {
+    // v1 and v2 are identical vectors (both ~aligned with query 0);
+    // v3 is distinct but still relevant. Pure top-2 keeps the dup;
+    // MMR at λ=0.5 must pick v3 second.
+    val emb = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f)),
+      (1L, Array(0.9f, 0.1f, 0.0f)),
+      (2L, Array(0.9f, 0.1f, 0.0f)),
+      (3L, Array(0.7f, 0.0f, 0.5f))
+    ).toDF("vec_id", "embedding")
+    val pure = Ann.mmrDiversify(emb, "vec_id", "embedding", Seq(0L), 3, 2, 10)
+      .collect().map(_.getLong(2)).toList
+    val mmr = Ann.mmrDiversify(emb, "vec_id", "embedding", Seq(0L), 3, 2, 5)
+      .collect().map(_.getLong(2)).toList
+    assert(pure === List(1L, 2L)) // relevance alone keeps the duplicate
+    assert(mmr === List(1L, 3L))  // MMR diversifies past it
   }
 }

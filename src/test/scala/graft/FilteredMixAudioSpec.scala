@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
+import graft.multimodal.Binary
 import graft.operators.{Pipeline, TimeSeries}
 import graft.sources.Tables
 
 /** Hand-derivations for a16 (filtered vector search), p2
   * (epoch-capped mixture plan), ts33 (seasonal strength), x27 (token
   * fertility) and the multimodal family: m3/m4 chunking, m8 (stub-PCM
-  * frame energy). */
+  * frame energy), m9 (scene cuts). */
 class FilteredMixAudioSpec extends SparkSpec {
   import spark.implicits._
 
@@ -281,5 +282,38 @@ class FilteredMixAudioSpec extends SparkSpec {
       graft.multimodal.Binary.withPayload(df, "doc_id", "text"), "doc_id", 256)
     assert(chunks.filter($"doc_id" === 1L).count() == 0)
     assert(chunks.filter($"doc_id" === 2L).count() == 1)
+  }
+
+  // ---- m9 ------------------------------------------------------------------
+
+  test("sceneCuts: two-regime payload hand-derivation") {
+    // 64 'a' then 64 ' ': frames [a,a,sp,sp] at 32 samples.
+    // 'a' frame e = 31²·32 = 30752; ' ' frame e = 96²·32 = 294912.
+    // Single cut where the regimes meet (frame 2).
+    val docs = Seq((1L, "a" * 64 + " " * 64)).toDF("doc_id", "text")
+    val out = Binary.sceneCuts(docs, "doc_id", "text", 32, 700)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toList
+    assert(out === List((1L, 4L, 1L, 2L, 2L)))
+  }
+
+  test("sceneCuts: uniform payload has no cuts; short payload is one 1-frame scene") {
+    val docs = Seq((1L, "b" * 96), (2L, "xy")).toDF("doc_id", "text")
+    val out = Binary.sceneCuts(docs, "doc_id", "text", 32, 700)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        Option(r.get(4)))).toList
+    // (id, n_frames, n_cuts, first_cut_frame)
+    assert(out === List((1L, 3L, 0L, None), (2L, 1L, 0L, None)))
+  }
+
+  test("sceneCuts totals agree with audioEnergy frame counts on the real corpus") {
+    val docs = Tables.documents(spark, sfDir).limit(50)
+    val sc = Binary.sceneCuts(docs, "doc_id", "text", 256, 700)
+      .select(col("doc_id"), col("n_frames"))
+    val ae = Binary.audioEnergy(docs, "doc_id", "text", 256, 2000)
+      .select(col("doc_id"), col("n_frames").as("ae_frames"))
+    val diff = sc.join(ae, "doc_id")
+      .filter(col("n_frames") =!= col("ae_frames")).count()
+    assert(diff === 0L)
   }
 }

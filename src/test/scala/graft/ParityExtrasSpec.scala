@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.temporal.{TemporalVault, TimeParse}
 
-/** Reference-parity extras: NL timestamps, the query cache with
-  * write-invalidation, and the operation metrics counters. */
+/** Reference-parity extras: NL timestamps, the vault's one query
+  * cache (per-instant AS-OF states with TTL expiry, LRU eviction and
+  * precise write-invalidation, observed through `cacheStats`), and the
+  * operation metrics counters. */
 class ParityExtrasSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,9 +32,9 @@ class ParityExtrasSpec extends SparkSpec {
 
     val t = "2024-01-02 00:00:00"
     assert(v.queryCached(t).count() == 1)
-    val hitsBefore = v.cacheHits
+    val hitsBefore = v.cacheStats("hits")
     assert(v.queryCached(t).count() == 1)
-    assert(v.cacheHits == hitsBefore + 1)
+    assert(v.cacheStats("hits") == hitsBefore + 1)
 
     // write invalidates: the new version must be visible
     v.append(batch(("u2", "2024-01-01 12:00:00", 2, "x")))
@@ -77,7 +79,7 @@ class ParityExtrasSpec extends SparkSpec {
     assert(df3.storageLevel.useMemory)
   }
 
-  test("appends invalidate precisely: only affected timestamps and record ids") {
+  test("appends invalidate precisely: only affected timestamps") {
     val dir = java.nio.file.Files.createTempDirectory("vault_precise").toString
     val v = new TemporalVault(spark, dir)
     def batch(rows: (String, String, Long, String)*) =
@@ -87,26 +89,19 @@ class ParityExtrasSpec extends SparkSpec {
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a"),
                    ("u2", "2024-01-01 00:00:00", 2, "b")))
 
-    // warm two AS-OF states and two record entries
+    // warm two AS-OF states
     val early = v.queryCached("2024-01-02 00:00:00")
     val late = v.queryCached("2024-01-10 00:00:00")
-    v.recordCached("u1").count(); v.recordCached("u2").count()
     val hits0 = v.cacheStats("hits")
 
     // append at 01-05: the 01-02 state is untouched (still cached and
-    // persisted), the 01-10 state is dropped; only u2's record entry goes
+    // persisted), the 01-10 state is dropped
     v.append(batch(("u2", "2024-01-05 00:00:00", 3, "b2")))
     assert(early.storageLevel.useMemory)
     assert(late.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(v.queryCached("2024-01-02 00:00:00").count() == 2) // hit
     assert(v.cacheStats("hits") == hits0 + 1)
     assert(v.queryCached("2024-01-10 00:00:00").count() == 2) // reload, sees v2
-
-    // record cache: u1 still a hit, u2 reloaded with the new version
-    val hits1 = v.cacheStats("hits")
-    v.recordCached("u1").count()
-    assert(v.cacheStats("hits") == hits1 + 1)
-    assert(v.recordCached("u2").select("data").head().getString(0) == "b2")
   }
 
   test("metrics count operations and accumulate latency") {

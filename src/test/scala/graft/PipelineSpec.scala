@@ -8,8 +8,8 @@ import graft.operators.Pipeline
 import graft.sources.Tables
 
 /** Training-data pipeline operators: sequence packing, survivorship
-  * dedup, benchmark decontamination, hash sampling, quality and dup
-  * drift. */
+  * dedup, benchmark decontamination and its per-source contamination
+  * report, hash sampling, quality and dup drift. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -447,5 +447,28 @@ class PipelineSpec extends SparkSpec {
         events, "event_id", "ts", 4L)
       .agg(sum(col("dup_served"))).head().getLong(0)
     assert(unique == 0L)
+  }
+
+  // ---- x29 contamination report -----------------------------------------
+
+  test("contaminationReport: hand-derived per-source rollup") {
+    val docs = Seq(
+      // doc 0 is bench (id % 20 == 0); docs 1-2 share its 3 shingles
+      (0L, "src_a", "w1 w2 w3 w4 w5"),
+      (1L, "src_a", "w1 w2 w3 w4 w5"),          // contaminated, 5 toks
+      (2L, "src_b", "x w1 w2 w3 w4 w5"),        // contaminated, 6 toks
+      (3L, "src_b", "q r s t u v"),             // clean, 6 toks
+      (4L, "src_c", "a b c")                    // clean, 3 toks
+    ).toDF("doc_id", "source", "text")
+    val bench = pmod(col("doc_id"), lit(20)) === 0
+    val hits = Pipeline.decontaminate(docs, "doc_id", "text", 3, bench, 3)
+    val out = Pipeline.contaminationReport(
+        docs, "doc_id", "text", "source", bench, hits)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getDouble(5))).toList
+    assert(out == List(
+      ("src_a", 1L, 1L, 5L, 5L, 1.0),
+      ("src_b", 2L, 1L, 12L, 6L, 0.5),
+      ("src_c", 1L, 0L, 3L, 0L, 0.0)))
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.Sketch
 
 /** Sketch set operations and merges: KMV/theta set operations (s3),
-  * Bloom decontamination (s4), histogram quantiles (s5), KMV (s7) and
-  * HLL merges. Hand-built corpora
+  * Bloom decontamination (s4), histogram quantiles (s5), the
+  * cross-shard histogram-sketch merge (s6), KMV (s7) and HLL merges. Hand-built corpora
   * where the sketch answer is provably exact, plus the approximation
   * invariants each sketch guarantees by construction. */
 class SketchSetOpsSpec extends SparkSpec {
@@ -259,5 +259,44 @@ class SketchSetOpsSpec extends SparkSpec {
         .head
     for (k <- Seq(2, 3, 8))
       assert(unionRow(stream, k) == unionRow(byLen, k), s"k=$k")
+  }
+
+  // ---- s6 histogram-sketch merge ----------------------------------------
+
+  private val vals = Seq(
+    ("a", 0.0), ("a", 1.0), ("a", 2.0), ("a", 3.0),
+    ("b", 4.0), ("b", 5.0), ("b", 6.0), ("b", 7.0),
+    ("c", 8.0), ("c", 9.0), ("c", 10.0), ("c", 16.0)
+  ).toDF("shard", "v")
+
+  test("merged shard sketches equal the flat single-pass histogram") {
+    val mm = vals.agg(min(col("v")).as("gmin"), max(col("v")).as("gmax"))
+    val merged = Sketch.histShardSketches(vals, "shard", "v", mm, 16)
+      .groupBy("__b").agg(sum("__c").as("c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    val flat = Sketch.histShardSketches(
+        vals.withColumn("shard", lit("all")), "shard", "v", mm, 16)
+      .select(col("__b"), col("__c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    assert(merged == flat)
+    // any merge order: sum over a different shard split is identical
+    val resplit = Sketch.histShardSketches(
+        vals.withColumn("shard", (col("v") % 2).cast("int").cast("string")),
+        "shard", "v", mm, 16)
+      .groupBy("__b").agg(sum("__c").as("c"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+    assert(resplit == flat)
+  }
+
+  test("histMergedQuantiles: hand-derived estimates on a 12-value frame") {
+    // range [0,16], 16 buckets of width 1; v=16 clamps to bucket 15.
+    // cum at bucket b (one value per bucket 0..10, then 15):
+    // p50: ceil(.5*12)=6 -> first cum>=6 is bucket 5 -> est (5+1)*1=6
+    // p90: ceil(.9*12)=11 -> bucket 10 -> est 11
+    // p99: ceil(.99*12)=12 -> bucket 15 -> est 16
+    val out = Sketch.histMergedQuantiles(vals, "shard", "v", 16).head()
+    assert(out.getLong(0) == 12L && out.getLong(1) == 3L)
+    assert(out.getDouble(2) == 6.0 && out.getDouble(3) == 11.0 &&
+      out.getDouble(4) == 16.0)
   }
 }

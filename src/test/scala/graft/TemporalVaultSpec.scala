@@ -1,35 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.temporal.TemporalVault
+import graft.temporal.{Temporal, TemporalVault}
 
 /** End-to-end lifecycle of the durable store façade: append versions,
   * time-travel, snapshot fast path, append-only rollback with
-  * tombstones, audit history — the reference's whole API surface
-  * (reference app/main.py) against a temp directory. */
+  * tombstones, the audit row and its id order, audit history — the
+  * reference's whole API surface (reference app/main.py) against a
+  * temp directory. The cache is ParityExtrasSpec's, the random op
+  * sequences VaultModelSpec's. */
 class TemporalVaultSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkVault(): TemporalVault = {
     val dir = java.nio.file.Files.createTempDirectory("vault").toString
     new TemporalVault(spark, dir)
-  }
-
-  test("record-cache invalidation is precise: only the touched ids reload") {
-    val v = mkVault()
-    v.append(batch((1 to 6).map(i =>
-      (s"u$i", "2024-01-01 00:00:00", i.toLong, "a")): _*))
-
-    // 3 cached ids, batch touches u1 only -> u2/u3 stay hot
-    Seq("u1", "u2", "u3").foreach(id => v.recordCached(id).count())
-    val hits0 = v.cacheStats("hits")
-    v.append(batch(("u1", "2024-01-02 00:00:00", 10, "b")))
-    v.recordCached("u2").count(); v.recordCached("u3").count()
-    assert(v.cacheStats("hits") == hits0 + 2, "untouched ids were invalidated")
-    val miss0 = v.cacheStats("misses")
-    v.recordCached("u1").count()
-    assert(v.cacheStats("misses") == miss0 + 1, "touched id survived invalidation")
-    assert(v.recordCached("u1").select("data").as[String].head() == "b")
   }
 
   private def batch(rows: (String, String, Long, String)*) =
@@ -81,6 +66,16 @@ class TemporalVaultSpec extends SparkSpec {
     assert(mid == Set(("u1", "b"), ("u3", "new")))
 
     assert(v.rollbackHistory.count() == 1)
+  }
+
+  test("rollback audit lists bigint record ids in numeric order") {
+    val v = mkVault()
+    v.append(Seq((10L, "2024-01-02 00:00:00", 1L, "a"), (9L, "2024-01-02 00:00:00", 2L, "b"))
+      .toDF("record_id", "ts_s", "seq", "data")
+      .select(col("record_id"), col("ts_s").cast("timestamp").as("ts"), col("seq"), col("data")))
+    val audit = v.rollback("2024-01-01 00:00:00", "2024-01-03 00:00:00")
+      .select("affected_records", "record_ids").as[(Long, String)].head()
+    assert(audit == ((2L, "9,10")))
   }
 
   test("rollback to a point where the record was tombstoned keeps it deleted") {
@@ -183,34 +178,9 @@ class TemporalVaultSpec extends SparkSpec {
     assert(dump == Set(
       ("u1", "v1", "a"), ("u1", "v2", "b"), ("u2", "v1", "x")))
     // labels on the pruned prefix match labels over the full log
-    val full = v.versionedLog.filter($"record_id" === "u1")
+    val full = Temporal.versioned(v.log, "record_id", "ts", "seq").filter($"record_id" === "u1")
       .select("version", "data").as[(String, String)].collect().toSet
     assert(full == Set(("v1", "a"), ("v2", "b"), ("v3", "c")))
-  }
-
-  test("compaction preserves reads at and after the compaction point") {
-    val v = mkVault()
-    v.append(batch(
-      ("u1", "2024-01-01 00:00:00", 1, "a"),
-      ("u1", "2024-01-03 00:00:00", 2, "b"),
-      ("u2", "2024-01-02 00:00:00", 3, "x"),
-      ("u1", "2024-01-08 00:00:00", 4, "c")))
-    v.rollback("2024-01-04 00:00:00", "2024-01-09 00:00:00") // undoes "c"
-
-    val newRoot = java.nio.file.Files.createTempDirectory("vault_c").toString
-    val c = v.compactTo(newRoot, "2024-01-05 00:00:00")
-
-    for (t <- Seq("2024-01-05 00:00:00", "2024-01-08 12:00:00", "2024-01-10 00:00:00")) {
-      val want = v.query(t).select("record_id", "data")
-        .as[(String, String)].collect().toSet
-      val got = c.query(t).select("record_id", "data")
-        .as[(String, String)].collect().toSet
-      assert(got == want, s"divergence at $t")
-    }
-    // compacted log prefix holds exactly one version per live record
-    assert(c.log.filter($"ts" <= lit("2024-01-05 00:00:00").cast("timestamp"))
-      .groupBy("record_id").count().filter($"count" > 1).count() == 0)
-    assert(c.rollbackHistory.count() == 1)
   }
 
   test("snapshot fast path returns the same state as the full-log read") {

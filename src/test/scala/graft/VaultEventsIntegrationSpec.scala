@@ -13,24 +13,27 @@ class VaultEventsIntegrationSpec extends SparkSpec {
 
   test("vault.query(T) over ingested events == direct AS-OF on the table") {
     val dir = java.nio.file.Files.createTempDirectory("vault_ev").toString
-    val v = new TemporalVault(spark, dir, key = "user_id", ts = "ts", tie = "event_id")
+    val v = new TemporalVault(spark, dir)
 
+    // the vault's fixed record columns: user_id is the record id,
+    // event_id the tie-break
     val ev = Tables.events(spark, sfDir)
-      .select("user_id", "ts", "event_id", "event_type", "value")
+      .select(col("user_id").as("record_id"), col("ts"), col("event_id").as("seq"),
+        col("event_type"), col("value"))
     v.append(ev)
 
     val t = "2024-01-20 00:00:00"
     val got = v.query(t)
-      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
-    val want = Temporal.asOf(ev, "user_id", "ts", "event_id",
+      .select("record_id", "seq").as[(Long, Long)].collect().toSet
+    val want = Temporal.asOf(ev, "record_id", "ts", "seq",
         lit(t).cast("timestamp"))
-      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+      .select("record_id", "seq").as[(Long, Long)].collect().toSet
     assert(got == want && got.nonEmpty)
 
     // snapshot fast path agrees too
     v.writeSnapshot("2024-01-10 00:00:00")
     val viaSnap = v.query(t)
-      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+      .select("record_id", "seq").as[(Long, Long)].collect().toSet
     assert(viaSnap == want)
   }
 }

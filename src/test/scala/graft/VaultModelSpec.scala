@@ -9,9 +9,8 @@ import org.scalacheck.rng.Seed
 import graft.temporal.TemporalVault
 
 /** Model-based test of the vault façade: ScalaCheck generates short
-  * random sequences of append, rollback, writeSnapshot, compactTo,
-  * query, queryCached and versionsAsOf against a tiny fresh vault
-  * (after a compaction, later ops run on the compacted vault), with every
+  * random sequences of append, rollback, writeSnapshot, query,
+  * queryCached and versionsAsOf against a tiny fresh vault, with every
   * time spelled in a random format Spark's timestamp cast accepts, and
   * checks each result against [[VaultModelSpec.Model]], an in-memory
   * replay of the documented semantics (the shape of perfbench's
@@ -40,9 +39,7 @@ class VaultModelSpec extends SparkSpec {
 
   /** Run one sequence on a fresh vault; None when every result matched. */
   private def run(ops: List[Op]): Option[String] = {
-    val (v0, dir) = mkVault()
-    var v = v0
-    val dirs = mutable.ArrayBuffer(dir)
+    val (v, dir) = mkVault()
     val model = new Model
     val cached = mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     val trace = mutable.ArrayBuffer.empty[String]
@@ -83,12 +80,6 @@ class VaultModelSpec extends SparkSpec {
         trace += s"writeSnapshot(${at.spell(zone)})"
         v.writeSnapshot(at.spell(zone))
         None
-      case Compact(at) =>
-        trace += s"compactTo(${at.spell(zone)})"
-        dirs += s"${dir}_compacted${dirs.size}"
-        v = v.compactTo(dirs.last, at.spell(zone))
-        model.compact(at.t)
-        None
       case Query(at) =>
         trace += s"query(${at.spell(zone)})"
         check("query", state(v, at.spell(zone)), model.state(at.t))
@@ -108,7 +99,7 @@ class VaultModelSpec extends SparkSpec {
     }.collectFirst { case Some(e) => e }
     finally {
       cached.foreach(_.unpersist())
-      dirs.foreach(deleteDir)
+      deleteDir(dir)
     }
   }
 
@@ -148,19 +139,6 @@ class VaultModelSpec extends SparkSpec {
     assert(state(v, "2024-01-05T12:30:00") == Set(("u1", "b")))
   }
 
-  test("compacting a vault whose every record is deleted at `at` leaves a readable empty vault") {
-    val (v, dir) = mkVault()
-    v.append(batch(Seq(Ver("u1", epoch("2024-01-02T00:00:00Z"), 1, "a", "I"))))
-    // u1 did not exist at `at`: the rollback tombstones it
-    v.rollback("2024-01-01 00:00:00", "2024-01-03 00:00:00")
-    assert(state(v, "2024-01-05") == Set.empty)
-    val c = v.compactTo(s"${dir}_compacted", "2024-01-04")
-    try {
-      assert(state(c, "2024-01-05") == Set.empty)
-      c.append(batch(Seq(Ver("u2", epoch("2024-01-06T00:00:00Z"), 2, "b", "I"))))
-      assert(state(c, "2024-01-07") == Set(("u2", "b")))
-    } finally Seq(dir, s"${dir}_compacted").foreach(deleteDir)
-  }
 }
 
 object VaultModelSpec {
@@ -198,7 +176,6 @@ object VaultModelSpec {
     * (valid), or `delta - 1` hours before it (rejected). */
   final case class Rollback(at: When, delta: Long, valid: Boolean, sp: Spelling) extends Op
   final case class Snapshot(at: When) extends Op
-  final case class Compact(at: When) extends Op
   final case class Query(at: When) extends Op
   final case class QueryCached(at: When) extends Op
   final case class VersionsAsOf(at: When) extends Op
@@ -227,7 +204,6 @@ object VaultModelSpec {
       sp <- spellingGen
     } yield Rollback(at, d, valid, sp)),
     1 -> whenGen.map(Snapshot(_)),
-    1 -> whenGen.map(Compact(_)),
     2 -> whenGen.map(Query(_)),
     2 -> whenGen.map(QueryCached(_)),
     1 -> whenGen.map(VersionsAsOf(_)))
@@ -261,15 +237,6 @@ object VaultModelSpec {
       }.toSet
 
     def latestAfter(at: Long): Option[Long] = vs.filter(_.ts > at).map(_.ts).maxOption
-
-    /** Apply compactTo(at): per record live at `at`, its latest version
-      * ≤ at (original ts and tie), then every version after `at`. */
-    def compact(at: Long): Unit = {
-      val live = vs.map(_.id).distinct.flatMap(latest(_, at)).filter(_.op != "D")
-      val tail = vs.filter(_.ts > at)
-      vs.clear()
-      vs ++= live ++ tail
-    }
 
     /** Apply rollback(at, stamp); the affected ids, sorted. */
     def rollback(at: Long, stamp: Long): Seq[String] = {
