@@ -1,12 +1,20 @@
 package graft.temporal
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, Path => JPath}
+import java.util.UUID
 import scala.collection.mutable
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, CommitFiles}
+import org.apache.spark.sql.graftbridge.CommitFiles.DataFile
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** User-facing façade over a durable temporal store — the drop-in
   * equivalent of the reference's API surface (reference app/main.py):
@@ -20,33 +28,65 @@ import org.apache.spark.unsafe.types.UTF8String
   *   GET  /compare                  | `compare(recordId, t1, t2, fields)`
   *   Snapshot table                 | `writeSnapshot(T)` + snapshot-aware reads
   *
-  * Storage model: an append-only parquet log under `root/log/` with an
-  * internal `_op` column (I=insert/new version, R=rollback-restore,
-  * D=rollback-tombstone), optional full-state snapshots under
-  * `root/snapshot/at=<ISO instant>/`, and a rollback audit log under
-  * `root/rollback_log/`. The reference rewrites rows in place on
-  * rollback (app/main.py:208); here rollback appends compensation
-  * versions — the scalable, audit-preserving equivalent (object stores
-  * don't update in place, and concurrent readers never see torn state).
+  * Layout. `root/_commits/<n>.json` is the commit log, n = 1, 2, ...;
+  * commit n is the n-th write. Each write puts its parquet files in a
+  * fresh directory `root/log/<uuid>/` (appends and rollbacks split by
+  * `_day=yyyy-MM-dd` of `ts` in the session zone) and then commits one
+  * JSON record of:
+  *  - the files it adds (path under root, bytes, rows, min/max `ts`
+  *    read from the files' footers), never the cumulative set;
+  *  - the schema;
+  *  - the op (`append`, `rollback`, `snapshot`) and its stamp range;
+  *  - for a snapshot, its instant and the commit it reflects;
+  *  - for a rollback, its audit row.
+  * The log's rows carry an internal `_op` column (I=insert/new version,
+  * R=rollback-restore, D=rollback-tombstone). The reference rewrites
+  * rows in place on rollback (app/main.py:208); here rollback appends
+  * compensation versions — the scalable, audit-preserving equivalent.
   *
-  * At 100 TB the log is written partitioned by a time bucket of `ts`
-  * (AS-OF reads prune partitions via the pushed-down range predicate)
-  * and compacted by snapshot: `writeSnapshot` materializes a state,
-  * after which reads replay only `last snapshot + log tail`.
+  * Commit protocol. A writer publishes commit n by writing a temp file
+  * in `_commits/` and hard-linking it to `<n>.json`; link(2) refuses an
+  * existing name (a rename would replace it), so exactly one writer
+  * wins each number and a reader never sees a partial commit. The
+  * loser loads the newer commits and tries the next number: an append
+  * with the same files; a rollback re-checks the stamp rule, deletes
+  * its files and recomputes. Files of a writer that crashed before its
+  * commit (and its temp file) are never read. Before each call the
+  * vault probes for `<head+1>.json` and loads any newer commits, so the
+  * writes of another vault instance on the same root are seen at once.
+  * The root must be a local path: an object store would need a
+  * conditional put (`If-None-Match: *`) in place of the link, which is
+  * not built. A root with `log/` but no `_commits/` (the older
+  * listing-based layout) is refused.
+  *
+  * Reads list nothing and infer nothing: each relation is built from
+  * the recorded files and schema, with the files chosen on the driver
+  * by their recorded `ts` range. Every AS-OF read follows one rule:
+  * take the latest anchor at or before the instant, then add the
+  * versions the log has beyond it. An anchor is (instant t0, commit c,
+  * full state at t0 over commits ≤ c, tombstones and `_op` kept): a
+  * snapshot, a cached state, or the empty anchor (−∞, 0). The state at
+  * `at` is the AS-OF at `at` of the anchor plus the versions of commits
+  * ≤ c with t0 < ts ≤ at plus those of commits after c with ts ≤ at;
+  * a late append stamped before an anchor is patched in.
+  *
+  * One query-result cache (the reference's Redis layer): full states
+  * per instant, `localCheckpoint`ed, bounded by a TTL and an LRU cap.
+  * Writes never touch it. An entry that commits have passed is patched
+  * when it is next read (the rule above with the entry as anchor) and
+  * its old blocks are released. A DataFrame a read returns may read a
+  * cached state's blocks; act on it before the entry is patched,
+  * evicted or expired.
   *
   * Batches carry the reference `TemporalRecord`'s fixed columns
-  * (`record_id`, `ts` timestamp, `seq` long tie-break; the constants
-  * on the companion) plus any payload columns. `clock` is the cache's
-  * time source (its TTL test seam).
-  *
-  * One query-result cache (the reference's Redis layer): AS-OF states
-  * persisted per instant, bounded by a TTL and an LRU cap, and dropped
-  * by a write exactly where it changes them.
+  * (`record_id`, `ts` timestamp, `seq` tie-break; the constants on the
+  * companion) plus payload columns, the same set in every batch.
+  * `clock` is the cache's time source (its TTL test seam).
   *
   * Times: any string Spark's timestamp cast accepts, in the session
   * time zone (`2024-01-05`, `2024-01-05 10:00:00`, the `T` form, a `Z`
   * or `±hh:mm` offset), parsed once by the cast's own parser into the
-  * instant every bound, cache key and snapshot choice derives from; an
+  * instant every bound, cache key and anchor choice derives from; an
   * unparsable string throws `IllegalArgumentException`. Rollback stamp
   * rule: `rollbackTs` must be after every version stamped after `at`,
   * else `rollback` throws `IllegalArgumentException` before any write —
@@ -58,11 +98,24 @@ class TemporalVault(
     clock: () => Long = () => System.currentTimeMillis()) {
   import TemporalVault._
 
-  private val logDir = s"$root/log"
-  private val snapDir = s"$root/snapshot"
-  private val rbDir = s"$root/rollback_log"
+  private val rootDir: JPath = {
+    val uri = new org.apache.hadoop.fs.Path(root).toUri
+    if (uri.getScheme != null && uri.getScheme != "file")
+      throw new UnsupportedOperationException(s"vault root '$root': commits need an " +
+        "exclusive create, built only for local paths (an object store needs a conditional put)")
+    Paths.get(uri.getPath).toAbsolutePath
+  }
+  private val commitDir = rootDir.resolve("_commits")
+  private val logDir = rootDir.resolve("log")
   private val Op = "_op"
   private val Day = "_day"
+
+  if (!Files.isDirectory(commitDir)) {
+    if (Files.isDirectory(logDir))
+      throw new IllegalStateException(s"vault root '$root' has a log/ but no _commits/: " +
+        "the older listing-based layout is not read")
+    Files.createDirectories(commitDir)
+  }
 
   private def zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
 
@@ -74,76 +127,223 @@ class TemporalVault(
 
   private def instant(m: Long): Column = lit(DateTimeUtils.microsToInstant(m))
 
-  /** The `_day` partition of instant `m`: its date in the session zone,
-    * the zone [[writeLog]] buckets by. */
-  private def day(m: Long): String =
-    java.time.LocalDate.ofEpochDay(DateTimeUtils.microsToDays(m, zone)).toString
+  // --- the commit log
 
-  private def logUpTo(m: Long): DataFrame = log.filter(col(Day) <= day(m))
+  @volatile private var commits = Vector.empty[Commit]
 
-  /** Log writes are hive-partitioned by the day of `ts` so AS-OF reads
-    * prune partitions: `query(at)` adds `_day <= day(at)` alongside the
-    * (pushed-down) ts range. At 100 TB this is the partition-pruning
-    * leg of the reference's (record_id, timestamp) index. */
-  private def writeLog(df: DataFrame): Unit =
-    df.withColumn(Day, date_format(col(Ts), "yyyy-MM-dd"))
-      .write.mode(SaveMode.Append).partitionBy(Day).parquet(logDir)
+  private def commitFile(n: Long): JPath = commitDir.resolve(s"$n.json")
 
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def exists(p: String): Boolean = fs.exists(new Path(p))
+  /** Load the commits after the head, if any; the probe for the next
+    * commit file is the one existence check a call makes. */
+  private def sync(): Vector[Commit] = synchronized {
+    var next = commitFile(commits.size + 1L)
+    while (Files.exists(next)) {
+      commits :+= Commit.parse(commits.size + 1L, new String(Files.readAllBytes(next), UTF_8))
+      next = commitFile(commits.size + 1L)
+    }
+    commits
+  }
+
+  /** Publish commits built by `attempt` at head + 1 until one wins its
+    * number; `attempt` gets the commits loaded so far and returns the
+    * commit and what to undo when another writer took the number. */
+  private def commitLoop(attempt: Vector[Commit] => (Commit, () => Unit)): Commit = {
+    var won: Option[Commit] = None
+    while (won.isEmpty) {
+      val cs = sync()
+      val (c, undo) = attempt(cs)
+      val tmp = commitDir.resolve(s"_tmp-${UUID.randomUUID()}.json")
+      Files.write(tmp, c.json.getBytes(UTF_8))
+      try { Files.createLink(commitFile(c.n), tmp); won = Some(c) }
+      catch { case _: FileAlreadyExistsException => undo() }
+      finally Files.delete(tmp)
+    }
+    sync()
+    won.get
+  }
+
+  /** The vault's schema, that of its first commit. */
+  private def schemaOf(cs: Vector[Commit]): StructType =
+    cs.headOption.map(_.schema).getOrElse(
+      throw new IllegalStateException(s"vault at '$root' has no commits"))
+
+  /** The files of the version log (appends and rollbacks), with the
+    * number of the commit that added each. */
+  private def logFiles(cs: Vector[Commit]): Seq[(Long, DataFile)] =
+    cs.filter(_.op != SnapshotOp).flatMap(c => c.files.map(c.n -> _))
+
+  private def read(cs: Vector[Commit], files: Seq[DataFile]): DataFrame =
+    CommitFiles.read(spark, files.map(f => (rootDir.resolve(f.path).toString, f.bytes)),
+      schemaOf(cs))
+
+  /** Write `df` into a fresh `log/<uuid>/`; its directory and files,
+    * paths relative to root. */
+  private def writeFiles(df: DataFrame, byDay: Boolean): (JPath, Seq[DataFile]) = {
+    val dir = logDir.resolve(UUID.randomUUID().toString)
+    val rel = rootDir.relativize(dir).toString
+    val files = CommitFiles.write(
+      if (byDay) df.withColumn(Day, date_format(col(Ts), "yyyy-MM-dd")) else df,
+      dir.toString, if (byDay) Seq(Day) else Nil, Ts)
+    (dir, files.map(f => f.copy(path = s"$rel/${f.path}")))
+  }
+
+  private def deleteDir(dir: JPath): Unit =
+    scala.reflect.io.Directory(dir.toFile).deleteRecursively()
 
   /** The full version log, including rollback compensation versions. */
-  def log: DataFrame = spark.read.parquet(logDir)
+  def log: DataFrame = { val cs = sync(); read(cs, logFiles(cs).map(_._2)) }
+
+  // --- anchors
+
+  /** An anchor: the full state at `at` over commits ≤ `base`. */
+  private case class Anchor(at: Long, base: Long, rows: Option[() => DataFrame])
+
+  /** The latest anchor at or before `t`: a snapshot, a cached state or
+    * the empty anchor. */
+  private def anchor(cs: Vector[Commit], t: Long): Anchor = {
+    val snaps = cs.collect { case c if c.op == SnapshotOp && c.stamps._1 <= t =>
+      Anchor(c.stamps._1, c.base, Some(() => read(cs, c.files)))
+    }
+    val cached = cache.synchronized(cache.toSeq.collect { case (at, e) if at <= t =>
+      Anchor(at, e.base, Some(() => e.state))
+    })
+    (Anchor(Long.MinValue, 0L, None) +: (snaps ++ cached)).maxBy(a => (a.at, a.base))
+  }
+
+  /** The log's versions beyond anchor `a` up to `upTo`: those of
+    * commits ≤ a.base with a.at < ts, those of later commits with any
+    * ts, only files whose recorded range can hold one. */
+  private def tail(cs: Vector[Commit], a: Anchor, upTo: Long,
+      id: Option[Column]): Seq[DataFrame] = {
+    val (old, late) = logFiles(cs).partition(_._1 <= a.base)
+    def part(files: Seq[DataFile], cond: Column): Option[DataFrame] =
+      if (files.isEmpty) None
+      else {
+        val bounded = if (upTo == Long.MaxValue) cond else cond && col(Ts) <= instant(upTo)
+        Some(read(cs, files).filter(id.fold(bounded)(k => bounded && col(Key) === k)))
+      }
+    val o = if (a.at >= upTo) Nil else old.map(_._2).filter(f => f.maxTs > a.at && f.minTs <= upTo)
+    (part(o, col(Ts) > instant(a.at)) ++
+      part(late.map(_._2).filter(_.minTs <= upTo), lit(true))).toSeq
+  }
+
+  /** Anchor rows plus tail: an AS-OF over them at any instant in
+    * [anchor instant, upTo] equals the AS-OF over the whole log. */
+  private def versionsFrom(cs: Vector[Commit], from: Long, upTo: Long,
+      id: Option[Column]): (Option[DataFrame], Seq[DataFrame]) = {
+    val a = anchor(cs, from)
+    (a.rows.map(r => id.fold(r())(k => r().filter(col(Key) === k))), tail(cs, a, upTo, id))
+  }
+
+  /** The state at `at`, tombstones and `_op` kept, columns in AS-OF
+    * order (key first). */
+  private def fullState(cs: Vector[Commit], at: Long, id: Option[Column] = None): DataFrame = {
+    val schema = schemaOf(cs)
+    val order = Key +: schema.fieldNames.toSeq.filterNot(_ == Key)
+    versionsFrom(cs, at, at, id) match {
+      case (Some(rows), Nil) => rows.select(order.map(col): _*)
+      case (None, Nil) => read(cs, Nil).select(order.map(col): _*)
+      case (rows, t) => Temporal.asOf((rows.toSeq ++ t).reduce(_ unionByName _), Key, Ts, Tie, instant(at))
+    }
+  }
+
+  private def live(state: DataFrame): DataFrame = state.filter(col(Op) =!= "D").drop(Op)
+
+  // --- writes
 
   /** Append a batch of new record versions (POST /records,
-    * app/main.py:67-98). Invalidation is precise: a version at t only
-    * changes AS-OF reads at `at >= t`, so only those cached states and
-    * snapshots go. */
+    * app/main.py:67-98): one write job, then the commit. */
   def append(batch: DataFrame): Unit = graft.Metrics.timedCall(spark, "vault.append") {
-    // one materialization: the write and the min-ts probe must see the
-    // SAME rows even when the caller's plan is non-deterministic or
-    // reads a moving source
-    val b = batch.persist()
-    try {
-      writeLog(b.withColumn(Op, lit("I")))
-      val since = b.agg(unix_micros(min(col(Ts)))).head()
-      if (!since.isNullAt(0)) invalidateSince(since.getLong(0))
-    } finally b.unpersist()
+    val rows = batch.withColumn(Op, lit("I"))
+    val schema = StructType(rows.schema.map(_.copy(nullable = true)))
+    Seq(Key, Ts, Tie).foreach(c => require(schema.fieldNames.contains(c), s"batch has no '$c' column"))
+    require(schema(Ts).dataType == TimestampType, s"'$Ts' must be a timestamp")
+    def check(cs: Vector[Commit]): Unit = cs.headOption.foreach { c =>
+      require(c.schema.map(f => f.name -> f.dataType).toSet == schema.map(f => f.name -> f.dataType).toSet,
+        s"batch columns ${schema.simpleString} differ from the vault's ${c.schema.simpleString}")
+    }
+    check(sync())
+    val (dir, files) = writeFiles(rows, byDay = true)
+    val stamps = (files.map(_.minTs).minOption.getOrElse(Long.MaxValue),
+      files.map(_.maxTs).maxOption.getOrElse(Long.MinValue))
+    try commitLoop { cs =>
+      check(cs)
+      (Commit(cs.size + 1L, AppendOp, schema, files, stamps), () => ())
+    } catch { case e: IllegalArgumentException => deleteDir(dir); throw e }
   }
+
+  /** Roll the store back to its state at `at` (POST /rollback,
+    * app/main.py:152): appends one compensation version per record
+    * changed after `at` — its at-state (`_op`=R) or a tombstone
+    * (`_op`=D) for records that did not exist at `at` or were deleted
+    * there (an at-state that is itself a tombstone) — stamped
+    * `rollbackTs`, and commits them with the audit entry, which keeps
+    * both strings as given. Returns that one audit row. History between
+    * `at` and the rollback stays queryable. */
+  def rollback(at: String, rollbackTs: String): DataFrame =
+      graft.Metrics.timedCall(spark, "vault.rollback") {
+    val (atM, stampM) = (micros(at), micros(rollbackTs))
+    val c = commitLoop { cs =>
+      val schema = schemaOf(cs)
+      // exact: every file records its max ts
+      val latest = logFiles(cs).map(_._2.maxTs).filter(_ > atM).maxOption
+      latest.foreach(l => require(stampM > l, s"rollback stamp '$rollbackTs' is not after " +
+        s"${DateTimeUtils.microsToInstant(l)}, the latest version after '$at'"))
+      val (dir, files) = if (latest.isEmpty) (logDir, Nil) else {
+        val (rows, t) = versionsFrom(cs, atM, Long.MaxValue, None)
+        val rset = Temporal.rollbackSet((rows.toSeq ++ t).reduce(_ unionByName _),
+          Key, Ts, Tie, instant(atM))
+        writeFiles(rset.select(schema.fieldNames.toSeq.map {
+          case Key => col(Key)
+          case Ts => instant(stampM).as(Ts)
+          case Tie => lit(0).cast(schema(Tie).dataType).as(Tie)
+          case Op => when(col("action") === "DELETE" || col(Op) === "D", lit("D"))
+            .otherwise(lit("R")).as(Op)
+          case f => col(f)
+        }: _*), byDay = true)
+      }
+      // exact affected count + a BOUNDED id sample (k smallest) over the
+      // compensation rows just written, one per affected record: the
+      // reference serializes every id into one JSON row (app/main.py:178),
+      // which at 100 TB would make the audit row itself a straggler/OOM
+      val agg = if (files.isEmpty) Row(0L, "")
+        else Temporal.auditRow(read(cs, files).select(Key), Key, AuditSampleK).head()
+      (Commit(cs.size + 1L, RollbackOp, schema, files, (stampM, stampM),
+        audit = Some(Row(agg.getLong(0), agg.getString(1), at, rollbackTs))),
+        () => if (files.nonEmpty) deleteDir(dir))
+    }
+    spark.createDataFrame(java.util.Collections.singletonList(c.audit.get), AuditSchema)
+  }
+
+  /** Materialize the full state at `at` (the reference's Snapshot
+    * table, app/models.py:27), tombstones kept, as a snapshot commit;
+    * later AS-OF reads at or after `at` start from it. */
+  def writeSnapshot(at: String): Unit = graft.Metrics.timedCall(spark, "vault.snapshot") {
+    val m = micros(at)
+    val cs = sync()
+    val (_, files) = writeFiles(fullState(cs, m), byDay = false)
+    commitLoop(now => (Commit(now.size + 1L, SnapshotOp, schemaOf(cs), files, (m, m),
+      base = cs.size.toLong), () => ()))
+  }
+
+  // --- reads
 
   /** Full history of one record with version labels (`_op` kept for
     * rollback-row transparency). */
   def history(recordId: String): DataFrame =
     graft.Metrics.timedCall(spark, "vault.history")(
-      Temporal.history(log, Key, Ts, Tie, lit(recordId)).drop(Day))
+      Temporal.history(log, Key, Ts, Tie, lit(recordId)))
 
-  /** State of all records as of `at` (GET /query). Uses the latest
-    * snapshot ≤ at when present (replay only the log tail after it),
-    * else one pushed-down range scan of the log. Tombstoned records are
-    * absent, as after the reference's rollback-delete. */
+  /** State of all records as of `at` (GET /query), by the anchor rule.
+    * Tombstoned records are absent, as after the reference's
+    * rollback-delete. */
   def query(at: String): DataFrame =
-    graft.Metrics.timedCall(spark, "vault.query")(queryState(micros(at)))
-
-  /** [[query]]'s un-metered core — internal consumers (the cached
-    * layer, the per-record filter) route here so one endpoint call
-    * never counts vault.query twice. */
-  private def queryState(at: Long): DataFrame = {
-    // partition pruning on the day bucket + pushed-down ts range
-    val pruned = logUpTo(at)
-    val state = snapshots.filter(_._1 <= at).maxByOption(_._1) match {
-      case Some((snapAt, dir)) =>
-        val tail = pruned.filter(col(Ts) > instant(snapAt) && col(Ts) <= instant(at))
-        Temporal.asOf(spark.read.parquet(dir).unionByName(tail), Key, Ts, Tie, instant(at))
-      case None => Temporal.asOf(pruned, Key, Ts, Tie, instant(at))
-    }
-    state.filter(col(Op) =!= "D").drop(Op, Day)
-  }
+    graft.Metrics.timedCall(spark, "vault.query")(live(fullState(sync(), micros(at))))
 
   /** Single-record state as of `at`. */
   def query(at: String, recordId: String): DataFrame =
     graft.Metrics.timedCall(spark, "vault.query")(
-      queryState(micros(at)).filter(col(Key) === recordId))
+      live(fullState(sync(), micros(at), Some(lit(recordId)))))
 
   /** Natural-language time-travel read, like the reference's
     * `GET /query?timestamp=yesterday at 4:00 PM` (app/main.py:105);
@@ -151,125 +351,25 @@ class TemporalVault(
   def queryAt(phrase: String, now: String): DataFrame =
     query(TimeParse.parse(phrase, now))
 
-  // --- query-result cache (the reference's Redis layer, main.py:60-64:
-  // `query:{timestamp}` entries with a 1h TTL, app/main.py:147), keyed
-  // by instant.
-  private case class Entry(df: DataFrame, bornMs: Long)
-  private val cache = mutable.LinkedHashMap.empty[Long, Entry]
-  @volatile private var cacheHitCount = 0L
-  @volatile private var cacheMissCount = 0L
-  @volatile private var cacheEvictCount = 0L
-  @volatile private var cacheExpireCount = 0L
-
-  /** The state at instant `at`, through the cache's TTL + LRU
-    * bookkeeping: an expired entry is unpersisted on access, a hit
-    * re-queues the entry, and an insert past `CacheMaxEntries` evicts
-    * and unpersists the least recently used one — executor memory
-    * holds at most that many states. */
-  private def cachedIn(at: Long): DataFrame =
-    cache.synchronized {
-      val now = clock()
-      cache.get(at) match {
-        case Some(e) if now - e.bornMs < CacheTtlMs =>
-          cacheHitCount += 1
-          cache.remove(at); cache.put(at, e) // LRU touch
-          e.df
-        case stale =>
-          stale.foreach { e =>
-            e.df.unpersist(); cache.remove(at); cacheExpireCount += 1
-          }
-          cacheMissCount += 1
-          val df = queryState(at).persist()
-          if (cache.size >= CacheMaxEntries) {
-            val (oldK, oldE) = cache.head
-            oldE.df.unpersist(); cache.remove(oldK); cacheEvictCount += 1
-          }
-          cache.put(at, Entry(df, now))
-          df
-      }
-    }
-
-  /** AS-OF read memoized per instant: the state is persisted in
-    * executor memory on first use (the Spark analog of the reference's
-    * Redis `setex(query:{ts}, 3600, ...)`) and served partition-local
-    * after that. Unlike the reference's TTL-only Redis, a write through
-    * this vault drops exactly the states it can affect; the TTL bounds
-    * staleness from writers in other vault instances. */
-  def queryCached(at: String): DataFrame =
-    graft.Metrics.timedCall(spark, "vault.query")(cachedIn(micros(at)))
-
-  def cacheStats: Map[String, Long] = Map(
-    "hits" -> cacheHitCount, "misses" -> cacheMissCount,
-    "evictions" -> cacheEvictCount, "expirations" -> cacheExpireCount,
-    "entries" -> cache.synchronized(cache.size).toLong)
-
-  /** A write stamped at epoch micros `since` changes the state at every
-    * instant ≥ since: drop those cached states and snapshots. */
-  private def invalidateSince(since: Long): Unit = {
-    cache.synchronized {
-      cache.keys.filter(_ >= since).toList.foreach(k => cache.remove(k).foreach(_.df.unpersist()))
-    }
-    snapshots.filter(_._1 >= since).foreach { case (_, dir) => fs.delete(new Path(dir), true) }
-  }
-
-  private def invalidateCache(): Unit =
-    cache.synchronized { cache.values.foreach(_.df.unpersist()); cache.clear() }
-
   /** Field-level diff of one record between two timestamps
     * (GET /compare, app/main.py:267). */
   def compare(recordId: String, from: String, to: String, fields: Seq[String]): DataFrame =
-    graft.Metrics.timedCall(spark, "vault.compare")(
-      Temporal.changesBetween(log.filter(col(Key) === recordId), Key, Ts, Tie,
-        instant(micros(from)), instant(micros(to)), fields))
-
-  /** Roll the store back to its state at `at` (POST /rollback,
-    * app/main.py:152): appends one compensation version per record
-    * changed after `at` — its at-state (`_op`=R) or a tombstone
-    * (`_op`=D) for records that did not exist at `at` or were deleted
-    * there (an at-state that is itself a tombstone) — stamped
-    * `rollbackTs`, plus the audit entry, which keeps both strings as
-    * given. Returns that one audit row. History between `at` and the
-    * rollback stays queryable. */
-  def rollback(at: String, rollbackTs: String): DataFrame =
-      graft.Metrics.timedCall(spark, "vault.rollback") {
-    val (atM, stampM) = (micros(at), micros(rollbackTs))
-    val log = this.log // one listing and schema read for the whole call
-    val latest = log.filter(col(Day) >= day(atM) && col(Ts) > instant(atM))
-      .agg(coalesce(unix_micros(max(col(Ts))), lit(Long.MinValue))).head().getLong(0)
-    require(stampM > latest, s"rollback stamp '$rollbackTs' is not after " +
-      s"${DateTimeUtils.microsToInstant(latest)}, the latest version after '$at'")
-    val rset = Temporal.rollbackSet(log, Key, Ts, Tie, instant(atM))
-    val payloadCols = log.columns
-      .filterNot(c => c == Key || c == Ts || c == Tie || c == Op || c == Day)
-    val compensation = rset.select(
-      col(Key) +:
-        instant(stampM).as(Ts) +:
-        lit(0L).as(Tie) +:
-        payloadCols.map(col) :+
-        when(col("action") === "DELETE" || col(Op) === "D", lit("D"))
-          .otherwise(lit("R")).as(Op): _*)
-    // exact affected count + a BOUNDED id sample (k smallest): the
-    // reference serializes every id into one JSON row (app/main.py:178),
-    // which at 100 TB would make the audit row itself a straggler/OOM —
-    // CollectMinK keeps every aggregation buffer ≤ AuditSampleK
-    val agg = Temporal.auditRow(rset, Key, AuditSampleK).head()
-    val audit = spark.createDataFrame(java.util.Collections.singletonList(
-      Row(agg.getLong(0), agg.getString(1), at, rollbackTs)), AuditSchema)
-    writeLog(compensation)
-    audit.write.mode(SaveMode.Append).parquet(rbDir)
-    invalidateCache()
-    invalidateSince(stampM)
-    audit
+      graft.Metrics.timedCall(spark, "vault.compare") {
+    val (f, t, cs) = (micros(from), micros(to), sync())
+    val (rows, tl) = versionsFrom(cs, math.min(f, t), math.max(f, t), Some(lit(recordId)))
+    Temporal.changesBetween((rows.toSeq ++ tl).reduceOption(_ unionByName _)
+        .getOrElse(read(cs, Nil)),
+      Key, Ts, Tie, instant(f), instant(t), fields)
   }
 
   /** Rollback audit log, newest rollback instant first
-    * (GET /rollback/history, app/main.py:249); a vault that never
-    * rolled back returns no rows with the same fields. */
+    * (GET /rollback/history, app/main.py:249), from the commits' audit
+    * rows; a vault that never rolled back returns no rows with the same
+    * fields. */
   def rollbackHistory: DataFrame =
     graft.Metrics.timedCall(spark, "vault.rollback_history")(
-      if (exists(rbDir))
-        spark.read.parquet(rbDir).orderBy(to_timestamp(col("rollback_ts")).desc)
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), AuditSchema))
+      spark.createDataFrame(sync().filter(_.op == RollbackOp)
+        .sortBy(c => (c.stamps._1, c.n)).reverse.flatMap(_.audit).asJava, AuditSchema))
 
   /** The reference endpoint's paged form: newest `limit` audit entries
     * (`limit: int = 10`, app/main.py:254). */
@@ -277,32 +377,75 @@ class TemporalVault(
 
   /** EVERY version with ts ≤ `at` — the literal semantics of the
     * reference's `GET /query?timestamp=T` dump (app/main.py:127-129;
-    * `query(at)` is the AS-OF state). Labels on the pruned prefix equal
-    * labels over the full log: a label depends only on earlier
-    * versions of its key. */
+    * `query(at)` is the AS-OF state). Labels on the prefix equal labels
+    * over the full log: a label depends only on earlier versions of its
+    * key. */
   def versionsAsOf(at: String): DataFrame = {
-    val m = micros(at)
-    Temporal.versioned(logUpTo(m).filter(col(Ts) <= instant(m)), Key, Ts, Tie).drop(Day)
+    val (m, cs) = (micros(at), sync())
+    Temporal.versioned(read(cs, logFiles(cs).map(_._2).filter(_.minTs <= m))
+      .filter(col(Ts) <= instant(m)), Key, Ts, Tie)
   }
 
-  /** Materialize the full live state at `at` (the reference's Snapshot
-    * table, app/models.py:27) under `snapshot/at=<ISO instant>`; later
-    * AS-OF reads replay only the log tail after it. Tombstoned records
-    * are simply absent. */
-  def writeSnapshot(at: String): Unit = {
-    val m = micros(at)
-    graft.Metrics.timedCall(spark, "vault.snapshot")(
-      Temporal.asOf(logUpTo(m), Key, Ts, Tie, instant(m)).filter(col(Op) =!= "D")
-        .write.mode(SaveMode.Overwrite).parquet(s"$snapDir/at=${DateTimeUtils.microsToInstant(m)}"))
-  }
+  // --- query-result cache (the reference's Redis layer, main.py:60-64:
+  // `query:{timestamp}` entries with a 1h TTL, app/main.py:147), keyed
+  // by instant.
+  private case class Entry(state: DataFrame, base: Long, bornMs: Long)
+  private val cache = mutable.LinkedHashMap.empty[Long, Entry]
+  @volatile private var cacheHitCount = 0L
+  @volatile private var cacheMissCount = 0L
+  @volatile private var cacheEvictCount = 0L
+  @volatile private var cacheExpireCount = 0L
 
-  /** (instant, dir) of every snapshot. Names parse with [[micros]], so
-    * older `at=yyyy-MM-dd HH:mm:ss` dirs (session zone) still work. */
-  private def snapshots: Seq[(Long, String)] =
-    if (!exists(snapDir)) Nil
-    else fs.listStatus(new Path(snapDir)).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("at="))
-      .map(n => micros(n.stripPrefix("at=")) -> s"$snapDir/$n")
+  private def release(e: Entry): Unit = ColumnBridge.unpersistLocalCheckpoint(e.state)
+
+  /** The full state at instant `at`, through the cache's TTL + LRU
+    * bookkeeping: a live entry is a hit (patched first when commits
+    * have passed it), an expired one is released on access, and an
+    * insert past `CacheMaxEntries` evicts and releases the least
+    * recently used one — executor memory holds at most that many
+    * states. */
+  private def cachedIn(at: Long): DataFrame =
+    cache.synchronized {
+      val cs = sync()
+      val now = clock()
+      cache.get(at) match {
+        case Some(e) if now - e.bornMs < CacheTtlMs =>
+          cacheHitCount += 1
+          cache.remove(at) // LRU touch
+          val t = tail(cs, Anchor(at, e.base, None), at, None)
+          val cur = if (t.isEmpty) e.copy(base = cs.size.toLong) else {
+            val patched = Temporal.asOf((e.state +: t).reduce(_ unionByName _),
+              Key, Ts, Tie, instant(at)).localCheckpoint()
+            release(e)
+            e.copy(state = patched, base = cs.size.toLong)
+          }
+          cache.put(at, cur)
+          cur.state
+        case stale =>
+          stale.foreach { e => release(e); cache.remove(at); cacheExpireCount += 1 }
+          cacheMissCount += 1
+          val state = fullState(cs, at).localCheckpoint()
+          if (cache.size >= CacheMaxEntries) {
+            val (oldK, oldE) = cache.head
+            release(oldE); cache.remove(oldK); cacheEvictCount += 1
+          }
+          cache.put(at, Entry(state, cs.size.toLong, now))
+          state
+      }
+    }
+
+  /** AS-OF read memoized per instant: the state is checkpointed in
+    * executor memory on first use (the Spark analog of the reference's
+    * Redis `setex(query:{ts}, 3600, ...)`) and served partition-local
+    * after that, patched with whatever commits arrived since. Only this
+    * read moves the cache counters. */
+  def queryCached(at: String): DataFrame =
+    graft.Metrics.timedCall(spark, "vault.query")(live(cachedIn(micros(at))))
+
+  def cacheStats: Map[String, Long] = Map(
+    "hits" -> cacheHitCount, "misses" -> cacheMissCount,
+    "evictions" -> cacheEvictCount, "expirations" -> cacheExpireCount,
+    "entries" -> cache.synchronized(cache.size).toLong)
 }
 
 /** The vault's fixed record columns, those of the reference's
@@ -324,4 +467,44 @@ object TemporalVault {
     StructField("record_ids", StringType),
     StructField("rollback_to", StringType),
     StructField("rollback_ts", StringType)))
+
+  private val AppendOp = "append"
+  private val RollbackOp = "rollback"
+  private val SnapshotOp = "snapshot"
+
+  /** Commit `n`: the files it adds, the schema, the op and its stamp
+    * range (a rollback's or snapshot's instant, an append's min/max
+    * ts), a snapshot's base (the last commit its state reflects) and a
+    * rollback's audit row. */
+  private final case class Commit(n: Long, op: String, schema: StructType,
+      files: Seq[DataFile], stamps: (Long, Long), base: Long = 0L, audit: Option[Row] = None) {
+    def json: String = compact(render(
+      ("commit" -> n) ~ ("op" -> op) ~ ("stamps" -> List(stamps._1, stamps._2)) ~
+        ("schema" -> parse(schema.json)) ~
+        ("files" -> files.map(f => ("path" -> f.path) ~ ("bytes" -> f.bytes) ~
+          ("rows" -> f.rows) ~ ("min_ts" -> f.minTs) ~ ("max_ts" -> f.maxTs))) ~
+        ("base" -> base) ~
+        ("audit" -> audit.map(a => ("affected_records" -> a.getLong(0)) ~
+          ("record_ids" -> a.getString(1)) ~ ("rollback_to" -> a.getString(2)) ~
+          ("rollback_ts" -> a.getString(3))))))
+  }
+
+  private object Commit {
+    private implicit val formats: Formats = DefaultFormats
+
+    def parse(n: Long, text: String): Commit = {
+      val j = org.json4s.jackson.JsonMethods.parse(text)
+      require((j \ "commit").extract[Long] == n, s"commit file $n.json holds commit ${j \ "commit"}")
+      val List(lo, hi) = (j \ "stamps").extract[List[Long]]
+      Commit(n, (j \ "op").extract[String],
+        DataType.fromJson(compact(render(j \ "schema"))).asInstanceOf[StructType],
+        (j \ "files").children.map(f => DataFile((f \ "path").extract[String],
+          (f \ "bytes").extract[Long], (f \ "rows").extract[Long],
+          (f \ "min_ts").extract[Long], (f \ "max_ts").extract[Long])),
+        (lo, hi), (j \ "base").extract[Long],
+        (j \ "audit").toOption.map(a => Row((a \ "affected_records").extract[Long],
+          (a \ "record_ids").extract[String], (a \ "rollback_to").extract[String],
+          (a \ "rollback_ts").extract[String])))
+    }
+  }
 }

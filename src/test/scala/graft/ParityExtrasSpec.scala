@@ -1,14 +1,62 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.temporal.{TemporalVault, TimeParse}
 
 /** Reference-parity extras: NL timestamps, the vault's one query
-  * cache (per-instant AS-OF states with TTL expiry, LRU eviction and
-  * precise write-invalidation, observed through `cacheStats`), and the
-  * operation metrics counters. */
+  * cache (per-instant AS-OF states, checkpointed, with TTL expiry, LRU
+  * eviction, and patching by later commits instead of invalidation,
+  * observed through `cacheStats`, the checkpoints' blocks and the
+  * tasks' input bytes), and the operation metrics counters. */
 class ParityExtrasSpec extends SparkSpec {
   import spark.implicits._
+
+  private def batch(rows: (String, String, Long, String)*) =
+    rows.toDF("record_id", "ts_s", "seq", "data")
+      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+      .select("record_id", "ts", "seq", "data")
+
+  private def rows(df: DataFrame): Set[(String, String)] =
+    df.select("record_id", "data").as[(String, String)].collect().toSet
+
+  /** The id of the checkpointed RDD a cached state reads. */
+  private def checkpointOf(df: DataFrame): Int = {
+    val rdds = df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+    assert(rdds.size == 1, "a cached state reads one checkpoint")
+    rdds.head.id
+  }
+
+  /** Whether the checkpoint under a cached state still holds its blocks. */
+  private def held(df: DataFrame): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(checkpointOf(df))
+
+  /** Run `body` and return the input bytes of each task it ran that
+    * scanned files (a stage with a `FileScanRDD`), from a listener. */
+  private def fileScanBytes(body: => Unit): Seq[Long] = {
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
+          scanStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.add((e.stageId, e.taskMetrics.inputMetrics.bytesRead))
+    }
+    ColumnBridge.flushListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      ColumnBridge.flushListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    bytes.asScala.toSeq.collect { case (s, b) if scanStages.contains(s) => b }
+  }
 
   test("natural-language timestamps parse deterministically") {
     val now = "2024-01-20 16:30:00"
@@ -24,10 +72,6 @@ class ParityExtrasSpec extends SparkSpec {
   test("query cache serves repeats and invalidates on write") {
     val dir = java.nio.file.Files.createTempDirectory("vault_cache").toString
     val v = new TemporalVault(spark, dir)
-    def batch(rows: (String, String, Long, String)*) =
-      rows.toDF("record_id", "ts_s", "seq", "data")
-        .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .select("record_id", "ts", "seq", "data")
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
 
     val t = "2024-01-02 00:00:00"
@@ -36,7 +80,7 @@ class ParityExtrasSpec extends SparkSpec {
     assert(v.queryCached(t).count() == 1)
     assert(v.cacheStats("hits") == hitsBefore + 1)
 
-    // write invalidates: the new version must be visible
+    // the write is patched in: the new version must be visible
     v.append(batch(("u2", "2024-01-01 12:00:00", 2, "x")))
     assert(v.queryCached(t).count() == 2)
 
@@ -48,60 +92,125 @@ class ParityExtrasSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vault_ttl").toString
     var nowMs = 0L
     val v = new TemporalVault(spark, dir, clock = () => nowMs)
-    def batch(rows: (String, String, Long, String)*) =
-      rows.toDF("record_id", "ts_s", "seq", "data")
-        .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .select("record_id", "ts", "seq", "data")
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a")))
 
     val df1 = v.queryCached("2024-01-02 00:00:00")
-    assert(df1.storageLevel.useMemory)
+    assert(held(df1))
 
-    // TTL expiry (reference setex 3600): a stale entry is dropped,
-    // unpersisted, and reloaded as a miss. (The reload re-persists the
-    // SAME logical plan, and storageLevel is plan-keyed — so the
-    // unpersist itself is proven on the eviction path below, whose
-    // plan is never re-cached.)
+    // TTL expiry (reference setex 3600): a stale entry is dropped, its
+    // checkpoint released, and reloaded as a miss into a new one
     nowMs = TemporalVault.CacheTtlMs + 1L
     val miss0 = v.cacheStats("misses")
-    v.queryCached("2024-01-02 00:00:00").count()
+    val reloaded = v.queryCached("2024-01-02 00:00:00")
+    assert(reloaded.count() == 1)
     assert(v.cacheStats("misses") == miss0 + 1)
     assert(v.cacheStats("expirations") == 1)
+    assert(!held(df1) && held(reloaded))
 
-    // LRU cap: the 65th distinct instant unpersists the eldest
+    // LRU cap: the 65th distinct instant releases the eldest
     val df2 = v.queryCached("2024-01-03 00:00:00")
     val df3 = v.queryCached("2024-01-02 00:00:00") // LRU touch — df2 is now eldest
     assert(v.cacheStats("evictions") == 0)
     (1 to TemporalVault.CacheMaxEntries - 1).foreach(i =>
       v.queryCached(f"2024-01-04 ${i / 60}%02d:${i % 60}%02d:00"))
     assert(v.cacheStats("evictions") == 1)
-    assert(df2.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(df3.storageLevel.useMemory)
+    assert(!held(df2))
+    assert(held(df3))
   }
 
-  test("appends invalidate precisely: only affected timestamps") {
+  test("appends patch cached states: only affected instants change") {
     val dir = java.nio.file.Files.createTempDirectory("vault_precise").toString
     val v = new TemporalVault(spark, dir)
-    def batch(rows: (String, String, Long, String)*) =
-      rows.toDF("record_id", "ts_s", "seq", "data")
-        .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .select("record_id", "ts", "seq", "data")
     v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a"),
                    ("u2", "2024-01-01 00:00:00", 2, "b")))
 
     // warm two AS-OF states
     val early = v.queryCached("2024-01-02 00:00:00")
     val late = v.queryCached("2024-01-10 00:00:00")
-    val hits0 = v.cacheStats("hits")
+    val (hits0, misses0) = (v.cacheStats("hits"), v.cacheStats("misses"))
 
-    // append at 01-05: the 01-02 state is untouched (still cached and
-    // persisted), the 01-10 state is dropped
+    // append at 01-05: a write touches no cached state
     v.append(batch(("u2", "2024-01-05 00:00:00", 3, "b2")))
-    assert(early.storageLevel.useMemory)
-    assert(late.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(v.queryCached("2024-01-02 00:00:00").count() == 2) // hit
-    assert(v.cacheStats("hits") == hits0 + 1)
-    assert(v.queryCached("2024-01-10 00:00:00").count() == 2) // reload, sees v2
+    assert(held(early) && held(late))
+    // the 01-02 state has nothing to patch: a hit on the same checkpoint
+    val early2 = v.queryCached("2024-01-02 00:00:00")
+    assert(rows(early2) == Set(("u1", "a"), ("u2", "b")))
+    assert(held(early) && checkpointOf(early2) == checkpointOf(early))
+    // the 01-10 state is patched on this hit: it sees v2, and its old
+    // checkpoint is released for the patched one
+    val late2 = v.queryCached("2024-01-10 00:00:00")
+    assert(rows(late2) == Set(("u1", "a"), ("u2", "b2")))
+    assert(!held(late) && held(late2))
+    assert(v.cacheStats("hits") == hits0 + 2 && v.cacheStats("misses") == misses0)
+  }
+
+  test("a state cached before a rollback's stamp stays a hit with its pre-rollback rows") {
+    val dir = java.nio.file.Files.createTempDirectory("vault_rb_cache").toString
+    val v = new TemporalVault(spark, dir)
+    v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a"),
+                   ("u1", "2024-01-05 00:00:00", 2, "b"),
+                   ("u2", "2024-01-04 00:00:00", 3, "x")))
+    val before = v.queryCached("2024-01-06 00:00:00")
+    assert(rows(before) == Set(("u1", "b"), ("u2", "x")))
+    val (hits0, misses0) = (v.cacheStats("hits"), v.cacheStats("misses"))
+
+    // every compensation is stamped 01-10, after the cached instant
+    v.rollback("2024-01-02 00:00:00", "2024-01-10 00:00:00")
+    assert(rows(v.queryCached("2024-01-06 00:00:00")) == Set(("u1", "b"), ("u2", "x")))
+    assert(v.cacheStats("hits") == hits0 + 1 && v.cacheStats("misses") == misses0)
+    assert(held(before))
+    assert(rows(v.queryCached("2024-01-11 00:00:00")) == Set(("u1", "a")))
+  }
+
+  test("a cached state read again after a later-stamped append reads no log file") {
+    val dir = java.nio.file.Files.createTempDirectory("vault_noread").toString
+    val v = new TemporalVault(spark, dir)
+    v.append(batch(("u1", "2024-01-01 00:00:00", 1, "a"),
+                   ("u2", "2024-01-02 00:00:00", 2, "x")))
+    val t = "2024-01-03 00:00:00"
+    assert(rows(v.queryCached(t)) == Set(("u1", "a"), ("u2", "x")))
+    v.append(batch(("u1", "2024-01-05 00:00:00", 3, "b")))
+    var got = Set.empty[(String, String)]
+    val scanned = fileScanBytes { got = rows(v.queryCached(t)) }
+    assert(got == Set(("u1", "a"), ("u2", "x")))
+    assert(scanned.count(_ > 0) == 0, s"file-scan task input bytes: $scanned")
+  }
+
+  test("a second vault on the same root patches its cached state with only the other's commit") {
+    val dir = java.nio.file.Files.createTempDirectory("vault_two").toString
+    val (a, b) = (new TemporalVault(spark, dir), new TemporalVault(spark, dir))
+    a.append(batch((1 to 40).map(i => (f"u$i%02d", "2024-01-01 00:00:00", i.toLong, s"d$i")): _*))
+    a.append(batch((1 to 40).map(i => (f"u$i%02d", "2024-01-02 00:00:00", 100L + i, s"e$i")): _*))
+    val t = "2024-01-03 00:00:00"
+    val cached = b.queryCached(t)
+    assert(rows(cached).contains(("u01", "e1")))
+    val cachedRdds = cached.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+    val blockBytes = spark.sparkContext.getRDDStorageInfo
+      .filter(i => cachedRdds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+
+    def dataFiles: Set[Path] = Files.walk(Path.of(dir, "log")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSet
+    val older = dataFiles
+    a.append(batch(("u01", "2024-01-02 12:00:00", 999L, "late")))
+    val commitFiles = (dataFiles -- older).toSeq.map(_.toString)
+    assert(commitFiles.nonEmpty)
+    // every older data file moves away: reading any of them would fail
+    val moved = Files.createTempDirectory("vault_two_moved")
+    older.zipWithIndex.foreach { case (f, i) => Files.move(f, moved.resolve(s"$i.parquet")) }
+
+    val hits0 = b.cacheStats("hits")
+    var got = Set.empty[(String, String)]
+    val scanned = fileScanBytes { got = rows(b.queryCached(t)) }
+    assert(got.contains(("u01", "late")) && got.contains(("u02", "e2")) && got.size == 40)
+    assert(b.cacheStats("hits") == hits0 + 1)
+    // the patch's scan stage also reads the old checkpoint's blocks;
+    // what is left is at most what reading the commit's files with the
+    // same bound costs
+    val alone = fileScanBytes {
+      spark.read.parquet(commitFiles: _*).filter(col("ts") <= lit(t).cast("timestamp")).collect()
+    }
+    assert(scanned.sum - blockBytes > 0 && scanned.sum - blockBytes <= alone.sum,
+      s"file-scan input bytes $scanned less checkpoint blocks $blockBytes; the commit's files alone $alone")
   }
 
   test("metrics count operations and accumulate latency") {
@@ -174,8 +283,8 @@ class ParityExtrasSpec extends SparkSpec {
     // histogram: cumulative, final +Inf bucket equals the count
     val hist = Metrics.histogram("vault.append")
     assert(hist.last._1.isPosInfinity && hist.last._2 === c("vault.append"))
-    // append is eager (log write + min-ts probe): its inner SQL
-    // executions are attributed to the .sql label, not the endpoint
+    // append is eager (the log write): its inner SQL executions are
+    // attributed to the .sql label, not the endpoint
     assert(Metrics.count("vault.append.sql") >= 1L)
     assert(Metrics.totalSeconds("vault.append") > 0.0)
   }

@@ -9,7 +9,8 @@ import graft.sources.Tables
 
 /** Training-data pipeline operators: sequence packing, survivorship
   * dedup, benchmark decontamination and its per-source contamination
-  * report, hash sampling, quality and dup drift. */
+  * report, hash sampling, quality and dup drift, blocklist density
+  * filtering and CCNet quality buckets. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -470,5 +471,68 @@ class PipelineSpec extends SparkSpec {
       ("src_a", 1L, 1L, 5L, 5L, 1.0),
       ("src_b", 2L, 1L, 12L, 6L, 0.5),
       ("src_c", 1L, 0L, 3L, 0L, 0.0)))
+  }
+
+  // ---- x13 blocklistFilter -----------------------------------------------
+
+  test("blocklistFilter: density threshold, not any-hit") {
+    val docs = Seq(
+      // 10 words, 1 hit → 1·20 > 10 → flagged
+      (1L, "s1", "bad w1 w2 w3 w4 w5 w6 w7 w8 w9"),
+      // 10 words, 0 hits → kept
+      (2L, "s1", "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"),
+      // 21 words, 1 hit → 20 > 21 is false → kept despite the hit
+      (3L, "s2", "bad " + (1 to 20).map(i => s"u$i").mkString(" "))
+    ).toDF("doc_id", "source", "text")
+    val out = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
+        Seq("bad", "worse"), 20)
+      .select($"source", $"n_docs", $"total_hits", $"n_flagged", $"n_kept")
+      .as[(String, Long, Long, Long, Long)].collect().toList
+    assert(out == List(("s1", 2L, 1L, 1L, 1L), ("s2", 1L, 1L, 0L, 1L)))
+  }
+
+  test("blocklistFilter: first_flagged is the min flagged id; rate is exact") {
+    val docs = Seq(
+      (9L, "s", "bad bad w1 w2"), (4L, "s", "bad bad w1 w2"),
+      (5L, "s", "w1 w2 w3 w4")
+    ).toDF("doc_id", "source", "text")
+    val row = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
+        Seq("bad"), 20)
+      .select($"first_flagged", $"flagged_rate")
+      .as[(Long, Double)].collect().head
+    assert(row == ((4L, 0.666667)))
+  }
+
+  // ---- x14 ccnetBuckets --------------------------------------------------
+
+  test("ccnetBuckets: partitions each language; bucket means monotone") {
+    val docs = Tables.documents(spark, sfDir)
+    val out = Pipeline.ccnetBucketsFrom(
+        Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", "lang", 3)
+      .select($"lang", $"bucket", $"n_docs", $"bucket_avg_bits")
+      .as[(String, Int, Long, Double)].collect().toList
+    val perLang = out.groupBy(_._1)
+    val docTotal = Tables.documents(spark, sfDir).count()
+    assert(out.map(_._3).sum == docTotal)
+    perLang.foreach { case (_, rows) =>
+      val sorted = rows.sortBy(_._2)
+      assert(sorted.map(_._2) == (1 to sorted.length).toList)
+      // ntile sizes differ by at most one
+      assert(sorted.map(_._3).max - sorted.map(_._3).min <= 1)
+      // consecutive blocks of a ratio-sorted sequence: non-decreasing
+      // (weighted) means — head buckets are the most-predictable docs
+      assert(sorted.map(_._4) == sorted.map(_._4).sorted)
+    }
+  }
+
+  test("ccnetBuckets: deterministic across recomputation") {
+    def buckets() = {
+      val docs = Tables.documents(spark, sfDir)
+      Pipeline.ccnetBucketsFrom(Pipeline.docWordTable(docs, "doc_id", "text"),
+        docs, "doc_id", "lang", 3).collect().toList
+    }
+    val a = buckets()
+    val b = buckets()
+    assert(a == b)
   }
 }

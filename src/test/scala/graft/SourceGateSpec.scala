@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * one session builder and one session width, a fixed set of mains and
   * none in src/test, a fixed set of environment switches,
   * single-partition windows only behind util/BoundedWindows, one table
-  * writer, and no public method of a graft object or plain class
+  * writer, a vault that reads only through its commit log, and no
+  * public method of a graft object or plain class
   * (today TemporalVault, SessionCache, GraftExtensions) that src/main
   * never calls. Plus the session policy that builder holds, checked on
   * a live session. */
@@ -72,6 +73,17 @@ class SourceGateSpec extends SparkSpec {
     Seq("saveAsTable(", "insertInto(", "bucketBy(").foreach { call =>
       assert(filesContaining(call).subsetOf(Set("graft/sources/IndexStore.scala")), call)
     }
+  }
+
+  test("TemporalVault builds every relation from its commit log") {
+    val vault = sources.collectFirst { case ("graft/temporal/TemporalVault.scala", text) => text }
+      .getOrElse(fail("no graft/temporal/TemporalVault.scala"))
+    val found = Seq("spark.read", "listStatus", "listFiles", ".persist(", "getFileSystem")
+      .filter(vault.contains)
+    assert(found.isEmpty)
+    // the one existence check is the probe for the next commit file
+    assert("exists\\(".r.findAllMatchIn(vault).size == 1)
+    assert(vault.contains("while (Files.exists(next))"))
   }
 
   /** The methods of a graft object that src/main is allowed not to

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import graft.temporal.TemporalVault
@@ -113,6 +114,137 @@ class VaultModelSpec extends SparkSpec {
     })
     info(f"${res.succeeded} sequences in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     assert(res.passed, res.status.toString)
+  }
+
+  /** The commits under `dir` as (number, parsed JSON), and the names
+    * of every file in `_commits/`. */
+  private def commits(dir: String): (Seq[(Long, org.json4s.JValue)], Seq[String]) = {
+    val names = java.nio.file.Files.list(java.nio.file.Path.of(dir, "_commits")).iterator()
+      .asScala.map(_.getFileName.toString).toSeq
+    val numbered = names.filter(_.matches("[0-9]+\\.json")).map { n =>
+      n.stripSuffix(".json").toLong -> org.json4s.jackson.JsonMethods.parse(
+        new String(java.nio.file.Files.readAllBytes(java.nio.file.Path.of(dir, "_commits", n)), "UTF-8"))
+    }.sortBy(_._1)
+    (numbered, names)
+  }
+
+  test("concurrent writers on one root: each commit number once, results match a replay in commit order") {
+    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+    val t0 = System.nanoTime()
+    val dir = java.nio.file.Files.createTempDirectory("vault_writers").toString
+    val threads = 3
+    val rounds = 18 // per thread: 54 writes in all
+    val ties = new java.util.concurrent.atomic.AtomicLong(1L)
+    val appendNo = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stampNo = new java.util.concurrent.atomic.AtomicInteger(0)
+    // appends stamp every row at second `k` of an hour (k = the append's
+    // number), rollbacks at a distinct hour after every append: a
+    // commit's stamps name the op that made it
+    val appends = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Ver]]()
+    val rollbacks = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, (Long, String))]()
+    val rejected = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // one commit before the writers start: a rollback needs a schema
+    val first = Ids.map(id => Ver(id, T0, ties.getAndIncrement(), s"d0$id", "I"))
+    new TemporalVault(spark, dir).append(batch(first))
+    appends.put(0, first)
+    val workers = (0 until threads).map { w =>
+      new Thread(() => try {
+        val v = new TemporalVault(spark, dir)
+        val rng = new scala.util.Random(7919L * w + 1)
+        (0 until rounds).foreach { _ =>
+          if (rng.nextInt(4) > 0) {
+            val k = appendNo.incrementAndGet()
+            val vs = (0 to rng.nextInt(3)).map { _ =>
+              val tie = ties.getAndIncrement()
+              Ver(Ids(rng.nextInt(Ids.size)), T0 + rng.nextInt(Days * 24) * 3600L + k, tie, s"d$tie", "I")
+            }
+            v.append(batch(vs))
+            appends.put(k, vs)
+          } else {
+            val at = T0 + rng.nextInt(Days * 24) * 3600L
+            val stamp = T0 + (Days * 24 + stampNo.incrementAndGet()) * 3600L
+            val (atS, stampS) = (When(at, Spelling(0, 0)).spell(zone), When(stamp, Spelling(0, 0)).spell(zone))
+            try {
+              val audit = v.rollback(atS, stampS)
+                .select("affected_records", "record_ids").as[(Long, String)].head()
+              rollbacks.put(stampS, (at, stamp, audit))
+            } catch { case _: IllegalArgumentException => rejected.add((at, stamp)) }
+          }
+        }
+      } catch { case e: Throwable => errors.add(e) })
+    }
+    workers.foreach(_.start()); workers.foreach(_.join())
+    errors.asScala.headOption.foreach(e => throw e)
+
+    val (log, names) = commits(dir)
+    // every commit number once, no gap, no temp file left
+    assert(names.size == log.size && log.map(_._1) == (1L to log.size.toLong))
+    assert(log.size == appends.size + rollbacks.size)
+    val model = new Model
+    val seen = mutable.Set.empty[String]
+    log.foreach { case (n, c) =>
+      (c \ "op").extract[String] match {
+        case "append" =>
+          val k = (((c \ "stamps")(0).extract[Long] / 1000000L - T0) % 3600L).toInt
+          assert(seen.add(s"a$k"), s"commit $n repeats append $k")
+          model.vs ++= appends.get(k)
+        case "rollback" =>
+          val stampS = (c \ "audit" \ "rollback_ts").extract[String]
+          assert(seen.add(stampS), s"commit $n repeats rollback $stampS")
+          val (at, stamp, audit) = rollbacks.get(stampS)
+          // the stamp rule held at the commit point
+          assert(model.latestAfter(at).forall(_ < stamp), s"commit $n: stamp $stampS")
+          val ids = model.rollback(at, stamp)
+          assert(audit == ((ids.size.toLong, ids.mkString(","))), s"commit $n: audit")
+      }
+    }
+    // a rejected stamp is at or before a version after its `at`, and the
+    // log only grows, so that still holds at the end
+    rejected.asScala.foreach { case (at, stamp) =>
+      assert(model.latestAfter(at).exists(stamp <= _), s"rejected rollback($at, $stamp)")
+    }
+    val fresh = new TemporalVault(spark, dir)
+    (0 to Days * 24 + stampNo.get() + 1 by 7).map(h => T0 + h * 3600L + 1800L).foreach { at =>
+      val s = When(at, Spelling(0, 0)).spell(zone)
+      assert(state(fresh, s) == model.state(at), s"query($s)")
+      assert(fresh.queryCached(s).select("record_id", "data").as[(String, String)].collect().toSet ==
+        model.state(at), s"queryCached($s)")
+    }
+    info(f"${log.size} commits (${rollbacks.size} rollbacks, ${rejected.size} rejected) in " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+    deleteDir(dir)
+  }
+
+  test("a crash between the data files and the commit leaves them invisible") {
+    val (v, dir) = mkVault()
+    v.append(batch(Seq(Ver("u1", T0, 1, "a", "I"))))
+    // a writer that wrote its data files and its temp commit file, then
+    // died before linking: made by a vault on another root, copied in
+    val (other, otherDir) = mkVault()
+    other.append(batch(Seq(Ver("u2", T0, 2, "orphan", "I"))))
+    val orphan = java.nio.file.Files.list(java.nio.file.Path.of(otherDir, "log")).iterator().asScala.toSeq
+    assert(orphan.size == 1)
+    val orphanDir = java.nio.file.Path.of(dir, "log", orphan.head.getFileName.toString)
+    java.nio.file.Files.walk(orphan.head).iterator().asScala.foreach { p =>
+      java.nio.file.Files.copy(p, orphanDir.resolve(orphan.head.relativize(p).toString))
+    }
+    val tmp = java.nio.file.Path.of(dir, "_commits", "_tmp-crashed.json")
+    java.nio.file.Files.write(tmp, new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Path.of(otherDir, "_commits", "1.json")), "UTF-8")
+      .replace("\"commit\":1,", "\"commit\":2,").getBytes("UTF-8"))
+
+    val next = new TemporalVault(spark, dir)
+    assert(state(next, "2024-01-02 00:00:00") == Set(("u1", "a")))
+    assert(next.log.count() == 1)
+    next.append(batch(Seq(Ver("u3", T0 + 3600L, 3, "c", "I"))))
+    assert(state(next, "2024-01-02 00:00:00") == Set(("u1", "a"), ("u3", "c")))
+    assert(state(v, "2024-01-02 00:00:00") == Set(("u1", "a"), ("u3", "c")))
+    val (log, names) = commits(dir)
+    assert(log.map(_._1) == Seq(1L, 2L))
+    assert(java.nio.file.Files.exists(tmp) && java.nio.file.Files.isDirectory(orphanDir))
+    assert(names.toSet == Set("1.json", "2.json", "_tmp-crashed.json"))
+    deleteDir(dir); deleteDir(otherDir)
   }
 
   test("a zone-offset time reads the day partition its instant falls in") {
