@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
-import graft.operators.Pipeline
 import graft.ann.Ann
 import graft.sources.Tables
 
-/** Round-8 additions: duplicated-span coverage (d9), blocklist density
-  * filtering (x13), CCNet quality buckets (x14), kNN classification
-  * (a6). Small hand-built corpora with arithmetic worked out by hand,
-  * plus corpus-level invariants on the driver testdata. */
+/** Round-8 additions still held here: duplicated-span coverage (d9),
+  * kNN classification (a6) and winnowing (x15). Small hand-built
+  * corpora with arithmetic worked out by hand, plus corpus-level
+  * invariants on the driver testdata. */
 class Round8ExtrasSpec extends SparkSpec {
   import spark.implicits._
 
@@ -58,69 +57,6 @@ class Round8ExtrasSpec extends SparkSpec {
       ($"n_spans" === 0 && $"dup_tokens" =!= 0) ||
       ($"n_spans" > 0 && $"dup_tokens" < lit(5) * $"n_spans")).count()
     assert(bad == 0)
-  }
-
-  // ---- x13 blocklistFilter -----------------------------------------------
-
-  test("blocklistFilter: density threshold, not any-hit") {
-    val docs = Seq(
-      // 10 words, 1 hit → 1·20 > 10 → flagged
-      (1L, "s1", "bad w1 w2 w3 w4 w5 w6 w7 w8 w9"),
-      // 10 words, 0 hits → kept
-      (2L, "s1", "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"),
-      // 21 words, 1 hit → 20 > 21 is false → kept despite the hit
-      (3L, "s2", "bad " + (1 to 20).map(i => s"u$i").mkString(" "))
-    ).toDF("doc_id", "source", "text")
-    val out = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
-        Seq("bad", "worse"), 20)
-      .select($"source", $"n_docs", $"total_hits", $"n_flagged", $"n_kept")
-      .as[(String, Long, Long, Long, Long)].collect().toList
-    assert(out == List(("s1", 2L, 1L, 1L, 1L), ("s2", 1L, 1L, 0L, 1L)))
-  }
-
-  test("blocklistFilter: first_flagged is the min flagged id; rate is exact") {
-    val docs = Seq(
-      (9L, "s", "bad bad w1 w2"), (4L, "s", "bad bad w1 w2"),
-      (5L, "s", "w1 w2 w3 w4")
-    ).toDF("doc_id", "source", "text")
-    val row = Pipeline.blocklistFilter(docs, "doc_id", "text", "source",
-        Seq("bad"), 20)
-      .select($"first_flagged", $"flagged_rate")
-      .as[(Long, Double)].collect().head
-    assert(row == ((4L, 0.666667)))
-  }
-
-  // ---- x14 ccnetBuckets --------------------------------------------------
-
-  test("ccnetBuckets: partitions each language; bucket means monotone") {
-    val docs = Tables.documents(spark, sfDir)
-    val out = Pipeline.ccnetBucketsFrom(
-        Pipeline.docWordTable(docs, "doc_id", "text"), docs, "doc_id", "lang", 3)
-      .select($"lang", $"bucket", $"n_docs", $"bucket_avg_bits")
-      .as[(String, Int, Long, Double)].collect().toList
-    val perLang = out.groupBy(_._1)
-    val docTotal = Tables.documents(spark, sfDir).count()
-    assert(out.map(_._3).sum == docTotal)
-    perLang.foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_._2)
-      assert(sorted.map(_._2) == (1 to sorted.length).toList)
-      // ntile sizes differ by at most one
-      assert(sorted.map(_._3).max - sorted.map(_._3).min <= 1)
-      // consecutive blocks of a ratio-sorted sequence: non-decreasing
-      // (weighted) means — head buckets are the most-predictable docs
-      assert(sorted.map(_._4) == sorted.map(_._4).sorted)
-    }
-  }
-
-  test("ccnetBuckets: deterministic across recomputation") {
-    def buckets() = {
-      val docs = Tables.documents(spark, sfDir)
-      Pipeline.ccnetBucketsFrom(Pipeline.docWordTable(docs, "doc_id", "text"),
-        docs, "doc_id", "lang", 3).collect().toList
-    }
-    val a = buckets()
-    val b = buckets()
-    assert(a == b)
   }
 
   // ---- a6 knnClassify ----------------------------------------------------
@@ -205,47 +141,5 @@ class Round8ExtrasSpec extends SparkSpec {
     val sets = fp.as[(Long, Long)].collect().groupBy(_._1)
       .map { case (d, r) => d -> r.map(_._2).toSet }
     assert(sets(1L) == sets(2L))
-  }
-
-  // ---- a7 kmeans ---------------------------------------------------------
-
-  test("kmeans: recovers planted clusters around the seed directions") {
-    // two tight bundles around orthogonal axes; seeds 0 and 1 land one
-    // in each bundle, so Lloyd converges to the planted split
-    def v(axis: Int, eps: Double, at: Int): Array[Float] =
-      Array.tabulate(4)(i => (if (i == axis) 1.0 else 0.0) +
-        (if (i == at) eps else 0.0)).map(_.toFloat)
-    val emb = Seq(
-      (0L, v(0, 0.00, 1)), (2L, v(0, 0.05, 1)), (3L, v(0, 0.08, 2)),
-      (1L, v(1, 0.00, 2)), (4L, v(1, 0.05, 2)), (5L, v(1, 0.07, 3)),
-      (6L, v(1, 0.04, 0))
-    ).toDF("vec_id", "embedding")
-    val out = Ann.kmeans(emb, "vec_id", "embedding", 2, 2)
-      .select($"cluster_id", $"n_members", $"min_member")
-      .as[(Long, Long, Long)].collect().toList
-    assert(out == List((0L, 3L, 0L), (1L, 4L, 1L)))
-  }
-
-  test("kmeans: clusters partition the corpus; report is deterministic") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val n = emb.count()
-    val a = Ann.kmeans(emb, "vec_id", "embedding", 8, 2).collect()
-    val b = Ann.kmeans(emb, "vec_id", "embedding", 8, 2).collect()
-    assert(a.toSeq == b.toSeq)
-    assert(a.map(_.getLong(1)).sum == n, "every vector assigned exactly once")
-    assert(a.forall(r => r.getDouble(3) <= 1.000001 && r.getDouble(3) >= -1.000001))
-  }
-
-  test("kmeans: a lost cluster drops out and members rehome deterministically") {
-    // seed 1 is strictly closer to seed 0's bundle than to anything
-    // else, so after one update every row sits in one cluster
-    val emb = Seq(
-      (0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0.99f, 0.1f, 0f, 0f)),
-      (2L, Array(0.98f, 0.05f, 0f, 0f)), (3L, Array(0.97f, 0.12f, 0f, 0f))
-    ).toDF("vec_id", "embedding")
-    val out = Ann.kmeans(emb, "vec_id", "embedding", 2, 2)
-    val rows = out.select($"cluster_id", $"n_members")
-      .as[(Long, Long)].collect().toList
-    assert(rows.map(_._2).sum == 4, "all rows assigned")
   }
 }
